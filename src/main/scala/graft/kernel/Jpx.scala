@@ -17,9 +17,10 @@ package graft.kernel
   *    fit the remaining bytes, and the EOC terminator at the stream tail
   *    (so mid-tile truncation is always detected);
   *  - the JP2 box container (Annex I): signature + ftyp brand check, box
-  *    walk (64-bit XLBox and to-EOF lengths handled), `ihdr` geometry
-  *    cross-checked against the embedded `jp2c` codestream's SIZ — a
-  *    mismatch is a malformed file, not pixels.
+  *    walk (64-bit XLBox and to-EOF lengths handled), the mandatory
+  *    `jp2h`/`ihdr` header before the top-level `jp2c`, and the `ihdr`
+  *    geometry cross-checked against that codestream's SIZ — a mismatch is
+  *    a malformed file, not pixels.
   * The entropy-coded tile body is NOT arithmetic-decoded (unlike [[CcittG4]]
   * and [[Jbig2]], where the full codec is small); EBCOT is not, and the
   * header walk already rejects the corrupt/truncated payloads the routing
@@ -91,10 +92,13 @@ object Jpx {
     var sawCod = false
     var sawQcd = false
     while (true) {
+      // the walk never reads past the codestream: inside a JP2 container the
+      // bytes after `end` belong to other boxes
+      if (p + 4 > end) return None
       val mk = u16(b, p).getOrElse(return None)
       if ((mk & 0xFF00) != 0xFF00) return None // lost marker alignment
       if (mk == 0xFF90) {                      // SOT — main header ends
-        if (!sawCod || !sawQcd) return None
+        if (!sawCod || !sawQcd || p + 12 > end) return None
         val lsot = u16(b, p + 2).getOrElse(return None)
         if (lsot != 10) return None
         val psot = u32(b, p + 4 + 2).getOrElse(return None)
@@ -115,61 +119,79 @@ object Jpx {
 
   // ---------- JP2 box container (Annex I) ----------
 
-  private val JP2Sig = Array[Byte](0, 0, 0, 12, 0x6A, 0x50, 0x20, 0x20,
+  private[kernel] val JP2Sig = Array[Byte](0, 0, 0, 12, 0x6A, 0x50, 0x20, 0x20,
     0x0D, 0x0A, 0x87.toByte, 0x0A)
 
-  /** Validate a JP2 container: signature, `ftyp` brand, box walk to `jp2c`;
-    * if an `ihdr` box is present its geometry must AGREE with the
-    * codestream's SIZ. */
+  /** The box at `q`, which must end by `hi` (I.4): its TBox and content
+    * extent `[start, end)`; None if its length is malformed. LBox 1 → a
+    * 64-bit XLBox follows; 0 → the box runs to `hi`. */
+  private def box(b: Array[Byte], q: Int, hi: Int): Option[(Long, Int, Int)] = {
+    val lbox = u32(b, q).getOrElse(return None)
+    val tbox = u32(b, q + 4).getOrElse(return None)
+    val (start, len) =
+      if (lbox == 1) {
+        val hiW = u32(b, q + 8).getOrElse(return None)
+        val loW = u32(b, q + 12).getOrElse(return None)
+        (q + 16, (hiW << 32 | loW) - 16)
+      } else if (lbox == 0) (q + 8, (hi - q - 8).toLong)
+      else (q + 8, lbox - 8)
+    if (len < 0 || start + len > hi) None else Some((tbox, start, (start + len).toInt))
+  }
+
+  private val Ftyp = 0x66747970L // 'ftyp'
+  private val Jp2h = 0x6A703268L // 'jp2h'
+  private val Ihdr = 0x69686472L // 'ihdr'
+  private val Jp2c = 0x6A703263L // 'jp2c'
+
+  /** Validate a JP2 container: signature, `ftyp` brand, then a top-level box
+    * walk in which the `jp2h` header superbox and its `ihdr` are mandatory
+    * before the `jp2c` codestream (I.5.3), and the ihdr geometry must AGREE
+    * with the codestream's SIZ. A malformed box inside jp2h, or a codestream
+    * nested there, fails the whole container. */
   private def jp2(b: Array[Byte]): Option[Image] = {
     if (b.length < 12 || !b.take(12).sameElements(JP2Sig)) return None
-    var p = 12
     var ihdr: Option[(Long, Long, Int)] = None // (h, w, nc) — ihdr order
     var sawFtyp = false
-    def walk(lo: Int, hi: Int, depth: Int): Option[Image] = {
+    // jp2h's interior: false if malformed
+    def header(lo: Int, hi: Int): Boolean = {
       var q = lo
       while (q < hi) {
-        val lbox = u32(b, q).getOrElse(return None)
-        val tbox = u32(b, q + 4).getOrElse(return None)
-        // I.4: LBox 1 → 64-bit XLBox follows; 0 → box runs to EOF
-        val (start, len) =
-          if (lbox == 1) {
-            val hiW = u32(b, q + 8).getOrElse(return None)
-            val loW = u32(b, q + 12).getOrElse(return None)
-            (q + 16, (hiW << 32 | loW) - 16)
-          } else if (lbox == 0) (q + 8, (hi - q - 8).toLong)
-          else (q + 8, lbox - 8)
-        if (len < 0 || start + len > hi) return None
+        val (tbox, start, end) = box(b, q, hi).getOrElse(return false)
         tbox match {
-          case 0x66747970L => // 'ftyp': brand must be jp2-family (I.7.1)
-            val brand = u32(b, start).getOrElse(return None)
-            if (brand != 0x6A703220 && brand != 0x6A707820) return None // 'jp2 '/'jpx '
-            sawFtyp = true
-          case 0x6A703268L => // 'jp2h' superbox: recurse for ihdr
-            walk(start, (start + len).toInt, depth + 1) match {
-              case Some(img) => return Some(img) // can't happen (no jp2c inside)
-              case None => // ihdr side-effect recorded; keep walking
-            }
-          case 0x69686472L if depth > 0 => // 'ihdr' (I.5.3.1): HEIGHT then WIDTH
-            if (len != 14) return None
-            val ih = u32(b, start).getOrElse(return None)
-            val iw = u32(b, start + 4).getOrElse(return None)
-            val nc = u16(b, start + 8).getOrElse(return None)
+          case Ihdr => // I.5.3.1: HEIGHT then WIDTH
+            if (end - start != 14) return false
+            val ih = u32(b, start).getOrElse(return false)
+            val iw = u32(b, start + 4).getOrElse(return false)
+            val nc = u16(b, start + 8).getOrElse(return false)
             ihdr = Some((ih, iw, nc))
-          case 0x6A703263L => // 'jp2c': the contiguous codestream
-            if (!sawFtyp) return None
-            return codestream(b, start, (start + len).toInt).filter { img =>
-              ihdr.forall { case (ih, iw, nc) =>
-                ih == img.h && iw == img.w && nc == img.ncomp
-              }
-            }
-          case _ => // colr/res/uuid/...: opaque, skip
+          case Jp2c => return false // the codestream is a top-level box only
+          case _ => // colr/res/...: opaque, skip
         }
-        q = (start + len).toInt
+        q = end
       }
-      None
+      true
     }
-    walk(12, b.length, 0)
+    var q = 12
+    while (q < b.length) {
+      val (tbox, start, end) = box(b, q, b.length).getOrElse(return None)
+      tbox match {
+        case Ftyp => // brand must be jp2-family (I.7.1)
+          val brand = u32(b, start).getOrElse(return None)
+          if (brand != 0x6A703220 && brand != 0x6A707820) return None // 'jp2 '/'jpx '
+          sawFtyp = true
+        case Jp2h =>
+          if (!header(start, end)) return None
+        case Jp2c =>
+          if (!sawFtyp) return None
+          val (ih, iw, nc) = ihdr.getOrElse(return None)
+          return codestream(b, start, end).filter { img =>
+            ih == img.h && iw == img.w && nc == img.ncomp
+          }
+        case _ => // uuid/xml/...: opaque, skip
+      }
+      q = end
+    }
+    None
   }
 
   /** Header-validate a `/JPXDecode` payload in either legal shape.

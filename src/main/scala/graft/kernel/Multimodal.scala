@@ -390,9 +390,8 @@ object Multimodal {
         ((bytes(2) == 0 && bytes(3) == 1) || bytes(2) == 1)) "h264"
     else if (bytes.length >= 3 && bytes(0) == Magic(0) && bytes(1) == Magic(1) &&
         bytes(2) == Magic(2)) "gmb"
-    else if (bytes.length >= 12 && bytes(0) == 0 && bytes(1) == 0 &&
-        bytes(2) == 0 && bytes(3) == 12 && bytes(4) == 'j' && bytes(5) == 'P' &&
-        bytes(6) == ' ' && bytes(7) == ' ') "jp2"
+    else if (bytes.length >= 12 &&
+        java.util.Arrays.equals(bytes, 0, 12, Jpx.JP2Sig, 0, 12)) "jp2"
     else if (bytes.length >= 4 && (bytes(0) & 0xff) == 0xff &&
         (bytes(1) & 0xff) == 0x4f && (bytes(2) & 0xff) == 0xff &&
         (bytes(3) & 0xff) == 0x51) "jp2"

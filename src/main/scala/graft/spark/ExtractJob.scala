@@ -1,7 +1,14 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.kernel._
 
 /** The production job: scan → pre-filter → salted repartition → kernel map →
@@ -20,28 +27,71 @@ import graft.kernel._
   *
   *  - '''Exactly-once resumability''': output parquet is partitioned by
   *    `bucket = xxhash64(url) pmod nBuckets` (deterministic, input-only).
-  *    Lineage rows (runId, bucket, docs, bytes, failures) are appended ONLY
-  *    after the data write commits; `partitionOverwriteMode=dynamic` means a
-  *    re-run replaces exactly the buckets it recomputes. Restart = anti-join
+  *    Lineage rows (runId, bucket, docs, bytes, failures, emptyDocs, status)
+  *    are appended ONLY after the data write commits;
+  *    `partitionOverwriteMode=dynamic` means a re-run replaces exactly the
+  *    buckets it recomputes. Restart = anti-join
   *    input buckets against committed lineage — no dup, no loss, verified by
   *    the kill/rerun spec.
   *
-  *  - '''Metrics''': docs/bytes/failure-taxonomy from the per-bucket lineage
-  *    rows (durable, race-free: a doc is counted iff its bucket committed;
-  *    the rollup is a columnar scan of the run's own lineage, O(nBuckets)).
+  *  - '''Metrics''': the per-bucket lineage counts (docs, bytes, failures,
+  *    empty docs) are rolled up DURING the docs write, by `Dataset.observe`
+  *    of a [[BucketRollup]] aggregate — no second pass over the written
+  *    table. Only the first action over the docs that SUCCEEDS reports, so a
+  *    doc is counted iff the write that committed it finished; the observed
+  *    aggregate sits in the write's result stage, where Spark merges each
+  *    partition's accumulator once. The job's `Metrics` are the sums of the
+  *    same ≤ nBuckets lineage rows it appends.
   *
   * At 10^12 docs this layout holds: nBuckets scales to O(10^5) (lineage stays
   * tiny), numPartitions to O(cores×4); nothing here collects data to the
-  * driver except the bucket-id set (bounded by nBuckets).
+  * driver except the bucket-id set and the per-bucket lineage counts (both
+  * bounded by nBuckets).
   */
 object ExtractJob {
-
-  final case class Lineage(runId: String, bucket: Long, docs: Long, bytes: Long,
-                           failures: Long, emptyDocs: Long, status: String)
 
   final case class Metrics(docs: Long, bytes: Long, okDocs: Long, failedDocs: Long,
                            emptyDocs: Long, wallSec: Double, docsPerSec: Double,
                            mbPerSec: Double)
+
+  /** The committed lineage table's columns, in order (`bucket` is an int:
+    * the type partition discovery gives the docs table's bucket directories,
+    * which is what the lineage was first rolled up from). */
+  private val LineageSchema: StructType = StructType(Seq(
+    StructField("runId", StringType, nullable = false),
+    StructField("bucket", IntegerType),
+    StructField("docs", LongType, nullable = false),
+    StructField("bytes", LongType),
+    StructField("failures", LongType),
+    StructField("emptyDocs", LongType),
+    StructField("status", StringType, nullable = false)))
+
+  /** Seconds to wait, after `writeDocs` returns, for the write's observed
+    * lineage counts (delivered by the listener bus). */
+  val ObserveWaitConf = "spark.graft.extract.observeWaitSec"
+
+  /** The metrics observed under `name` by the first action that SUCCEEDS.
+    * Spark 4.1's [[org.apache.spark.sql.Observation]] also completes from a
+    * FAILED action, with the partial counts of the tasks that finished
+    * before it — counts of rows that never committed — so the job listens
+    * for the success event itself. */
+  private final class FirstSuccess(name: String) extends QueryExecutionListener {
+    private val observed = Promise[Row]()
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.observedMetrics.get(name).foreach(observed.trySuccess)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    def await(spark: SparkSession): Row = {
+      val waitSec = spark.conf.get(ObserveWaitConf, "60").toDouble
+      try Await.result(observed.future, Duration.fromNanos((waitSec * 1e9).toLong))
+      catch {
+        case _: TimeoutException =>
+          throw new IllegalStateException(
+            s"no lineage counts from the docs write within ${waitSec}s: the TableIO's " +
+            "writeDocs must run at least one successful action over all of its docs rows")
+      }
+    }
+  }
 
   /** Deterministic checkpoint unit: which output bucket a url belongs to.
     * Input-only function ⇒ stable across runs and cluster sizes. */
@@ -124,33 +174,33 @@ object ExtractJob {
       .select($"doc.*", $"bucket")
 
     // idempotent per-bucket overwrite: a recomputed bucket fully replaces its
-    // partition; untouched buckets stay
-    io.writeDocs(extracted)
+    // partition; untouched buckets stay. The lineage counts ride along as an
+    // aggregate observed on this same write (a unique name per run), taken
+    // from the first action over the docs that succeeds.
+    val observedAs = s"graft_lineage_${runId}_${java.util.UUID.randomUUID()}"
+    val observer = new FirstSuccess(observedAs)
+    spark.listenerManager.register(observer)
+    val rollup =
+      try {
+        io.writeDocs(extracted.observe(observedAs, BucketRollup.column.as("rollup")))
+        if (pendingBuckets.isEmpty) Map.empty[Long, BucketRollup.Counts]
+        else BucketRollup.decode(observer.await(spark))
+      } finally spark.listenerManager.unregister(observer)
 
-    // lineage from the WRITTEN data (cheap columnar count scan — no kernel
-    // recompute), appended only after the docs commit
-    val written = io.readDocs(spark)
-    if (pendingBuckets.nonEmpty) {
-      io.appendLineage(
-        written.filter($"bucket".isin(pendingBuckets.toSeq: _*))
-          .groupBy($"bucket")
-          .agg(count(lit(1)).as("docs"), sum($"nBytes").as("bytes"),
-            sum(when($"failure" =!= "", 1L).otherwise(0L)).as("failures"),
-            sum(when($"failure" === "" && $"nItems" === 0, 1L).otherwise(0L)).as("emptyDocs"))
-          .withColumn("runId", lit(runId))
-          .withColumn("status", lit("ok"))
-          .select("runId", "bucket", "docs", "bytes", "failures", "emptyDocs", "status"))
+    // lineage of the rows that committed, appended only after the docs commit
+    // as one small driver-side frame (≤ nBuckets rows); the metrics are the
+    // sums of the same counts (a null `bytes` adds 0)
+    val lineage: Seq[Row] = rollup.toSeq.sortBy(_._1).map { case (bucket, c) =>
+      Row(runId, bucket.toInt, c.docs,
+        if (c.bytesSeen > 0) c.bytes else null, c.failures, c.emptyDocs, "ok")
     }
+    if (pendingBuckets.nonEmpty)
+      io.appendLineage(spark.createDataFrame(lineage.asJava, LineageSchema))
 
-    // metrics from the durable lineage rows of THIS run (single source of
-    // truth; no accumulator/commit race — a row is counted iff it committed)
-    val agg = io.readLineage(spark)
-      .filter($"runId" === runId)
-      .agg(coalesce(sum($"docs"), lit(0L)), coalesce(sum($"bytes"), lit(0L)),
-        coalesce(sum($"failures"), lit(0L)), coalesce(sum($"emptyDocs"), lit(0L)))
-      .collect()(0)
+    val counts = rollup.values
+    val (d, b, f, e) = (counts.map(_.docs).sum, counts.map(_.bytes).sum,
+      counts.map(_.failures).sum, counts.map(_.emptyDocs).sum)
     val wall = (System.nanoTime() - t0) / 1e9
-    val (d, b, f, e) = (agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3))
     Metrics(d, b, d - f, f, e, wall, d / wall, b / 1e6 / wall)
   }
 }

@@ -14,7 +14,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 trait TableIO {
   /** Idempotent bucket-partitioned write: recomputed buckets fully replace
-    * their partition; untouched buckets stay. */
+    * their partition; untouched buckets stay.
+    *
+    * Contract: it runs at least one action over `docs`, and every action
+    * over `docs` it runs that succeeds reads ALL of its rows (no filter,
+    * limit or sample on top). The job takes the lineage counts from the
+    * first such action; a write that runs none fails the job. The counts are
+    * exactly-once because `docs` is read in the write's result stage, where
+    * Spark applies each partition's accumulator update once: a backend that
+    * shuffles `docs` before writing (e.g. an Iceberg hash write
+    * distribution) moves them into a map stage, where a retried stage can
+    * count a partition twice. */
   def writeDocs(docs: DataFrame): Unit
   /** Append-only commit log (written only AFTER the docs commit). */
   def appendLineage(lineage: DataFrame): Unit
@@ -64,9 +74,8 @@ final class ParquetTableIO(outDir: String) extends TableIO {
   * once a CSV table committed, `readDocs` serves the UNION of the primary
   * table (projected to the same degraded flat shape) and the CSV table —
   * a resumed job may have committed some buckets to each backend across
-  * runs, and no committed bucket may vanish from reads. The job's lineage
-  * rollup — which only needs flat columns — and a later inspection read
-  * work unchanged. Lineage stays on the primary backend (the reference
+  * runs, and no committed bucket may vanish from reads. A later inspection
+  * read works unchanged. Lineage stays on the primary backend (the reference
   * falls back for the table artifact only, not its bookkeeping).
   */
 final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableIO {

@@ -1,10 +1,13 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.spark.{ExtractJob, ExtractPipeline}
+import org.apache.spark.sql.functions.col
+import graft.spark.{BucketRollup, ExtractJob, ExtractPipeline}
 
 /** Spark e2e smoke: corpus → ExtractJob → resume probe → sample output.
-  * `sbt "runMain graft.tools.DriveSpark [nDocs]"`. */
+  * `sbt "runMain graft.tools.DriveSpark [nDocs]"`. Exits 1 unless the resume
+  * recomputes nothing, the lineage totals the input, and every lineage row
+  * equals the committed docs table's per-bucket rollup. */
 object DriveSpark {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000L
@@ -32,8 +35,7 @@ object DriveSpark {
     println(docs.filter($"route" =!= "html").select("extractedText")
       .head().getString(0).take(300))
 
-    // resume probe: delete 3 buckets' lineage? simpler — rerun with resume:
-    // everything committed → 0 new docs processed
+    // resume probe: everything committed → 0 new docs processed
     val m2 = ExtractJob.run(spark, pages, out, runId = "r2", nBuckets = 16, resume = true)
     println(s"RESUME docs=${m2.docs} (expect 0)")
 
@@ -43,6 +45,13 @@ object DriveSpark {
     val totalDocs = lineage.groupBy().sum("docs").head().getLong(0)
     println(s"lineage total docs=$totalDocs input=$n urlsDistinct=" +
       docs.select("url").distinct().count())
+    // every lineage row must say what a second pass over the table says
+    val counts = Seq("bucket", "docs", "bytes", "failures", "emptyDocs")
+    val fromLineage = lineage.withColumn("bucket", $"bucket".cast("long"))
+      .select(counts.map(col): _*).collect().map(_.toSeq).toSet
+    val fromTable = BucketRollup.ofTable(docs).collect().map(_.toSeq).toSet
+    val drift = (fromLineage diff fromTable) ++ (fromTable diff fromLineage)
+    println(s"lineage vs table rollup: ${fromTable.size} buckets, ${drift.size} differing rows")
 
     // SQL expression surface
     pages.limit(5).createOrReplaceTempView("pages_v")
@@ -50,10 +59,15 @@ object DriveSpark {
       """SELECT url, extract_doc(url, html, text, lang).route AS route,
         |       length(extract_doc(url, html, text, lang).extractedText) AS len
         |FROM pages_v""".stripMargin).show(false)
-
-    // plan check: extraction path should be a narrow map over one exchange
-    println("=== physical plan (extraction) ===")
-    ExtractJob.withBucket(pages, 16).createOrReplaceTempView("b")
     spark.stop()
+
+    val failed = Seq(
+      "RESUME docs is not 0" -> (m2.docs != 0),
+      s"lineage total $totalDocs != input $n" -> (totalDocs != n),
+      s"lineage differs from the table rollup: ${drift.mkString(", ")}" -> drift.nonEmpty)
+      .collect { case (msg, true) => msg }
+    failed.foreach(msg => System.err.println(s"CHECK FAILED: $msg"))
+    if (failed.nonEmpty) sys.exit(1)
+    println("CHECKS OK")
   }
 }

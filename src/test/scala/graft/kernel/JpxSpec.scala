@@ -105,4 +105,55 @@ class JpxSpec extends AnyFunSuite {
       jpxImage = Some(Jpx.Payload(Jpx.encode(64, 64, 1), 64, 64)))
     assert(PdfLite.dialect(pdf).split(",").contains("img:jpx"))
   }
+
+  // encodeJp2's layout: signature [0,12), ftyp [12,32), jp2h [32,77) holding
+  // ihdr [40,62) and colr [62,77), then the jp2c box from 77
+  private val JpHdrAt = 32
+  private val JpCodeAt = 77
+  private def u32be(v: Int): Array[Byte] =
+    Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
+
+  test("a JP2 container without the jp2h/ihdr header fails closed") {
+    val full = Jpx.encodeJp2(640, 480, 3)
+    assert(Jpx.dims(full).isDefined)
+    val noHeader = full.take(JpHdrAt) ++ full.drop(JpCodeAt)
+    assert(Jpx.dims(noHeader).isEmpty, "jp2c accepted with no jp2h/ihdr before it")
+    // jp2h after the codestream is no header for it either (I.5.3)
+    val headerLast = full.take(JpHdrAt) ++ full.drop(JpCodeAt) ++ full.slice(JpHdrAt, JpCodeAt)
+    assert(Jpx.dims(headerLast).isEmpty, "jp2h must precede jp2c")
+  }
+
+  test("a malformed box inside jp2h fails the container") {
+    val bad = Jpx.encodeJp2(640, 480, 3)
+    bad(JpHdrAt + 8 + 3) = 23 // ihdr LBox 22 → 23: a 15-byte ihdr that eats into colr
+    assert(Jpx.dims(bad).isEmpty, "a broken jp2h interior was skipped over")
+  }
+
+  test("a jp2c nested inside jp2h is not the codestream") {
+    val full = Jpx.encodeJp2(640, 480, 3)
+    val header = full.slice(JpHdrAt + 8, JpCodeAt) // ihdr + colr
+    val code = full.drop(JpCodeAt)                 // the whole jp2c box
+    val nested = full.take(JpHdrAt) ++ u32be(8 + header.length + code.length) ++
+      "jp2h".getBytes("US-ASCII") ++ header ++ code
+    assert(Jpx.dims(nested).isEmpty, "jp2c inside jp2h was validated")
+  }
+
+  test("the main-header walk stops at the end of an embedded codestream") {
+    // a codestream whose last main-header segment (a COM) runs exactly to its
+    // end, so its own bytes supply the trailing EOC; the SOT the walk would
+    // need lies only in the container bytes after the jp2c box
+    val cs = Jpx.encode(640, 480, 1)
+    val sotAt = 4 + (38 + 3) + 14 + 9 // SOC+SIZ, COD, QCD
+    assert((cs(sotAt) & 0xFF) == 0xFF && (cs(sotAt + 1) & 0xFF) == 0x90)
+    val com = Array(0xFF, 0x64, 0x00, 0x06, 0x00, 0x01, 0xFF, 0xD9).map(_.toByte)
+    val headerOnly = cs.take(sotAt) ++ com
+    assert(Jpx.dims(headerOnly).isEmpty, "no tile-part at all")
+    val jp2 = Jpx.encodeJp2(640, 480, 1)
+    val sot = Array(0xFF, 0x90, 0x00, 0x0A, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x01)
+      .map(_.toByte) // SOT, Lsot 10, Isot 0, Psot 0 ("to EOC"), TPsot 0, TNsot 1
+    val wrapped = jp2.take(JpCodeAt) ++ u32be(8 + headerOnly.length) ++
+      "jp2c".getBytes("US-ASCII") ++ headerOnly ++ sot
+    assert(Jpx.dims(wrapped).isEmpty, "the walk read a SOT past the codestream's end")
+  }
 }
+

@@ -161,4 +161,17 @@ class MultimodalSpec extends AnyFunSuite {
     assert(avis.forall(m => m.failure.isEmpty && m.width >= 64 &&
       m.height >= 64 && m.channels >= 1 && m.features.length == m.channels))
   }
+
+  test("a JP2 signature with a corrupted tail sniffs as unknown, not jp2") {
+    val good = Jpx.encodeJp2(320, 240, 3)
+    assert(Multimodal.sniff(good) == "jp2")
+    // the first 8 signature bytes intact, the 0D 0A 87 0A tail broken
+    for (i <- 8 until 12) {
+      val bad = good.clone()
+      bad(i) = (bad(i) ^ 0x40).toByte
+      assert(Multimodal.sniff(bad) == "unknown", s"signature byte $i")
+      val m = Multimodal.decode(9L, bad)
+      assert(m.format == "unknown" && m.failure == "bad_magic", s"signature byte $i: $m")
+    }
+  }
 }

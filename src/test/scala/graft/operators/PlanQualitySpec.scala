@@ -192,4 +192,74 @@ class PlanQualitySpec extends SparkTestBase {
     val shuffles = "Exchange".r.findAllIn(p).length
     assert(shuffles == 1, s"extraction path must have exactly the salt shuffle, got $shuffles:\n$p")
   }
+
+  test("extraction job never re-reads its own output (one lineage scan on resume)") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    // root paths of every file scan in an executed plan, through AQE stages,
+    // command wrappers and subqueries
+    def scans(p: SparkPlan): Seq[String] = {
+      val here = p match {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toUri.getPath)
+        case b: BatchScanExec => b.scan match {
+          case f: FileScan => f.fileIndex.rootPaths.map(_.toUri.getPath)
+          case _ => Nil
+        }
+        case _ => Nil
+      }
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children ++ p.innerChildren.collect { case c: SparkPlan => c } ++ p.subqueries
+      }
+      here ++ kids.flatMap(scans)
+    }
+
+    // every plan the job executes, recorded until a sentinel query's event
+    // shows the (asynchronous) listener bus has delivered all earlier ones
+    def scansDuring(body: => Unit): Seq[String] = {
+      val seen = new ConcurrentLinkedQueue[String]()
+      val tag = s"plan_gate_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+      val done = new CountDownLatch(1)
+      val listener = new QueryExecutionListener {
+        private def record(qe: QueryExecution): Unit =
+          if (qe.analyzed.output.exists(_.name == tag)) done.countDown()
+          else seen.addAll(scans(qe.executedPlan).asJava)
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+      }
+      spark.listenerManager.register(listener)
+      try {
+        body
+        spark.range(1).toDF(tag).collect()
+        assert(done.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      } finally spark.listenerManager.unregister(listener)
+      seen.asScala.toSeq
+    }
+
+    val out = java.nio.file.Files.createTempDirectory("graft_plan_gate").toString
+    val pages = graft.spark.ExtractPipeline.pages(spark, 100).toDF()
+    def under(dir: String)(paths: Seq[String]): Seq[String] =
+      paths.filter(p => p == dir || p.startsWith(dir + "/"))
+
+    val fresh = scansDuring {
+      graft.spark.ExtractJob.run(spark, pages, out, runId = "gate1", nBuckets = 8)
+    }
+    assert(under(s"$out/docs")(fresh).isEmpty && under(s"$out/lineage")(fresh).isEmpty,
+      s"a fresh run re-read its own output: ${fresh.mkString(", ")}")
+
+    val resumed = scansDuring {
+      graft.spark.ExtractJob.run(spark, pages, out, runId = "gate2", nBuckets = 8,
+        resume = true)
+    }
+    assert(under(s"$out/docs")(resumed).isEmpty, resumed.mkString(", "))
+    assert(under(s"$out/lineage")(resumed).size == 1,
+      s"resume should read the lineage once: ${resumed.mkString(", ")}")
+  }
 }
+

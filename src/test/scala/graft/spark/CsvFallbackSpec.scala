@@ -19,17 +19,21 @@ class CsvFallbackSpec extends SparkTestBase {
   private val NDocs = 300L
   private val NBuckets = 8
 
-  /** Primary whose data commit always fails (the "Excel writer" role);
+  /** Parquet primary whose data commit runs `write` over its real writer;
     * lineage bookkeeping stays healthy, as in the reference fallback. */
-  private final class FailingPrimary(dir: String) extends TableIO {
+  private final class ScriptedPrimary(dir: String)(write: (TableIO, DataFrame) => Unit)
+      extends TableIO {
     private val inner = new ParquetTableIO(dir)
-    override def writeDocs(docs: DataFrame): Unit =
-      throw new RuntimeException("synthetic sink failure (S10 drill)")
+    override def writeDocs(docs: DataFrame): Unit = write(inner, docs)
     override def appendLineage(l: DataFrame): Unit = inner.appendLineage(l)
     override def readDocs(s: org.apache.spark.sql.SparkSession): DataFrame = inner.readDocs(s)
     override def lineageExists(s: org.apache.spark.sql.SparkSession): Boolean = inner.lineageExists(s)
     override def readLineage(s: org.apache.spark.sql.SparkSession): DataFrame = inner.readLineage(s)
   }
+
+  /** Primary whose data commit always fails (the "Excel writer" role). */
+  private def failingPrimary(dir: String): TableIO = new ScriptedPrimary(dir)((_, _) =>
+    throw new RuntimeException("synthetic sink failure (S10 drill)"))
 
   private def tmp(): String = Files.createTempDirectory("graft_csvfb").toString
 
@@ -41,7 +45,7 @@ class CsvFallbackSpec extends SparkTestBase {
       "clean", NBuckets, 8, resume = false, Vendor.builtinTemplates)
 
     val io = new CsvFallbackTableIO(
-      new FailingPrimary(s"$fbDir/t"), s"$fbDir/csv")
+      failingPrimary(s"$fbDir/t"), s"$fbDir/csv")
     val degraded = ExtractJob.run(spark, pages, io, "fb", NBuckets, 8,
       resume = false, Vendor.builtinTemplates)
 
@@ -57,10 +61,50 @@ class CsvFallbackSpec extends SparkTestBase {
     assert(back.select(countDistinct(col("bucket"))).head().getLong(0) == NBuckets)
   }
 
+  /** A fresh run over the edge-row corpus: its metrics and lineage counts. */
+  private def runEdge(io: TableIO, runId: String): (ExtractJob.Metrics, Seq[Seq[Any]]) = {
+    val m = ExtractJob.run(spark, LineageChecks.pagesWithEdgeRows(spark, NDocs), io, runId,
+      NBuckets, 8, resume = false, Vendor.builtinTemplates)
+    (m, LineageChecks.lineageCounts(io.readLineage(spark), runId))
+  }
+
+  private lazy val healthyEdgeRun = runEdge(new ParquetTableIO(s"${tmp()}/t"), "clean")
+
+  /** The degraded run counted every doc once: same metrics and lineage as the
+    * healthy run, and the fallback did fire. */
+  private def assertNoDoubleCount(dir: String, io: TableIO, runId: String): Unit = {
+    val (hm, hl) = healthyEdgeRun
+    val (m, l) = runEdge(io, runId)
+    assert(new java.io.File(s"$dir/csv/_GRAFT_CSV_COMMIT").exists(), "fallback did not fire")
+    assert(LineageChecks.totals(m) == LineageChecks.totals(hm))
+    assert(m.docs == NDocs + 3)
+    assert(l == hl)
+  }
+
+  test("primary that fails after its Spark write completes: no double count") {
+    // an Iceberg commit conflict fails only after the write job has run
+    val dir = tmp()
+    val late = new ScriptedPrimary(s"$dir/t")((primary, docs) => {
+      primary.writeDocs(docs)
+      throw new RuntimeException("synthetic commit conflict after the write job")
+    })
+    assertNoDoubleCount(dir, new CsvFallbackTableIO(late, s"$dir/csv"), "late")
+  }
+
+  test("primary that fails inside one task partway through: no double count") {
+    val dir = tmp()
+    val victim = Corpus.page(NDocs - 1).url
+    val boom = udf((u: String) =>
+      if (u == victim) throw new RuntimeException("synthetic task failure") else u)
+    val midTask = new ScriptedPrimary(s"$dir/t")((primary, docs) =>
+      primary.writeDocs(docs.withColumn("url", boom(col("url")))))
+    assertNoDoubleCount(dir, new CsvFallbackTableIO(midTask, s"$dir/csv"), "mid")
+  }
+
   test("grid_csv read back from the CSV table matches the kernel renderer") {
     val fbDir = tmp()
     val pages = ExtractPipeline.pages(spark, NDocs).toDF()
-    val io = new CsvFallbackTableIO(new FailingPrimary(s"$fbDir/t"), s"$fbDir/csv")
+    val io = new CsvFallbackTableIO(failingPrimary(s"$fbDir/t"), s"$fbDir/csv")
     ExtractJob.run(spark, pages, io, "fb", NBuckets, 8,
       resume = false, Vendor.builtinTemplates)
 
@@ -82,15 +126,9 @@ class CsvFallbackSpec extends SparkTestBase {
     val dir = tmp()
     val inner = new ParquetTableIO(s"$dir/t")
     var failNow = false
-    val toggling = new TableIO {
-      override def writeDocs(docs: DataFrame): Unit =
-        if (failNow) throw new RuntimeException("synthetic failure after resume")
-        else inner.writeDocs(docs)
-      override def appendLineage(l: DataFrame): Unit = inner.appendLineage(l)
-      override def readDocs(s: org.apache.spark.sql.SparkSession): DataFrame = inner.readDocs(s)
-      override def lineageExists(s: org.apache.spark.sql.SparkSession): Boolean = inner.lineageExists(s)
-      override def readLineage(s: org.apache.spark.sql.SparkSession): DataFrame = inner.readLineage(s)
-    }
+    val toggling = new ScriptedPrimary(s"$dir/t")((primary, docs) =>
+      if (failNow) throw new RuntimeException("synthetic failure after resume")
+      else primary.writeDocs(docs))
     val io = new CsvFallbackTableIO(toggling, s"$dir/csv")
     // the unit under test is the TableIO read path when different RUNS of a
     // job committed to different backends — drive writeDocs directly with

@@ -89,6 +89,25 @@ class ExtractE2ESpec extends SparkTestBase {
     d2.foreach { r => assert(r.getString(1) == oracle(r.getString(0)).extractedText) }
   }
 
+  test("lineage equals the committed table; metrics equal the lineage") {
+    import LineageChecks._
+    import org.apache.spark.sql.types._
+    val out = Files.createTempDirectory("graft_lineage_spec").toString
+    val m = ExtractJob.run(spark, pagesWithEdgeRows(spark, 300), out, runId = "edge",
+      nBuckets = 8)
+    val lineageDf = spark.read.parquet(s"$out/lineage")
+    // the committed lineage table keeps its columns, order and types
+    assert(lineageDf.schema.map(f => f.name -> f.dataType) == Seq(
+      "runId" -> StringType, "bucket" -> IntegerType, "docs" -> LongType,
+      "bytes" -> LongType, "failures" -> LongType, "emptyDocs" -> LongType,
+      "status" -> StringType))
+    assert(lineageDf.filter("status <> 'ok'").isEmpty)
+    val lineage = lineageCounts(lineageDf, "edge")
+    assert(lineage == tableCounts(spark.read.parquet(s"$out/docs")))
+    assert(totals(m) == totals(lineage))
+    assert(m.docs == 303 && m.failedDocs >= 1 && m.emptyDocs >= 1, m)
+  }
+
   test("extract_doc rejects wrong input types at analysis time") {
     import spark.implicits._
     // an int html column must fail in the analyzer (AnalysisException), not

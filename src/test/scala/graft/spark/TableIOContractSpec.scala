@@ -57,12 +57,12 @@ class TableIOContractSpec extends SparkTestBase {
       * the given buckets, as if the job died before their lineage append. */
     def dropLineageFor(buckets: Set[Long]): Unit = {
       val bIdx = lineageSchema.fieldIndex("bucket")
-      val kept = lineageRows.filterNot(r => buckets(r.getLong(bIdx)))
+      val kept = lineageRows.filterNot(r => buckets(r.getAs[Number](bIdx).longValue))
       lineageRows.clear(); lineageRows ++= kept
     }
     def lineageBuckets: Set[Long] = {
       val bIdx = lineageSchema.fieldIndex("bucket")
-      lineageRows.map(_.getLong(bIdx)).toSet
+      lineageRows.map(_.getAs[Number](bIdx).longValue).toSet
     }
   }
 
@@ -123,5 +123,47 @@ class TableIOContractSpec extends SparkTestBase {
     val got = io.readDocs(spark).drop("bucket").collect().map(_.toString).sorted
     assert(got.sameElements(want), "resumed table diverged from a clean run")
     assert(io.docCount == NDocs)
+  }
+
+  test("lineage equals the committed table; metrics equal the lineage") {
+    import LineageChecks._
+    val io = new FakeCatalogTableIO
+    val m = ExtractJob.run(spark, pagesWithEdgeRows(spark, NDocs), io, "edge",
+      nBuckets = NBuckets, numPartitions = 8, resume = false,
+      templates = Vendor.builtinTemplates)
+    val table = io.readDocs(spark)
+    // the three edge rows committed with the outcomes they stand for
+    def failureOf(url: String) =
+      table.filter(org.apache.spark.sql.functions.col("url") === url)
+        .select("failure", "nItems").head()
+    assert(failureOf(EmptyUrl).getString(0) == "empty_payload")
+    assert(failureOf(BlankUrl).getString(0) == "" && failureOf(BlankUrl).getInt(1) == 0)
+    assert(table.filter("url IS NULL AND nBytes IS NULL").count() == 1)
+
+    val lineage = lineageCounts(io.readLineage(spark), "edge")
+    assert(lineage == tableCounts(table))
+    assert(totals(m) == totals(lineage))
+    assert(m.docs == NDocs + 3 && m.failedDocs >= 1 && m.emptyDocs >= 1, m)
+  }
+
+  test("a TableIO that runs no action over the docs fails clearly, not by hanging") {
+    val fake = new FakeCatalogTableIO
+    val lazyIO = new TableIO { // accepts the docs, never writes them
+      override def writeDocs(docs: DataFrame): Unit = ()
+      override def appendLineage(l: DataFrame): Unit = fake.appendLineage(l)
+      override def readDocs(s: SparkSession): DataFrame = fake.readDocs(s)
+      override def lineageExists(s: SparkSession): Boolean = fake.lineageExists(s)
+      override def readLineage(s: SparkSession): DataFrame = fake.readLineage(s)
+    }
+    val key = ExtractJob.ObserveWaitConf
+    spark.conf.set(key, "1")
+    val e = try intercept[IllegalStateException] {
+      ExtractJob.run(spark, ExtractPipeline.pages(spark, 20).toDF(), lazyIO, "lazy",
+        nBuckets = NBuckets, numPartitions = 8, resume = false,
+        templates = Vendor.builtinTemplates)
+    } finally spark.conf.unset(key)
+    assert(e.getMessage.contains("writeDocs must run at least one successful action"),
+      e.getMessage)
+    assert(!fake.lineageExists(spark), "no lineage may commit without its docs")
   }
 }
