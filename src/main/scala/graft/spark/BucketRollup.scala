@@ -1,15 +1,10 @@
 package graft.spark
 
-import java.nio.ByteBuffer
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The per-bucket lineage counts of a docs table, as ONE aggregate
   * expression, so `Dataset.observe` can take them during the action that
@@ -29,10 +24,8 @@ object BucketRollup {
 
   /** The rollup over a docs frame's `bucket`, `nBytes`, `failure` and
     * `nItems` columns. */
-  def column: Column = GraftColumnBridge.column(
-    Agg(Seq("bucket", "nBytes", "failure", "nItems")
-      .map(c => GraftColumnBridge.expression(col(c))))
-      .toAggregateExpression())
+  def column: Column =
+    udaf(Agg, Encoders.product[In])(col("bucket"), col("nBytes"), col("failure"), col("nItems"))
 
   /** The same counts by a second pass over a committed docs table, one row
     * per bucket: `(bucket: long, docs, bytes, failures, emptyDocs)`. */
@@ -49,44 +42,27 @@ object BucketRollup {
       b -> Counts(c(0), c(1), c(2), c(3), c(4))
     }
 
+  /** One docs row's rolled-up columns; `None` where the row holds null. */
+  final case class In(bucket: Long, nBytes: Option[Long], failure: Option[String],
+                      nItems: Option[Int])
+
   private type Buf = mutable.LongMap[Array[Long]] // bucket → Counts' fields, in order
 
-  /** A Catalyst aggregate rather than a typed `Aggregator` (`udaf`), which
-    * goes through encoders and objects for every row: on a 4-core VM the
-    * typed one added about 80 ms to a 5 000-row, 16-task parquet write, this
-    * one nothing measurable. */
-  private case class Agg(children: Seq[Expression], mutableAggBufferOffset: Int = 0,
-                         inputAggBufferOffset: Int = 0)
-      extends TypedImperativeAggregate[Buf] with ImplicitCastInputTypes {
+  private object Agg extends Aggregator[In, Buf, Map[Long, Seq[Long]]] {
+    def zero: Buf = mutable.LongMap.empty
 
-    private def bucket = children(0)
-    private def nBytes = children(1)
-    private def failure = children(2)
-    private def nItems = children(3)
-
-    override def inputTypes: Seq[DataType] =
-      Seq(LongType, LongType, StringType, IntegerType)
-    override def nullable: Boolean = false
-    override def dataType: DataType =
-      MapType(LongType, ArrayType(LongType, containsNull = false), valueContainsNull = false)
-    override def prettyName: String = "bucket_rollup"
-
-    override def createAggregationBuffer(): Buf = mutable.LongMap.empty
-
-    override def update(buf: Buf, input: InternalRow): Buf = {
-      val c = buf.getOrElseUpdate(bucket.eval(input).asInstanceOf[Long], new Array[Long](5))
+    def reduce(buf: Buf, in: In): Buf = {
+      val c = buf.getOrElseUpdate(in.bucket, new Array[Long](5))
       c(0) += 1
-      val b = nBytes.eval(input)
-      if (b != null) { c(1) += b.asInstanceOf[Long]; c(2) += 1 }
-      val f = failure.eval(input).asInstanceOf[UTF8String]
-      if (f != null) {
-        if (f.numBytes > 0) c(3) += 1
-        else if (nItems.eval(input) == 0) c(4) += 1
+      in.nBytes.foreach { b => c(1) += b; c(2) += 1 }
+      in.failure.foreach { f =>
+        if (f.nonEmpty) c(3) += 1
+        else if (in.nItems.contains(0)) c(4) += 1
       }
       buf
     }
 
-    override def merge(buf: Buf, other: Buf): Buf = {
+    def merge(buf: Buf, other: Buf): Buf = {
       other.foreachEntry { (k, o) =>
         val c = buf.getOrElseUpdate(k, new Array[Long](5))
         for (i <- c.indices) c(i) += o(i)
@@ -94,28 +70,10 @@ object BucketRollup {
       buf
     }
 
-    override def eval(buf: Buf): Any = {
-      val keys = buf.keys.toArray
-      new ArrayBasedMapData(UnsafeArrayData.fromPrimitiveArray(keys),
-        new GenericArrayData(keys.map(k => UnsafeArrayData.fromPrimitiveArray(buf(k)): Any)))
-    }
+    def finish(buf: Buf): Map[Long, Seq[Long]] =
+      buf.iterator.map { case (k, c) => k -> c.toSeq }.toMap
 
-    override def serialize(buf: Buf): Array[Byte] = {
-      val out = ByteBuffer.allocate(buf.size * 6 * 8)
-      buf.foreachEntry { (k, c) => out.putLong(k); c.foreach(out.putLong) }
-      out.array()
-    }
-
-    override def deserialize(bytes: Array[Byte]): Buf = {
-      val in = ByteBuffer.wrap(bytes)
-      val buf = mutable.LongMap.empty[Array[Long]]
-      while (in.hasRemaining) buf(in.getLong) = Array.fill(5)(in.getLong)
-      buf
-    }
-
-    override def withNewMutableAggBufferOffset(n: Int): Agg = copy(mutableAggBufferOffset = n)
-    override def withNewInputAggBufferOffset(n: Int): Agg = copy(inputAggBufferOffset = n)
-    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Agg =
-      copy(children = c)
+    def bufferEncoder: Encoder[Buf] = Encoders.javaSerialization[Buf]
+    def outputEncoder: Encoder[Map[Long, Seq[Long]]] = ExpressionEncoder[Map[Long, Seq[Long]]]()
   }
 }

@@ -1,9 +1,7 @@
 package graft.spark
 
-import java.util.concurrent.TimeoutException
-import scala.concurrent.{Await, Promise}
-import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -41,7 +39,13 @@ import graft.kernel._
   *    doc is counted iff the write that committed it finished; the observed
   *    aggregate sits in the write's result stage, where Spark merges each
   *    partition's accumulator once. The job's `Metrics` are the sums of the
-  *    same ≤ nBuckets lineage rows it appends.
+  *    same ≤ nBuckets lineage rows it appends. The counts reach the driver
+  *    with the action's end event on Spark's shared listener queue; the job
+  *    drains the bus after the write, so a late event is waited for, but an
+  *    event the queue drops on overflow
+  *    (`spark.scheduler.listenerbus.eventqueue.shared.capacity`, default
+  *    10 000) fails the run after its docs committed, and a resume redoes
+  *    the uncounted buckets.
   *
   * At 10^12 docs this layout holds: nBuckets scales to O(10^5) (lineage stays
   * tiny), numPartitions to O(cores×4); nothing here collects data to the
@@ -66,9 +70,9 @@ object ExtractJob {
     StructField("emptyDocs", LongType),
     StructField("status", StringType, nullable = false)))
 
-  /** Seconds to wait, after `writeDocs` returns, for the write's observed
-    * lineage counts (delivered by the listener bus). */
-  val ObserveWaitConf = "spark.graft.extract.observeWaitSec"
+  /** How long, after `writeDocs` returns, the job waits for the listener bus
+    * to deliver the events of the actions it ran. */
+  private val BusDrainTimeoutMs = 10L * 60 * 1000
 
   /** The metrics observed under `name` by the first action that SUCCEEDS.
     * Spark 4.1's [[org.apache.spark.sql.Observation]] also completes from a
@@ -76,20 +80,21 @@ object ExtractJob {
     * before it — counts of rows that never committed — so the job listens
     * for the success event itself. */
   private final class FirstSuccess(name: String) extends QueryExecutionListener {
-    private val observed = Promise[Row]()
+    @volatile private var observed: Option[Row] = None
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      qe.observedMetrics.get(name).foreach(observed.trySuccess)
+      if (observed.isEmpty) observed = qe.observedMetrics.get(name)
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
 
-    def await(spark: SparkSession): Row = {
-      val waitSec = spark.conf.get(ObserveWaitConf, "60").toDouble
-      try Await.result(observed.future, Duration.fromNanos((waitSec * 1e9).toLong))
-      catch {
-        case _: TimeoutException =>
-          throw new IllegalStateException(
-            s"no lineage counts from the docs write within ${waitSec}s: the TableIO's " +
-            "writeDocs must run at least one successful action over all of its docs rows")
-      }
+    /** The observed row, once every action run so far has been reported: an
+      * action posts its end event before it returns, so after the drain a
+      * missing row means no successful action read the docs. */
+    def get(spark: SparkSession): Row = {
+      GraftListenerBus.drain(spark.sparkContext, BusDrainTimeoutMs)
+      observed.getOrElse(throw new IllegalStateException(
+        "no lineage counts from the docs write: the TableIO's writeDocs must run at " +
+        "least one successful action over all of its docs rows (or the shared " +
+        "listener queue dropped its end event; see " +
+        "spark.scheduler.listenerbus.eventqueue.shared.capacity)"))
     }
   }
 
@@ -184,7 +189,7 @@ object ExtractJob {
       try {
         io.writeDocs(extracted.observe(observedAs, BucketRollup.column.as("rollup")))
         if (pendingBuckets.isEmpty) Map.empty[Long, BucketRollup.Counts]
-        else BucketRollup.decode(observer.await(spark))
+        else BucketRollup.decode(observer.get(spark))
       } finally spark.listenerManager.unregister(observer)
 
     // lineage of the rows that committed, appended only after the docs commit

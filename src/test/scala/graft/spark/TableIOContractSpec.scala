@@ -155,13 +155,11 @@ class TableIOContractSpec extends SparkTestBase {
       override def lineageExists(s: SparkSession): Boolean = fake.lineageExists(s)
       override def readLineage(s: SparkSession): DataFrame = fake.readLineage(s)
     }
-    val key = ExtractJob.ObserveWaitConf
-    spark.conf.set(key, "1")
-    val e = try intercept[IllegalStateException] {
+    val e = intercept[IllegalStateException] {
       ExtractJob.run(spark, ExtractPipeline.pages(spark, 20).toDF(), lazyIO, "lazy",
         nBuckets = NBuckets, numPartitions = 8, resume = false,
         templates = Vendor.builtinTemplates)
-    } finally spark.conf.unset(key)
+    }
     assert(e.getMessage.contains("writeDocs must run at least one successful action"),
       e.getMessage)
     assert(!fake.lineageExists(spark), "no lineage may commit without its docs")
