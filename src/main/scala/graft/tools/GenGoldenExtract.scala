@@ -2,11 +2,12 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{SaveMode, SparkSession}
-import graft.kernel.{Corpus, Csv, Extractor, Multimodal}
+import graft.kernel.{Corpus, Csv, Extractor, Multimodal, PdfLite}
 
 /** Regenerates the committed golden-extraction parquets under `data/` that
   * back the DuckDB oracles of the extraction-family catalog queries
-  * (q25/q26/q27/q29/q38/q47/q48/q49/q50). The goldens are the single-threaded kernel's output
+  * (q25/q26/q27/q29/q38/q47/q48/q49/q50), plus `golden_items`, which pins
+  * both PDF content interpreters item by item. The goldens are the single-threaded kernel's output
   * over the deterministic corpus — the same oracle definition as the
   * byte-identity gate — materialized so an independent engine (DuckDB) can
   * verify the distributed results by hash.
@@ -25,6 +26,22 @@ object GenGoldenExtract {
     val d = java.security.MessageDigest.getInstance("MD5")
     d.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
   }
+
+  /** The `golden_items` rows of corpus page `i`: none for a non-PDF payload,
+    * else one per content interpreter (`parse`, `native`) with the raw
+    * [[PdfLite.Parsed]] shape and an md5 over every `TextItem` field in order. */
+  def itemRows(i: Long): Seq[(Long, String, String, Int, String, Int, Int, Boolean, Int)] = {
+    val p = Corpus.page(i)
+    if (p.html == null || !PdfLite.isPdf(p.html)) Nil
+    else Seq("parse" -> PdfLite.parse(p.html), "native" -> PdfLite.parseNative(p.html)).map {
+      case (route, r) =>
+        (i, p.url, route, r.items.length, md5hex(r.items.mkString("\n")),
+          r.pageW, r.pageH, r.hasImage, r.nPages)
+    }
+  }
+
+  val ItemColumns: Seq[String] = Seq("idx", "url", "route", "n_items", "items_md5",
+    "page_w", "page_h", "has_image", "n_pages")
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 20000L
@@ -98,6 +115,9 @@ object GenGoldenExtract {
       (i, m.format, m.channels, m.nBytes, m.width, m.height, m.failure)
     }.toDF("idx", "format", "channels", "n_bytes", "width", "height", "failure")
     commitSingleFile(media.orderBy("idx"), "golden_media.parquet")
+
+    val items = spark.range(0, n, 1, 16).flatMap(i => itemRows(i)).toDF(ItemColumns: _*)
+    commitSingleFile(items.orderBy("idx", "route"), "golden_items.parquet")
 
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.kernel.{Corpus, Extractor, Multimodal}
+import graft.tools.GenGoldenExtract
 import graft.tools.GenGoldenExtract.md5hex
 
 /** Drift gate for the committed extraction goldens (`data/golden_*.parquet`,
@@ -52,6 +53,19 @@ class GoldenExtractSpec extends SparkTestBase {
     }
     // multi-page docs actually exist in the sampled range
     assert(g.exists(_._2.length > 1), "corpus lost its multi-page documents")
+  }
+
+  test("golden_items matches both live PDF routes on every row") {
+    val g = spark.read.parquet("data/golden_items.parquet")
+    val live = spark.createDataFrame(spark.sparkContext
+      .range(0L, 20000L, 1L, 16).flatMap(GenGoldenExtract.itemRows))
+      .toDF(GenGoldenExtract.ItemColumns: _*)
+    assert(g.columns.toSeq == GenGoldenExtract.ItemColumns)
+    assert(g.count() == live.count(), s"golden_items row count — $hint")
+    val drift = g.exceptAll(live).union(live.exceptAll(g))
+      .select("idx", "route").limit(10).collect().map(r => s"${r.get(0)}/${r.get(1)}")
+    assert(drift.isEmpty, s"rows drifted from golden_items: ${drift.mkString(", ")} — $hint")
+    assert(g.filter("route = 'native' and n_items > 0").count() > 0)
   }
 
   test("golden_media matches live decode on a sample") {
