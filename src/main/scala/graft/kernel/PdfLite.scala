@@ -2019,45 +2019,10 @@ object PdfLite {
     } catch { case _: Exception => "unreadable" }
   }
 
-  /** Decode a literal string starting at `(`: §7.3.4.2 escapes
-    * (`\\ \( \) \n \r \t \b \f`, 1–3-digit octal, line continuation) and
-    * balanced unescaped parens. Returns (value, index past the `)`). */
-  private def readLiteral(s: String, open: Int): String = {
-    val sb = new java.lang.StringBuilder
-    var k = open + 1
-    var depth = 1
-    while (k < s.length && depth > 0) {
-      val c = s.charAt(k)
-      if (c == '\\' && k + 1 < s.length) {
-        val e = s.charAt(k + 1)
-        k += 2
-        e match {
-          case 'n' => sb.append('\n')
-          case 'r' => sb.append('\r')
-          case 't' => sb.append('\t')
-          case 'b' => sb.append('\b')
-          case 'f' => sb.append('\f')
-          case '\n' => () // line continuation
-          case '\r' => // \<CR> or \<CRLF> continuation (PDF 32000-1 §7.3.4.2)
-            if (k < s.length && s.charAt(k) == '\n') k += 1
-          case d if d >= '0' && d <= '7' =>
-            var v = d - '0'
-            var nd = 1
-            while (nd < 3 && k < s.length && s.charAt(k) >= '0' && s.charAt(k) <= '7') {
-              v = v * 8 + (s.charAt(k) - '0'); k += 1; nd += 1
-            }
-            sb.append((v & 0xff).toChar)
-          case other => sb.append(other)
-        }
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        if (depth > 0) sb.append(c)
-        k += 1
-      }
-    }
-    sb.toString
-  }
+  /** Decode the literal string whose `(` is at `open` (the content-stream
+    * lexer's reader, [[ContentLexer.literal]]). */
+  private def readLiteral(s: String, open: Int): String =
+    new ContentLexer(s, open + 1).literal()
 
   /** Decode a hex string starting at `<` (not `<<`); UTF-16BE when
     * BOM-prefixed, PDFDocEncoding (≈ Latin-1) otherwise. */
@@ -2516,37 +2481,276 @@ object PdfLite {
     sb.toString
   }
 
-  /** Content-stream text state machine (PDF 32000-1 §9.4 subset), STREAMING:
-    * one cursor pass over the content, no intermediate token vector and no
-    * boxed numbers outside `TJ` arrays (the interpreter is ~2/3 of parse CPU
-    * on the bench corpus — this is the hot loop of the whole native route).
+  /** Content-stream lexer (PDF 32000-1 §7.2–7.3) under both text
+    * interpreters, [[interpret]] and [[interpretNative]]. STREAMING: one
+    * cursor pass over the content, no intermediate token vector and no boxed
+    * numbers outside `TJ` arrays (interpretation is ~2/3 of parse CPU on the
+    * bench corpus — this is the hot loop of the whole PDF route).
     *
-    * The operand window exploits a state-machine fact: every operator here
-    * reads at most the LAST TWO operands plus the operand COUNT (`Tm` requires
-    * six but uses only e and f, the translation column), so the buffer is two
-    * scalar register sets instead of a growing `ArrayBuffer[Tok]`. Non-number
-    * operands read as 0.0 in number position, exactly like the old `num()`.
+    * [[scan]] hands each operator to the caller, then clears the operand
+    * window. The window is the operand COUNT plus the kind, number and string
+    * of the last six operands in fixed slots: no operator either interpreter
+    * knows reads more than six (`Tm`, `cm`). Non-number operands read as 0.0
+    * in number position. An array operand is held apart ([[array]], the last
+    * one wins) and does not count toward an operator's arity.
+    *
+    * `%` outside a string starts a comment that runs to the end of the line
+    * (§7.2.3). `<<`/`>>` only drop the operands. `BI … ID … EI` inline images
+    * are skipped whole. Array nesting is capped at 32 (deeper brackets are
+    * dropped and their elements flatten into the depth-32 array); only
+    * top-level string/number elements of an array are retained — `TJ`
+    * ignores everything else anyway. Skip-paths (stray brackets, `-`/`.`
+    * non-numbers) are iterative: recursion is only per array-nesting level,
+    * which is capped. */
+  private[kernel] final class ContentLexer(content: String, private[this] var i: Int = 0) {
+    import ContentLexer._
+    private[this] val n = content.length
+
+    private[this] var count = 0
+    private[this] val kinds = new Array[Int](Window)
+    private[this] val nums = new Array[Double](Window)
+    private[this] val strs = new Array[String](Window)
+    private[this] var arr: mutable.ArrayBuffer[AnyRef] = null
+
+    /** Operands since the last operator, arrays not counted. */
+    def arity: Int = count
+    /** Kind of the `back`-th last operand (1 = last); [[Other]] if absent. */
+    def kind(back: Int): Int =
+      if (back > count || back > Window) Other else kinds((count - back) % Window)
+    def num(back: Int): Double =
+      if (back > count || back > Window) 0.0 else nums((count - back) % Window)
+    def str(back: Int): String =
+      if (back > count || back > Window) null else strs((count - back) % Window)
+    /** The last array operand since the last operator, or null. */
+    def array: mutable.ArrayBuffer[AnyRef] = arr
+
+    private def push(kind: Int, num: Double, str: String): Unit = {
+      val k = count % Window
+      kinds(k) = kind; nums(k) = num; strs(k) = str
+      count += 1
+    }
+    private def clear(): Unit = { count = 0; arr = null }
+
+    /** Ends a name or an operator: whitespace or a delimiter that starts the
+      * next token. */
+    private def tokenEnd(c: Char): Boolean =
+      c.isWhitespace || c == '/' || c == '(' || c == '[' || c == '<' || c == ']' || c == '%'
+
+    private def skipToken(): Unit = {
+      i += 1
+      while (i < n && !tokenEnd(content.charAt(i))) i += 1
+    }
+
+    private def skipComment(): Unit =
+      while (i < n && content.charAt(i) != '\n' && content.charAt(i) != '\r') i += 1
+
+    /** Literal string body, cursor just past its `(`: §7.3.4.2 escapes
+      * (`\\ \( \) \n \r \t \b \f`, 1–3-digit octal, `\`EOL continuation) and
+      * balanced unescaped parens. */
+    def literal(): String = {
+      val sb = new java.lang.StringBuilder
+      var depth = 1
+      while (i < n && depth > 0) {
+        // bulk-copy the run up to the next special char (escape/paren)
+        val spanStart = i
+        while (i < n && { val ch = content.charAt(i)
+                          ch != '\\' && ch != '(' && ch != ')' }) i += 1
+        if (i > spanStart) sb.append(content, spanStart, i)
+        if (i < n) {
+          val ch = content.charAt(i)
+          if (ch == '\\' && i + 1 < n) {
+            content.charAt(i + 1) match {
+              case 'n' => sb.append('\n'); i += 2
+              case 'r' => sb.append('\r'); i += 2
+              case 't' => sb.append('\t'); i += 2
+              case 'b' => sb.append('\b'); i += 2
+              case 'f' => sb.append('\f'); i += 2
+              case '\n' => i += 2 // line continuation
+              case '\r' => // \<CR> or \<CRLF> continuation
+                i += 2
+                if (i < n && content.charAt(i) == '\n') i += 1
+              case d if d >= '0' && d <= '7' => // octal \d, \dd or \ddd
+                var v = 0; var k = 0; i += 1
+                while (k < 3 && i < n && content.charAt(i) >= '0' &&
+                       content.charAt(i) <= '7') {
+                  v = (v << 3) | (content.charAt(i) - '0'); i += 1; k += 1
+                }
+                sb.append((v & 0xff).toChar)
+              case other => sb.append(other); i += 2
+            }
+          } else if (ch == '(') { depth += 1; sb.append(ch); i += 1 }
+          else if (ch == ')') { depth -= 1; if (depth > 0) sb.append(ch); i += 1 }
+          else { sb.append(ch); i += 1 } // trailing '\' at end of content
+        }
+      }
+      sb.toString
+    }
+
+    private def hex(): String = { // caller consumed '<'
+      val sb = new java.lang.StringBuilder
+      var hi = -1
+      var done = false
+      while (i < n && !done) {
+        val ch = content.charAt(i)
+        if (ch == '>') { done = true; i += 1 }
+        else {
+          val d = Character.digit(ch, 16)
+          if (d >= 0) {
+            if (hi < 0) hi = d
+            else { sb.append(((hi << 4) | d).toChar); hi = -1 }
+          }
+          i += 1 // non-hex chars (whitespace) skipped per spec
+        }
+      }
+      if (hi >= 0) sb.append((hi << 4).toChar) // odd final digit: low nibble 0
+      sb.toString
+    }
+
+    /** Parse a number starting at `i` (caller checked the first char). Returns
+      * NaN and leaves the chars consumed when the span isn't a number — the
+      * old tokenizer's NFE skip-path. Pure-integer spans (the overwhelming
+      * majority: coordinates, font sizes, TJ kerns are written as ints) take
+      * an exact digit-fold fast path; anything with a '.' falls back to
+      * `Double.parseDouble` so decimal values stay bit-identical. */
+    private def number(): Double = {
+      val start = i
+      var hasDot = content.charAt(i) == '.'
+      i += 1
+      while (i < n && (content.charAt(i).isDigit || content.charAt(i) == '.')) {
+        if (content.charAt(i) == '.') hasDot = true
+        i += 1
+      }
+      val c0 = content.charAt(start)
+      val digits0 = if (c0 == '-' || c0 == '+') start + 1 else start
+      if (!hasDot && i > digits0 && i - digits0 <= 15) {
+        var v = 0L
+        var k = digits0
+        while (k < i) { v = v * 10 + (content.charAt(k) - '0'); k += 1 }
+        if (c0 == '-') -v.toDouble else v.toDouble // ≤15 digits: exact in a double
+      } else if (!hasDot && i == digits0) Double.NaN // bare sign: old NFE path
+      else {
+        try content.substring(start, i).toDouble
+        catch { case _: NumberFormatException => Double.NaN }
+      }
+    }
+
+    private def name(): String = { // cursor on the '/'
+      val from = i + 1
+      skipToken()
+      content.substring(from, i)
+    }
+
+    /** Array at textual nesting `depth` (top = 1): collects only the string
+      * and number elements `TJ` can consume; nested arrays are parsed (for
+      * the matching bracket) and discarded; names/ops/dict markers skipped.
+      * Past the nesting cap the bracket is dropped, flattening deeper
+      * elements into this array — the old tokenizer's exact behavior. */
+    private def parseArray(depth: Int): mutable.ArrayBuffer[AnyRef] = {
+      val elems = new mutable.ArrayBuffer[AnyRef](8)
+      var done = false
+      while (!done) {
+        while (i < n && content.charAt(i).isWhitespace) i += 1
+        if (i >= n) done = true
+        else {
+          val c = content.charAt(i)
+          if (c == ']') { i += 1; done = true }
+          else if (c == '%') skipComment()
+          else if (c == '(') { i += 1; elems += literal() }
+          else if (c == '<') {
+            if (i + 1 < n && content.charAt(i + 1) == '<') i += 2 // dict marker: not a TJ element
+            else { i += 1; elems += hex() }
+          } else if (c == '>') {
+            if (i + 1 < n && content.charAt(i + 1) == '>') i += 2
+            else i += 1
+          } else if (c == '/') { name(); () }
+          else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
+            val v = number()
+            if (!v.isNaN) elems += java.lang.Double.valueOf(v)
+          } else if (c == '[') {
+            i += 1
+            if (depth < MaxArrayNesting) { parseArray(depth + 1); () }
+            // past the cap: bracket dropped, elements flatten into this array
+          } else skipToken() // operator tokens inside arrays: skipped
+        }
+      }
+      elems
+    }
+
+    /** `BI <dict> ID <binary> EI`, cursor past `BI`: the binary payload can
+      * contain ANY delimiter chars, so jump to the EI sentinel
+      * (whitespace-preceded, delimiter/EOF-followed) instead of tokenizing
+      * through it. No EI: the rest is image bytes. No ID: malformed — scan
+      * on as if BI were an unknown operator. */
+    private def skipInlineImage(): Unit = {
+      val id = content.indexOf("ID", i)
+      if (id >= 0) {
+        var p = content.indexOf("EI", id + 2)
+        var end = -1
+        while (end < 0 && p >= 0) {
+          val okBefore = p > 0 && content.charAt(p - 1).isWhitespace
+          val okAfter = p + 2 >= n || content.charAt(p + 2).isWhitespace ||
+            "([</".indexOf(content.charAt(p + 2)) >= 0
+          if (okBefore && okAfter) end = p + 2
+          else p = content.indexOf("EI", p + 1)
+        }
+        i = if (end < 0) n else end
+      }
+    }
+
+    /** Lex the whole content, calling `onOp` with each operator; unknown
+      * operators are the caller's to ignore. */
+    def scan(onOp: String => Unit): Unit =
+      while (i < n) {
+        val c = content.charAt(i)
+        if (c.isWhitespace) i += 1
+        else if (c == '%') skipComment()
+        else if (c == '(') { i += 1; push(Str, 0.0, literal()) }
+        else if (c == '<') {
+          if (i + 1 < n && content.charAt(i + 1) == '<') { i += 2; clear() }
+          else { i += 1; push(Str, 0.0, hex()) }
+        } else if (c == '>') {
+          if (i + 1 < n && content.charAt(i + 1) == '>') { i += 2; clear() }
+          else i += 1 // stray '>': skip
+        } else if (c == '/') push(Name, 0.0, name())
+        else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
+          val v = number()
+          if (!v.isNaN) push(Num, v, null) // NFE span: skip, keep scanning
+        } else if (c == '[') { i += 1; arr = parseArray(1) }
+        else if (c == ']') i += 1 // stray ']': skip
+        else {
+          val from = i
+          skipToken()
+          val op = content.substring(from, i)
+          if (op == "BI") skipInlineImage() else onOp(op)
+          clear()
+        }
+      }
+  }
+
+  private[kernel] object ContentLexer {
+    /** Operand kinds. */
+    final val Num = 0; final val Str = 1; final val Name = 2; final val Other = 3
+    private final val Window = 6
+    private final val MaxArrayNesting = 32
+  }
+
+  /** Approximate-geometry text interpreter (PDF 32000-1 §9.4 subset), the
+    * route production extraction uses: one [[TextItem]] per shown string
+    * with `CharWidthFactor` advance widths. The graphics state and
+    * `Tc`/`Tw`/`Tz`/`Ts` are ignored, and `Tm` uses only e and f, the
+    * translation column.
     *
     * `fonts` maps font resource names (Tf's first operand) to their declared
     * encoding/CMap; a `/ToUnicode` CMap takes precedence (PyMuPDF order),
-    * else `/WinAnsiEncoding` strings are re-read as windows-1252.
-    *
-    * Array handling keeps the old tokenizer's shape: nesting capped at 32
-    * (deeper brackets are dropped and their elements flatten into the
-    * depth-32 array); only top-level string/number elements of an array are
-    * retained — `TJ` ignores everything else anyway. Skip-paths (stray
-    * brackets, `-`/`.` non-numbers) are iterative: recursion is only per
-    * array-nesting level, which is capped. */
+    * else `/WinAnsiEncoding` strings are re-read as windows-1252. */
   private def interpret(content: String, pageW: Int, pageH: Int, rot: Int,
                         pageNum: Int,
                         out: mutable.Builder[TextItem, Vector[TextItem]],
                         fonts: Map[String, FontInfo] = Map.empty,
                         forms: Map[String, FormX] = Map.empty): Unit = {
-    var i = 0
-    val n = content.length
-    val MaxArrayNesting = 32
-    // operand kinds
-    val KNum = 0; val KStr = 1; val KName = 2; val KArr = 3; val KOther = 4
+    import ContentLexer.{Name, Str}
+    val lx = new ContentLexer(content)
+    import lx.{arity, array, kind, num, str}
 
     // interpreter state
     var fontSize = 12.0
@@ -2554,25 +2758,6 @@ object PdfLite {
     var leading = 0.0
     var tmx = 0.0; var tmy = 0.0   // current text position (PDF coords)
     var lmx = 0.0; var lmy = 0.0   // line-start position
-
-    // operand window: count since last operator + last two operands
-    var opCount = 0
-    var lastKind = KOther; var lastNum = 0.0; var lastStr: String = null
-    var prevKind = KOther; var prevNum = 0.0; var prevStr: String = null
-    var lastArr: mutable.ArrayBuffer[AnyRef] = null
-
-    def clearOps(): Unit = {
-      opCount = 0
-      lastKind = KOther; lastNum = 0.0; lastStr = null
-      prevKind = KOther; prevNum = 0.0; prevStr = null
-      lastArr = null
-    }
-    def push(kind: Int, num: Double, str: String,
-             arr: mutable.ArrayBuffer[AnyRef]): Unit = {
-      prevKind = lastKind; prevNum = lastNum; prevStr = lastStr
-      lastKind = kind; lastNum = num; lastStr = str; lastArr = arr
-      opCount += 1
-    }
 
     def emit(raw: String): Unit = {
       val decoded =
@@ -2605,240 +2790,54 @@ object PdfLite {
       tmx += width
     }
 
-    def handleOp(op: String): Unit = {
-      op match {
-        case "BT" => tmx = 0; tmy = 0; lmx = 0; lmy = 0
-        case "ET" =>
-        case "Tf" =>
-          if (opCount >= 1) fontSize = lastNum
-          if (opCount >= 2 && prevKind == KName)
-            font = fonts.getOrElse(prevStr, DefaultFont)
-        case "Td" | "TD" =>
-          if (opCount >= 2) {
-            lmx += prevNum; lmy += lastNum; tmx = lmx; tmy = lmy
-            if (op == "TD") leading = -lastNum
-          }
-        case "Tm" =>
-          if (opCount >= 6) { tmx = prevNum; tmy = lastNum; lmx = tmx; lmy = tmy }
-        case "T*" => lmy -= leading; tmx = lmx; tmy = lmy
-        case "TL" => if (opCount >= 1) leading = lastNum
-        case "Tj" => if (lastKind == KStr) emit(lastStr)
-        case "'" | "\"" =>
-          // move-to-next-line-and-show; `"` additionally carries aw/ac
-          // word/char spacing operands, which this geometry model ignores
-          lmy -= leading; tmx = lmx; tmy = lmy
-          if (lastKind == KStr) emit(lastStr)
-        case "Do" =>
-          // execute a Form XObject's content stream in place. Fonts: the
-          // form's own resources win, else the invoking context's
-          // (PDF §8.10.1). Nested forms come only from the form's OWN
-          // resources — inheriting the caller's form map would let a form
-          // invoke itself through the caller's name and loop
-          if (lastKind == KName) forms.get(lastStr) match {
-            case Some(f) =>
-              interpret(f.content, pageW, pageH, rot, pageNum, out,
-                if (f.fonts.nonEmpty) f.fonts else fonts,
-                if (f.forms.nonEmpty) f.forms else Map.empty)
-            case None =>
-          }
-        case "BI" =>
-          // inline image: `BI <dict> ID <binary> EI` — the binary payload
-          // can contain ANY delimiter chars, so jump to the EI sentinel
-          // (whitespace-preceded, delimiter/EOF-followed) instead of
-          // tokenizing through it
-          val id = content.indexOf("ID", i)
-          if (id >= 0) {
-            var p = content.indexOf("EI", id + 2)
-            var end = -1
-            while (end < 0 && p >= 0) {
-              val okBefore = p > 0 && content.charAt(p - 1).isWhitespace
-              val okAfter = p + 2 >= n || content.charAt(p + 2).isWhitespace ||
-                "([</".indexOf(content.charAt(p + 2)) >= 0
-              if (okBefore && okAfter) end = p + 2
-              else p = content.indexOf("EI", p + 1)
-            }
-            i = if (end < 0) n else end // no EI: the rest is image bytes
-          } // no ID: malformed — treat BI as an unknown op and scan on
-        case "TJ" =>
-          if (lastKind == KArr && lastArr != null) {
-            val it = lastArr.iterator
-            while (it.hasNext) it.next() match {
-              case s: String => emit(s)
-              case d: java.lang.Double =>
-                tmx -= d.doubleValue / 1000.0 * fontSize // standard kerning advance
-              case _ =>
-            }
-          }
-        case _ => // unknown operator: just drops operands
-      }
-      clearOps()
-    }
-
-    def literalString(): String = { // caller consumed '('
-      val sb = new java.lang.StringBuilder
-      var depth = 1
-      while (i < n && depth > 0) {
-        // bulk-copy the run up to the next special char (escape/paren)
-        val spanStart = i
-        while (i < n && { val ch = content.charAt(i)
-                          ch != '\\' && ch != '(' && ch != ')' }) i += 1
-        if (i > spanStart) sb.append(content, spanStart, i)
-        if (i < n) {
-          val ch = content.charAt(i)
-          if (ch == '\\' && i + 1 < n) {
-            content.charAt(i + 1) match {
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case '\n' => i += 2 // line continuation (PDF 32000-1 §7.3.4.2)
-              case '\r' => // \<CR> or \<CRLF> continuation
-                i += 2
-                if (i < n && content.charAt(i) == '\n') i += 1
-              case d if d >= '0' && d <= '7' => // octal \d, \dd or \ddd
-                var v = 0; var k = 0; i += 1
-                while (k < 3 && i < n && content.charAt(i) >= '0' &&
-                       content.charAt(i) <= '7') {
-                  v = (v << 3) | (content.charAt(i) - '0'); i += 1; k += 1
-                }
-                sb.append((v & 0xff).toChar)
-              case other => sb.append(other); i += 2
-            }
-          } else if (ch == '(') { depth += 1; sb.append(ch); i += 1 }
-          else if (ch == ')') { depth -= 1; if (depth > 0) sb.append(ch); i += 1 }
-          else { sb.append(ch); i += 1 } // trailing '\' at end of content
+    def handleOp(op: String): Unit = op match {
+      case "BT" => tmx = 0; tmy = 0; lmx = 0; lmy = 0
+      case "Tf" =>
+        if (arity >= 1) fontSize = num(1)
+        if (arity >= 2 && kind(2) == Name)
+          font = fonts.getOrElse(str(2), DefaultFont)
+      case "Td" | "TD" =>
+        if (arity >= 2) {
+          lmx += num(2); lmy += num(1); tmx = lmx; tmy = lmy
+          if (op == "TD") leading = -num(1)
         }
-      }
-      sb.toString
-    }
-
-    def hexString(): String = { // caller consumed '<'
-      val sb = new java.lang.StringBuilder
-      var hi = -1
-      var done = false
-      while (i < n && !done) {
-        val ch = content.charAt(i)
-        if (ch == '>') { done = true; i += 1 }
-        else {
-          val d = Character.digit(ch, 16)
-          if (d >= 0) {
-            if (hi < 0) hi = d
-            else { sb.append(((hi << 4) | d).toChar); hi = -1 }
-          }
-          i += 1 // non-hex chars (whitespace) skipped per spec
+      case "Tm" =>
+        if (arity >= 6) { tmx = num(2); tmy = num(1); lmx = tmx; lmy = tmy }
+      case "T*" => lmy -= leading; tmx = lmx; tmy = lmy
+      case "TL" => if (arity >= 1) leading = num(1)
+      case "Tj" => if (kind(1) == Str) emit(str(1))
+      case "'" | "\"" =>
+        // move-to-next-line-and-show; `"` additionally carries aw/ac
+        // word/char spacing operands, which this geometry model ignores
+        lmy -= leading; tmx = lmx; tmy = lmy
+        if (kind(1) == Str) emit(str(1))
+      case "Do" =>
+        // execute a Form XObject's content stream in place. Fonts: the
+        // form's own resources win, else the invoking context's
+        // (PDF §8.10.1). Nested forms come only from the form's OWN
+        // resources — inheriting the caller's form map would let a form
+        // invoke itself through the caller's name and loop
+        if (kind(1) == Name) forms.get(str(1)) match {
+          case Some(f) =>
+            interpret(f.content, pageW, pageH, rot, pageNum, out,
+              if (f.fonts.nonEmpty) f.fonts else fonts,
+              if (f.forms.nonEmpty) f.forms else Map.empty)
+          case None =>
         }
-      }
-      if (hi >= 0) sb.append((hi << 4).toChar) // odd final digit: low nibble 0
-      sb.toString
-    }
-
-    /** Parse a number starting at `i` (caller checked the first char). Returns
-      * NaN and leaves the chars consumed when the span isn't a number — the
-      * old tokenizer's NFE skip-path. Pure-integer spans (the overwhelming
-      * majority: coordinates, font sizes, TJ kerns are written as ints) take
-      * an exact digit-fold fast path; anything with a '.' falls back to
-      * `Double.parseDouble` so decimal values stay bit-identical. */
-    def number(): Double = {
-      val start = i
-      var hasDot = content.charAt(i) == '.'
-      i += 1
-      while (i < n && (content.charAt(i).isDigit || content.charAt(i) == '.')) {
-        if (content.charAt(i) == '.') hasDot = true
-        i += 1
-      }
-      val c0 = content.charAt(start)
-      val digits0 = if (c0 == '-' || c0 == '+') start + 1 else start
-      if (!hasDot && i > digits0 && i - digits0 <= 15) {
-        var v = 0L
-        var k = digits0
-        while (k < i) { v = v * 10 + (content.charAt(k) - '0'); k += 1 }
-        if (c0 == '-') -v.toDouble else v.toDouble // ≤15 digits: exact in a double
-      } else if (!hasDot && i == digits0) Double.NaN // bare sign: old NFE path
-      else {
-        try content.substring(start, i).toDouble
-        catch { case _: NumberFormatException => Double.NaN }
-      }
-    }
-
-    def skipName(): String = {
-      val start = i + 1
-      i += 1
-      while (i < n && !content.charAt(i).isWhitespace && content.charAt(i) != '/' &&
-             content.charAt(i) != '(' && content.charAt(i) != '[' &&
-             content.charAt(i) != '<' && content.charAt(i) != ']') i += 1
-      content.substring(start, i)
-    }
-
-    /** Array at textual nesting `depth` (top = 1): collects only the string
-      * and number elements `TJ` can consume; nested arrays are parsed (for
-      * the matching bracket) and discarded; names/ops/dict markers skipped.
-      * Past the nesting cap the bracket is dropped, flattening deeper
-      * elements into this array — the old tokenizer's exact behavior. */
-    def parseArray(depth: Int): mutable.ArrayBuffer[AnyRef] = {
-      val elems = new mutable.ArrayBuffer[AnyRef](8)
-      var done = false
-      while (!done) {
-        while (i < n && content.charAt(i).isWhitespace) i += 1
-        if (i >= n) done = true
-        else {
-          val c = content.charAt(i)
-          if (c == ']') { i += 1; done = true }
-          else if (c == '(') { i += 1; elems += literalString() }
-          else if (c == '<') {
-            if (i + 1 < n && content.charAt(i + 1) == '<') i += 2 // dict marker: not a TJ element
-            else { i += 1; elems += hexString() }
-          } else if (c == '>') {
-            if (i + 1 < n && content.charAt(i + 1) == '>') i += 2
-            else i += 1
-          } else if (c == '/') { skipName(); () }
-          else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
-            val v = number()
-            if (!v.isNaN) elems += java.lang.Double.valueOf(v)
-          } else if (c == '[') {
-            i += 1
-            if (depth < MaxArrayNesting) { parseArray(depth + 1); () }
-            // past the cap: bracket dropped, elements flatten into this array
-          } else {
-            val start = i
-            while (i < n && !content.charAt(i).isWhitespace &&
-                   content.charAt(i) != '(' && content.charAt(i) != '/' &&
-                   content.charAt(i) != '[' && content.charAt(i) != '<' &&
-                   content.charAt(i) != ']') i += 1
-            if (i == start) i += 1 // operator tokens inside arrays: skipped
+      case "TJ" =>
+        if (array != null) {
+          val it = array.iterator
+          while (it.hasNext) it.next() match {
+            case s: String => emit(s)
+            case d: java.lang.Double =>
+              tmx -= d.doubleValue / 1000.0 * fontSize // standard kerning advance
+            case _ =>
           }
         }
-      }
-      elems
+      case _ => // ET and unknown operators: the lexer drops their operands
     }
 
-    // ---- main scan ----
-    while (i < n) {
-      val c = content.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '(') { i += 1; push(KStr, 0.0, literalString(), null) }
-      else if (c == '<') {
-        if (i + 1 < n && content.charAt(i + 1) == '<') { i += 2; handleOp("<<") }
-        else { i += 1; push(KStr, 0.0, hexString(), null) }
-      } else if (c == '>') {
-        if (i + 1 < n && content.charAt(i + 1) == '>') { i += 2; handleOp(">>") }
-        else i += 1 // stray '>': skip
-      } else if (c == '/') push(KName, 0.0, skipName(), null)
-      else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
-        val v = number()
-        if (!v.isNaN) push(KNum, v, null, null) // NFE span: skip, keep scanning
-      } else if (c == '[') {
-        i += 1
-        push(KArr, 0.0, null, parseArray(1))
-      } else if (c == ']') i += 1 // stray ']': skip
-      else {
-        val start = i
-        while (i < n && !content.charAt(i).isWhitespace &&
-               content.charAt(i) != '(' && content.charAt(i) != '/' &&
-               content.charAt(i) != '[' && content.charAt(i) != '<' &&
-               content.charAt(i) != ']') i += 1
-        if (i > start) handleOp(content.substring(start, i))
-        else i += 1
-      }
-    }
+    lx.scan(handleOp)
   }
 
   // ---------- native-route structured text (the PyMuPDF twin) ----------
@@ -2852,7 +2851,7 @@ object PdfLite {
   // artifacts: the `single_page_debug.log` funnel (256 items → 149 in box →
   // 19 rows → 10 merged) and byte-identical cells on all 2 136 rows of
   // `NEWARK_SMART_20250902_120119.xlsx` across the 241 real PDFs
-  // (tools/proto_native.py carries the validation run).
+  // (RealPdfSpec is the gate; its goldens are `data/realpdf_*`).
 
   /** One shown glyph in device space: origin, advance endpoint, effective
     * size (matrix expansion), the Tf resource name (MuPDF span identity), and
@@ -2900,9 +2899,9 @@ object PdfLite {
                               fonts: Map[String, FontInfo],
                               forms: Map[String, FormX],
                               out: mutable.ArrayBuffer[NChar]): Unit = {
-    var i = 0
-    val n = content.length
-    val MaxArrayNesting = 32
+    import ContentLexer.{Name, Str}
+    val lx = new ContentLexer(content)
+    import lx.{arity, array, kind, num, str}
 
     var ctm = ctm0
     val gsStack = new mutable.ArrayBuffer[Array[Double]](8)
@@ -2913,18 +2912,6 @@ object PdfLite {
     var fontSize = 0.0
     var tc = 0.0; var tw = 0.0; var ts = 0.0
     var th = 1.0; var tl = 0.0
-
-    // operand buffer (cleared per operator). Kinds: 0 num, 1 str, 2 name.
-    val opK = new mutable.ArrayBuffer[Int](8)
-    val opN = new mutable.ArrayBuffer[Double](8)
-    val opS = new mutable.ArrayBuffer[String](8)
-    var lastArr: mutable.ArrayBuffer[AnyRef] = null
-    def clearOps(): Unit = { opK.clear(); opN.clear(); opS.clear(); lastArr = null }
-    def push(kind: Int, num: Double, str: String): Unit = {
-      opK += kind; opN += num; opS += str
-    }
-    def num(backFrom: Int): Double = opN(opN.length - backFrom)
-    def lastIs(kind: Int): Boolean = opK.nonEmpty && opK.last == kind
 
     def decode(code: Int): String =
       if (font.cmap.nonEmpty) font.cmap.getOrElse(code, code.toChar.toString)
@@ -2959,231 +2946,62 @@ object PdfLite {
       }
     }
 
-    def handleOp(op: String): Unit = {
-      op match {
-        case "q" => gsStack += ctm
-        case "Q" => if (gsStack.nonEmpty) ctm = gsStack.remove(gsStack.length - 1)
-        case "cm" if opK.length >= 6 =>
-          ctm = matMul(Array(num(6), num(5), num(4), num(3), num(2), num(1)), ctm)
-        case "BT" =>
-          tm = Array(1, 0, 0, 1, 0, 0); tlm = tm
-        case "ET" =>
-        case "Tf" =>
-          if (opK.length >= 1) fontSize = opN.last
-          if (opK.length >= 2 && opK(opK.length - 2) == 2) {
-            fontId = opS(opS.length - 2)
-            font = fonts.getOrElse(fontId, null)
-          }
-        case "Td" | "TD" if opK.length >= 2 =>
-          if (op == "TD") tl = -num(1)
-          tlm = matMul(Array(1, 0, 0, 1, num(2), num(1)), tlm)
-          tm = tlm
-        case "Tm" if opK.length >= 6 =>
-          tm = Array(num(6), num(5), num(4), num(3), num(2), num(1)); tlm = tm
-        case "T*" =>
-          tlm = matMul(Array(1, 0, 0, 1, 0, -tl), tlm); tm = tlm
-        case "TL" if opK.nonEmpty => tl = opN.last
-        case "Tc" if opK.nonEmpty => tc = opN.last
-        case "Tw" if opK.nonEmpty => tw = opN.last
-        case "Tz" if opK.nonEmpty => th = opN.last / 100.0
-        case "Ts" if opK.nonEmpty => ts = opN.last
-        case "Tj" => if (lastIs(1)) show(opS.last)
-        case "'" | "\"" =>
-          // `"` carries aw/ac operands; like the validated prototype the
-          // geometry keeps the PRE-op Tw/Tc (no real writer in this corpus
-          // emits `"`)
-          tlm = matMul(Array(1, 0, 0, 1, 0, -tl), tlm); tm = tlm
-          if (lastIs(1)) show(opS.last)
-        case "TJ" =>
-          if (lastArr != null) {
-            val it = lastArr.iterator
-            while (it.hasNext) it.next() match {
-              case sdoc: String => show(sdoc)
-              case d: java.lang.Double =>
-                val tx = -d.doubleValue / 1000.0 * fontSize * th
-                tm = matMul(Array(1, 0, 0, 1, tx, 0), tm)
-              case _ =>
-            }
-          }
-        case "Do" =>
-          if (lastIs(2)) forms.get(opS.last) match {
-            case Some(f) =>
-              interpretNative(f.content, matMul(f.matrix, ctm),
-                if (f.fonts.nonEmpty) f.fonts else fonts,
-                f.forms, out)
-            case None =>
-          }
-        case "BI" =>
-          val id = content.indexOf("ID", i)
-          if (id >= 0) {
-            var p = content.indexOf("EI", id + 2)
-            var end = -1
-            while (end < 0 && p >= 0) {
-              val okBefore = p > 0 && content.charAt(p - 1).isWhitespace
-              val okAfter = p + 2 >= n || content.charAt(p + 2).isWhitespace ||
-                "([</".indexOf(content.charAt(p + 2)) >= 0
-              if (okBefore && okAfter) end = p + 2
-              else p = content.indexOf("EI", p + 1)
-            }
-            i = if (end < 0) n else end
-          }
-        case _ =>
-      }
-      clearOps()
-    }
-
-    def literalString(): String = { // caller consumed '('
-      val sb = new java.lang.StringBuilder
-      var depth = 1
-      while (i < n && depth > 0) {
-        val spanStart = i
-        while (i < n && { val ch = content.charAt(i)
-                          ch != '\\' && ch != '(' && ch != ')' }) i += 1
-        if (i > spanStart) sb.append(content, spanStart, i)
-        if (i < n) {
-          val ch = content.charAt(i)
-          if (ch == '\\' && i + 1 < n) {
-            content.charAt(i + 1) match {
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case '\n' => i += 2
-              case '\r' =>
-                i += 2
-                if (i < n && content.charAt(i) == '\n') i += 1
-              case d if d >= '0' && d <= '7' =>
-                var v = 0; var k = 0; i += 1
-                while (k < 3 && i < n && content.charAt(i) >= '0' &&
-                       content.charAt(i) <= '7') {
-                  v = (v << 3) | (content.charAt(i) - '0'); i += 1; k += 1
-                }
-                sb.append((v & 0xff).toChar)
-              case other => sb.append(other); i += 2
-            }
-          } else if (ch == '(') { depth += 1; sb.append(ch); i += 1 }
-          else if (ch == ')') { depth -= 1; if (depth > 0) sb.append(ch); i += 1 }
-          else { sb.append(ch); i += 1 }
+    def handleOp(op: String): Unit = op match {
+      case "q" => gsStack += ctm
+      case "Q" => if (gsStack.nonEmpty) ctm = gsStack.remove(gsStack.length - 1)
+      case "cm" if arity >= 6 =>
+        ctm = matMul(Array(num(6), num(5), num(4), num(3), num(2), num(1)), ctm)
+      case "BT" =>
+        tm = Array(1, 0, 0, 1, 0, 0); tlm = tm
+      case "Tf" =>
+        if (arity >= 1) fontSize = num(1)
+        if (arity >= 2 && kind(2) == Name) {
+          fontId = str(2)
+          font = fonts.getOrElse(fontId, null)
         }
-      }
-      sb.toString
-    }
-
-    def hexString(): String = {
-      val sb = new java.lang.StringBuilder
-      var hi = -1
-      var done = false
-      while (i < n && !done) {
-        val ch = content.charAt(i)
-        if (ch == '>') { done = true; i += 1 }
-        else {
-          val d = Character.digit(ch, 16)
-          if (d >= 0) {
-            if (hi < 0) hi = d
-            else { sb.append(((hi << 4) | d).toChar); hi = -1 }
-          }
-          i += 1
-        }
-      }
-      if (hi >= 0) sb.append((hi << 4).toChar)
-      sb.toString
-    }
-
-    def number(): Double = {
-      val start = i
-      var hasDot = content.charAt(i) == '.'
-      i += 1
-      while (i < n && (content.charAt(i).isDigit || content.charAt(i) == '.')) {
-        if (content.charAt(i) == '.') hasDot = true
-        i += 1
-      }
-      val c0 = content.charAt(start)
-      val digits0 = if (c0 == '-' || c0 == '+') start + 1 else start
-      if (!hasDot && i > digits0 && i - digits0 <= 15) {
-        var v = 0L
-        var k = digits0
-        while (k < i) { v = v * 10 + (content.charAt(k) - '0'); k += 1 }
-        if (c0 == '-') -v.toDouble else v.toDouble
-      } else if (!hasDot && i == digits0) Double.NaN
-      else {
-        try content.substring(start, i).toDouble
-        catch { case _: NumberFormatException => Double.NaN }
-      }
-    }
-
-    def skipName(): String = {
-      val start = i + 1
-      i += 1
-      while (i < n && !content.charAt(i).isWhitespace && content.charAt(i) != '/' &&
-             content.charAt(i) != '(' && content.charAt(i) != '[' &&
-             content.charAt(i) != '<' && content.charAt(i) != ']') i += 1
-      content.substring(start, i)
-    }
-
-    def parseArray(depth: Int): mutable.ArrayBuffer[AnyRef] = {
-      val elems = new mutable.ArrayBuffer[AnyRef](8)
-      var done = false
-      while (!done) {
-        while (i < n && content.charAt(i).isWhitespace) i += 1
-        if (i >= n) done = true
-        else {
-          val c = content.charAt(i)
-          if (c == ']') { i += 1; done = true }
-          else if (c == '(') { i += 1; elems += literalString() }
-          else if (c == '<') {
-            if (i + 1 < n && content.charAt(i + 1) == '<') i += 2
-            else { i += 1; elems += hexString() }
-          } else if (c == '>') {
-            if (i + 1 < n && content.charAt(i + 1) == '>') i += 2
-            else i += 1
-          } else if (c == '/') { skipName(); () }
-          else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
-            val v = number()
-            if (!v.isNaN) elems += java.lang.Double.valueOf(v)
-          } else if (c == '[') {
-            i += 1
-            if (depth < MaxArrayNesting) { parseArray(depth + 1); () }
-          } else {
-            val start = i
-            while (i < n && !content.charAt(i).isWhitespace &&
-                   content.charAt(i) != '(' && content.charAt(i) != '/' &&
-                   content.charAt(i) != '[' && content.charAt(i) != '<' &&
-                   content.charAt(i) != ']') i += 1
-            if (i == start) i += 1
+      case "Td" | "TD" if arity >= 2 =>
+        if (op == "TD") tl = -num(1)
+        tlm = matMul(Array(1, 0, 0, 1, num(2), num(1)), tlm)
+        tm = tlm
+      case "Tm" if arity >= 6 =>
+        tm = Array(num(6), num(5), num(4), num(3), num(2), num(1)); tlm = tm
+      case "T*" =>
+        tlm = matMul(Array(1, 0, 0, 1, 0, -tl), tlm); tm = tlm
+      case "TL" if arity >= 1 => tl = num(1)
+      case "Tc" if arity >= 1 => tc = num(1)
+      case "Tw" if arity >= 1 => tw = num(1)
+      case "Tz" if arity >= 1 => th = num(1) / 100.0
+      case "Ts" if arity >= 1 => ts = num(1)
+      case "Tj" => if (kind(1) == Str) show(str(1))
+      case "'" | "\"" =>
+        // `"` carries aw/ac operands; like the validated prototype the
+        // geometry keeps the PRE-op Tw/Tc (no real writer in this corpus
+        // emits `"`)
+        tlm = matMul(Array(1, 0, 0, 1, 0, -tl), tlm); tm = tlm
+        if (kind(1) == Str) show(str(1))
+      case "TJ" =>
+        if (array != null) {
+          val it = array.iterator
+          while (it.hasNext) it.next() match {
+            case sdoc: String => show(sdoc)
+            case d: java.lang.Double =>
+              val tx = -d.doubleValue / 1000.0 * fontSize * th
+              tm = matMul(Array(1, 0, 0, 1, tx, 0), tm)
+            case _ =>
           }
         }
-      }
-      elems
+      case "Do" =>
+        if (kind(1) == Name) forms.get(str(1)) match {
+          case Some(f) =>
+            interpretNative(f.content, matMul(f.matrix, ctm),
+              if (f.fonts.nonEmpty) f.fonts else fonts,
+              f.forms, out)
+          case None =>
+        }
+      case _ =>
     }
 
-    // ---- main scan ----
-    while (i < n) {
-      val c = content.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '(') { i += 1; push(1, 0.0, literalString()) }
-      else if (c == '<') {
-        if (i + 1 < n && content.charAt(i + 1) == '<') { i += 2; handleOp("<<") }
-        else { i += 1; push(1, 0.0, hexString()) }
-      } else if (c == '>') {
-        if (i + 1 < n && content.charAt(i + 1) == '>') { i += 2; handleOp(">>") }
-        else i += 1
-      } else if (c == '/') push(2, 0.0, skipName())
-      else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
-        val v = number()
-        if (!v.isNaN) push(0, v, null)
-      } else if (c == '[') {
-        i += 1
-        lastArr = parseArray(1)
-      } else if (c == ']') i += 1
-      else {
-        val start = i
-        while (i < n && !content.charAt(i).isWhitespace &&
-               content.charAt(i) != '(' && content.charAt(i) != '/' &&
-               content.charAt(i) != '[' && content.charAt(i) != '<' &&
-               content.charAt(i) != ']') i += 1
-        if (i > start) handleOp(content.substring(start, i))
-        else i += 1
-      }
-    }
+    lx.scan(handleOp)
   }
 
   /** MuPDF-style span assembly over the glyph stream: same span while the

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * counterexample on record:
   *  1. `/Info` dict housed INSIDE an /ObjStm container,
   *  2. `\<CR>` / `\<CRLF>` literal-string line continuations (§7.3.4.2),
-  *  3. an indirect `/Filter N 0 R` reference on a content stream. */
+  *  3. an indirect `/Filter N 0 R` reference on a content stream,
+  *  4. a `%` comment in a content stream (§7.2.3),
+  *  5. the `\b` and `\f` literal-string escapes (§7.3.4.2, Table 3). */
 class PdfEdgeSpec extends AnyFunSuite {
 
   private def bytes(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
@@ -58,5 +60,22 @@ class PdfEdgeSpec extends AnyFunSuite {
     val parsed = PdfLite.parse(bytes(pdf))
     assert(parsed.items.exists(_.text == "HelloIndirect"),
       s"indirect /Filter stream did not decode: ${parsed.items.map(_.text)}")
+  }
+
+  test("a % comment in a content stream runs to the end of the line on both routes") {
+    val pdf = PdfLiteSpec.onePage("BT /F1 10 Tf 10 180 Td (shown) Tj\n" +
+      "% (hidden) Tj\n%(also hidden) Tj\r(after)Tj%(not shown) Tj\nET")
+    assert(PdfLite.parse(pdf).items.map(_.text) == Vector("shown", "after"))
+    assert(PdfLite.parseNative(pdf).items.map(_.text) == Vector("shownafter"))
+  }
+
+  test("\\b and \\f escapes decode to backspace and form feed everywhere") {
+    val want = "x\by\fz"
+    val pdf = PdfLiteSpec.onePage("BT /F1 10 Tf 10 180 Td (x\\by\\fz) Tj ET")
+    assert(PdfLite.parse(pdf).items.map(_.text) == Vector(want))
+    assert(PdfLite.parseNative(pdf).items.map(_.text) == Vector(want))
+    val info = PdfLite.docInfo(bytes(
+      "%PDF-1.4\n1 0 obj << /Producer (P) /Title (x\\by\\fz) >> endobj\n"))
+    assert(info.map(_.title).contains(want))
   }
 }

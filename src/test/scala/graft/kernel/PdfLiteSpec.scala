@@ -8,6 +8,10 @@ import java.nio.charset.StandardCharsets
   * the features a real-web PDF corpus exercises beyond the round-1 dialect
   * (`smart_extract.py:64-97` ingests arbitrary PDFs; these close the gap). */
 class PdfLiteSpec extends AnyFunSuite {
+  import PdfLiteSpec.onePage
+
+  private def texts(pdf: Array[Byte]): (Vector[String], Vector[String]) =
+    (PdfLite.parse(pdf).items.map(_.text), PdfLite.parseNative(pdf).items.map(_.text))
 
   private def runsOf(page: Int, base: Int): Vector[PdfLite.Run] = Vector(
     PdfLite.Run(100, base, 12, s"alpha p$page"),
@@ -48,15 +52,10 @@ class PdfLiteSpec extends AnyFunSuite {
   }
 
   test("hex string oddities: whitespace inside, odd digit count, empty") {
-    val pdf = ("%PDF-1.4\n1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
-      "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
-      "3 0 obj << /Type /Page /MediaBox [0 0 200 200] /Contents 4 0 R >> endobj\n" +
-      "4 0 obj << /Length 60 >> stream\n" +
-      "BT /F1 10 Tf 10 180 Td <48 65 6C6C 6F> Tj <4> Tj <> Tj ET\n" +
-      "endstream endobj\n%%EOF\n").getBytes(StandardCharsets.ISO_8859_1)
-    val parsed = PdfLite.parse(pdf)
-    // <48 65 6C6C 6F> = "Hello"; <4> = 0x40 = "@"; <> = empty (dropped blank)
-    assert(parsed.items.map(_.text) == Vector("Hello", "@"), parsed.items)
+    val pdf = onePage("BT /F1 10 Tf 10 180 Td <48 65 6C6C 6F> Tj <4> Tj <> Tj ET")
+    // <48 65 6C6C 6F> = "Hello"; <4> = 0x40 = "@"; <> = empty (dropped blank);
+    // the native route joins the abutting glyphs into one span
+    assert(texts(pdf) == (Vector("Hello", "@"), Vector("Hello@")))
   }
 
   test("TJ kerned arrays: -600 units advance exactly one space width") {
@@ -76,16 +75,11 @@ class PdfLiteSpec extends AnyFunSuite {
   }
 
   test("literal-string octal escapes and line continuations (PDF §7.3.4.2)") {
-    val pdf = ("%PDF-1.4\n2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
-      "3 0 obj << /Type /Page /MediaBox [0 0 200 200] /Contents 4 0 R >> endobj\n" +
-      "4 0 obj << /Length 80 >> stream\n" +
-      "BT /F1 10 Tf 10 180 Td (\\110i \\164here) Tj (sp\\154it \\\n" +
-      "over lines) Tj (\\0601\\61) Tj ET\n" +
-      "endstream endobj\n%%EOF\n").getBytes(StandardCharsets.ISO_8859_1)
-    val parsed = PdfLite.parse(pdf)
+    val pdf = onePage("BT /F1 10 Tf 10 180 Td (\\110i \\164here) Tj (sp\\154it \\\n" +
+      "over lines) Tj (\\0601\\61) Tj ET")
     // \110 = H, \164 = t; \<newline> = continuation (dropped); \060 = '0', \61 = '1'
-    assert(parsed.items.map(_.text) == Vector("Hi there", "split over lines", "011"),
-      parsed.items.map(_.text))
+    assert(texts(pdf) == (Vector("Hi there", "split over lines", "011"),
+      Vector("Hi theresplit over lines011")))
   }
 
   test("MediaBox inherits from the Pages node when the Page has none") {
@@ -154,15 +148,12 @@ class PdfLiteSpec extends AnyFunSuite {
   }
 
   test("pathological token streams stay stack-safe (NFE runs, deep arrays)") {
-    val dashes = "BT " + ("- . + " * 20000) + "(ok) Tj ET"
-    val deep = "BT " + ("[ " * 20000) + "(x)" + (" ]" * 20000) + " TJ ET"
-    for (body <- Seq(dashes, deep)) {
-      val pdf = ("%PDF-1.4\n2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
-        "3 0 obj << /Type /Page /MediaBox [0 0 200 200] /Contents 4 0 R >> endobj\n" +
-        s"4 0 obj << /Length ${body.length} >> stream\n" + body +
-        "\nendstream endobj\n%%EOF\n").getBytes(StandardCharsets.ISO_8859_1)
-      PdfLite.parse(pdf) // must not throw StackOverflowError
-    }
+    val dashes = "BT /F1 10 Tf 10 180 Td " + ("- . + " * 20000) + "(ok) Tj ET"
+    val deep = "BT /F1 10 Tf 10 180 Td " + ("[ " * 20000) + "(x)" + (" ]" * 20000) + " TJ ET"
+    // must not throw StackOverflowError; the string past the nesting cap is
+    // not a top-level TJ element, so neither route shows it
+    assert(texts(onePage(dashes)) == (Vector("ok"), Vector("ok")))
+    assert(texts(onePage(deep)) == (Vector(), Vector()))
   }
 
   test("classic xref table + trailer: parses identically and carries true offsets") {
@@ -522,32 +513,34 @@ class PdfLiteSpec extends AnyFunSuite {
       "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
       "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
       "3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 200 200] " +
-      "/Contents 4 0 R /Resources << /XObject << /FmA 5 0 R >> >> >> endobj\n" +
+      "/Contents 4 0 R /Resources << /Font << /F1 9 0 R >> " +
+      "/XObject << /FmA 5 0 R >> >> >> endobj\n" +
       s"4 0 obj << /Length ${content.length} >> stream\n$content\nendstream endobj\n" +
       s"5 0 obj << /Type /XObject /Subtype /Form /BBox [0 0 200 200] " +
       s"/Resources << /XObject << /FmB 6 0 R >> >> /Length ${a.length} >> stream\n$a\nendstream endobj\n" +
       s"6 0 obj << /Type /XObject /Subtype /Form /BBox [0 0 200 200] " +
       s"/Resources << /XObject << /FmA 5 0 R >> >> /Length ${b.length} >> stream\n$b\nendstream endobj\n" +
-      "%%EOF\n").getBytes(StandardCharsets.ISO_8859_1)
+      PdfLiteSpec.WinAnsiF1 + "%%EOF\n").getBytes(StandardCharsets.ISO_8859_1)
     val parsed = PdfLite.parse(pdf)
     // depth cap 3: page→A→B→A(text only, B unresolved at depth 3) — the
     // cycle contributes finitely and never loops
     assert(parsed.items.map(_.text).startsWith(Vector("outer", "inner")), parsed.items)
     assert(parsed.items.count(_.text == "outer") <= 2)
+    assert(texts(pdf) == (Vector("outer", "inner", "outer"), Vector("outer", "inner", "outer")))
   }
 
   test("TL leading with ' and \" show operators advances lines") {
-    val content = "BT /F1 10 Tf 1 0 0 1 10 180 Tm 14 TL (one) Tj " +
-      "(two) ' 1 2 (three) \" ET"
-    val pdf = ("%PDF-1.4\n2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
-      "3 0 obj << /Type /Page /MediaBox [0 0 200 200] /Contents 4 0 R >> endobj\n" +
-      s"4 0 obj << /Length ${content.length} >> stream\n$content\nendstream endobj\n" +
-      "%%EOF\n").getBytes(StandardCharsets.ISO_8859_1)
+    val pdf = onePage("BT /F1 10 Tf 1 0 0 1 10 180 Tm 14 TL (one) Tj " +
+      "(two) ' 1 2 (three) \" ET")
     val parsed = PdfLite.parse(pdf)
     assert(parsed.items.map(_.text) == Vector("one", "two", "three"), parsed.items)
     // y-top = pageH - tmy - size: 200-180-10, then 14 down per ' / "
     assert(parsed.items.map(_.y) == Vector(10, 24, 38), parsed.items)
     assert(parsed.items.map(_.x) == Vector(10, 10, 10))
+    // native: y-top = baseline - ascent (0.8 · 10)
+    val native = PdfLite.parseNative(pdf).items
+    assert(native.map(i => (i.text, i.x, i.y)) ==
+      Vector(("one", 10, 12), ("two", 10, 26), ("three", 10, 40)), native)
   }
 
   test("inline images (BI..ID..EI) are skipped even with delimiter-soup payloads") {
@@ -555,19 +548,17 @@ class PdfLiteSpec extends AnyFunSuite {
     val content = "BT /F1 10 Tf 10 180 Td (before) Tj ET " +
       s"BI /W 2 /H 2 /BPC 8 ID $binary EI " +
       "BT /F1 10 Tf 10 160 Td (after) Tj ET"
-    val pdf = ("%PDF-1.4\n2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
-      "3 0 obj << /Type /Page /MediaBox [0 0 200 200] /Contents 4 0 R >> endobj\n" +
-      s"4 0 obj << /Length ${content.length} >> stream\n$content\nendstream endobj\n" +
-      "%%EOF\n").getBytes(StandardCharsets.ISO_8859_1)
-    val parsed = PdfLite.parse(pdf)
-    assert(parsed.items.map(_.text) == Vector("before", "after"), parsed.items)
+    assert(texts(onePage(content)) == (Vector("before", "after"), Vector("before", "after")))
     // truncated variant: BI with no EI — rest of stream is image bytes
     val trunc = content.replace(" EI ", " ")
-    val pdf2 = ("%PDF-1.4\n2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
-      "3 0 obj << /Type /Page /MediaBox [0 0 200 200] /Contents 4 0 R >> endobj\n" +
-      s"4 0 obj << /Length ${trunc.length} >> stream\n$trunc\nendstream endobj\n" +
-      "%%EOF\n").getBytes(StandardCharsets.ISO_8859_1)
-    assert(PdfLite.parse(pdf2).items.map(_.text) == Vector("before"))
+    assert(texts(onePage(trunc)) == (Vector("before"), Vector("before")))
+  }
+
+  test("a TJ array is held apart from the numeric operands on both routes") {
+    // malformed: a number between the array and TJ. Arrays do not count
+    // toward an operator's arity, so TJ still shows the array
+    assert(texts(onePage("BT /F1 10 Tf 10 180 Td [(arr)] 5 TJ ET")) ==
+      (Vector("arr"), Vector("arr")))
   }
 
   test("round-1 dialect (no explicit write path) still parses via the object tree") {
@@ -819,4 +810,19 @@ class PdfLiteSpec extends AnyFunSuite {
     assert(!parsed.items.exists(_.text.contains("alpha")),
       "undecryptable streams must not yield plaintext items")
   }
+}
+
+object PdfLiteSpec {
+  /** `/F1` as a WinAnsi Type1 font, object 9: the native route shows glyphs
+    * only in a font the page declares. */
+  val WinAnsiF1: String = "9 0 obj << /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
+    "/Encoding /WinAnsiEncoding >> endobj\n"
+
+  /** A one-page 200×200 PDF around `content`, with `/F1` = [[WinAnsiF1]]. */
+  def onePage(content: String): Array[Byte] =
+    ("%PDF-1.4\n2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
+      "3 0 obj << /Type /Page /MediaBox [0 0 200 200] /Contents 4 0 R " +
+      "/Resources << /Font << /F1 9 0 R >> >> >> endobj\n" +
+      s"4 0 obj << /Length ${content.length} >> stream\n$content\nendstream endobj\n" +
+      WinAnsiF1 + "%%EOF\n").getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
 }
