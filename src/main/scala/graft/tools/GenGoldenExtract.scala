@@ -32,7 +32,7 @@ object GenGoldenExtract {
     * [[PdfLite.Parsed]] shape and an md5 over every `TextItem` field in order. */
   def itemRows(i: Long): Seq[(Long, String, String, Int, String, Int, Int, Boolean, Int)] = {
     val p = Corpus.page(i)
-    if (p.html == null || !PdfLite.isPdf(p.html)) Nil
+    if (!PdfLite.isPdf(p.html)) Nil
     else Seq("parse" -> PdfLite.parse(p.html), "native" -> PdfLite.parseNative(p.html)).map {
       case (route, r) =>
         (i, p.url, route, r.items.length, md5hex(r.items.mkString("\n")),
