@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  2. `\<CR>` / `\<CRLF>` literal-string line continuations (§7.3.4.2),
   *  3. an indirect `/Filter N 0 R` reference on a content stream,
   *  4. a `%` comment in a content stream (§7.2.3),
-  *  5. the `\b` and `\f` literal-string escapes (§7.3.4.2, Table 3). */
+  *  5. the `\b` and `\f` literal-string escapes (§7.3.4.2, Table 3),
+  *  6. dict entries in another order or with less whitespace: `/UE` before
+  *     `/U`, `/OE` before `/O`, `/Type/Page>>`, and a negative `/Rotate`. */
 class PdfEdgeSpec extends AnyFunSuite {
 
   private def bytes(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
@@ -77,5 +79,88 @@ class PdfEdgeSpec extends AnyFunSuite {
     val info = PdfLite.docInfo(bytes(
       "%PDF-1.4\n1 0 obj << /Producer (P) /Title (x\\by\\fz) >> endobj\n"))
     assert(info.map(_.title).contains(want))
+  }
+
+  // Dictionary entry order and whitespace are irrelevant to a dictionary's
+  // meaning (§7.3.7, §7.2.2). Each case below edits the writer's own output
+  // without changing its byte length, so xref offsets stay valid.
+
+  private val Latin1 = "ISO-8859-1"
+  private def onePage(msg: String) =
+    Seq(PdfLite.PageSpec(1700, 1200, Seq(PdfLite.Run(100, 100, 12, msg))))
+  private def textOf(p: PdfLite.Parsed): String = p.items.map(_.text).mkString(" ")
+
+  /** Swap the adjacent entries `/a <hex>` and `/b <hex>` (in that order) into
+    * `/b <hex> /a <hex>`; the byte length does not change. */
+  private def swapHexEntries(pdf: Array[Byte], a: String, b: String): Array[Byte] = {
+    val s = new String(pdf, Latin1)
+    val ia = s.indexOf(s"/$a <")
+    val ea = s.indexOf('>', ia) + 1
+    val ib = s.indexOf(s"/$b <", ea)
+    val eb = s.indexOf('>', ib) + 1
+    assert(ia >= 0 && ib == ea + 1, s"/$a and /$b are not adjacent")
+    val swapped = s.substring(0, ia) + s.substring(ib, eb) + " " +
+      s.substring(ia, ea) + s.substring(eb)
+    assert(swapped.length == s.length)
+    swapped.getBytes(Latin1)
+  }
+
+  test("AES-256 with /UE written before /U opens with the empty password") {
+    val msg = "Dock 7 manifest: 1482 units cleared for Tuesday"
+    val pdf = swapHexEntries(PdfLite.writeDoc(onePage(msg), aes256 = true), "U", "UE")
+    assert(new String(pdf, Latin1).contains("/UE <"))
+    assert(textOf(PdfLite.parse(pdf)) == msg)
+  }
+
+  test("AES-256 with /OE written before /O opens with the owner password") {
+    val msg = "Dock 7 manifest: 1482 units cleared for Tuesday"
+    val pdf = swapHexEntries(PdfLite.writeDoc(onePage(msg), aes256 = true,
+      userPw = "s3cret", ownerPw = "admin-9"), "O", "OE")
+    assert(textOf(PdfLite.parse(pdf)).isEmpty)
+    assert(textOf(PdfLite.parse(pdf, Seq("admin-9"))) == msg)
+  }
+
+  test("/Type/Page with no space and a trailing >> still makes a page leaf") {
+    val pages = (1 to 3).map(k =>
+      PdfLite.PageSpec(600, 800, Seq(PdfLite.Run(50, 60, 12, s"page number $k"))))
+    val plain = PdfLite.writeDoc(pages, xref = true)
+    // `<< /Type /Page /Parent … R >>` → `<< /Parent … R   /Type/Page>>`
+    val s = new String(plain, Latin1)
+    val leaf = "<< /Type /Page /Parent"
+    val edited = new java.lang.StringBuilder
+    var from = 0
+    var at = s.indexOf(leaf)
+    while (at >= 0) {
+      val close = s.indexOf(" >>", at)
+      edited.append(s, from, at).append("<< /Parent")
+        .append(s, at + leaf.length, close).append("   /Type/Page>>")
+      from = close + 3
+      at = s.indexOf(leaf, from)
+    }
+    edited.append(s, from, s.length)
+    val pdf = edited.toString
+    assert(pdf.length == s.length && pdf.split("/Type/Page>>", -1).length == 4)
+    val parsed = PdfLite.parse(pdf.getBytes(Latin1))
+    assert(parsed.nPages == 3)
+    assert(parsed.items.map(i => (i.page, i.text)) ==
+      (1 to 3).map(k => (k, s"page number $k")))
+    assert(PdfLite.dialect(pdf.getBytes(Latin1)).split(',').contains("multipage"))
+  }
+
+  test("/Rotate -90 reads the same as /Rotate 270") {
+    val doc = Seq(PdfLite.PageSpec(1200, 1700, Seq(
+      PdfLite.Run(100, 100, 12, "rotated text line"),
+      PdfLite.Run(100, 300, 12, "second line"))))
+    val r270 = PdfLite.writeDoc(doc, rotate = 270, winAnsi = true)
+    val s = new String(r270, Latin1)
+    assert(s.contains("/Rotate 270"))
+    val rm90 = s.replace("/Rotate 270", "/Rotate -90").getBytes(Latin1)
+    for (parse <- Seq[Array[Byte] => PdfLite.Parsed](PdfLite.parse, PdfLite.parseNative)) {
+      val want = parse(r270)
+      val got = parse(rm90)
+      assert(want.items.nonEmpty)
+      assert(got.items == want.items)
+      assert((got.pageW, got.pageH) == (want.pageW, want.pageH))
+    }
   }
 }
