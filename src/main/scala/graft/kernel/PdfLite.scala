@@ -888,10 +888,111 @@ object PdfLite {
   def isPdf(bytes: Array[Byte]): Boolean =
     bytes.length >= 4 && bytes(0) == '%' && bytes(1) == 'P' && bytes(2) == 'D' && bytes(3) == 'F'
 
-  private final case class PdfObj(num: Int, dict: String,
+  /** One object: its number, its body text (between `obj` and `stream` or
+    * `endobj`) and its raw stream byte range. The body is read once, on
+    * first use. */
+  private final case class PdfObj(num: Int, text: String,
                                   streamStart: Int, streamEnd: Int) {
     def hasStream: Boolean = streamStart >= 0
+    lazy val value: AnyRef = new ContentLexer(text).value()
+    /** The body's dictionary (a stream's dict); empty if the body is none. */
+    def dict: PdfDict = value match {
+      case d: PdfDict => d
+      case _ => PdfDict.Empty
+    }
   }
+
+  // §7.3 object values as [[ContentLexer.value]] reads them. Besides these:
+  // numbers are `java.lang.Double`, strings their raw bytes as Latin-1
+  // chars, arrays `Vector[AnyRef]`, booleans `java.lang.Boolean`, and the
+  // null object is null.
+  private final case class PdfName(v: String)
+  private final case class PdfRef(num: Int)
+
+  /** A dictionary (§7.3.7). Lookups take the exact key, without its `/`,
+    * at this nesting level only. */
+  private final class PdfDict(keys: Array[String], vals: Array[AnyRef]) {
+    def get(key: String): AnyRef = {
+      var k = 0
+      while (k < keys.length) {
+        if (keys(k) == key) return vals(k)
+        k += 1
+      }
+      null
+    }
+    def has(key: String): Boolean = keys.contains(key)
+    def keysIterator: Iterator[String] = keys.iterator
+    def values: Iterator[AnyRef] = vals.iterator
+    def num(key: String): Option[Double] = get(key) match {
+      case d: java.lang.Double => Some(d.doubleValue)
+      case _ => None
+    }
+    def int(key: String): Option[Int] = num(key).map(_.toInt)
+    def name(key: String): Option[String] = get(key) match {
+      case PdfName(v) => Some(v)
+      case _ => None
+    }
+    def is(key: String, name: String): Boolean = get(key) match {
+      case PdfName(v) => v == name
+      case _ => false
+    }
+    def ref(key: String): Option[Int] = get(key) match {
+      case PdfRef(n) => Some(n)
+      case _ => None
+    }
+    /** A reference array, or a single reference. */
+    def refs(key: String): Vector[Int] = get(key) match {
+      case PdfRef(n) => Vector(n)
+      case a: Vector[_] => a.collect { case PdfRef(n) => n }
+      case _ => Vector.empty
+    }
+    def str(key: String): Option[String] = get(key) match {
+      case s: String => Some(s)
+      case _ => None
+    }
+    def bytes(key: String): Option[Array[Byte]] = str(key).map(_.getBytes(Latin1))
+    /** The numbers of an array value, in order. */
+    def nums(key: String): Vector[Double] = get(key) match {
+      case a: Vector[_] => a.collect { case d: java.lang.Double => d.doubleValue }
+      case _ => Vector.empty
+    }
+    /** A sub-dict, written inline or as an indirect reference. */
+    def dict(key: String, byNum: Map[Int, PdfObj] = Map.empty): Option[PdfDict] =
+      resolve(get(key), byNum) match {
+        case d: PdfDict => Some(d)
+        case _ => None
+      }
+  }
+  private object PdfDict {
+    val Empty = new PdfDict(Array.empty, Array.empty)
+  }
+
+  /** `v`, with an indirect reference followed one step through `byNum`. */
+  private def resolve(v: AnyRef, byNum: Map[Int, PdfObj]): AnyRef = v match {
+    case PdfRef(n) => byNum.get(n).map(_.value).orNull
+    case other => other
+  }
+
+  /** Every dictionary inside `v`, `v` itself first, then depth-first in file
+    * order. */
+  private def dictsIn(v: AnyRef): Iterator[PdfDict] = v match {
+    case d: PdfDict => Iterator.single(d) ++ d.values.flatMap(dictsIn)
+    case a: Vector[_] => a.iterator.flatMap(x => dictsIn(x.asInstanceOf[AnyRef]))
+    case _ => Iterator.empty
+  }
+
+  /** The first definition of each object number, in `objs` order. */
+  private def firstByNum(objs: Iterable[PdfObj]): Map[Int, PdfObj] =
+    objs.foldLeft(Map.empty[Int, PdfObj]) { (m, o) =>
+      if (m.contains(o.num)) m else m.updated(o.num, o)
+    }
+
+  /** A text string (§7.9.2.2): UTF-16BE after a byte-order mark,
+    * PDFDocEncoding (≈ Latin-1) otherwise. */
+  private def textString(raw: String): String =
+    if (raw.length >= 2 && raw.charAt(0) == 'þ' && raw.charAt(1) == 'ÿ')
+      new String(raw.substring(2).getBytes(Latin1), StandardCharsets.UTF_16BE)
+    else raw
 
   /** Locate `N G obj` working BACKWARD from an `obj` keyword hit: generation
     * digits, whitespace, object digits. Returns (objNum, matchStart) or null.
@@ -954,51 +1055,16 @@ object PdfLite {
   // hot-path patterns, compiled ONCE (JFR: per-call Pattern.compile and the
   // substring(...).trim tail copies were ~15% of parse CPU); matchers use
   // region() on the original string instead of allocating tails
-  private val RefHerePat = java.util.regex.Pattern.compile("\\G\\s*(\\d+)\\s+\\d+\\s+R")
-  private val RefAnyPat = java.util.regex.Pattern.compile("(\\d+)\\s+\\d+\\s+R")
-  private val IntHerePat = java.util.regex.Pattern.compile("\\G\\s+(\\d+)")
   private val ObjHeaderPat = java.util.regex.Pattern.compile("\\G\\s*(\\d+)\\s+\\d+\\s+obj")
   private val XrefKwPat = java.util.regex.Pattern.compile("\\G\\s*xref")
   private val XrefOffPat = java.util.regex.Pattern.compile("\\G\\s*(\\d+)")
   private val XrefEntryPat = java.util.regex.Pattern.compile("\\G\\s*(\\d{10})\\s+(\\d{5})\\s+([nf])")
   private val XrefSubPat = java.util.regex.Pattern.compile("\\G\\s*(\\d+)\\s+(\\d+)")
 
-  /** `/Name <num> 0 R` single reference. */
-  private def refOf(dict: String, name: String): Option[Int] = {
-    val i = dict.indexOf(name)
-    if (i < 0) return None
-    val m = RefHerePat.matcher(dict)
-    m.region(i + name.length, dict.length)
-    if (m.lookingAt()) Some(m.group(1).toInt) else None
-  }
-
-  /** `/Name [n 0 R n 0 R …]` reference array (also accepts a single ref). */
-  private def refsOf(dict: String, name: String): Vector[Int] = {
-    val i = dict.indexOf(name)
-    if (i < 0) return Vector.empty
-    var k = i + name.length
-    while (k < dict.length && dict.charAt(k).isWhitespace) k += 1
-    if (k < dict.length && dict.charAt(k) == '[') {
-      val close = dict.indexOf(']', k)
-      val m = RefAnyPat.matcher(dict)
-      m.region(k + 1, if (close < 0) dict.length else close)
-      val out = Vector.newBuilder[Int]
-      while (m.find()) out += m.group(1).toInt
-      out.result()
-    } else refOf(dict, name).toVector
-  }
-
-  /** `[a b c d]` after /MediaBox → (w, h). */
-  private def mediaBoxOf(dict: String): Option[(Int, Int)] = {
-    val i = dict.indexOf("/MediaBox")
-    if (i < 0) return None
-    val open = dict.indexOf('[', i)
-    val close = if (open < 0) -1 else dict.indexOf(']', open)
-    if (open < 0 || close < 0) return None
-    val nums = dict.substring(open + 1, close).trim.split("\\s+")
-    if (nums.length != 4) return None
-    try Some((nums(2).toDouble.toInt, nums(3).toDouble.toInt))
-    catch { case _: NumberFormatException => None }
+  /** `/MediaBox [a b c d]` → (c, d), the width and height. */
+  private def mediaBoxOf(dict: PdfDict): Option[(Int, Int)] = {
+    val box = dict.nums("MediaBox")
+    if (box.length == 4) Some((box(2).toInt, box(3).toInt)) else None
   }
 
   /** ASCIIHexDecode (PDF 32000-1 §7.4.2): hex pairs, whitespace ignored,
@@ -1176,21 +1242,28 @@ object PdfLite {
     new String(out, 0, outLen, Latin1)
   }
 
+  /** A stream's `/DecodeParms` (or `/DP`) dict: inline, indirect, or the
+    * first dict of a per-filter array. */
+  private def decodeParms(dict: PdfDict, byNum: Map[Int, PdfObj]): Option[PdfDict] =
+    resolve(Option(dict.get("DecodeParms")).getOrElse(dict.get("DP")), byNum) match {
+      case d: PdfDict => Some(d)
+      case a: Vector[_] => a.collectFirst { case d: PdfDict => d }
+      case _ => None
+    }
+
   /** `/DecodeParms` (or `/DP`) predictor application for a stream dict. */
-  private def applyDecodeParms(dict: String, data: String): String = {
-    val i = { val a = dict.indexOf("/DecodeParms"); if (a >= 0) a else dict.indexOf("/DP") }
-    if (i < 0) return data
-    dictSpan(dict, i) match {
+  private def applyDecodeParms(dict: PdfDict, byNum: Map[Int, PdfObj],
+                               data: String): String =
+    decodeParms(dict, byNum) match {
       case Some(dp) =>
-        val pred = intAfter(dp, "/Predictor").getOrElse(1)
+        val pred = dp.int("Predictor").getOrElse(1)
         if (pred < 2) data
         else unpredict(data, pred,
-          intAfter(dp, "/Columns").getOrElse(1),
-          intAfter(dp, "/Colors").getOrElse(1),
-          intAfter(dp, "/BitsPerComponent").getOrElse(8))
+          dp.int("Columns").getOrElse(1),
+          dp.int("Colors").getOrElse(1),
+          dp.int("BitsPerComponent").getOrElse(8))
       case None => data
     }
-  }
 
   /** `/LZWDecode` (PDF 32000-1 §7.4.4.2, the TIFF LZW variant): 9→12-bit
     * codes packed MSB-first, 256 = clear-table, 257 = EOD, EarlyChange = 1
@@ -1237,54 +1310,17 @@ object PdfLite {
     out.toString
   }
 
-  private val FilterNamePat = java.util.regex.Pattern.compile("/([A-Za-z0-9]+)")
-
-  /** Ordered `/Filter` chain of an object's dict (PDF 32000-1 §7.4.1):
-    * either a single name or an array listing filters in the order they
-    * must be APPLIED to decode. Empty when the stream is stored raw. */
-  /** `/Filter` names in declared order. Handles the three legal layouts:
-    * a single name, an inline array, and (when the whole file text `s` is
-    * supplied) an INDIRECT reference `\/Filter 5 0 R` to a name-or-array
-    * object — a layout some real writers emit (ADVICE r04). */
-  private def filterNames(dict: String, s: String = null): List[String] = {
-    val i = dict.indexOf("/Filter")
-    if (i < 0) return Nil
-    var k = i + "/Filter".length
-    while (k < dict.length && Character.isWhitespace(dict.charAt(k))) k += 1
-    if (k >= dict.length) Nil
-    else if (dict.charAt(k).isDigit) {
-      if (s == null) Nil
-      else refOf(dict.substring(i), "/Filter") match {
-        case Some(num) =>
-          // targeted scan for "num G obj": the object body IS the
-          // name/array; re-parse it through the inline paths above
-          val m = java.util.regex.Pattern
-            .compile("(?<![0-9])" + num + "\\s+\\d+\\s+obj").matcher(s)
-          if (!m.find()) Nil
-          else {
-            val end = s.indexOf("endobj", m.end())
-            val body = s.substring(m.end(), if (end < 0) s.length else end)
-            filterNames("/Filter " + body.trim)
-          }
-        case None => Nil
-      }
+  /** Ordered `/Filter` chain of a stream dict (PDF 32000-1 §7.4.1): a
+    * single name or an array listing filters in the order they must be
+    * APPLIED to decode, either one written inline or as an indirect object
+    * (a layout some real writers emit, ADVICE r04). Empty when the stream
+    * is stored raw. */
+  private def filterNames(dict: PdfDict, byNum: Map[Int, PdfObj]): List[String] =
+    resolve(dict.get("Filter"), byNum) match {
+      case PdfName(f) => List(f)
+      case a: Vector[_] => a.iterator.collect { case PdfName(f) => f }.toList
+      case _ => Nil
     }
-    else if (dict.charAt(k) == '[') {
-      val close = dict.indexOf(']', k)
-      if (close < 0) Nil
-      else {
-        val m = FilterNamePat.matcher(dict)
-        m.region(k, close)
-        val out = List.newBuilder[String]
-        while (m.find()) out += m.group(1)
-        out.result()
-      }
-    } else if (dict.charAt(k) == '/') {
-      val m = FilterNamePat.matcher(dict)
-      m.region(k, dict.length)
-      if (m.lookingAt()) List(m.group(1)) else Nil
-    } else Nil
-  }
 
   /** Decoded text of an object's stream ("" when none). The `/Filter`
     * chain is applied strictly in its declared order (§7.4.1) across the
@@ -1295,10 +1331,11 @@ object PdfLite {
     * or crypt filter name (`/DCTDecode`, `/CCITTFaxDecode`,
     * `/JBIG2Decode`, …) ends decoding: those streams carry pixel data the
     * image codecs read raw via their own path. A `/DecodeParms` predictor
-    * (PNG/TIFF) is undone after full decompression. */
-  private def streamText(s: String, o: PdfObj): String = {
+    * (PNG/TIFF) is undone after full decompression. `byNum` resolves an
+    * indirect `/Filter` or `/DecodeParms`. */
+  private def streamText(s: String, o: PdfObj, byNum: Map[Int, PdfObj]): String = {
     if (!o.hasStream) return ""
-    val chain = filterNames(o.dict, s)
+    val chain = filterNames(o.dict, byNum)
     if (chain.isEmpty) return s.substring(o.streamStart, o.streamEnd)
     // fast paths: the overwhelmingly common single-filter streams decode
     // straight out of the file string with no substring copy
@@ -1321,33 +1358,7 @@ object PdfLite {
         }
         cur
     }
-    applyDecodeParms(o.dict, decoded)
-  }
-
-  /** `/Name 123` integer value. */
-  private def intAfter(dict: String, name: String): Option[Int] = {
-    val i = dict.indexOf(name)
-    if (i < 0) return None
-    val m = IntHerePat.matcher(dict)
-    m.region(i + name.length, dict.length)
-    if (m.lookingAt()) Some(m.group(1).toInt) else None
-  }
-
-  /** Balanced `<< … >>` dict text starting at/after `from` (None if absent
-    * or unbalanced within a sanity window). */
-  private def dictSpan(s: String, from: Int): Option[String] = {
-    val open = s.indexOf("<<", from)
-    if (open < 0) return None
-    var depth = 0
-    var k = open
-    while (k < s.length - 1) {
-      if (s.charAt(k) == '<' && s.charAt(k + 1) == '<') { depth += 1; k += 2 }
-      else if (s.charAt(k) == '>' && s.charAt(k + 1) == '>') {
-        depth -= 1; k += 2
-        if (depth == 0) return Some(s.substring(open, k))
-      } else k += 1
-    }
-    None
+    applyDecodeParms(o.dict, byNum, decoded)
   }
 
   /** Parse the object whose header sits at byte offset `off` (as recorded in
@@ -1373,23 +1384,19 @@ object PdfLite {
     } else Some(PdfObj(num, s.substring(bodyStart, bodyEnd), -1, -1))
   }
 
-  /** `/Name [i1 i2 …]` integer array. */
-  private def intsAfterArray(dict: String, name: String): Vector[Int] = {
-    val i = dict.indexOf(name)
-    if (i < 0) return Vector.empty
-    val open = dict.indexOf('[', i + name.length)
-    val close = if (open < 0) -1 else dict.indexOf(']', open)
-    if (open < 0 || close < 0) return Vector.empty
-    dict.substring(open + 1, close).trim.split("\\s+").toVector
-      .flatMap(t => try Some(t.toInt) catch { case _: NumberFormatException => None })
-  }
-
   /** Everything one xref chain resolves: type-1 entries (objNum → byte
     * offset), type-2 entries (objNum → (container ObjStm num, index within
     * it)), and the newest trailer/XRef dict. */
   private final case class XrefInfo(offsets: Map[Int, Int],
                                     inStm: Map[Int, (Int, Int)],
-                                    trailer: Option[String])
+                                    trailer: Option[PdfDict])
+
+  /** The dict after the `trailer` keyword at `at`. */
+  private def trailerAt(s: String, at: Int): Option[PdfDict] =
+    new ContentLexer(s, at + "trailer".length).value() match {
+      case d: PdfDict => Some(d)
+      case _ => None
+    }
 
   /** Cross-reference chain: follow `startxref` to the newest section, then
     * `/Prev` links to older ones, NEWEST-section-wins — this is what makes
@@ -1415,7 +1422,7 @@ object PdfLite {
     val offsets = mutable.Map.empty[Int, Int]
     val inStm = mutable.Map.empty[Int, (Int, Int)]
     def taken(num: Int) = offsets.contains(num) || inStm.contains(num)
-    var trailerDict: Option[String] = None
+    var trailerDict: Option[PdfDict] = None
     val seen = mutable.Set.empty[Int]
     var cur = try offM.group(1).toInt catch { case _: NumberFormatException => -1 }
     val entryPat = XrefEntryPat
@@ -1451,20 +1458,21 @@ object PdfLite {
           } else more = false
         }
         val tr = s.indexOf("trailer", pos)
-        if (tr >= 0) dictSpan(s, tr).foreach { d =>
+        if (tr >= 0) trailerAt(s, tr).foreach { d =>
           if (trailerDict.isEmpty) trailerDict = Some(d)
-          next = intAfter(d, "/Prev").getOrElse(-1)
+          next = d.int("Prev").getOrElse(-1)
         }
       } else objAt(s, cur) match {
         // ---- xref stream ----
-        case Some(o) if o.dict.contains("/Type /XRef") && o.hasStream =>
-          val w = intsAfterArray(o.dict, "/W")
-          val size = intAfter(o.dict, "/Size").getOrElse(0)
+        case Some(o) if o.dict.is("Type", "XRef") && o.hasStream =>
+          val w = o.dict.nums("W").map(_.toInt)
+          val size = o.dict.int("Size").getOrElse(0)
           if (w.length >= 3 && w.forall(x => x >= 0 && x <= 8)) {
-            val idx0 = intsAfterArray(o.dict, "/Index")
+            val idx0 = o.dict.nums("Index").map(_.toInt)
             val index = if (idx0.length >= 2) idx0.grouped(2).collect {
               case Vector(a, b) => (a, b) }.toVector else Vector((0, size))
-            val data = streamText(s, o)
+            // §7.5.8.2: an xref stream's own entries are direct objects
+            val data = streamText(s, o, Map.empty)
             val rowLen = w.take(3).sum
             def field(pos: Int, width: Int): Long = {
               var v = 0L; var j = 0
@@ -1487,7 +1495,7 @@ object PdfLite {
             }
           }
           if (trailerDict.isEmpty) trailerDict = Some(o.dict)
-          next = intAfter(o.dict, "/Prev").getOrElse(-1)
+          next = o.dict.int("Prev").getOrElse(-1)
         case _ =>
       }
       cur = next
@@ -1501,12 +1509,13 @@ object PdfLite {
     * type-2 entries (`objNum → (container, index)`) can resolve
     * authoritatively; the scan-based flat view fills in numbers no xref
     * mentions. The recovered objects never shadow a top-level definition. */
-  private def expandObjStms(objs: Iterable[PdfObj], s: String): Map[Int, Vector[PdfObj]] = {
+  private def expandObjStms(objs: Iterable[PdfObj], s: String,
+                            byNum: Map[Int, PdfObj]): Map[Int, Vector[PdfObj]] = {
     val out = Map.newBuilder[Int, Vector[PdfObj]]
-    for (o <- objs if o.hasStream && o.dict.contains("/ObjStm")) {
-      val data = streamText(s, o)
-      val first = intAfter(o.dict, "/First").getOrElse(-1)
-      val n = intAfter(o.dict, "/N").getOrElse(0)
+    for (o <- objs if o.hasStream && o.dict.is("Type", "ObjStm")) {
+      val data = streamText(s, o, byNum)
+      val first = o.dict.int("First").getOrElse(-1)
+      val n = o.dict.int("N").getOrElse(0)
       if (first > 0 && first <= data.length && n > 0 && n <= 10000) {
         val header = data.substring(0, first).trim.split("\\s+")
         if (header.length >= 2 * n) {
@@ -1545,9 +1554,6 @@ object PdfLite {
                                     desc: Double = 0.2)
   private val DefaultFont = FontInfo(winAnsi = false, cmap = Map.empty)
 
-  private val DiffTokenPat = java.util.regex.Pattern
-    .compile("(\\d+)|/([^\\s/\\[\\]<>()]+)")
-
   /** `/Encoding` resolution beyond the bare `/WinAnsiEncoding` name: the
     * dictionary form (inline or an indirect object) carrying
     * `/BaseEncoding` and a `/Differences` array — "code /name /name ..."
@@ -1555,44 +1561,25 @@ object PdfLite {
     * §9.6.6.3). Returns (baseIsWinAnsi, code → char); glyph names resolve
     * through the AGL subset + `uniXXXX` ([[Glyphs]]); unknown names keep
     * their base-encoding meaning. */
-  private def encodingOf(fontDict: String, byNum: Map[Int, PdfObj])
-      : (Boolean, Map[Int, Char]) = {
-    val i = fontDict.indexOf("/Encoding")
-    if (i < 0) return (false, Map.empty)
-    val encDict: Option[String] =
-      refOf(fontDict.substring(i), "/Encoding") match {
-        case Some(r) => byNum.get(r).map(_.dict)
-        case None =>
-          // inline form only when a dict opens right after the key —
-          // dictSpan would otherwise latch onto some LATER dict in the font
-          var k = i + "/Encoding".length
-          while (k < fontDict.length && fontDict.charAt(k).isWhitespace) k += 1
-          if (k + 1 < fontDict.length && fontDict.charAt(k) == '<' &&
-              fontDict.charAt(k + 1) == '<') dictSpan(fontDict, k)
-          else None
-      }
-    encDict match {
+  private def encodingOf(fontDict: PdfDict, byNum: Map[Int, PdfObj])
+      : (Boolean, Map[Int, Char]) =
+    fontDict.dict("Encoding", byNum) match {
       case None => (false, Map.empty)
       case Some(d) =>
-        val baseWin = d.contains("/WinAnsiEncoding")
-        val di = d.indexOf("/Differences")
-        if (di < 0) return (baseWin, Map.empty)
-        val open = d.indexOf('[', di)
-        val close = if (open < 0) -1 else d.indexOf(']', open)
-        if (close < 0) return (baseWin, Map.empty)
-        val m = DiffTokenPat.matcher(d.substring(open + 1, close))
         val out = Map.newBuilder[Int, Char]
         var code = 0
-        while (m.find()) {
-          if (m.group(1) != null) code = m.group(1).toInt
-          else {
-            Glyphs.charOf(m.group(2)).foreach(c => out += code -> c)
-            code += 1
+        d.get("Differences") match {
+          case a: Vector[_] => a.foreach {
+            case n: java.lang.Double => code = n.intValue
+            case PdfName(g) =>
+              Glyphs.charOf(g).foreach(c => out += code -> c)
+              code += 1
+            case _ =>
           }
+          case _ =>
         }
-        (baseWin, out.result())
+        (d.is("BaseEncoding", "WinAnsiEncoding"), out.result())
     }
-  }
 
   private val CMapCharPat = java.util.regex.Pattern
     .compile("<([0-9A-Fa-f]{2,4})>\\s*<([0-9A-Fa-f]+)>")
@@ -1602,8 +1589,6 @@ object PdfLite {
     .compile("beginbfrange(.*?)endbfrange", java.util.regex.Pattern.DOTALL)
   private val CMapBfCharPat = java.util.regex.Pattern
     .compile("beginbfchar(.*?)endbfchar", java.util.regex.Pattern.DOTALL)
-  private val FontRefPat = java.util.regex.Pattern
-    .compile("/(\\w+)\\s+(\\d+)\\s+\\d+\\s+R")
 
   /** Parse a `/ToUnicode` CMap's `bfchar`/`bfrange` sections (PDF 32000-1
     * §9.10.3 / Adobe CMap spec): 1–2 byte source codes, UTF-16BE
@@ -1657,74 +1642,28 @@ object PdfLite {
     (out.toMap, twoByte)
   }
 
-  /** `/Name 12.5` signed decimal after a dict key (the float analog of
-    * [[intAfter]]). */
-  private def doubleAfter(dict: String, name: String): Option[Double] = {
-    val i = dict.indexOf(name)
-    if (i < 0) return None
-    var k = i + name.length
-    while (k < dict.length && dict.charAt(k).isWhitespace) k += 1
-    val start = k
-    if (k < dict.length && (dict.charAt(k) == '-' || dict.charAt(k) == '+')) k += 1
-    var digits = false
-    while (k < dict.length && (dict.charAt(k).isDigit || dict.charAt(k) == '.')) {
-      if (dict.charAt(k).isDigit) digits = true
-      k += 1
-    }
-    if (!digits) None
-    else try Some(dict.substring(start, k).toDouble)
-    catch { case _: NumberFormatException => None }
-  }
-
   /** CID `/W` array (PDF 32000-1 §9.7.4.3) → cid → advance width (glyph
     * units, /1000). Both forms: `c [w1 w2 …]` assigns consecutive cids;
-    * `c1 c2 w` assigns a range. Matches a bare `/W` key only (not /Widths /
-    * /WhitePoint), tolerates nested whitespace/newlines. */
-  private def parseWArray(dict: String): Map[Int, Double] = {
-    var i = dict.indexOf("/W")
-    var found = -1
-    while (i >= 0 && found < 0) {
-      val after = i + 2
-      if (after >= dict.length || dict.charAt(after).isWhitespace ||
-          dict.charAt(after) == '[') found = i
-      else i = dict.indexOf("/W", i + 1)
+    * `c1 c2 w` assigns a range. */
+  private def parseWArray(w: AnyRef): Map[Int, Double] = {
+    val a = w match {
+      case v: Vector[_] => v
+      case _ => Vector.empty
     }
-    if (found < 0) return Map.empty
-    val open = dict.indexOf('[', found)
-    if (open < 0) return Map.empty
-    // matching close bracket (the array nests per-run sub-arrays)
-    var depth = 0; var k = open; var close = -1
-    while (k < dict.length && close < 0) {
-      val c = dict.charAt(k)
-      if (c == '[') depth += 1
-      else if (c == ']') { depth -= 1; if (depth == 0) close = k }
-      k += 1
-    }
-    if (close < 0) return Map.empty
-    val body = dict.substring(open + 1, close)
-    val toks = new mutable.ArrayBuffer[String](64)
-    val m = java.util.regex.Pattern.compile("\\[|\\]|[-+]?[0-9.]+").matcher(body)
-    while (m.find()) toks += m.group()
+    def num(k: Int): Option[Double] = a.lift(k).collect { case d: java.lang.Double => d.doubleValue }
     val out = Map.newBuilder[Int, Double]
     var t = 0
-    def num(s: String): Double = try s.toDouble catch { case _: NumberFormatException => 0.0 }
-    while (t < toks.length) {
-      val tok = toks(t)
-      if (tok == "[" || tok == "]") t += 1
-      else if (t + 1 < toks.length && toks(t + 1) == "[") {
-        var cid = num(tok).toInt
-        t += 2
-        while (t < toks.length && toks(t) != "]") {
-          out += cid -> num(toks(t)); cid += 1; t += 1
-        }
-        t += 1
-      } else if (t + 2 < toks.length && toks(t + 1) != "[" && toks(t + 1) != "]" &&
-                 toks(t + 2) != "[" && toks(t + 2) != "]") {
-        val c1 = num(tok).toInt; val c2 = num(toks(t + 1)).toInt; val w = num(toks(t + 2))
-        var cid = c1
-        while (cid <= c2 && cid - c1 <= 65535) { out += cid -> w; cid += 1 }
-        t += 3
-      } else t += 1
+    while (t < a.length) {
+      (num(t), a.lift(t + 1), num(t + 1), num(t + 2)) match {
+        case (Some(c), Some(run: Vector[_]), _, _) =>
+          for ((x: java.lang.Double, k) <- run.zipWithIndex) out += (c.toInt + k) -> x.doubleValue
+          t += 2
+        case (Some(c1), _, Some(c2), Some(width)) =>
+          var cid = c1.toInt
+          while (cid <= c2 && cid - c1 <= 65535) { out += cid -> width; cid += 1 }
+          t += 3
+        case _ => t += 1
+      }
     }
     out.result()
   }
@@ -1734,94 +1673,71 @@ object PdfLite {
     * `/W`/`/DW` arrays live on the descendant); simple fonts read
     * `/FirstChar` + `/Widths`; ascent/descent come from the
     * `/FontDescriptor` (per-mille, descent stored positive-down). */
-  private def fontMetrics(fontDict: String, byNum: Map[Int, PdfObj])
+  private def fontMetrics(fontDict: PdfDict, byNum: Map[Int, PdfObj])
       : (Map[Int, Double], Double, Double, Double) = {
-    val descDict: Option[String] =
-      if (fontDict.contains("/DescendantFonts"))
-        refsOf(fontDict, "/DescendantFonts").headOption
-          .orElse(refOf(fontDict, "/DescendantFonts"))
-          .flatMap(byNum.get).map(_.dict)
-      else None
-    val metricsDict = descDict.getOrElse(fontDict)
-    var widths = parseWArray(metricsDict)
-    if (widths.isEmpty && fontDict.contains("/Widths")) {
-      val first = intAfter(fontDict, "/FirstChar").getOrElse(0)
-      val wi = fontDict.indexOf("/Widths")
-      val open = fontDict.indexOf('[', wi)
-      val cls = if (open < 0) -1 else fontDict.indexOf(']', open)
-      if (cls > open) {
-        val b = Map.newBuilder[Int, Double]
-        var c = first
-        for (tok <- fontDict.substring(open + 1, cls).trim.split("\\s+") if tok.nonEmpty) {
-          try { b += c -> tok.toDouble; c += 1 } catch { case _: NumberFormatException => }
-        }
-        widths = b.result()
+    val metricsDict = fontDict.refs("DescendantFonts").headOption
+      .flatMap(byNum.get).map(_.dict).getOrElse(fontDict)
+    val cidWidths = parseWArray(metricsDict.get("W"))
+    val widths =
+      if (cidWidths.nonEmpty) cidWidths
+      else {
+        val first = fontDict.int("FirstChar").getOrElse(0)
+        fontDict.nums("Widths").zipWithIndex.map { case (w, k) => (first + k) -> w }.toMap
       }
-    }
-    val dw = doubleAfter(metricsDict, "/DW").getOrElse(500.0)
-    val fd = refOf(metricsDict, "/FontDescriptor").flatMap(byNum.get).map(_.dict)
-    val asc = fd.flatMap(doubleAfter(_, "/Ascent")).map(_ / 1000.0).getOrElse(0.8)
-    val desc = fd.flatMap(doubleAfter(_, "/Descent")).map(v => math.abs(v) / 1000.0).getOrElse(0.2)
+    val dw = metricsDict.num("DW").getOrElse(500.0)
+    val fd = metricsDict.dict("FontDescriptor", byNum)
+    val asc = fd.flatMap(_.num("Ascent")).map(_ / 1000.0).getOrElse(0.8)
+    val desc = fd.flatMap(_.num("Descent")).map(v => math.abs(v) / 1000.0).getOrElse(0.2)
     (widths, dw, asc, desc)
   }
+
+  /** A page's or form's `/Resources` (inline or indirect; else `inherited`'s)
+    * → the named sub-dict (`/Font`, `/XObject`) → its name → object
+    * entries. */
+  private def resourceObjs(dict: PdfDict, inherited: Option[PdfDict], kind: String,
+                           byNum: Map[Int, PdfObj]): Iterator[(String, PdfObj)] =
+    dict.dict("Resources", byNum).orElse(inherited.flatMap(_.dict("Resources", byNum)))
+      .flatMap(_.dict(kind, byNum)).iterator
+      .flatMap(d => d.keysIterator.flatMap(k => d.ref(k).flatMap(byNum.get).map(k -> _)))
 
   /** Per-font info for a page: resolve `/Resources` (inline dict or
     * reference, page-level else inherited), then `/Font << /Fi N 0 R … >>`,
     * then each font object's `/Encoding` and `/ToUnicode`. */
-  private def fontInfos(s: String, pageDict: String, inherited: Option[String],
-                        byNum: Map[Int, PdfObj]): Map[String, FontInfo] = {
-    def resourcesText(dict: String): Option[String] = {
-      val i = dict.indexOf("/Resources")
-      if (i < 0) None
-      else refOf(dict.substring(i), "/Resources") match {
-        case Some(r) => byNum.get(r).map(_.dict)
-        case None => dictSpan(dict, i + "/Resources".length)
-      }
-    }
-    val res = resourcesText(pageDict).orElse(inherited.flatMap(resourcesText))
-    res.flatMap { r =>
-      val fi = r.indexOf("/Font")
-      if (fi < 0) None
-      else dictSpan(r, fi + "/Font".length).map { fonts =>
-        val m = FontRefPat.matcher(fonts)
-        val out = Map.newBuilder[String, FontInfo]
-        while (m.find()) {
-          val fontDict = byNum.get(m.group(2).toInt).map(_.dict).getOrElse("")
-          val (cmap, twoByteCmap) = refOf(fontDict, "/ToUnicode").flatMap(byNum.get)
-            .map(o => parseCMap(streamText(s, o))).getOrElse((Map.empty[Int, String], false))
-          // code width is an ENCODING property: Identity-H/V composite fonts
-          // consume 2 bytes/glyph even when no ToUnicode says so
-          val twoByte = twoByteCmap || fontDict.contains("/Identity-H") ||
-            fontDict.contains("/Identity-V")
-          val (baseWin, diffs) = encodingOf(fontDict, byNum)
-          val winAnsi = baseWin || fontDict.contains("/WinAnsiEncoding")
-          // no declared encoding anywhere: fall back to the embedded font
-          // program — /FontDescriptor → /FontFile2 → sfnt cmap(3,0)+post
-          // glyph names → Unicode (the subset-font reality; the map rides
-          // the same slot as /Differences, both are code → char)
-          val ttfDiffs: Map[Int, Char] =
-            if (winAnsi || cmap.nonEmpty || diffs.nonEmpty) Map.empty
-            else refOf(fontDict, "/FontDescriptor").flatMap(byNum.get).flatMap { d =>
-              // /FontFile2 → sfnt cmap(3,0)+post; /FontFile3 (/Type1C) →
-              // CFF Encoding→charset→strings — both end in Glyphs
-              refOf(d.dict, "/FontFile2").flatMap(byNum.get).filter(_.hasStream)
-                .map(o => TrueTypeFont.codeMap(streamText(s, o).getBytes(Latin1)))
-                .orElse(refOf(d.dict, "/FontFile3").flatMap(byNum.get)
-                  .filter(_.hasStream)
-                  .map(o => CffFont.codeMap(streamText(s, o).getBytes(Latin1))))
-            }.getOrElse(Map.empty)
-          val allDiffs = if (diffs.nonEmpty) diffs else ttfDiffs
-          val (widths, dw, asc, desc) = fontMetrics(fontDict, byNum)
-          // a CID font with /W but no ToUnicode still matters to the native
-          // route (advances drive geometry even when codes decode raw)
-          if (winAnsi || cmap.nonEmpty || allDiffs.nonEmpty || widths.nonEmpty)
-            out += m.group(1) -> FontInfo(winAnsi, cmap, twoByte, allDiffs,
-              widths, dw, asc, desc)
-        }
-        out.result()
-      }
-    }.getOrElse(Map.empty)
-  }
+  private def fontInfos(s: String, pageDict: PdfDict, inherited: Option[PdfDict],
+                        byNum: Map[Int, PdfObj]): Map[String, FontInfo] =
+    resourceObjs(pageDict, inherited, "Font", byNum).flatMap { case (name, fontObj) =>
+      val fontDict = fontObj.dict
+      val (cmap, twoByteCmap) = fontDict.ref("ToUnicode").flatMap(byNum.get)
+        .map(o => parseCMap(streamText(s, o, byNum))).getOrElse((Map.empty[Int, String], false))
+      // code width is an ENCODING property: Identity-H/V composite fonts
+      // consume 2 bytes/glyph even when no ToUnicode says so
+      val twoByte = twoByteCmap || fontDict.is("Encoding", "Identity-H") ||
+        fontDict.is("Encoding", "Identity-V")
+      val (baseWin, diffs) = encodingOf(fontDict, byNum)
+      val winAnsi = baseWin || fontDict.is("Encoding", "WinAnsiEncoding")
+      // no declared encoding anywhere: fall back to the embedded font
+      // program — /FontDescriptor → /FontFile2 → sfnt cmap(3,0)+post
+      // glyph names → Unicode (the subset-font reality; the map rides
+      // the same slot as /Differences, both are code → char)
+      def program(d: PdfDict, key: String): Option[Array[Byte]] =
+        d.ref(key).flatMap(byNum.get).filter(_.hasStream)
+          .map(o => streamText(s, o, byNum).getBytes(Latin1))
+      val ttfDiffs: Map[Int, Char] =
+        if (winAnsi || cmap.nonEmpty || diffs.nonEmpty) Map.empty
+        else fontDict.dict("FontDescriptor", byNum).flatMap { d =>
+          // /FontFile2 → sfnt cmap(3,0)+post; /FontFile3 (/Type1C) →
+          // CFF Encoding→charset→strings — both end in Glyphs
+          program(d, "FontFile2").map(TrueTypeFont.codeMap)
+            .orElse(program(d, "FontFile3").map(CffFont.codeMap))
+        }.getOrElse(Map.empty)
+      val allDiffs = if (diffs.nonEmpty) diffs else ttfDiffs
+      val (widths, dw, asc, desc) = fontMetrics(fontDict, byNum)
+      // a CID font with /W but no ToUnicode still matters to the native
+      // route (advances drive geometry even when codes decode raw)
+      if (winAnsi || cmap.nonEmpty || allDiffs.nonEmpty || widths.nonEmpty)
+        Some(name -> FontInfo(winAnsi, cmap, twoByte, allDiffs, widths, dw, asc, desc))
+      else None
+    }.toMap
 
   /** A Form XObject ready for execution by the `Do` operator: decoded
     * content plus the form's OWN font/XObject resources (empty maps → the
@@ -1835,50 +1751,19 @@ object PdfLite {
     * paints pixels, no text). Real PDFs put letterheads, stamps, and
     * entire page bodies in forms, and forms nest; `depth` caps the eager
     * resolution (and with it any reference cycle) at 3 levels. */
-  private def formInfos(s: String, dict: String, inherited: Option[String],
-                        byNum: Map[Int, PdfObj], depth: Int = 0): Map[String, FormX] = {
-    if (depth > 2) return Map.empty
-    def resourcesText(d: String): Option[String] = {
-      val i = d.indexOf("/Resources")
-      if (i < 0) None
-      else refOf(d.substring(i), "/Resources") match {
-        case Some(r) => byNum.get(r).map(_.dict)
-        case None => dictSpan(d, i + "/Resources".length)
-      }
-    }
-    val res = resourcesText(dict).orElse(inherited.flatMap(resourcesText))
-    res.flatMap { r =>
-      val xi = r.indexOf("/XObject")
-      if (xi < 0) None
-      else dictSpan(r, xi + "/XObject".length).map { xobjs =>
-        val m = FontRefPat.matcher(xobjs)
-        val out = Map.newBuilder[String, FormX]
-        while (m.find()) {
-          byNum.get(m.group(2).toInt) match {
-            case Some(o) if o.dict.contains("/Subtype /Form") && o.hasStream =>
-              // /Matrix (form space → user space, PDF §8.10.1) feeds the
-              // native route's CTM; the legacy interpreter ignores it
-              val fm = {
-                val i = o.dict.indexOf("/Matrix")
-                val open = if (i < 0) -1 else o.dict.indexOf('[', i)
-                val cls = if (open < 0) -1 else o.dict.indexOf(']', open)
-                if (cls > open) {
-                  val v = o.dict.substring(open + 1, cls).trim.split("\\s+")
-                    .flatMap(t => try Some(t.toDouble)
-                    catch { case _: NumberFormatException => None })
-                  if (v.length == 6) v else Array(1.0, 0, 0, 1, 0, 0)
-                } else Array(1.0, 0, 0, 1, 0, 0)
-              }
-              out += m.group(1) -> FormX(streamText(s, o),
-                fontInfos(s, o.dict, None, byNum),
-                formInfos(s, o.dict, None, byNum, depth + 1), fm)
-            case _ =>
-          }
-        }
-        out.result()
-      }
-    }.getOrElse(Map.empty)
-  }
+  private def formInfos(s: String, dict: PdfDict, inherited: Option[PdfDict],
+                        byNum: Map[Int, PdfObj], depth: Int = 0): Map[String, FormX] =
+    if (depth > 2) Map.empty
+    else resourceObjs(dict, inherited, "XObject", byNum).collect {
+      case (name, o) if o.dict.is("Subtype", "Form") && o.hasStream =>
+        // /Matrix (form space → user space, PDF §8.10.1) feeds the
+        // native route's CTM; the legacy interpreter ignores it
+        val m = o.dict.nums("Matrix")
+        name -> FormX(streamText(s, o, byNum),
+          fontInfos(s, o.dict, None, byNum),
+          formInfos(s, o.dict, None, byNum, depth + 1),
+          if (m.length == 6) m.toArray else Array(1.0, 0, 0, 1, 0, 0))
+    }.toMap
 
   /** windows-1252 view of a raw byte-per-char string — applied when the
     * current font declares `/WinAnsiEncoding` (maps 0x80–0x9F to smart
@@ -1981,17 +1866,22 @@ object PdfLite {
       val objs = scanObjects(s)
       // dicts inside /ObjStm containers are Flate-compressed (and encrypted
       // when the doc is): expand so their markers count too
-      val dicts = objs.map(_.dict) ++
-        expandObjStms(objs, s).valuesIterator.flatten.map(_.dict)
+      val all = objs ++ expandObjStms(objs, s, firstByNum(objs)).valuesIterator.flatten
+      val texts = all.map(_.text)
       def any(marker: String, tag: String): Unit =
-        if (dicts.exists(_.contains(marker))) tags += tag
-      any("/Type /XRef", "xref:stream")
+        if (texts.exists(_.contains(marker))) tags += tag
+      // `/Type` and `/Subtype` markers, nested dicts (inline annotations)
+      // included
+      val dicts = all.flatMap(o => dictsIn(o.value))
+      def anyTyped(key: String, name: String, tag: String): Unit =
+        if (dicts.exists(_.is(key, name))) tags += tag
+      anyTyped("Type", "XRef", "xref:stream")
       if (!tags.contains("xref:stream")) {
         val xi = s.indexOf("\nxref")
         if (xi >= 0 || s.startsWith("xref")) tags += "xref:table"
         else tags += "xref:none"
       }
-      any("/ObjStm", "objstm")
+      anyTyped("Type", "ObjStm", "objstm")
       any("/FlateDecode", "flate")
       any("/LZWDecode", "lzw")
       any("/ASCIIHexDecode", "asciihex")
@@ -2001,8 +1891,7 @@ object PdfLite {
       any("/CCITTFaxDecode", "img:g4")
       any("/JBIG2Decode", "img:jbig2")
       any("/JPXDecode", "img:jpx")
-      if (dicts.exists(_.contains("/Subtype /Image")) &&
-          !tags.exists(_.startsWith("img:"))) tags += "img:marker"
+      if (!tags.exists(_.startsWith("img:"))) anyTyped("Subtype", "Image", "img:marker")
       any("/WinAnsiEncoding", "font:winansi")
       any("/ToUnicode", "font:tounicode")
       any("/Identity-H", "font:cid")
@@ -2010,52 +1899,12 @@ object PdfLite {
       any("/FontFile2", "font:ttf")
       any("/FontFile3", "font:cff")
       any("/Rotate", "rotate")
-      any("/Subtype /Form", "formxobj")
-      any("/Subtype /Link", "links")
+      anyTyped("Subtype", "Form", "formxobj")
+      anyTyped("Subtype", "Link", "links")
       any("/CreationDate", "infodict")
-      if (dicts.count(d => d.contains("/Type /Page") &&
-            !d.contains("/Type /Pages")) > 1) tags += "multipage"
+      if (dicts.count(_.is("Type", "Page")) > 1) tags += "multipage"
       tags.mkString(",")
     } catch { case _: Exception => "unreadable" }
-  }
-
-  /** Decode the literal string whose `(` is at `open` (the content-stream
-    * lexer's reader, [[ContentLexer.literal]]). */
-  private def readLiteral(s: String, open: Int): String =
-    new ContentLexer(s, open + 1).literal()
-
-  /** Decode a hex string starting at `<` (not `<<`); UTF-16BE when
-    * BOM-prefixed, PDFDocEncoding (≈ Latin-1) otherwise. */
-  private def readHexString(s: String, open: Int): String = {
-    val close = s.indexOf('>', open + 1)
-    if (close < 0) return ""
-    val hex = s.substring(open + 1, close).filter(c => Character.digit(c, 16) >= 0)
-    val padded = if (hex.length % 2 == 1) hex + "0" else hex
-    val bytes = new Array[Byte](padded.length / 2)
-    var i = 0
-    while (i < bytes.length) {
-      bytes(i) = Integer.parseInt(padded.substring(2 * i, 2 * i + 2), 16).toByte
-      i += 1
-    }
-    if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xfe && (bytes(1) & 0xff) == 0xff)
-      new String(bytes, 2, bytes.length - 2, java.nio.charset.StandardCharsets.UTF_16BE)
-    else new String(bytes, Latin1)
-  }
-
-  /** String value after `/Name` in a dict — literal `(…)` or hex `<…>`;
-    * occurrences of the name used as a VALUE (e.g. `/S /URI`) are skipped
-    * because no string follows them. */
-  private def stringAfter(dict: String, name: String): Option[String] = {
-    var i = dict.indexOf(name)
-    while (i >= 0) {
-      var k = i + name.length
-      while (k < dict.length && Character.isWhitespace(dict.charAt(k))) k += 1
-      if (k < dict.length && dict.charAt(k) == '(') return Some(readLiteral(dict, k))
-      if (k + 1 < dict.length && dict.charAt(k) == '<' && dict.charAt(k + 1) != '<')
-        return Some(readHexString(dict, k))
-      i = dict.indexOf(name, i + name.length)
-    }
-    None
   }
 
   /** All link-annotation target URIs in the document (§12.5.6.5, §12.6.4.7):
@@ -2068,21 +1917,8 @@ object PdfLite {
     try {
       val s = decryptIfNeeded(new String(payload, Latin1))
       val objs = scanObjects(s)
-      val dicts = objs.map(_.dict) ++
-        expandObjStms(objs, s).valuesIterator.flatten.map(_.dict)
-      val out = Vector.newBuilder[String]
-      for (d <- dicts) {
-        var i = d.indexOf("/URI")
-        while (i >= 0) {
-          var k = i + 4
-          while (k < d.length && Character.isWhitespace(d.charAt(k))) k += 1
-          if (k < d.length && d.charAt(k) == '(') out += readLiteral(d, k)
-          else if (k + 1 < d.length && d.charAt(k) == '<' && d.charAt(k + 1) != '<')
-            out += readHexString(d, k)
-          i = d.indexOf("/URI", i + 4)
-        }
-      }
-      out.result()
+      val all = objs ++ expandObjStms(objs, s, firstByNum(objs)).valuesIterator.flatten
+      all.flatMap(o => dictsIn(o.value)).flatMap(_.str("URI")).map(textString)
     } catch { case _: Exception => Vector.empty }
   }
 
@@ -2098,43 +1934,16 @@ object PdfLite {
       // modern writers commonly house the /Info dict inside an /ObjStm
       // container — expand them like links() does, so both the trailer
       // resolve and the structural fallback see compressed objects too
-      val all = objs ++ expandObjStms(objs, s).toVector.sortBy(_._1).flatMap(_._2)
+      val all = objs ++ expandObjStms(objs, s, firstByNum(objs)).toVector.sortBy(_._1).flatMap(_._2)
       val byTrailer = parseXrefChain(s).trailer
-        .flatMap(t => refOf(t, "/Info"))
+        .flatMap(_.ref("Info"))
         .flatMap(n => all.find(_.num == n).map(_.dict))
       val dict = byTrailer.orElse(all.map(_.dict).find(d =>
-        d.contains("/Producer") || d.contains("/CreationDate")))
-      dict.map(d => DocInfo(
-        stringAfter(d, "/Title").getOrElse(""),
-        stringAfter(d, "/Author").getOrElse(""),
-        stringAfter(d, "/Producer").getOrElse(""),
-        stringAfter(d, "/CreationDate").getOrElse("")))
+        d.has("Producer") || d.has("CreationDate")))
+      def text(d: PdfDict, key: String) = d.str(key).map(textString).getOrElse("")
+      dict.map(d => DocInfo(text(d, "Title"), text(d, "Author"),
+        text(d, "Producer"), text(d, "CreationDate")))
     } catch { case _: Exception => None }
-  }
-
-  private val SignedIntHerePat = java.util.regex.Pattern.compile("\\G\\s+(-?\\d+)")
-
-  /** `/Name -123` signed integer value (the /P permission mask is negative
-    * in virtually every real file). */
-  private def signedIntAfter(dict: String, name: String): Option[Int] = {
-    val i = dict.indexOf(name)
-    if (i < 0) return None
-    val m = SignedIntHerePat.matcher(dict)
-    m.region(i + name.length, dict.length)
-    if (m.lookingAt()) Some(m.group(1).toInt) else None
-  }
-
-  /** `/Name <hexbytes>` value. */
-  private def hexBytesAfter(dict: String, name: String): Option[Array[Byte]] = {
-    val i = dict.indexOf(name)
-    if (i < 0) return None
-    val open = dict.indexOf('<', i + name.length)
-    val close = if (open < 0) -1 else dict.indexOf('>', open)
-    if (close < 0) return None
-    val hex = dict.substring(open + 1, close).filterNot(_.isWhitespace)
-    if (hex.isEmpty || hex.length % 2 != 0 ||
-        !hex.forall(c => Character.digit(c, 16) >= 0)) return None
-    Some(hex.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray)
   }
 
   /** Standard-Security-Handler decryption pass (V≤2/R≤3 RC4, V=4/R=4
@@ -2166,28 +1975,32 @@ object PdfLite {
     * Latin-1 on the printable range) and UTF-8 for R≥5. */
   private def decryptIfNeeded(s0: String,
                               passwords: Seq[String] = Nil): String = {
-    val ei = s0.lastIndexOf("/Encrypt")
-    if (ei < 0) return s0
+    if (!s0.contains("/Encrypt")) return s0
     try {
-      val encRef = refOf(s0.substring(ei, math.min(s0.length, ei + 48)), "/Encrypt")
-        .getOrElse(return s0)
       val objs = scanObjects(s0)
-      val encObj = objs.find(_.num == encRef).getOrElse(return s0)
-      val d = encObj.dict
-      if (!d.contains("/Standard")) return s0
-      val v = intAfter(d, "/V").getOrElse(1)
-      val r = intAfter(d, "/R").getOrElse(2)
-      val aes = v == 4 && r == 4 && d.contains("/AESV2")
+      // the newest trailer: the last classic one, else the last xref stream
+      val trailer = { val t = s0.lastIndexOf("trailer"); if (t < 0) None else trailerAt(s0, t) }
+        .orElse(objs.reverseIterator.map(_.dict).find(_.is("Type", "XRef")))
+        .getOrElse(return s0)
+      val encRef = trailer.ref("Encrypt").getOrElse(return s0)
+      val d = objs.find(_.num == encRef).getOrElse(return s0).dict
+      if (!d.is("Filter", "Standard")) return s0
+      val v = d.int("V").getOrElse(1)
+      val r = d.int("R").getOrElse(2)
+      // the crypt filter streams use (§7.6.5): /StmF names a /CF entry
+      val cfm = d.name("StmF").flatMap(f => d.dict("CF").flatMap(_.dict(f)))
+        .flatMap(_.name("CFM"))
+      val aes = v == 4 && r == 4 && cfm.contains("AESV2")
       // V=5: AES-256 under the file key directly — R=6 (PDF 2.0, iterated
       // Algorithm 2.B hash) and the deprecated R=5 precursor (plain SHA-256)
-      val aes3 = v == 5 && (r == 5 || r == 6) && d.contains("/AESV3")
+      val aes3 = v == 5 && (r == 5 || r == 6) && cfm.contains("AESV3")
       if (!aes && !aes3 && (v > 2 || r > 3)) return s0 // unknown handler
       val key: Array[Byte] =
         if (aes3) {
           // /U carries hash‖salts; /UE wraps the file key (Algorithm 11);
           // owner route: /O hash folds in /U, /OE wraps the same key
-          val u48 = hexBytesAfter(d, "/U").getOrElse(return s0)
-          val ue = hexBytesAfter(d, "/UE").getOrElse(return s0)
+          val u48 = d.bytes("U").getOrElse(return s0)
+          val ue = d.bytes("UE").getOrElse(return s0)
           val cands = "" +: passwords
           cands.iterator
             .map(pw => PdfCrypt.fileKey6(u48, ue, r5 = r == 5,
@@ -2195,8 +2008,8 @@ object PdfLite {
             .collectFirst { case Some(k) => k }
             .orElse {
               for {
-                o48 <- hexBytesAfter(d, "/O")
-                oe <- hexBytesAfter(d, "/OE")
+                o48 <- d.bytes("O")
+                oe <- d.bytes("OE")
                 k <- cands.iterator
                   .map(pw => PdfCrypt.fileKey6Owner(o48, oe, u48, r5 = r == 5,
                     pw.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
@@ -2205,16 +2018,17 @@ object PdfLite {
             }
             .getOrElse(return s0)
         } else {
-          val p = signedIntAfter(d, "/P").getOrElse(-1)
-          val o = hexBytesAfter(d, "/O").getOrElse(return s0)
+          val p = d.int("P").getOrElse(-1)
+          val o = d.bytes("O").getOrElse(return s0)
           // /ID [<hex> <hex>] — first element feeds the key derivation
-          val idAt = s0.lastIndexOf("/ID")
-          if (idAt < 0) return s0
-          val id0 = hexBytesAfter(s0.substring(idAt, math.min(s0.length, idAt + 200)), "/ID")
-            .getOrElse(return s0)
+          val id0 = trailer.get("ID") match {
+            case a: Vector[_] => a.headOption.collect { case s: String => s.getBytes(Latin1) }
+              .getOrElse(return s0)
+            case _ => return s0
+          }
           // /U check: 16 significant bytes; a key passes when it
           // regenerates them — the same acceptance rule for every route
-          val u16 = hexBytesAfter(d, "/U").map(_.take(16))
+          val u16 = d.bytes("U").map(_.take(16))
           def uOk(k: Array[Byte]): Boolean =
             u16.forall(_.sameElements(PdfCrypt.uValue(k, id0).take(16)))
           val userRoutes = ("" +: passwords).iterator
@@ -2229,7 +2043,7 @@ object PdfLite {
       val chars = s0.toCharArray
       for (ob <- objs
            if ob.hasStream && ob.num != encRef &&
-             !ob.dict.contains("/Type /XRef")) {
+             !ob.dict.is("Type", "XRef")) {
         val n = ob.streamEnd - ob.streamStart
         if (n > 0) {
           // The scanned stream region runs to `endstream`, which includes
@@ -2239,7 +2053,7 @@ object PdfLite {
           // EOL bytes down to block alignment.
           var m = n
           if (aes || aes3) {
-            m = intAfter(ob.dict, "/Length")
+            m = ob.dict.int("Length")
               .filter(l => l >= 32 && l <= n && (l - 16) % 16 == 0)
               .getOrElse(n)
             while (m > 32 && (m - 16) % 16 != 0 && {
@@ -2276,60 +2090,6 @@ object PdfLite {
                         passwords: Seq[String] = Nil): Parsed = {
     val s = decryptIfNeeded(new String(bytes, Latin1), passwords)
     val objs = scanObjects(s)
-    // image sniff (feeds the router's scanned detection): a bare
-    // `/Subtype /Image` marker counts, but a `/DCTDecode` image must
-    // actually DECODE (javax.imageio — the same codec kernel the
-    // standalone image path uses) to count as pixels; a corrupt JPEG
-    // payload must not promote a text-free page to the high-confidence
-    // scanned route
-    val imgObjs = objs.filter(_.dict.contains("/Subtype /Image"))
-    def streamBytes(o: PdfObj): Array[Byte] = {
-      val n = o.streamEnd - o.streamStart
-      val b = new Array[Byte](math.max(0, n))
-      var k = 0
-      while (k < n) { b(k) = s.charAt(o.streamStart + k).toByte; k += 1 }
-      b
-    }
-    val hasImage =
-      if (imgObjs.isEmpty) s.contains("/Subtype /Image")
-      else imgObjs.exists { o =>
-        if (o.dict.contains("/DCTDecode"))
-          o.hasStream && Multimodal.imageDims(streamBytes(o)).isDefined
-        else if (o.dict.contains("/CCITTFaxDecode")) o.hasStream && {
-          // same contract as /DCTDecode: fax-compressed pixels must
-          // actually DECODE (G4) before a text-free page may promote to
-          // the scanned route — a corrupt payload is not pixels
-          val cols = intAfter(o.dict, "/Columns")
-            .orElse(intAfter(o.dict, "/Width")).getOrElse(1728)
-          val rows = intAfter(o.dict, "/Rows")
-            .orElse(intAfter(o.dict, "/Height")).getOrElse(0)
-          rows > 0 && CcittG4.decode(streamBytes(o), cols, rows).isDefined
-        }
-        else if (o.dict.contains("/JPXDecode")) o.hasStream && {
-          // same contract: the JPEG2000 main header must validate (SOC/SIZ/
-          // COD/QCD walk, JP2 box + ihdr cross-check — kernel/Jpx) and
-          // agree with the declared geometry before the page may promote.
-          // The EOL before `endstream` (§7.3.8.1: not part of the data —
-          // but streamEnd here comes from the endstream scan) and the AES
-          // newline tail-pad are transport bytes, not codestream bytes:
-          // trim them or the raw codestream's EOC-at-tail check fails
-          val w = intAfter(o.dict, "/Width").getOrElse(0)
-          val h = intAfter(o.dict, "/Height").getOrElse(0)
-          val raw = streamBytes(o)
-          var e = raw.length
-          while (e > 0 && (raw(e - 1) == '\n' || raw(e - 1) == '\r')) e -= 1
-          Jpx.dims(java.util.Arrays.copyOfRange(raw, 0, e))
-            .exists(i => i.w == w && i.h == h)
-        }
-        else if (o.dict.contains("/JBIG2Decode")) o.hasStream && {
-          // same contract again: the embedded segment stream must decode
-          // (MQ-coded generic region) and agree with the declared geometry
-          val w = intAfter(o.dict, "/Width").getOrElse(0)
-          val h = intAfter(o.dict, "/Height").getOrElse(0)
-          Jbig2.decode(streamBytes(o)).exists(i => i.w == w && i.h == h)
-        }
-        else true
-      }
     // resolution order (PDF semantics):
     //  1. linear scan, first definition wins — a spurious in-stream
     //     "N 0 obj" must not shadow the real object N;
@@ -2340,15 +2100,13 @@ object PdfLite {
     //  3. /ObjStm-embedded objects fill in numbers nothing else defines.
     val xref = parseXrefChain(s)
     val trailerDict = xref.trailer
-    val linearByNum = objs.foldLeft(Map.empty[Int, PdfObj]) { (m, o) =>
-      if (m.contains(o.num)) m else m.updated(o.num, o)
-    }
+    val linearByNum = firstByNum(objs)
     val xrefByNum = xref.offsets.flatMap { case (num, off) =>
       objAt(s, off).filter(_.num == num).map(num -> _)
     }
     // ObjStm containers are themselves top-level objects, so the linear scan
     // always finds them (in file order — deterministic expansion)
-    val objStmMap = expandObjStms(objs, s)
+    val objStmMap = expandObjStms(objs, s, linearByNum)
     val type2ByNum = xref.inStm.flatMap { case (num, (stm, idx)) =>
       objStmMap.get(stm).flatMap(_.lift(idx)).filter(_.num == num).map(num -> _)
     }
@@ -2358,18 +2116,69 @@ object PdfLite {
       if (m.contains(o.num)) m else m.updated(o.num, o)
     }
 
+    // image sniff (feeds the router's scanned detection): a bare
+    // `/Subtype /Image` marker counts, but a `/DCTDecode` image must
+    // actually DECODE (javax.imageio — the same codec kernel the
+    // standalone image path uses) to count as pixels; a corrupt JPEG
+    // payload must not promote a text-free page to the high-confidence
+    // scanned route
+    def streamBytes(o: PdfObj): Array[Byte] = {
+      val n = o.streamEnd - o.streamStart
+      val b = new Array[Byte](math.max(0, n))
+      var k = 0
+      while (k < n) { b(k) = s.charAt(o.streamStart + k).toByte; k += 1 }
+      b
+    }
+    val hasImage = objs.exists { o =>
+      val d = o.dict
+      def declared(key: String) = d.int(key).getOrElse(0)
+      if (!d.is("Subtype", "Image")) false
+      else filterNames(d, byNum) match {
+        case f if f.contains("DCTDecode") =>
+          o.hasStream && Multimodal.imageDims(streamBytes(o)).isDefined
+        case f if f.contains("CCITTFaxDecode") => o.hasStream && {
+          // same contract as /DCTDecode: fax-compressed pixels must
+          // actually DECODE (G4) before a text-free page may promote to
+          // the scanned route — a corrupt payload is not pixels
+          val dp = decodeParms(d, byNum)
+          val cols = dp.flatMap(_.int("Columns")).orElse(d.int("Width")).getOrElse(1728)
+          val rows = dp.flatMap(_.int("Rows")).orElse(d.int("Height")).getOrElse(0)
+          rows > 0 && CcittG4.decode(streamBytes(o), cols, rows).isDefined
+        }
+        case f if f.contains("JPXDecode") => o.hasStream && {
+          // same contract: the JPEG2000 main header must validate (SOC/SIZ/
+          // COD/QCD walk, JP2 box + ihdr cross-check — kernel/Jpx) and
+          // agree with the declared geometry before the page may promote.
+          // The EOL before `endstream` (§7.3.8.1: not part of the data —
+          // but streamEnd here comes from the endstream scan) and the AES
+          // newline tail-pad are transport bytes, not codestream bytes:
+          // trim them or the raw codestream's EOC-at-tail check fails
+          val raw = streamBytes(o)
+          var e = raw.length
+          while (e > 0 && (raw(e - 1) == '\n' || raw(e - 1) == '\r')) e -= 1
+          Jpx.dims(java.util.Arrays.copyOfRange(raw, 0, e))
+            .exists(i => i.w == declared("Width") && i.h == declared("Height"))
+        }
+        case f if f.contains("JBIG2Decode") => o.hasStream &&
+          // same contract again: the embedded segment stream must decode
+          // (MQ-coded generic region) and agree with the declared geometry
+          Jbig2.decode(streamBytes(o))
+            .exists(i => i.w == declared("Width") && i.h == declared("Height"))
+        case _ => true
+      }
+    }
+
     // page order: depth-first /Kids descent from the root Pages node
     // (intermediate /Type /Pages nodes recurse — real page trees nest);
     // root preferably via trailer /Root → Catalog → /Pages (the xref-era
     // authoritative path), else the first Pages node in file/ObjStm order;
     // fallback to all /Type /Page objects in file order. Cycle-safe via a
     // visited set, depth-capped defensively.
-    def isPagesNode(o: PdfObj): Boolean = o.dict.contains("/Type /Pages")
-    def isPageLeaf(o: PdfObj): Boolean =
-      o.dict.contains("/Type /Page") && !isPagesNode(o)
+    def isPagesNode(o: PdfObj): Boolean = o.dict.is("Type", "Pages")
+    def isPageLeaf(o: PdfObj): Boolean = o.dict.is("Type", "Page")
     val pagesNode = trailerDict
-      .flatMap(refOf(_, "/Root")).flatMap(byNum.get)
-      .flatMap(cat => refOf(cat.dict, "/Pages")).flatMap(byNum.get)
+      .flatMap(_.ref("Root")).flatMap(byNum.get)
+      .flatMap(_.dict.ref("Pages")).flatMap(byNum.get)
       .filter(isPagesNode)
       .orElse((objs ++ embedded).find(isPagesNode))
     // each leaf is paired with the nearest ancestor's /MediaBox (PDF
@@ -2382,7 +2191,7 @@ object PdfLite {
         else if (isPageLeaf(o)) Vector((o, inh))
         else if (isPagesNode(o)) {
           val here = mediaBoxOf(o.dict).orElse(inh)
-          refsOf(o.dict, "/Kids").flatMap(byNum.get).flatMap(descend(_, depth + 1, here))
+          o.dict.refs("Kids").flatMap(byNum.get).flatMap(descend(_, depth + 1, here))
         } else Vector.empty
       pagesNode.toVector.flatMap(descend(_, 0, None))
     }
@@ -2394,15 +2203,15 @@ object PdfLite {
     val items = Vector.newBuilder[TextItem]
     var firstW = 612; var firstH = 792
 
-    def contentOf(o: PdfObj): String = streamText(s, o)
+    def contentOf(o: PdfObj): String = streamText(s, o, byNum)
 
     if (pageObjs.nonEmpty) {
       for (((p, inh), idx) <- pageObjs.zipWithIndex) {
         val (w, h) = mediaBoxOf(p.dict).orElse(inh).getOrElse((612, 792))
         // /Rotate: page-level, else inherited from the root Pages node
         // (PDF inheritance); only multiples of 90 are meaningful
-        val rotRaw = intAfter(p.dict, "/Rotate")
-          .orElse(pagesNode.flatMap(pn => intAfter(pn.dict, "/Rotate")))
+        val rotRaw = p.dict.int("Rotate")
+          .orElse(pagesNode.flatMap(_.dict.int("Rotate")))
           .getOrElse(0)
         val rot = if (rotRaw % 90 == 0) ((rotRaw % 360) + 360) % 360 else 0
         // reported page dims are the DISPLAY (rotated) view
@@ -2410,7 +2219,7 @@ object PdfLite {
         if (idx == 0) { firstW = dw; firstH = dh }
         val fonts = fontInfos(s, p.dict, pagesNode.map(_.dict), byNum)
         val forms = formInfos(s, p.dict, pagesNode.map(_.dict), byNum)
-        val contents = refsOf(p.dict, "/Contents").flatMap(byNum.get)
+        val contents = p.dict.refs("Contents").flatMap(byNum.get)
         if (native && run) {
           // native route: glyphs accumulate across the page's /Contents
           // streams (one logical stream per PDF §7.8.2), spans assemble once
@@ -2428,7 +2237,7 @@ object PdfLite {
     } else {
       // fallback: no page tree — treat every stream as page 1 content
       val (w, h) = objs.iterator.flatMap(o => mediaBoxOf(o.dict)).nextOption()
-        .orElse(Option(s).flatMap(mediaBoxOf)).getOrElse((612, 792))
+        .getOrElse((612, 792))
       var any = false
       for (o <- objs if o.hasStream) {
         any = true
@@ -2481,8 +2290,11 @@ object PdfLite {
     sb.toString
   }
 
-  /** Content-stream lexer (PDF 32000-1 §7.2–7.3) under both text
-    * interpreters, [[interpret]] and [[interpretNative]]. STREAMING: one
+  /** PDF lexer (PDF 32000-1 §7.2–7.3) under both text interpreters,
+    * [[interpret]] and [[interpretNative]], and under every object body:
+    * [[value]] reads one typed object (dict, array, reference, …) with the
+    * same token readers. Names and operators end at whitespace and at every
+    * §7.2.2 delimiter, so `/Type/Page>>` reads the name `Page`. STREAMING: one
     * cursor pass over the content, no intermediate token vector and no boxed
     * numbers outside `TJ` arrays (interpretation is ~2/3 of parse CPU on the
     * bench corpus — this is the hot loop of the whole PDF route).
@@ -2531,10 +2343,9 @@ object PdfLite {
     }
     private def clear(): Unit = { count = 0; arr = null }
 
-    /** Ends a name or an operator: whitespace or a delimiter that starts the
-      * next token. */
+    /** Ends a name or an operator: whitespace or a §7.2.2 delimiter. */
     private def tokenEnd(c: Char): Boolean =
-      c.isWhitespace || c == '/' || c == '(' || c == '[' || c == '<' || c == ']' || c == '%'
+      c.isWhitespace || "()<>[]{}/%".indexOf(c) >= 0
 
     private def skipToken(): Unit = {
       i += 1
@@ -2543,6 +2354,10 @@ object PdfLite {
 
     private def skipComment(): Unit =
       while (i < n && content.charAt(i) != '\n' && content.charAt(i) != '\r') i += 1
+
+    private def skipSpace(): Unit =
+      while (i < n && (content.charAt(i).isWhitespace || content.charAt(i) == '%'))
+        if (content.charAt(i) == '%') skipComment() else i += 1
 
     /** Literal string body, cursor just past its `(`: §7.3.4.2 escapes
       * (`\\ \( \) \n \r \t \b \f`, 1–3-digit octal, `\`EOL continuation) and
@@ -2668,7 +2483,7 @@ object PdfLite {
             if (!v.isNaN) elems += java.lang.Double.valueOf(v)
           } else if (c == '[') {
             i += 1
-            if (depth < MaxArrayNesting) { parseArray(depth + 1); () }
+            if (depth < MaxNesting) { parseArray(depth + 1); () }
             // past the cap: bracket dropped, elements flatten into this array
           } else skipToken() // operator tokens inside arrays: skipped
         }
@@ -2695,6 +2510,92 @@ object PdfLite {
         }
         i = if (end < 0) n else end
       }
+    }
+
+    /** One object (§7.3) at the cursor, past whitespace and comments: a
+      * [[PdfDict]], an array (`Vector[AnyRef]`), a [[PdfRef]] for `n g R`, a
+      * [[PdfName]], a number (`java.lang.Double`), a literal or hex string
+      * (its raw bytes as chars) or a `java.lang.Boolean`. Null for `null`,
+      * any other keyword, a `>` (left for the enclosing dict) and the end
+      * of the text. Dicts and arrays nest at most [[MaxNesting]] deep; a
+      * deeper `<<` or `[` reads as null and its entries join the enclosing
+      * container. */
+    def value(): AnyRef = value(0)
+
+    private def value(depth: Int): AnyRef = {
+      skipSpace()
+      if (i >= n) return null
+      val c = content.charAt(i)
+      if (c == '(') { i += 1; literal() }
+      else if (c == '<') {
+        if (i + 1 < n && content.charAt(i + 1) == '<') {
+          i += 2
+          if (depth < MaxNesting) dict(depth + 1) else null
+        } else { i += 1; hex() }
+      } else if (c == '[') {
+        i += 1
+        if (depth < MaxNesting) valueArray(depth + 1) else null
+      } else if (c == '/') PdfName(name())
+      else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
+        val v = number()
+        if (v.isNaN) null else refOr(v)
+      } else if (c == '>') null
+      else {
+        val from = i
+        skipToken()
+        content.substring(from, i) match {
+          case "true" => java.lang.Boolean.TRUE
+          case "false" => java.lang.Boolean.FALSE
+          case _ => null
+        }
+      }
+    }
+
+    /** A [[PdfRef]] when `g R` follows the object number `v`, else `v`. */
+    private def refOr(v: Double): AnyRef = {
+      val from = i
+      while (i < n && content.charAt(i).isWhitespace) i += 1
+      val gen = i
+      while (i < n && content.charAt(i).isDigit) i += 1
+      val hasGen = i > gen
+      while (i < n && content.charAt(i).isWhitespace) i += 1
+      if (hasGen && v >= 0 && v == v.toInt && i < n && content.charAt(i) == 'R' &&
+          (i + 1 == n || tokenEnd(content.charAt(i + 1)))) {
+        i += 1
+        PdfRef(v.toInt)
+      } else {
+        i = from
+        java.lang.Double.valueOf(v)
+      }
+    }
+
+    private def dict(depth: Int): PdfDict = { // cursor past `<<`
+      val keys = new mutable.ArrayBuffer[String](8)
+      val vals = new mutable.ArrayBuffer[AnyRef](8)
+      var done = false
+      while (!done) {
+        skipSpace()
+        if (i >= n) done = true
+        else if (content.charAt(i) == '>') {
+          i += 1
+          if (i < n && content.charAt(i) == '>') { i += 1; done = true }
+        } else if (content.charAt(i) == '/') { keys += name(); vals += value(depth) }
+        else value(depth) // not a key: read and drop
+      }
+      new PdfDict(keys.toArray, vals.toArray)
+    }
+
+    private def valueArray(depth: Int): Vector[AnyRef] = { // cursor past `[`
+      val out = Vector.newBuilder[AnyRef]
+      var done = false
+      while (!done) {
+        skipSpace()
+        if (i >= n) done = true
+        else if (content.charAt(i) == ']') { i += 1; done = true }
+        else if (content.charAt(i) == '>') i += 1 // stray
+        else out += value(depth)
+      }
+      out.result()
     }
 
     /** Lex the whole content, calling `onOp` with each operator; unknown
@@ -2731,7 +2632,7 @@ object PdfLite {
     /** Operand kinds. */
     final val Num = 0; final val Str = 1; final val Name = 2; final val Other = 3
     private final val Window = 6
-    private final val MaxArrayNesting = 32
+    private final val MaxNesting = 32
   }
 
   /** Approximate-geometry text interpreter (PDF 32000-1 §9.4 subset), the
