@@ -193,14 +193,15 @@ object ExtractJob {
       } finally spark.listenerManager.unregister(observer)
 
     // lineage of the rows that committed, appended only after the docs commit
-    // as one small driver-side frame (≤ nBuckets rows); the metrics are the
-    // sums of the same counts (a null `bytes` adds 0)
+    // as one small driver-side frame (≤ nBuckets rows) in one partition, so a
+    // run adds one lineage file; the metrics are the sums of the same counts
+    // (a null `bytes` adds 0)
     val lineage: Seq[Row] = rollup.toSeq.sortBy(_._1).map { case (bucket, c) =>
       Row(runId, bucket.toInt, c.docs,
         if (c.bytesSeen > 0) c.bytes else null, c.failures, c.emptyDocs, "ok")
     }
     if (pendingBuckets.nonEmpty)
-      io.appendLineage(spark.createDataFrame(lineage.asJava, LineageSchema))
+      io.appendLineage(spark.createDataFrame(lineage.asJava, LineageSchema).coalesce(1))
 
     val counts = rollup.values
     val (d, b, f, e) = (counts.map(_.docs).sum, counts.map(_.bytes).sum,

@@ -33,20 +33,24 @@ trait TableIO {
   def readLineage(spark: SparkSession): DataFrame
 }
 
-/** Parquet-backed TableIO (the sandbox backend). */
+/** Parquet-backed TableIO (the sandbox backend). Its writes resolve `file:`
+  * paths to [[NioLocalFileSystem]], which sets file modes without a `chmod`
+  * child process. */
 final class ParquetTableIO(outDir: String) extends TableIO {
   val docsPath = s"$outDir/docs"
   val lineagePath = s"$outDir/lineage"
 
   override def writeDocs(docs: DataFrame): Unit =
     docs.write
+      .options(NioLocalFileSystem.WriteOptions)
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(docsPath)
 
   override def appendLineage(lineage: DataFrame): Unit =
-    lineage.write.mode(SaveMode.Append).parquet(lineagePath)
+    lineage.write.options(NioLocalFileSystem.WriteOptions)
+      .mode(SaveMode.Append).parquet(lineagePath)
 
   override def readDocs(spark: SparkSession): DataFrame =
     spark.read.parquet(docsPath)
@@ -108,7 +112,8 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
             col("nItems"), col("nPages"), col("nBytes"),
             graft.functions.CsvGrid.column(col("cells")).as("grid_csv"),
             col("bucket"))
-          .write.mode(SaveMode.Overwrite)
+          .write.options(NioLocalFileSystem.WriteOptions)
+          .mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           // RFC-4180 doubling (the pandas convention) for the sink's own
           // quoting, so grid_csv's embedded quotes/newlines round-trip;
@@ -120,7 +125,7 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
           .partitionBy("bucket")
           .csv(csvPath)
         val p = new org.apache.hadoop.fs.Path(s"$csvPath/$marker")
-        p.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
+        p.getFileSystem(NioLocalFileSystem.conf(docs.sparkSession.sparkContext.hadoopConfiguration))
           .create(p, true).close()
     }
 
@@ -185,7 +190,8 @@ final class XlsxArtifactTableIO(inner: TableIO, artifactDir: String) extends Tab
         when(col("xlsx").isNotNull, lit("xlsx")).otherwise(lit("csv")).as("format"),
         coalesce(col("xlsx"), encode(col("csv"), "UTF-8")).as("artifact"),
         col("bucket"))
-      .write.mode(SaveMode.Overwrite)
+      .write.options(NioLocalFileSystem.WriteOptions)
+      .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(artifactsPath)

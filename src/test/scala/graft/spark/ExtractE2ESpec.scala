@@ -108,6 +108,61 @@ class ExtractE2ESpec extends SparkTestBase {
     assert(m.docs == 303 && m.failedDocs >= 1 && m.emptyDocs >= 1, m)
   }
 
+  test("a fresh run and a resume run each add one lineage file") {
+    import LineageChecks._
+    import org.apache.spark.sql.functions.col
+    val out = Files.createTempDirectory("graft_lineage_files_spec").toString
+    val pages = pagesWithEdgeRows(spark, 300)
+    val half = ExtractJob.withBucket(pages, 8).filter(col("bucket") < 4).drop("bucket")
+    ExtractJob.run(spark, half, out, runId = "half", nBuckets = 8)
+    val m = ExtractJob.run(spark, pages, out, runId = "rest", nBuckets = 8, resume = true)
+    assert(m.docs > 0 && m.docs < 303, m)
+    val parts = new java.io.File(s"$out/lineage").list()
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.length == 2, parts.mkString(", "))
+    val lineageDf = spark.read.parquet(s"$out/lineage")
+    val lineage = (lineageCounts(lineageDf, "half") ++ lineageCounts(lineageDf, "rest"))
+      .sortBy(_.head.asInstanceOf[Long])
+    assert(lineage == tableCounts(spark.read.parquet(s"$out/docs")))
+  }
+
+  test("table writes leave Hadoop's default modes, a .crc per part file and the session conf") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.FileSystem
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fsKeys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val confBefore = fsKeys.map(conf.get)
+    val cachedBefore = FileSystem.get(java.net.URI.create("file:///"), conf)
+    val out = Files.createTempDirectory("graft_layout_spec")
+    ExtractJob.run(spark, ExtractPipeline.pages(spark, 200, numPartitions = 4).toDF(),
+      out.toString, runId = "m1", nBuckets = 8)
+
+    val umask = FsPermission.getUMask(conf)
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toShort.toInt
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toShort.toInt
+    for (table <- Seq("docs", "lineage")) {
+      val paths = Files.walk(out.resolve(table)).iterator.asScala.toVector
+      paths.foreach { p =>
+        val mode = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+        val want = if (Files.isDirectory(p)) dirMode else fileMode
+        assert(mode == want, f"$p has mode $mode%o, want $want%o")
+      }
+      val parts = paths.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }
+      assert(parts.nonEmpty, s"no part files under $table")
+      parts.foreach { p =>
+        assert(Files.exists(p.resolveSibling(s".${p.getFileName}.crc")), s"$p has no .crc")
+      }
+    }
+    // the writes' file system rode on their own options, not the session's
+    assert(fsKeys.map(conf.get) == confBefore)
+    assert(FileSystem.get(out.toUri, conf) eq cachedBefore)
+    assert(!cachedBefore.isInstanceOf[NioLocalFileSystem])
+  }
+
   test("extract_doc rejects wrong input types at analysis time") {
     import spark.implicits._
     // an int html column must fail in the analyzer (AnalysisException), not
