@@ -2,6 +2,7 @@ package graft.kernel
 
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
+import scala.util.matching.Regex
 
 /** PDF-lite: a deterministic PDF subset that the corpus generator writes and
   * the extraction kernel parses — the sandbox stand-in for the reference's
@@ -981,9 +982,10 @@ object PdfLite {
     case _ => Iterator.empty
   }
 
-  /** The first definition of each object number, in `objs` order. */
-  private def firstByNum(objs: Iterable[PdfObj]): Map[Int, PdfObj] =
-    objs.foldLeft(Map.empty[Int, PdfObj]) { (m, o) =>
+  /** `byNum` plus the first definition in `objs` of each number it lacks. */
+  private def firstByNum(objs: Iterable[PdfObj],
+                         byNum: Map[Int, PdfObj] = Map.empty): Map[Int, PdfObj] =
+    objs.foldLeft(byNum) { (m, o) =>
       if (m.contains(o.num)) m else m.updated(o.num, o)
     }
 
@@ -1028,28 +1030,31 @@ object PdfLite {
       val hdr = if (boundaryOk) objHeaderBefore(s, objIdx) else null
       val num = if (hdr == null) -1 else hdr._1
       if (num >= 0 && hdr._2 >= cursor) {
-        val bodyStart = objIdx + 3
-        val endObj = s.indexOf("endobj", bodyStart)
-        val bodyEnd = if (endObj < 0) s.length else endObj
-        val streamKw = s.indexOf("stream", bodyStart)
-        if (streamKw >= 0 && streamKw < bodyEnd) {
-          var k = streamKw + "stream".length
-          if (k < s.length && s.charAt(k) == '\r') k += 1
-          if (k < s.length && s.charAt(k) == '\n') k += 1
-          // `endstream` may sit past the `endobj` guess when the binary
-          // stream itself contains the bytes "endobj" — trust endstream
-          val endStream = s.indexOf("endstream", k)
-          val se = if (endStream < 0) bodyEnd else endStream
-          out += PdfObj(num, s.substring(bodyStart, streamKw), k, se)
-          cursor = se
-        } else {
-          out += PdfObj(num, s.substring(bodyStart, bodyEnd), -1, -1)
-          cursor = bodyStart
-        }
+        val o = objFrom(s, num, objIdx + 3)
+        out += o
+        cursor = if (o.hasStream) o.streamEnd else objIdx + 3
       }
       objIdx = s.indexOf("obj", objIdx + 3)
     }
     out.result()
+  }
+
+  /** Object `num` whose body starts at `bodyStart`: its body text up to
+    * `stream` or `endobj`, and the stream's byte range when `stream` comes
+    * first. */
+  private def objFrom(s: String, num: Int, bodyStart: Int): PdfObj = {
+    val endObj = s.indexOf("endobj", bodyStart)
+    val bodyEnd = if (endObj < 0) s.length else endObj
+    val streamKw = s.indexOf("stream", bodyStart)
+    if (streamKw >= 0 && streamKw < bodyEnd) {
+      var k = streamKw + "stream".length
+      if (k < s.length && s.charAt(k) == '\r') k += 1
+      if (k < s.length && s.charAt(k) == '\n') k += 1
+      // `endstream` may sit past the `endobj` guess when the binary
+      // stream itself contains the bytes "endobj" — trust endstream
+      val endStream = s.indexOf("endstream", k)
+      PdfObj(num, s.substring(bodyStart, streamKw), k, if (endStream < 0) bodyEnd else endStream)
+    } else PdfObj(num, s.substring(bodyStart, bodyEnd), -1, -1)
   }
 
   // hot-path patterns, compiled ONCE (JFR: per-call Pattern.compile and the
@@ -1322,7 +1327,8 @@ object PdfLite {
       case _ => Nil
     }
 
-  /** Decoded text of an object's stream ("" when none). The `/Filter`
+  /** Decoded text of `o`'s stream, whose stored bytes are the chars
+    * `[from, until)` of `src`. The `/Filter`
     * chain is applied strictly in its declared order (§7.4.1) across the
     * five text-capable filters real writers emit — `/FlateDecode`,
     * `/LZWDecode`, `/ASCIIHexDecode`, `/ASCII85Decode`,
@@ -1333,17 +1339,17 @@ object PdfLite {
     * image codecs read raw via their own path. A `/DecodeParms` predictor
     * (PNG/TIFF) is undone after full decompression. `byNum` resolves an
     * indirect `/Filter` or `/DecodeParms`. */
-  private def streamText(s: String, o: PdfObj, byNum: Map[Int, PdfObj]): String = {
-    if (!o.hasStream) return ""
+  private def decodeStream(o: PdfObj, src: String, from: Int, until: Int,
+                           byNum: Map[Int, PdfObj]): String = {
     val chain = filterNames(o.dict, byNum)
-    if (chain.isEmpty) return s.substring(o.streamStart, o.streamEnd)
+    if (chain.isEmpty) return src.substring(from, until)
     // fast paths: the overwhelmingly common single-filter streams decode
-    // straight out of the file string with no substring copy
+    // straight out of the source string with no substring copy
     val decoded: String = chain match {
-      case "FlateDecode" :: Nil => inflate(s, o.streamStart, o.streamEnd)
-      case "LZWDecode" :: Nil => lzwDecode(s, o.streamStart, o.streamEnd)
+      case "FlateDecode" :: Nil => inflate(src, from, until)
+      case "LZWDecode" :: Nil => lzwDecode(src, from, until)
       case _ =>
-        var cur = s.substring(o.streamStart, o.streamEnd)
+        var cur = src.substring(from, until)
         var rest = chain
         while (rest.nonEmpty) {
           rest.head match {
@@ -1370,18 +1376,7 @@ object PdfLite {
     m.region(off, math.min(s.length, off + 64))
     if (!m.lookingAt()) return None
     val num = try m.group(1).toInt catch { case _: NumberFormatException => return None }
-    val bodyStart = m.end()
-    val endObj = s.indexOf("endobj", bodyStart)
-    val bodyEnd = if (endObj < 0) s.length else endObj
-    val streamKw = s.indexOf("stream", bodyStart)
-    if (streamKw >= 0 && streamKw < bodyEnd) {
-      var k = streamKw + "stream".length
-      if (k < s.length && s.charAt(k) == '\r') k += 1
-      if (k < s.length && s.charAt(k) == '\n') k += 1
-      val endStream = s.indexOf("endstream", k)
-      val se = if (endStream < 0) bodyEnd else endStream
-      Some(PdfObj(num, s.substring(bodyStart, streamKw), k, se))
-    } else Some(PdfObj(num, s.substring(bodyStart, bodyEnd), -1, -1))
+    Some(objFrom(s, num, m.end()))
   }
 
   /** Everything one xref chain resolves: type-1 entries (objNum → byte
@@ -1472,7 +1467,7 @@ object PdfLite {
             val index = if (idx0.length >= 2) idx0.grouped(2).collect {
               case Vector(a, b) => (a, b) }.toVector else Vector((0, size))
             // §7.5.8.2: an xref stream's own entries are direct objects
-            val data = streamText(s, o, Map.empty)
+            val data = decodeStream(o, s, o.streamStart, o.streamEnd, Map.empty)
             val rowLen = w.take(3).sum
             def field(pos: Int, width: Int): Long = {
               var v = 0L; var j = 0
@@ -1508,12 +1503,13 @@ object PdfLite {
     * embedded dict-only object. Keyed by container object number so xref
     * type-2 entries (`objNum → (container, index)`) can resolve
     * authoritatively; the scan-based flat view fills in numbers no xref
-    * mentions. The recovered objects never shadow a top-level definition. */
-  private def expandObjStms(objs: Iterable[PdfObj], s: String,
-                            byNum: Map[Int, PdfObj]): Map[Int, Vector[PdfObj]] = {
+    * mentions. The recovered objects never shadow a top-level definition.
+    * Containers come from the linear scan, which resolves their indirect
+    * `/Filter` and `/DecodeParms`. */
+  private def expandObjStms(doc: Doc): Map[Int, Vector[PdfObj]] = {
     val out = Map.newBuilder[Int, Vector[PdfObj]]
-    for (o <- objs if o.hasStream && o.dict.is("Type", "ObjStm")) {
-      val data = streamText(s, o, byNum)
+    for (o <- doc.objs if o.hasStream && o.dict.is("Type", "ObjStm")) {
+      val data = doc.streamText(o, doc.linearByNum)
       val first = o.dict.int("First").getOrElse(-1)
       val n = o.dict.int("N").getOrElse(0)
       if (first > 0 && first <= data.length && n > 0 && n <= 10000) {
@@ -1703,12 +1699,13 @@ object PdfLite {
   /** Per-font info for a page: resolve `/Resources` (inline dict or
     * reference, page-level else inherited), then `/Font << /Fi N 0 R … >>`,
     * then each font object's `/Encoding` and `/ToUnicode`. */
-  private def fontInfos(s: String, pageDict: PdfDict, inherited: Option[PdfDict],
-                        byNum: Map[Int, PdfObj]): Map[String, FontInfo] =
+  private def fontInfos(doc: Doc, pageDict: PdfDict,
+                        inherited: Option[PdfDict]): Map[String, FontInfo] = {
+    import doc.byNum
     resourceObjs(pageDict, inherited, "Font", byNum).flatMap { case (name, fontObj) =>
       val fontDict = fontObj.dict
       val (cmap, twoByteCmap) = fontDict.ref("ToUnicode").flatMap(byNum.get)
-        .map(o => parseCMap(streamText(s, o, byNum))).getOrElse((Map.empty[Int, String], false))
+        .map(o => parseCMap(doc.streamText(o))).getOrElse((Map.empty[Int, String], false))
       // code width is an ENCODING property: Identity-H/V composite fonts
       // consume 2 bytes/glyph even when no ToUnicode says so
       val twoByte = twoByteCmap || fontDict.is("Encoding", "Identity-H") ||
@@ -1721,7 +1718,7 @@ object PdfLite {
       // the same slot as /Differences, both are code → char)
       def program(d: PdfDict, key: String): Option[Array[Byte]] =
         d.ref(key).flatMap(byNum.get).filter(_.hasStream)
-          .map(o => streamText(s, o, byNum).getBytes(Latin1))
+          .map(o => doc.streamText(o).getBytes(Latin1))
       val ttfDiffs: Map[Int, Char] =
         if (winAnsi || cmap.nonEmpty || diffs.nonEmpty) Map.empty
         else fontDict.dict("FontDescriptor", byNum).flatMap { d =>
@@ -1738,6 +1735,7 @@ object PdfLite {
         Some(name -> FontInfo(winAnsi, cmap, twoByte, allDiffs, widths, dw, asc, desc))
       else None
     }.toMap
+  }
 
   /** A Form XObject ready for execution by the `Do` operator: decoded
     * content plus the form's OWN font/XObject resources (empty maps → the
@@ -1751,17 +1749,17 @@ object PdfLite {
     * paints pixels, no text). Real PDFs put letterheads, stamps, and
     * entire page bodies in forms, and forms nest; `depth` caps the eager
     * resolution (and with it any reference cycle) at 3 levels. */
-  private def formInfos(s: String, dict: PdfDict, inherited: Option[PdfDict],
-                        byNum: Map[Int, PdfObj], depth: Int = 0): Map[String, FormX] =
+  private def formInfos(doc: Doc, dict: PdfDict, inherited: Option[PdfDict],
+                        depth: Int = 0): Map[String, FormX] =
     if (depth > 2) Map.empty
-    else resourceObjs(dict, inherited, "XObject", byNum).collect {
+    else resourceObjs(dict, inherited, "XObject", doc.byNum).collect {
       case (name, o) if o.dict.is("Subtype", "Form") && o.hasStream =>
         // /Matrix (form space → user space, PDF §8.10.1) feeds the
         // native route's CTM; the legacy interpreter ignores it
         val m = o.dict.nums("Matrix")
-        name -> FormX(streamText(s, o, byNum),
-          fontInfos(s, o.dict, None, byNum),
-          formInfos(s, o.dict, None, byNum, depth + 1),
+        name -> FormX(doc.streamText(o),
+          fontInfos(doc, o.dict, None),
+          formInfos(doc, o.dict, None, depth + 1),
           if (m.length == 6) m.toArray else Array(1.0, 0, 0, 1, 0, 0))
     }.toMap
 
@@ -1815,7 +1813,7 @@ object PdfLite {
 
   /** [[parse]] with a password try-list for documents protected by a REAL
     * (non-empty) password — each candidate is tried as user then owner
-    * password (see [[decryptIfNeeded]]). The empty password is always
+    * password (see [[Crypt.open]]). The empty password is always
     * tried first, so `parse(bytes, pws)` on an unprotected or
     * empty-password document equals `parse(bytes)`. */
   def parse(bytes: Array[Byte], passwords: Seq[String]): Parsed =
@@ -1854,19 +1852,18 @@ object PdfLite {
     if (payload == null || payload.isEmpty) return "empty"
     if (!isPdf(payload)) return "html"
     try {
-      val raw = new String(payload, Latin1)
+      val doc = new Doc(payload)
+      val s = doc.s
       val tags = scala.collection.mutable.SortedSet.empty[String]
       // encryption flavor lives in the plaintext /Encrypt dict
-      if (raw.contains("/Encrypt")) {
-        if (raw.contains("/AESV3")) tags += "enc:aes256"
-        else if (raw.contains("/AESV2")) tags += "enc:aes128"
+      if (s.contains("/Encrypt")) {
+        if (s.contains("/AESV3")) tags += "enc:aes256"
+        else if (s.contains("/AESV2")) tags += "enc:aes128"
         else tags += "enc:rc4"
       }
-      val s = decryptIfNeeded(raw)
-      val objs = scanObjects(s)
       // dicts inside /ObjStm containers are Flate-compressed (and encrypted
-      // when the doc is): expand so their markers count too
-      val all = objs ++ expandObjStms(objs, s, firstByNum(objs)).valuesIterator.flatten
+      // when the doc is): the expanded ones count too
+      val all = doc.all
       val texts = all.map(_.text)
       def any(marker: String, tag: String): Unit =
         if (texts.exists(_.contains(marker))) tags += tag
@@ -1910,16 +1907,13 @@ object PdfLite {
   /** All link-annotation target URIs in the document (§12.5.6.5, §12.6.4.7):
     * every `/URI (…)` action string across top-level AND in-ObjStm dicts —
     * both the inline-dict and indirect-object `/Annots` layouts real writers
-    * emit. Deterministic object-scan order; total (damaged/garbage → empty).
-    * The outlink surface a crawl frontier feeds on. */
+    * emit. Deterministic order: the object scan, then the ObjStm
+    * containers by number; total (damaged/garbage → empty). The outlink
+    * surface a crawl frontier feeds on. */
   def links(payload: Array[Byte]): Vector[String] = {
     if (payload == null || !isPdf(payload)) return Vector.empty
-    try {
-      val s = decryptIfNeeded(new String(payload, Latin1))
-      val objs = scanObjects(s)
-      val all = objs ++ expandObjStms(objs, s, firstByNum(objs)).valuesIterator.flatten
-      all.flatMap(o => dictsIn(o.value)).flatMap(_.str("URI")).map(textString)
-    } catch { case _: Exception => Vector.empty }
+    try new Doc(payload).all.flatMap(o => dictsIn(o.value)).flatMap(_.str("URI")).map(textString)
+    catch { case _: Exception => Vector.empty }
   }
 
   /** The document-information dictionary (§14.3.3): trailer `/Info` resolve
@@ -1929,16 +1923,14 @@ object PdfLite {
   def docInfo(payload: Array[Byte]): Option[DocInfo] = {
     if (payload == null || !isPdf(payload)) return None
     try {
-      val s = decryptIfNeeded(new String(payload, Latin1))
-      val objs = scanObjects(s)
       // modern writers commonly house the /Info dict inside an /ObjStm
-      // container — expand them like links() does, so both the trailer
-      // resolve and the structural fallback see compressed objects too
-      val all = objs ++ expandObjStms(objs, s, firstByNum(objs)).toVector.sortBy(_._1).flatMap(_._2)
-      val byTrailer = parseXrefChain(s).trailer
+      // container — both the trailer resolve and the structural fallback
+      // see the expanded objects too
+      val doc = new Doc(payload)
+      val byTrailer = doc.xref.trailer
         .flatMap(_.ref("Info"))
-        .flatMap(n => all.find(_.num == n).map(_.dict))
-      val dict = byTrailer.orElse(all.map(_.dict).find(d =>
+        .flatMap(n => doc.all.find(_.num == n).map(_.dict))
+      val dict = byTrailer.orElse(doc.all.map(_.dict).find(d =>
         d.has("Producer") || d.has("CreationDate")))
       def text(d: PdfDict, key: String) = d.str(key).map(textString).getOrElse("")
       dict.map(d => DocInfo(text(d, "Title"), text(d, "Author"),
@@ -1946,150 +1938,26 @@ object PdfLite {
     } catch { case _: Exception => None }
   }
 
-  /** Standard-Security-Handler decryption pass (V≤2/R≤3 RC4, V=4/R=4
-    * `/AESV2` AES-128 and V=5/R=5|6 `/AESV3` AES-256 under the file key,
-    * empty user password — [[PdfCrypt]]): when the trailer names
-    * an `/Encrypt` dict, every stream except the xref stream is decrypted
-    * IN PLACE and the parse proceeds on the plaintext view. RC4 is
-    * length-preserving so offsets stay valid as-is; AES plaintext is
-    * SHORTER than its `IV ‖ CBC blocks` ciphertext, so the decrypted bytes
-    * are written at the stream start and the leftover tail up to
-    * `endstream` is padded with newlines — whitespace every downstream
-    * consumer already tolerates (Flate/LZW stop at their terminal
-    * block/EOD, DCT at EOI, and content-stream tokenizers skip it); stream
-    * bounds come from the `stream`/`endstream` scan, never `/Length`, so
-    * the stale dict length is inert. Out-of-scope handlers (non-Standard
-    * filters, unknown revisions) and a failed `/U` check (a real user
-    * password we don't have) leave the bytes untouched — the parse then
-    * recovers nothing readable, which is the honest result.
-    *
-    * `passwords` is a caller-supplied try-list for documents protected by
-    * a REAL (non-empty) password: each candidate is tried first as the
-    * USER password (Algorithm 2 + /U check; R=6 Algorithm 11) and then as
-    * the OWNER password (Algorithm 7 reverse recovers the padded user
-    * password from /O; R=6 Algorithm 12 + /OE unwrap) — PyMuPDF's
-    * `authenticate` contract, which the reference relies on
-    * (`smart_extract.py:64-97`). The empty password is always tried
-    * first, so the common open-web case costs no extra work. Candidates
-    * are encoded Latin-1 for R≤4 (the spec's PDFDocEncoding agrees with
-    * Latin-1 on the printable range) and UTF-8 for R≥5. */
-  private def decryptIfNeeded(s0: String,
-                              passwords: Seq[String] = Nil): String = {
-    if (!s0.contains("/Encrypt")) return s0
-    try {
-      val objs = scanObjects(s0)
-      // the newest trailer: the last classic one, else the last xref stream
-      val trailer = { val t = s0.lastIndexOf("trailer"); if (t < 0) None else trailerAt(s0, t) }
-        .orElse(objs.reverseIterator.map(_.dict).find(_.is("Type", "XRef")))
-        .getOrElse(return s0)
-      val encRef = trailer.ref("Encrypt").getOrElse(return s0)
-      val d = objs.find(_.num == encRef).getOrElse(return s0).dict
-      if (!d.is("Filter", "Standard")) return s0
-      val v = d.int("V").getOrElse(1)
-      val r = d.int("R").getOrElse(2)
-      // the crypt filter streams use (§7.6.5): /StmF names a /CF entry
-      val cfm = d.name("StmF").flatMap(f => d.dict("CF").flatMap(_.dict(f)))
-        .flatMap(_.name("CFM"))
-      val aes = v == 4 && r == 4 && cfm.contains("AESV2")
-      // V=5: AES-256 under the file key directly — R=6 (PDF 2.0, iterated
-      // Algorithm 2.B hash) and the deprecated R=5 precursor (plain SHA-256)
-      val aes3 = v == 5 && (r == 5 || r == 6) && cfm.contains("AESV3")
-      if (!aes && !aes3 && (v > 2 || r > 3)) return s0 // unknown handler
-      val key: Array[Byte] =
-        if (aes3) {
-          // /U carries hash‖salts; /UE wraps the file key (Algorithm 11);
-          // owner route: /O hash folds in /U, /OE wraps the same key
-          val u48 = d.bytes("U").getOrElse(return s0)
-          val ue = d.bytes("UE").getOrElse(return s0)
-          val cands = "" +: passwords
-          cands.iterator
-            .map(pw => PdfCrypt.fileKey6(u48, ue, r5 = r == 5,
-              pw.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-            .collectFirst { case Some(k) => k }
-            .orElse {
-              for {
-                o48 <- d.bytes("O")
-                oe <- d.bytes("OE")
-                k <- cands.iterator
-                  .map(pw => PdfCrypt.fileKey6Owner(o48, oe, u48, r5 = r == 5,
-                    pw.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-                  .collectFirst { case Some(k) => k }
-              } yield k
-            }
-            .getOrElse(return s0)
-        } else {
-          val p = d.int("P").getOrElse(-1)
-          val o = d.bytes("O").getOrElse(return s0)
-          // /ID [<hex> <hex>] — first element feeds the key derivation
-          val id0 = trailer.get("ID") match {
-            case a: Vector[_] => a.headOption.collect { case s: String => s.getBytes(Latin1) }
-              .getOrElse(return s0)
-            case _ => return s0
-          }
-          // /U check: 16 significant bytes; a key passes when it
-          // regenerates them — the same acceptance rule for every route
-          val u16 = d.bytes("U").map(_.take(16))
-          def uOk(k: Array[Byte]): Boolean =
-            u16.forall(_.sameElements(PdfCrypt.uValue(k, id0).take(16)))
-          val userRoutes = ("" +: passwords).iterator
-            .map(pw => PdfCrypt.fileKey(pw.getBytes(Latin1), o, p, id0))
-          // owner route: Algorithm 7 reverse gives the padded user
-          // password, which feeds Algorithm 2 unchanged
-          val ownerRoutes = passwords.iterator.map(pw =>
-            PdfCrypt.fileKey(
-              PdfCrypt.userPwFromOwner(pw.getBytes(Latin1), o), o, p, id0))
-          (userRoutes ++ ownerRoutes).find(uOk).getOrElse(return s0)
-        }
-      val chars = s0.toCharArray
-      for (ob <- objs
-           if ob.hasStream && ob.num != encRef &&
-             !ob.dict.is("Type", "XRef")) {
-        val n = ob.streamEnd - ob.streamStart
-        if (n > 0) {
-          // The scanned stream region runs to `endstream`, which includes
-          // the writer's EOL after the data — irrelevant under
-          // length-preserving RC4, but AES needs the exact `IV ‖ blocks`
-          // extent: trust a plausible in-dict /Length, else trim trailing
-          // EOL bytes down to block alignment.
-          var m = n
-          if (aes || aes3) {
-            m = ob.dict.int("Length")
-              .filter(l => l >= 32 && l <= n && (l - 16) % 16 == 0)
-              .getOrElse(n)
-            while (m > 32 && (m - 16) % 16 != 0 && {
-              val c = chars(ob.streamStart + m - 1); c == '\n' || c == '\r'
-            }) m -= 1
-          }
-          val data = new Array[Byte](m)
-          var i = 0
-          while (i < m) { data(i) = chars(ob.streamStart + i).toByte; i += 1 }
-          val dec: Array[Byte] =
-            if (aes3)
-              PdfCrypt.aesDecrypt(key, data).orNull // file key direct (V5)
-            else if (aes)
-              PdfCrypt.aesDecrypt(PdfCrypt.objKeyAes(key, ob.num), data)
-                .orNull // malformed ciphertext — leave the stream opaque
-            else PdfCrypt.rc4(PdfCrypt.objKey(key, ob.num), data)
-          if (dec != null) {
-            i = 0
-            while (i < dec.length) {
-              chars(ob.streamStart + i) = (dec(i) & 0xff).toChar; i += 1
-            }
-            // AES plaintext is shorter than ciphertext: newline-pad the
-            // tail (see the method doc — every consumer tolerates it)
-            while (i < n) { chars(ob.streamStart + i) = '\n'; i += 1 }
-          }
-        }
-      }
-      new String(chars)
-    } catch { case scala.util.control.NonFatal(_) => s0 }
-  }
+  /** One PDF, opened once for every reader ([[parseImpl]], [[dialect]],
+    * [[links]], [[docInfo]]): the file as a Latin-1 string, its object scan
+    * and, when first asked for, the /ObjStm expansion, the xref chain and the
+    * object-number index. An encrypted file's key is worked out when a stream
+    * is first read, and each stream is decrypted when first read ([[Crypt]]);
+    * a plain file's streams decode straight out of the file string. */
+  private final class Doc(bytes: Array[Byte], passwords: Seq[String] = Nil) {
+    val s: String = new String(bytes, Latin1)
+    val objs: Vector[PdfObj] = scanObjects(s)
+    private lazy val crypt = Crypt.open(s, objs, passwords)
+    private lazy val plains = mutable.HashMap.empty[Int, String]
 
-  private def parseImpl(bytes: Array[Byte], run: Boolean,
-                        native: Boolean = false,
-                        passwords: Seq[String] = Nil): Parsed = {
-    val s = decryptIfNeeded(new String(bytes, Latin1), passwords)
-    val objs = scanObjects(s)
+    /** The first definition of each object number in the linear scan. */
+    lazy val linearByNum: Map[Int, PdfObj] = firstByNum(objs)
+    private lazy val objStms: Map[Int, Vector[PdfObj]] = expandObjStms(this)
+    /** The objects inside /ObjStm containers, containers by number. */
+    lazy val embedded: Vector[PdfObj] = objStms.toVector.sortBy(_._1).flatMap(_._2)
+    /** The scanned objects in file order, then [[embedded]]. */
+    lazy val all: Vector[PdfObj] = objs ++ embedded
+    lazy val xref: XrefInfo = parseXrefChain(s)
     // resolution order (PDF semantics):
     //  1. linear scan, first definition wins — a spurious in-stream
     //     "N 0 obj" must not shadow the real object N;
@@ -2098,23 +1966,164 @@ object PdfLite {
     //     and the newest xref section is authoritative; type-2 entries
     //     resolve through their ObjStm container by index;
     //  3. /ObjStm-embedded objects fill in numbers nothing else defines.
-    val xref = parseXrefChain(s)
-    val trailerDict = xref.trailer
-    val linearByNum = firstByNum(objs)
-    val xrefByNum = xref.offsets.flatMap { case (num, off) =>
-      objAt(s, off).filter(_.num == num).map(num -> _)
+    lazy val byNum: Map[Int, PdfObj] = {
+      val xrefByNum = xref.offsets.flatMap { case (num, off) =>
+        objAt(s, off).filter(_.num == num).map(num -> _)
+      }
+      val type2ByNum = xref.inStm.flatMap { case (num, (stm, idx)) =>
+        objStms.get(stm).flatMap(_.lift(idx)).filter(_.num == num).map(num -> _)
+      }
+      firstByNum(embedded, linearByNum ++ xrefByNum ++ type2ByNum)
     }
-    // ObjStm containers are themselves top-level objects, so the linear scan
-    // always finds them (in file order — deterministic expansion)
-    val objStmMap = expandObjStms(objs, s, linearByNum)
-    val type2ByNum = xref.inStm.flatMap { case (num, (stm, idx)) =>
-      objStmMap.get(stm).flatMap(_.lift(idx)).filter(_.num == num).map(num -> _)
+
+    /** `o`'s stream decoded through its `/Filter` chain ("" when none). */
+    def streamText(o: PdfObj, byNum: Map[Int, PdfObj] = byNum): String =
+      if (!o.hasStream) ""
+      else plain(o) match {
+        case null => decodeStream(o, s, o.streamStart, o.streamEnd, byNum)
+        case p => decodeStream(o, p, 0, p.length, byNum)
+      }
+
+    /** `o`'s stream bytes as stored, decrypted. */
+    def streamBytes(o: PdfObj): Array[Byte] = plain(o) match {
+      case null => java.util.Arrays.copyOfRange(bytes, o.streamStart, o.streamEnd)
+      case p => p.getBytes(Latin1)
     }
-    val topLevel = linearByNum ++ xrefByNum ++ type2ByNum
-    val embedded = objStmMap.toVector.sortBy(_._1).flatMap(_._2)
-    val byNum = embedded.foldLeft(topLevel) { (m, o) =>
-      if (m.contains(o.num)) m else m.updated(o.num, o)
+
+    /** `o`'s decrypted stream, kept per stream; null when the file stores
+      * it in the clear. */
+    private def plain(o: PdfObj): String =
+      if (crypt == null || !crypt.covers(o)) null
+      else plains.getOrElseUpdate(o.streamStart, crypt.decrypt(bytes, o))
+  }
+
+  /** Standard-Security-Handler decryption (V≤2/R≤3 RC4, V=4/R=4 `/AESV2`
+    * AES-128 and V=5/R=5|6 `/AESV3` AES-256 under the file key —
+    * [[PdfCrypt]]) of one stream. RC4 runs over the scanned stream range,
+    * which is length-preserving. AES needs the exact `IV ‖ blocks` extent
+    * (the scanned range runs to `endstream` and so includes the writer's
+    * EOL): a plausible in-dict `/Length`, else the range with trailing EOL
+    * bytes trimmed to block alignment. A stream that does not decrypt reads
+    * as stored. The encrypt dict's own stream and xref streams are never
+    * encrypted (§7.6.1). */
+  private final class Crypt(key: Array[Byte], aes: Boolean, aes3: Boolean, encRef: Int) {
+    def covers(o: PdfObj): Boolean = o.num != encRef && !o.dict.is("Type", "XRef")
+
+    def decrypt(file: Array[Byte], o: PdfObj): String = {
+      val n = o.streamEnd - o.streamStart
+      var m = n
+      if (aes || aes3) {
+        m = o.dict.int("Length")
+          .filter(l => l >= 32 && l <= n && (l - 16) % 16 == 0)
+          .getOrElse(n)
+        while (m > 32 && (m - 16) % 16 != 0 && {
+          val c = file(o.streamStart + m - 1); c == '\n' || c == '\r'
+        }) m -= 1
+      }
+      val data = java.util.Arrays.copyOfRange(file, o.streamStart, o.streamStart + m)
+      val dec: Array[Byte] =
+        try {
+          if (aes3) PdfCrypt.aesDecrypt(key, data).orNull // file key direct (V5)
+          else if (aes) PdfCrypt.aesDecrypt(PdfCrypt.objKeyAes(key, o.num), data).orNull
+          else PdfCrypt.rc4(PdfCrypt.objKey(key, o.num), data)
+        } catch { case scala.util.control.NonFatal(_) => null }
+      if (dec == null) new String(file, o.streamStart, n, Latin1) else new String(dec, Latin1)
     }
+  }
+
+  private object Crypt {
+    /** The file key, worked out once per document. Null when the file is
+      * not encrypted, names an out-of-scope handler (non-Standard filters,
+      * unknown revisions) or no password opens it — a real user password
+      * we don't have. Its streams then read as stored, and the parse
+      * recovers nothing readable, which is the honest result.
+      *
+      * `passwords` is a caller-supplied try-list for documents protected by
+      * a REAL (non-empty) password: each candidate is tried first as the
+      * USER password (Algorithm 2 + /U check; R=6 Algorithm 11) and then as
+      * the OWNER password (Algorithm 7 reverse recovers the padded user
+      * password from /O; R=6 Algorithm 12 + /OE unwrap) — PyMuPDF's
+      * `authenticate` contract, which the reference relies on
+      * (`smart_extract.py:64-97`). The empty password is always tried
+      * first, so the common open-web case costs no extra work. Candidates
+      * are encoded Latin-1 for R≤4 (the spec's PDFDocEncoding agrees with
+      * Latin-1 on the printable range) and UTF-8 for R≥5. */
+    def open(s: String, objs: Vector[PdfObj], passwords: Seq[String]): Crypt = {
+      if (!s.contains("/Encrypt")) return null
+      try {
+        // the newest trailer: the last classic one, else the last xref stream
+        val trailer = { val t = s.lastIndexOf("trailer"); if (t < 0) None else trailerAt(s, t) }
+          .orElse(objs.reverseIterator.map(_.dict).find(_.is("Type", "XRef")))
+          .getOrElse(return null)
+        val encRef = trailer.ref("Encrypt").getOrElse(return null)
+        val d = objs.find(_.num == encRef).getOrElse(return null).dict
+        if (!d.is("Filter", "Standard")) return null
+        val v = d.int("V").getOrElse(1)
+        val r = d.int("R").getOrElse(2)
+        // the crypt filter streams use (§7.6.5): /StmF names a /CF entry
+        val cfm = d.name("StmF").flatMap(f => d.dict("CF").flatMap(_.dict(f)))
+          .flatMap(_.name("CFM"))
+        val aes = v == 4 && r == 4 && cfm.contains("AESV2")
+        // V=5: AES-256 under the file key directly — R=6 (PDF 2.0, iterated
+        // Algorithm 2.B hash) and the deprecated R=5 precursor (plain SHA-256)
+        val aes3 = v == 5 && (r == 5 || r == 6) && cfm.contains("AESV3")
+        if (!aes && !aes3 && (v > 2 || r > 3)) return null // unknown handler
+        val key: Array[Byte] =
+          if (aes3) {
+            // /U carries hash‖salts; /UE wraps the file key (Algorithm 11);
+            // owner route: /O hash folds in /U, /OE wraps the same key
+            val u48 = d.bytes("U").getOrElse(return null)
+            val ue = d.bytes("UE").getOrElse(return null)
+            val cands = "" +: passwords
+            cands.iterator
+              .map(pw => PdfCrypt.fileKey6(u48, ue, r5 = r == 5,
+                pw.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+              .collectFirst { case Some(k) => k }
+              .orElse {
+                for {
+                  o48 <- d.bytes("O")
+                  oe <- d.bytes("OE")
+                  k <- cands.iterator
+                    .map(pw => PdfCrypt.fileKey6Owner(o48, oe, u48, r5 = r == 5,
+                      pw.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+                    .collectFirst { case Some(k) => k }
+                } yield k
+              }
+              .getOrElse(return null)
+          } else {
+            val p = d.int("P").getOrElse(-1)
+            val o = d.bytes("O").getOrElse(return null)
+            // /ID [<hex> <hex>] — first element feeds the key derivation
+            val id0 = trailer.get("ID") match {
+              case a: Vector[_] => a.headOption.collect { case s: String => s.getBytes(Latin1) }
+                .getOrElse(return null)
+              case _ => return null
+            }
+            // /U check: 16 significant bytes; a key passes when it
+            // regenerates them — the same acceptance rule for every route
+            val u16 = d.bytes("U").map(_.take(16))
+            def uOk(k: Array[Byte]): Boolean =
+              u16.forall(_.sameElements(PdfCrypt.uValue(k, id0).take(16)))
+            val userRoutes = ("" +: passwords).iterator
+              .map(pw => PdfCrypt.fileKey(pw.getBytes(Latin1), o, p, id0))
+            // owner route: Algorithm 7 reverse gives the padded user
+            // password, which feeds Algorithm 2 unchanged
+            val ownerRoutes = passwords.iterator.map(pw =>
+              PdfCrypt.fileKey(
+                PdfCrypt.userPwFromOwner(pw.getBytes(Latin1), o), o, p, id0))
+            (userRoutes ++ ownerRoutes).find(uOk).getOrElse(return null)
+          }
+        new Crypt(key, aes, aes3, encRef)
+      } catch { case scala.util.control.NonFatal(_) => null }
+    }
+  }
+
+  private def parseImpl(bytes: Array[Byte], run: Boolean,
+                        native: Boolean = false,
+                        passwords: Seq[String] = Nil): Parsed = {
+    val doc = new Doc(bytes, passwords)
+    import doc.{byNum, objs, s}
+    val trailerDict = doc.xref.trailer
 
     // image sniff (feeds the router's scanned detection): a bare
     // `/Subtype /Image` marker counts, but a `/DCTDecode` image must
@@ -2122,20 +2131,13 @@ object PdfLite {
     // standalone image path uses) to count as pixels; a corrupt JPEG
     // payload must not promote a text-free page to the high-confidence
     // scanned route
-    def streamBytes(o: PdfObj): Array[Byte] = {
-      val n = o.streamEnd - o.streamStart
-      val b = new Array[Byte](math.max(0, n))
-      var k = 0
-      while (k < n) { b(k) = s.charAt(o.streamStart + k).toByte; k += 1 }
-      b
-    }
     val hasImage = objs.exists { o =>
       val d = o.dict
       def declared(key: String) = d.int(key).getOrElse(0)
       if (!d.is("Subtype", "Image")) false
       else filterNames(d, byNum) match {
         case f if f.contains("DCTDecode") =>
-          o.hasStream && Multimodal.imageDims(streamBytes(o)).isDefined
+          o.hasStream && Multimodal.imageDims(doc.streamBytes(o)).isDefined
         case f if f.contains("CCITTFaxDecode") => o.hasStream && {
           // same contract as /DCTDecode: fax-compressed pixels must
           // actually DECODE (G4) before a text-free page may promote to
@@ -2143,17 +2145,17 @@ object PdfLite {
           val dp = decodeParms(d, byNum)
           val cols = dp.flatMap(_.int("Columns")).orElse(d.int("Width")).getOrElse(1728)
           val rows = dp.flatMap(_.int("Rows")).orElse(d.int("Height")).getOrElse(0)
-          rows > 0 && CcittG4.decode(streamBytes(o), cols, rows).isDefined
+          rows > 0 && CcittG4.decode(doc.streamBytes(o), cols, rows).isDefined
         }
         case f if f.contains("JPXDecode") => o.hasStream && {
           // same contract: the JPEG2000 main header must validate (SOC/SIZ/
           // COD/QCD walk, JP2 box + ihdr cross-check — kernel/Jpx) and
           // agree with the declared geometry before the page may promote.
           // The EOL before `endstream` (§7.3.8.1: not part of the data —
-          // but streamEnd here comes from the endstream scan) and the AES
-          // newline tail-pad are transport bytes, not codestream bytes:
-          // trim them or the raw codestream's EOC-at-tail check fails
-          val raw = streamBytes(o)
+          // but streamEnd here comes from the endstream scan) is a
+          // transport byte, not a codestream byte: trim it or the raw
+          // codestream's EOC-at-tail check fails
+          val raw = doc.streamBytes(o)
           var e = raw.length
           while (e > 0 && (raw(e - 1) == '\n' || raw(e - 1) == '\r')) e -= 1
           Jpx.dims(java.util.Arrays.copyOfRange(raw, 0, e))
@@ -2162,7 +2164,7 @@ object PdfLite {
         case f if f.contains("JBIG2Decode") => o.hasStream &&
           // same contract again: the embedded segment stream must decode
           // (MQ-coded generic region) and agree with the declared geometry
-          Jbig2.decode(streamBytes(o))
+          Jbig2.decode(doc.streamBytes(o))
             .exists(i => i.w == declared("Width") && i.h == declared("Height"))
         case _ => true
       }
@@ -2180,7 +2182,7 @@ object PdfLite {
       .flatMap(_.ref("Root")).flatMap(byNum.get)
       .flatMap(_.dict.ref("Pages")).flatMap(byNum.get)
       .filter(isPagesNode)
-      .orElse((objs ++ embedded).find(isPagesNode))
+      .orElse(doc.all.find(isPagesNode))
     // each leaf is paired with the nearest ancestor's /MediaBox (PDF
     // inheritance: a Page without its own box uses the closest Pages box)
     val kidPages: Vector[(PdfObj, Option[(Int, Int)])] = {
@@ -2203,8 +2205,6 @@ object PdfLite {
     val items = Vector.newBuilder[TextItem]
     var firstW = 612; var firstH = 792
 
-    def contentOf(o: PdfObj): String = streamText(s, o, byNum)
-
     if (pageObjs.nonEmpty) {
       for (((p, inh), idx) <- pageObjs.zipWithIndex) {
         val (w, h) = mediaBoxOf(p.dict).orElse(inh).getOrElse((612, 792))
@@ -2217,8 +2217,8 @@ object PdfLite {
         // reported page dims are the DISPLAY (rotated) view
         val (dw, dh) = if (rot == 90 || rot == 270) (h, w) else (w, h)
         if (idx == 0) { firstW = dw; firstH = dh }
-        val fonts = fontInfos(s, p.dict, pagesNode.map(_.dict), byNum)
-        val forms = formInfos(s, p.dict, pagesNode.map(_.dict), byNum)
+        val fonts = fontInfos(doc, p.dict, pagesNode.map(_.dict))
+        val forms = formInfos(doc, p.dict, pagesNode.map(_.dict))
         val contents = p.dict.refs("Contents").flatMap(byNum.get)
         if (native && run) {
           // native route: glyphs accumulate across the page's /Contents
@@ -2226,10 +2226,10 @@ object PdfLite {
           val chars = new mutable.ArrayBuffer[NChar](1024)
           val ctm0 = deviceMatrix(rot, w, h)
           for (c <- contents)
-            interpretNative(contentOf(c), ctm0, fonts, forms, chars)
+            interpretNative(doc.streamText(c), ctm0, fonts, forms, chars)
           buildSpans(chars, idx + 1, items)
         } else for (c <- contents) {
-          val txt = contentOf(c)
+          val txt = doc.streamText(c)
           if (run) interpret(txt, w, h, rot, idx + 1, items, fonts, forms)
         }
       }
@@ -2241,7 +2241,7 @@ object PdfLite {
       var any = false
       for (o <- objs if o.hasStream) {
         any = true
-        val txt = contentOf(o)
+        val txt = doc.streamText(o)
         if (run) interpret(txt, w, h, 0, 1, items)
       }
       if (!any) {
@@ -2449,10 +2449,14 @@ object PdfLite {
       }
     }
 
-    private def name(): String = { // cursor on the '/'
+    /** A name, cursor on its `/`; `#xx` reads as the byte xx (§7.3.5). */
+    private def name(): String = {
       val from = i + 1
       skipToken()
-      content.substring(from, i)
+      val raw = content.substring(from, i)
+      if (raw.indexOf('#') < 0) raw
+      else NameEscape.replaceAllIn(raw, m =>
+        Regex.quoteReplacement(Integer.parseInt(m.group(1), 16).toChar.toString))
     }
 
     /** Array at textual nesting `depth` (top = 1): collects only the string
@@ -2633,6 +2637,7 @@ object PdfLite {
     final val Num = 0; final val Str = 1; final val Name = 2; final val Other = 3
     private final val Window = 6
     private final val MaxNesting = 32
+    private val NameEscape = "#([0-9A-Fa-f]{2})".r
   }
 
   /** Approximate-geometry text interpreter (PDF 32000-1 §9.4 subset), the

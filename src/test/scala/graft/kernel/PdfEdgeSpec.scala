@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  4. a `%` comment in a content stream (§7.2.3),
   *  5. the `\b` and `\f` literal-string escapes (§7.3.4.2, Table 3),
   *  6. dict entries in another order or with less whitespace: `/UE` before
-  *     `/U`, `/OE` before `/O`, `/Type/Page>>`, and a negative `/Rotate`. */
+  *     `/U`, `/OE` before `/O`, `/Type/Page>>`, and a negative `/Rotate`,
+  *  7. two /ObjStm containers numbered against their file order,
+  *  8. `#xx` escapes in names (§7.3.5). */
 class PdfEdgeSpec extends AnyFunSuite {
 
   private def bytes(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
@@ -162,5 +164,43 @@ class PdfEdgeSpec extends AnyFunSuite {
       assert(got.items == want.items)
       assert((got.pageW, got.pageH) == (want.pageW, want.pageH))
     }
+  }
+
+  /** An unfiltered /ObjStm container `num` holding one link annotation,
+    * object `annotNum`. */
+  private def linkObjStm(num: Int, annotNum: Int, uri: String): String = {
+    val header = s"$annotNum 0 "
+    val annot = s"<< /Type /Annot /Subtype /Link /A << /S /URI /URI ($uri) >> >>"
+    s"$num 0 obj << /Type /ObjStm /N 1 /First ${header.length} " +
+      s"/Length ${header.length + annot.length} >> stream\n$header$annot\nendstream\nendobj\n"
+  }
+
+  test("links reads /ObjStm containers by number, not in file order") {
+    val pdf = "%PDF-1.5\n" + linkObjStm(9, 20, "https://nine.example/") +
+      linkObjStm(4, 21, "https://four.example/")
+    assert(PdfLite.links(bytes(pdf)) ==
+      Vector("https://four.example/", "https://nine.example/"))
+  }
+
+  test("a page leaf written /Type/P#61ge is a page") {
+    val pages = (1 to 3).map(k =>
+      PdfLite.PageSpec(600, 800, Seq(PdfLite.Run(50, 60, 12, s"page number $k"))))
+    val s = new String(PdfLite.writeDoc(pages, xref = true), Latin1)
+    // same length, so the xref offsets stay valid
+    val pdf = s.replace("<< /Type /Page /Parent", "<< /Type/P#61ge/Parent")
+    assert(pdf.length == s.length && pdf.split("/P#61ge", -1).length == 4)
+    val parsed = PdfLite.parse(pdf.getBytes(Latin1))
+    assert(parsed.nPages == 3)
+    assert(parsed.items.map(i => (i.page, i.text)) ==
+      (1 to 3).map(k => (k, s"page number $k")))
+  }
+
+  test("a font resource keyed /F#31 is the font that Tf /F1 selects") {
+    val msg = "Invoice \u201cA\u20137\u201d total \u20ac40"
+    val s = new String(PdfLite.writeDoc(onePage(msg), winAnsi = true), Latin1)
+    assert(s.contains("/Font << /F1 "))
+    val pdf = s.replace("/Font << /F1 ", "/Font << /F#31 ").getBytes(Latin1)
+    assert(textOf(PdfLite.parse(pdf)) == msg)
+    assert(textOf(PdfLite.parseNative(pdf)) == msg)
   }
 }

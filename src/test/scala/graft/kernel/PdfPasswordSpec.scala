@@ -70,7 +70,7 @@ class PdfPasswordSpec extends AnyFunSuite {
   }
 
   // NOTE: no separate parseNative test — the try-list enters parseImpl's
-  // decryptIfNeeded BEFORE any route split, so parse and parseNative share
+  // one open step (`Doc`) BEFORE any route split, so parse and parseNative share
   // the seam byte-for-byte (the overload is a one-line dispatch); the
   // native route itself is pinned on real files by RealPdfSpec, and the
   // synthetic writer's span shapes are outside its structured-text contract.

@@ -3,14 +3,16 @@ package graft.spark
 import java.net.URI
 import java.nio.file.{Files, Path => JPath}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.scalatest.funsuite.AnyFunSuite
 
 /** [[NioLocalFileSystem]] sets the same mode bits as Hadoop's stock local file
   * system (a `chmod`), and only writes that ask for it get it. The modes and
-  * `.crc` files of a whole job's output are checked in [[ExtractE2ESpec]]. */
-class NioLocalFileSystemSpec extends AnyFunSuite {
+  * `.crc` files of a whole job's output are checked in [[ExtractE2ESpec]].
+  * Every other `file:` path gets Hadoop's own LocalFileSystem: the build
+  * keeps Hive's jars, and with them Hive's ProxyLocalFileSystem, off the
+  * classpath. */
+class NioLocalFileSystemSpec extends SparkTestBase {
 
   private val conf = new Configuration()
   private val root = URI.create("file:///")
@@ -54,5 +56,11 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     assert(local.getFileSystem(withOpts) ne local.getFileSystem(withOpts))
     assert(!local.getFileSystem(conf).isInstanceOf[NioLocalFileSystem])
     assert(conf.get("fs.file.impl") == null)
+  }
+
+  test("file: is Hadoop's LocalFileSystem and the catalog is in-memory") {
+    val fs = FileSystem.get(root, spark.sparkContext.hadoopConfiguration)
+    assert(fs.getClass == classOf[LocalFileSystem], fs.getClass.getName)
+    assert(spark.conf.get("spark.sql.catalogImplementation") == "in-memory")
   }
 }
