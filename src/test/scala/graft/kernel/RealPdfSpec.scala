@@ -47,10 +47,7 @@ class RealPdfSpec extends AnyFunSuite {
   }
 
   test("page 1 grid matches the reference xlsx cells byte-for-byte") {
-    val golden = Files.readAllLines(
-      goldenDir.resolve("realpdf_page1_grid.tsv"),
-      java.nio.charset.StandardCharsets.UTF_8).asScala.toVector
-      .map(_.split("\t", -1).toVector)
+    val golden = RealPage1.committedGrid
     val bytes = Files.readAllBytes(refDir.resolve(page1Name))
     val grid = RealPdf.funnel(bytes).grid
     assert(grid.length == golden.length)

@@ -1,6 +1,5 @@
 package graft.kernel
 
-import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The serving layer's simplified quality score (`app.py:184-196` — VERDICT
@@ -24,11 +23,11 @@ class SimplifiedQualitySpec extends AnyFunSuite {
   }
 
   test("real page-1 grid scores 38.7 (pandas oracle on the reference xlsx rows)") {
-    val pdf = Files.readAllBytes(Paths.get(RealPdf.Dir,
-      "DRISCOLL CF ORDERS FOR THE WEEK OF SEPTEMBER 8, 2025_page1.pdf"))
-    val grid = RealPdf.funnel(pdf).grid
-    assert(grid.map(_.length).sum == 160)
-    assert(checker.simplifiedScore(grid) == 38.7)
+    // 160 cells, 98 empty: round((1 - 98/160) * 100, 1) = 38.7
+    for ((source, grid) <- RealPage1.grids) {
+      assert(grid.map(_.length).sum == 160, source)
+      assert(checker.simplifiedScore(grid) == 38.7, source)
+    }
   }
 
   test("banker's rounding parity with CPython round(x, 1)") {

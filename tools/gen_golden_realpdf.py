@@ -17,8 +17,11 @@ Writes:
                                 xlsx order (= lexicographic page-file order)
 
 Run it to REGENERATE after any change to the derivation; the fixtures are
-committed so the sbt spec and the q51 oracle run without touching xlsx
-parsing at test time.
+committed so the sbt specs and the q51 oracle run without touching xlsx
+parsing at test time. The page-1 TSV is the oracle grid of RealPdfSpec and
+q51, and also of the simplified-quality score test (SimplifiedQualitySpec,
+38.7) and the xlsx round-trip test (XlsxSpec), which run on it with or
+without /root/reference.
 """
 import zipfile, json, hashlib
 import xml.etree.ElementTree as ET
