@@ -17,10 +17,9 @@ import graft.spark.{ExtractJob, ExtractPipeline}
   *  - the byte-identical pass rate of distributed extraction vs the
   *    single-threaded kernel oracle.
   *
-  * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, GRAFT_BENCH_DOCS
-  * (default 300000), GRAFT_BENCH_REPS (10, convergence early-stop),
-  * GRAFT_BENCH_QUERY_REPS (3, best-of for each headline query),
-  * GRAFT_BENCH_BUDGET_SEC (1500), GRAFT_BENCH_N (1),
+  * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, GRAFT_BENCH_REPS (10,
+  * convergence early-stop), GRAFT_BENCH_QUERY_REPS (3, best-of for each
+  * headline query), GRAFT_BENCH_BUDGET_SEC (1500), GRAFT_BENCH_N (1),
   * GRAFT_BENCH_SCALING_DOCS (600000), GRAFT_BENCH_PIN=0 (disable per-level
   * core pinning), GRAFT_BENCH_SKIP_SCALING=1, GRAFT_BENCH_SKIP_QUERIES=1
   * (scaling-only re-measurement when a noisy window spoiled the record).
@@ -34,7 +33,8 @@ import graft.spark.{ExtractJob, ExtractPipeline}
   * same methodology); the bench compares its level minima / query bests
   * against them and RETRIES time-shifted when a floor is breached, keeping
   * every run in the artifact. Floors are stated as docs/s (size-independent
-  * modulo fixed overhead) so GRAFT_BENCH_DOCS overrides stay comparable.
+  * modulo fixed overhead) so GRAFT_BENCH_SCALING_DOCS overrides stay
+  * comparable.
   *
   * STALENESS GUARD: the floors are only meaningful for the corpus they were
   * measured on. [[refCorpusVersion]] must equal `Corpus.GeneratorVersion`;
@@ -230,11 +230,11 @@ object Bench {
   }
 
   /** The VM this runs on shows up-to-7× multithreaded throughput swings in
-    * windows lasting minutes (host-level noise; CPU/disk/GC ruled out —
-    * tools/ProfileWrite; noise only ever SLOWS a run, so min-per-level is a
-    * consistent estimator of the true time). Runs at the two levels are
-    * INTERLEAVED (N,4N,N,4N,…) so both sample the same noise windows, and the
-    * best run per level is reported.
+    * windows lasting minutes (host-level noise; CPU, disk and GC were ruled
+    * out by timing the write variants alone); noise only ever SLOWS a run,
+    * so min-per-level is a consistent estimator of the true time. Runs at
+    * the two levels are INTERLEAVED (N,4N,N,4N,…) so both sample the same
+    * noise windows, and the best run per level is reported.
     *
     * Round-1 lesson: 4 reps can ALL land inside one multi-minute noise window
     * (the archived r01 pair read 0.625 while the same methodology measured
@@ -244,7 +244,7 @@ object Bench {
     * efficiency-blind rule: it cannot bias the reported number) — with a
     * wall-clock budget (GRAFT_BENCH_BUDGET_SEC) bounding worst-case noise. */
   private def scalingRuns(lo: Level, hi: Level, corpusPath: String, outDir: String,
-                          reps: Int, budgetSec: Int, repOffset: Int = 0)
+                          reps: Int, budgetSec: Int, repOffset: Int)
       : (Seq[ExtractJob.Metrics], Seq[ExtractJob.Metrics]) = {
     // noise windows last MINUTES: a run must span more wall-clock than one
     // window or both minima sit inside it (a 5-pair run measured 0.735 while
@@ -298,11 +298,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // sized so per-run fixed overhead (~1.5-2s of job setup/commit/lineage,
-    // measured by differencing levels) stays < 15% of the 4N-level wall
-    // time — the fixed term, not the parallel work, is what erodes measured
-    // efficiency; a 10^12-doc production job amortizes it to nothing
-    val nDocs = sys.env.getOrElse("GRAFT_BENCH_DOCS", "300000").toLong
     val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "10").toInt
     val skipScaling = sys.env.get("GRAFT_BENCH_SKIP_SCALING").contains("1")
 

@@ -12,9 +12,10 @@ import graft.kernel.ExtractedDoc
   * The generic product `ExpressionEncoder` walks the nested
   * `Vector[Vector[String]]` / `Vector[CellSpan]` / quality-struct shape with
   * reflective MapObjects loops — measured at ~25 core-ms/doc, 10× the cost of
-  * the extraction kernel itself (tools/ProfileJob). This converter builds the
-  * same Catalyst values directly (UTF8String / GenericArrayData /
-  * GenericInternalRow) in one allocation pass. Field order MUST match the
+  * the extraction kernel itself. This converter builds the same Catalyst
+  * values directly (UTF8String / GenericArrayData / GenericInternalRow) in
+  * one allocation pass; perfbench's traced run reports its cost as
+  * `functions.docrow.ms_mean`. Field order MUST match the
   * case-class declaration order in [[graft.kernel.ExtractedDoc]] — the schema
   * below is asserted against the encoder schema in ExtractE2ESpec.
   */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.kernel.{Extractor, Template, Vendor}

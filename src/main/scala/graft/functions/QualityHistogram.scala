@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Custom typed `Aggregator` (the §2.11 UDAF surface): exact fixed-width

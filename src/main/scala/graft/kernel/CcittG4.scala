@@ -125,13 +125,10 @@ object CcittG4 {
   private final class BitReader(data: Array[Byte]) {
     private var pos = 0
     private val nBits = data.length * 8
-    def exhausted: Boolean = pos >= nBits
     /** next bit, or -1 past end */
     def read1(): Int =
       if (pos >= nBits) -1
       else { val b = (data(pos >>> 3) >>> (7 - (pos & 7))) & 1; pos += 1; b }
-    def mark(): Int = pos
-    def reset(p: Int): Unit = pos = p
   }
 
   private final class BitWriter {
@@ -191,7 +188,7 @@ object CcittG4 {
     val in = new BitReader(data)
     val raster = new Array[Byte](columns * rows)
     // reference line as changing-element positions; starts "all white"
-    var ref = new Array[Int](columns + 2)
+    val ref = new Array[Int](columns + 2)
     var refLen = 0
     val cur = new Array[Int](columns + 2)
     var row = 0

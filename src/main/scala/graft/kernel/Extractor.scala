@@ -83,7 +83,7 @@ object Extractor {
     } catch {
       case e: Exception =>
         ExtractedDoc.failed(url, nBytes, s"parse_error:${e.getClass.getSimpleName}")
-      case e: StackOverflowError =>
+      case _: StackOverflowError =>
         // defense-in-depth behind Html.MaxDepth: a hostile payload must cost
         // a taxonomy row, never a task (at 10^12 docs every shape occurs)
         ExtractedDoc.failed(url, nBytes, "parse_error:StackOverflowError")
@@ -107,19 +107,8 @@ object Extractor {
         val parsed = PdfLite.parse(payload)
         val (route, _) = detectRoute(isPdf = true, text, parsed.hasImage)
         (1 to parsed.nPages).toVector.map { p =>
-          val pageItems = parsed.items.filter(_.page == p)
-          val items =
-            if (route == "scanned") applyScannedConfidence(url, pageItems)
-            else pageItems
-          val vendor = Vendor.detectVendor(items, Vendor.registryKeywords(templates))
-          val template = vendor.flatMap(v => Vendor.getTemplate(v, templates))
-          val pageText = template match {
-            case Some(t) =>
-              slicer.sliceToTable(items, t.tableBox, t.columns, page = Some(p))
-                .map(_.mkString("\t")).mkString("\n")
-            case None => layoutText(items)
-          }
-          PageExtract(p, items.length, pageText)
+          val page = extractPdfPage(url, parsed, route, p, templates)
+          PageExtract(p, page.items.length, page.text)
         }
       } else {
         val doc = extract(url, payload, text, lang, templates)
@@ -132,9 +121,42 @@ object Extractor {
     }
   }
 
+  /** One page of a parsed PDF through the rest of the chain. `cells` is the
+    * sliced grid when a template matched, else empty; `text` is that grid
+    * tab/newline-joined, else the page's layout text. */
+  private final case class PdfPage(items: Vector[TextItem], vendor: Option[String],
+                                   template: Option[Template],
+                                   cells: Vector[Vector[String]], text: String)
+
+  /** Page filter → scanned confidence (S3) → vendor (A1) → template
+    * (J1/J2) → slice (G1–G9) or layout text, for page `page` of `parsed`. */
+  private def extractPdfPage(url: String, parsed: PdfLite.Parsed, route: String, page: Int,
+                             templates: Map[String, Template]): PdfPage = {
+    val pageItems = parsed.items.filter(_.page == page)
+    val items =
+      if (route == "scanned") applyScannedConfidence(url, pageItems)
+      else pageItems // native: conf already 100, blank-stripped at parse
+    // A1 vendor detection: registry names first, then the reference
+    // pipeline's curated keyword sets (table_slicer.py:44-52)
+    val vendor = Vendor.detectVendor(items, Vendor.registryKeywords(templates))
+    val template = vendor.flatMap(v => Vendor.getTemplate(v, templates))
+    template match {
+      case Some(t) =>
+        val cells = slicer.sliceToTable(items, t.tableBox, t.columns, page = Some(page))
+        PdfPage(items, vendor, template, cells, cells.map(_.mkString("\t")).mkString("\n"))
+      case None =>
+        PdfPage(items, vendor, None, Vector.empty, layoutText(items))
+    }
+  }
+
+  /** The non-empty lines of `text`, one cell each: the grid quality scores
+    * when there is no sliced table. */
+  private def lineGrid(text: String): Vector[Vector[String]] =
+    text.split("\n", -1).toVector.filter(_.nonEmpty).map(Vector(_))
+
   private def extractPdf(url: String, payload: Array[Byte], text: String,
                          nBytes: Long, templates: Map[String, Template],
-                         passwords: Seq[String] = Nil): ExtractedDoc = {
+                         passwords: Seq[String]): ExtractedDoc = {
     // password try-list: crawl-wide credentials for real-password documents
     // (PyMuPDF `authenticate` analog); empty-password docs cost nothing extra
     val parsed =
@@ -144,36 +166,18 @@ object Extractor {
     // page-1 truncation parity (extract.py:102-104, smart_extract.py:70):
     // the per-document result covers page 1; multi-page processing is the
     // explode operator's job (S12 → posexplode of pages)
-    val page1 = parsed.items.filter(_.page == 1)
-    val items =
-      if (route == "scanned") applyScannedConfidence(url, page1)
-      else page1 // native: conf already 100, blank-stripped at parse
-
-    // A1 vendor detection: registry names first, then the reference
-    // pipeline's curated keyword sets (table_slicer.py:44-52)
-    val vendor = Vendor.detectVendor(items, Vendor.registryKeywords(templates))
-    val template = vendor.flatMap(v => Vendor.getTemplate(v, templates))
-
-    template match {
-      case Some(t) =>
-        val cells = slicer.sliceToTable(items, t.tableBox, t.columns, page = Some(1))
-        val extractedText = cells.map(_.mkString("\t")).mkString("\n")
-        val spans = for {
-          (row, r) <- cells.zipWithIndex
-          (cell, c) <- row.zipWithIndex
-          if cell.nonEmpty && c + 1 < t.columns.length
-        } yield CellSpan(r, c, t.columns(c), r, t.columns(c + 1) - t.columns(c), 1)
-        val quality = checker.checkExtraction(cells, items)
-        ExtractedDoc(url, route, routeConf, vendor.getOrElse(""), extractedText,
-          cells, spans.toVector, quality, items.length, parsed.nPages, nBytes, "")
-      case None =>
-        val extractedText = layoutText(items)
-        val lineGrid = extractedText.split("\n", -1).toVector
-          .filter(_.nonEmpty).map(Vector(_))
-        val quality = checker.checkExtraction(lineGrid, items)
-        ExtractedDoc(url, route, routeConf, vendor.getOrElse(""), extractedText,
-          Vector.empty, Vector.empty, quality, items.length, parsed.nPages, nBytes, "")
+    val page = extractPdfPage(url, parsed, route, 1, templates)
+    val spans = page.template.toVector.flatMap { t =>
+      for {
+        (row, r) <- page.cells.zipWithIndex
+        (cell, c) <- row.zipWithIndex
+        if cell.nonEmpty && c + 1 < t.columns.length
+      } yield CellSpan(r, c, t.columns(c), r, t.columns(c + 1) - t.columns(c), 1)
     }
+    val grid = if (page.template.isDefined) page.cells else lineGrid(page.text)
+    val quality = checker.checkExtraction(grid, page.items)
+    ExtractedDoc(url, route, routeConf, page.vendor.getOrElse(""), page.text,
+      page.cells, spans, quality, page.items.length, parsed.nPages, nBytes, "")
   }
 
   private def extractHtml(url: String, payload: Array[Byte],
@@ -181,9 +185,7 @@ object Extractor {
     val html = new String(payload, StandardCharsets.UTF_8)
     val res = Html.extract(html)
     val vendor = Vendor.detectVendor(res.items, Vendor.registryKeywords(templates))
-    val grid =
-      if (res.cells.nonEmpty) res.cells
-      else res.mainText.split("\n", -1).toVector.filter(_.nonEmpty).map(Vector(_))
+    val grid = if (res.cells.nonEmpty) res.cells else lineGrid(res.mainText)
     val quality0 = checker.checkExtraction(grid, res.items)
     // surface MaxDepth flattening (Html.scala cap) instead of diverging
     // silently on legitimately deep real-world pages

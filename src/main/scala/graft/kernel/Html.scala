@@ -134,7 +134,7 @@ object Html {
                 // depth cap: a crawled page can nest tags thousands deep
                 // (adversarially or by broken markup); past MaxDepth the tag's
                 // children attach to the current node instead of recursing —
-                // keeps every recursive walk (stats/serialize/tableCells)
+                // keeps every recursive walk (ownStats/serialize/tableCells)
                 // stack-safe without losing the text content
                 if (!selfClose && !voidElems.contains(name)) {
                   if (stack.size < MaxDepth) stack.push(el)
@@ -225,22 +225,6 @@ object Html {
 
   // ---------- scoring ----------
   final case class BlockStats(textLen: Int, linkTextLen: Int, pCount: Int)
-
-  /** Subtree text statistics; script/style never enter the DOM as text. */
-  def stats(node: Node, inLink: Boolean = false): BlockStats = node match {
-    case Text(s) =>
-      val len = normalizeWsLen(s)
-      BlockStats(len, if (inLink) len else 0, 0)
-    case Elem(name, _, children) =>
-      var t = 0; var l = 0; var p = 0
-      val link = inLink || name == "a"
-      if (name == "p") p += 1
-      for (c <- children) {
-        val s = stats(c, link)
-        t += s.textLen; l += s.linkTextLen; p += s.pCount
-      }
-      BlockStats(t, l, p)
-  }
 
   /** "Own" statistics of a candidate: subtree text EXCLUDING nested candidate
     * containers and boilerplate chrome. This is what prevents the outermost

@@ -70,10 +70,7 @@ final case class QualityReport(
     totalTextItems: Int,
     columnTypes: Vector[String],
     warnings: Vector[String],
-    errors: Vector[String]) {
-  /** `quality.py:40-42` */
-  def isAcceptable(threshold: Double = 50.0): Boolean = overallScore >= threshold
-}
+    errors: Vector[String])
 
 /** The engine's per-document output row. `extractedText` is the byte-compared
   * artifact (north rule: byte-identical extracted text per url); `failure` is

@@ -118,24 +118,6 @@ object Multimodal {
     finally iis.close()
   }
 
-  /** GMB container: 3-byte magic, format code, u16 width/height, u8 channels,
-    * then a pseudo-random payload. */
-  private def gmbBlob(rng: java.util.Random, fmt: Int): Array[Byte] = {
-    val w = 16 + rng.nextInt(1024)
-    val h = 16 + rng.nextInt(1024)
-    val ch = 1 + rng.nextInt(4)
-    val payloadLen = 64 + rng.nextInt(4096)
-    val out = new Array[Byte](3 + 1 + 2 + 2 + 1 + payloadLen)
-    System.arraycopy(Magic, 0, out, 0, 3)
-    out(3) = fmt.toByte
-    out(4) = ((w >> 8) & 0xff).toByte; out(5) = (w & 0xff).toByte
-    out(6) = ((h >> 8) & 0xff).toByte; out(7) = (h & 0xff).toByte
-    out(8) = ch.toByte
-    var j = 9
-    while (j < out.length) { out(j) = rng.nextInt(256).toByte; j += 1 }
-    out
-  }
-
   // ---- MPEG-1 Layer III frame stream (ISO/IEC 11172-3 §2.4.1.3) ----
   // kbit/s by bitrate_index for MPEG-1 Layer III (index 0 = free, 15 = bad)
   private val Mp3Bitrates = Array(0, 32, 40, 48, 56, 64, 80, 96,
@@ -345,8 +327,7 @@ object Multimodal {
     * (seed, i), same generator discipline as [[Corpus.page]]. Half the ids
     * carry REAL encoded images (PNG — gray or RGB —, JPEG, BMP, written with
     * the same `javax.imageio` codecs that decode them); audio ids carry real
-    * RIFF/WAVE PCM16 files, video ids real RIFF/AVI skeletons, and a
-    * residual GMB container keeps the opaque-container path exercised. */
+    * RIFF/WAVE PCM16 files, video ids real RIFF/AVI skeletons. */
   def blob(i: Long, seed: Long = 42L): Array[Byte] = {
     val rng = new java.util.Random(seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL)
     rng.nextLong()

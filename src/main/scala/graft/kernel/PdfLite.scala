@@ -116,7 +116,7 @@ object PdfLite {
     * corpus itself exercises those parser paths. `enc` serializes run text
     * into the doc's declared byte encoding. */
   private def pageContent(p: PageSpec, tjEvery: Int, hexEvery: Int,
-                          enc: String => String, rotate: Int = 0): String = {
+                          enc: String => String, rotate: Int): String = {
     val content = new java.lang.StringBuilder
     content.append("BT\n")
     var curSize = -1
@@ -1907,19 +1907,21 @@ object PdfLite {
   /** All link-annotation target URIs in the document (§12.5.6.5, §12.6.4.7):
     * every `/URI (…)` action string across top-level AND in-ObjStm dicts —
     * both the inline-dict and indirect-object `/Annots` layouts real writers
-    * emit. Deterministic order: the object scan, then the ObjStm
+    * emit. An incremental update's redefinition replaces the older object,
+    * as in [[parse]]. Deterministic order: the object scan, then the ObjStm
     * containers by number; total (damaged/garbage → empty). The outlink
     * surface a crawl frontier feeds on. */
   def links(payload: Array[Byte]): Vector[String] = {
     if (payload == null || !isPdf(payload)) return Vector.empty
-    try new Doc(payload).all.flatMap(o => dictsIn(o.value)).flatMap(_.str("URI")).map(textString)
+    try new Doc(payload).current.flatMap(o => dictsIn(o.value)).flatMap(_.str("URI")).map(textString)
     catch { case _: Exception => Vector.empty }
   }
 
   /** The document-information dictionary (§14.3.3): trailer `/Info` resolve
-    * first (classic trailer or XRef-stream dict), then a structural fallback
-    * for trailer-less files (any dict carrying `/Producer` or
-    * `/CreationDate`). Total — damaged/garbage → None. */
+    * first (classic trailer or XRef-stream dict, through the xref chain like
+    * [[parse]]), then a structural fallback for trailer-less files (any
+    * current dict carrying `/Producer` or `/CreationDate`). Total —
+    * damaged/garbage → None. */
   def docInfo(payload: Array[Byte]): Option[DocInfo] = {
     if (payload == null || !isPdf(payload)) return None
     try {
@@ -1929,8 +1931,8 @@ object PdfLite {
       val doc = new Doc(payload)
       val byTrailer = doc.xref.trailer
         .flatMap(_.ref("Info"))
-        .flatMap(n => doc.all.find(_.num == n).map(_.dict))
-      val dict = byTrailer.orElse(doc.all.map(_.dict).find(d =>
+        .flatMap(n => doc.byNum.get(n).map(_.dict))
+      val dict = byTrailer.orElse(doc.current.map(_.dict).find(d =>
         d.has("Producer") || d.has("CreationDate")))
       def text(d: PdfDict, key: String) = d.str(key).map(textString).getOrElse("")
       dict.map(d => DocInfo(text(d, "Title"), text(d, "Author"),
@@ -1957,6 +1959,10 @@ object PdfLite {
     lazy val embedded: Vector[PdfObj] = objStms.toVector.sortBy(_._1).flatMap(_._2)
     /** The scanned objects in file order, then [[embedded]]. */
     lazy val all: Vector[PdfObj] = objs ++ embedded
+    /** [[all]] without superseded definitions: each number's [[byNum]]
+      * entry, once, in [[all]]'s order. */
+    lazy val current: Vector[PdfObj] =
+      all.filter(o => byNum.get(o.num).contains(o)).distinctBy(_.num)
     lazy val xref: XrefInfo = parseXrefChain(s)
     // resolution order (PDF semantics):
     //  1. linear scan, first definition wins — a spurious in-stream

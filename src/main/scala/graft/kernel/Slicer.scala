@@ -17,15 +17,12 @@ import scala.collection.mutable
   *    proportional split `slicer.py:239-269`);
   *  - stable sorts (Scala `sortBy` is stable, like CPython `sorted`);
   *  - CPython `str.split()`/`strip()` via [[Py]];
-  *  - `statistics.median` even-n averaging via [[Py.median]];
-  *  - dict insertion order via LinkedHashMap.
+  *  - `statistics.median` even-n averaging via [[Py.median]].
   */
 final class Slicer(
-    val defaultRowThreshold: Double = 30.0, // slicer.py:21 (pipeline passes 20: table_slicer.py:57)
-    val adaptiveThreshold: Boolean = true,
-    val bufferFactor: Double = 1.2,         // slicer.py:23
-    val enableTextSplitting: Boolean = true,
-    val minOverlapRatio: Double = 0.25) {
+    val defaultRowThreshold: Double = 30.0) { // slicer.py:21 (pipeline passes 20: table_slicer.py:57)
+
+  private val bufferFactor = 1.2 // slicer.py:23
 
   // Protected (unsplittable) patterns — slicer.py:41-44. Java regex syntax is
   // compatible for these four; re.match ≙ anchored find.
@@ -57,8 +54,7 @@ final class Slicer(
     if (inBox.isEmpty) return Vector(Vector("No text found in table region"))
 
     // G1, slicer.py:79-82
-    val rowThreshold =
-      if (adaptiveThreshold) getAdaptiveRowThreshold(inBox) else defaultRowThreshold
+    val rowThreshold = getAdaptiveRowThreshold(inBox)
 
     // G2, slicer.py:85-89
     val rows = groupIntoRows(inBox, rowThreshold)
@@ -148,79 +144,17 @@ final class Slicer(
     else text.contains(' ')
   }
 
-  /** G3 — column spans + overlap ratios, slicer.py:196-219. */
-  def calculateColumnSpans(
-      leftX: Int, width: Int, columns: Seq[Int]): (Vector[Int], Vector[Double]) = {
-    val rightX = leftX + width
-    val numCols = columns.length - 1
-    val cols = Vector.newBuilder[Int]
-    val ratios = Vector.newBuilder[Double]
-    var c = 0
-    while (c < numCols) {
-      val overlap = math.max(0, math.min(rightX, columns(c + 1)) - math.max(leftX, columns(c)))
-      if (overlap > 0) {
-        cols += c
-        ratios += (if (width > 0) overlap.toDouble / width else 0.0)
-      }
-      c += 1
-    }
-    (cols.result(), ratios.result())
-  }
-
   /** G5 — proportional split of a wide span across columns, slicer.py:221-272.
     * The trickiest parity function: char-proportional widths accumulated
     * strictly left-to-right; token-center column rule `[left, right)`; nearest
-    * overlapping column as fallback (first minimum wins, like CPython `min`). */
-  def splitTextToColumns(
-      text: String, leftX: Int, width: Int,
-      overlappingCols: Seq[Int], columns: Seq[Int]): mutable.LinkedHashMap[Int, String] = {
-    val out = mutable.LinkedHashMap.empty[Int, String]
-    val tokens = Py.split(text)
-    if (tokens.isEmpty) return out
-    val totalLength = tokens.map(_.length).sum
-    if (totalLength == 0) return out
-    val pixelsPerChar = width.toDouble / totalLength
-
-    val assignments = mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[String]]
-    var currentX: Double = leftX.toDouble
-    for (token <- tokens) {
-      val tokenWidth = token.length * pixelsPerChar
-      val tokenCenter = currentX + tokenWidth / 2
-      var assigned = false
-      val it = overlappingCols.iterator
-      while (!assigned && it.hasNext) {
-        val c = it.next()
-        if (columns(c) <= tokenCenter && tokenCenter < columns(c + 1)) {
-          assignments.getOrElseUpdate(c, mutable.ArrayBuffer.empty) += token
-          assigned = true
-        }
-      }
-      if (!assigned && overlappingCols.nonEmpty) {
-        // first minimal distance wins (CPython min stability), slicer.py:263-264
-        var bestCol = overlappingCols.head
-        var bestDist = math.abs(tokenCenter - (columns(bestCol) + columns(bestCol + 1)) / 2.0)
-        for (c <- overlappingCols.tail) {
-          val d = math.abs(tokenCenter - (columns(c) + columns(c + 1)) / 2.0)
-          if (d < bestDist) { bestDist = d; bestCol = c }
-        }
-        assignments.getOrElseUpdate(bestCol, mutable.ArrayBuffer.empty) += token
-      }
-      currentX += tokenWidth
-    }
-    for ((c, toks) <- assignments) out(c) = toks.mkString(" ")
-    out
-  }
-
-  /** Streaming twin of [[splitTextToColumns]] for the binner's hot path:
-    * emits each token straight to `binAdd(col, token)` instead of building
-    * the LinkedHashMap-of-ArrayBuffers + join. Byte-identical output: the
+    * overlapping column as fallback (first minimum wins, like CPython `min`).
+    * Each token goes straight to `binAdd(col, token)`: the reference's
     * per-column join with " " and the bin-level join with " " compose to the
     * same string whether tokens arrive joined or one at a time, and columns
     * are independent bins so emission order across columns is immaterial.
     * The overlapping-column set of a span is CONTIGUOUS (`columns` is
     * ascending), so it travels as the `[cLo, cHi]` range the caller already
-    * computed in its scalar span walk. Float accumulation order (currentX,
-    * pixelsPerChar) matches the reference exactly. */
+    * computed in its span walk. */
   private def splitTextInto(
       text: String, leftX: Int, width: Int,
       cLo: Int, cHi: Int, columns: Seq[Int],
@@ -333,11 +267,10 @@ final class Slicer(
               else if (leftX >= columns.last) binAdd(numCols - 1, text)
             }
           } else {
-            // scalar span walk — the allocation-free twin of
-            // calculateColumnSpans for the dominant non-split path: tracks
-            // the overlap count, the first overlapping column, and the
-            // best-by-ratio column (strict >, so the FIRST max wins exactly
-            // like list.index(max), slicer.py:345-348)
+            // G3 column spans + overlap ratios (slicer.py:196-219) as one
+            // scalar walk: tracks the overlap count, the first overlapping
+            // column, and the best-by-ratio column (strict >, so the FIRST
+            // max wins exactly like list.index(max), slicer.py:345-348)
             val rightX = leftX + width
             var nOverlap = 0
             var bestCol = -1
@@ -356,9 +289,7 @@ final class Slicer(
               }
               c += 1
             }
-            val splittable = if (enableTextSplitting) isSplittableText(text) else false
-
-            if (nOverlap > 1 && splittable) {
+            if (nOverlap > 1 && isSplittableText(text)) {
               // G5 split, slicer.py:322-337 — streamed token-by-token
               // (overlapping cols are the contiguous range [cFirst, cLast])
               splitTextInto(text, leftX, width, cFirst, cLast, columns, binAdd)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kernel._
 import graft.spark.ExtractPipeline

@@ -134,6 +134,4 @@ object OpsCommon {
     s"list_sum(list_transform(list_zip($a, $b), x -> x[1]*x[2]))"
   def norm2Sql(a: String): String =
     s"list_sum(list_transform($a, x -> x*x))"
-  def cosineSql(a: String, b: String): String =
-    s"round(${dotSql(a, b)} / (sqrt(${norm2Sql(a)}) * sqrt(${norm2Sql(b)})), 4)"
 }

@@ -91,7 +91,7 @@ object TextOps {
   def q15LangId(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     val scored = langMarkers.zipWithIndex.foldLeft(docs) {
-      case (df, ((l, ms), i)) => df.withColumn(s"sc_$i", markerScore(col("text"), ms))
+      case (df, ((_, ms), i)) => df.withColumn(s"sc_$i", markerScore(col("text"), ms))
     }
     val predicted = langMarkers.indices.foldRight(lit("und"): Column) {
       case (i, elseCol) =>

@@ -168,9 +168,9 @@ object ExtractJob {
     // kernel map through the Catalyst expression surface, carrying the bucket
     // through for the partitioned write. The expression converts each
     // ExtractedDoc to an InternalRow by hand (graft.functions.DocRow) — the
-    // generic product encoder was measured at ~10× the kernel's own CPU
-    // (tools/ProfileJob), so this one line is the difference between an
-    // encode-bound and a kernel-bound job.
+    // generic product encoder was measured at ~10× the kernel's own CPU, so
+    // this one line is the difference between an encode-bound and a
+    // kernel-bound job.
     val extracted: DataFrame = prepared
       .select(
         graft.functions.ExtractDocExpr

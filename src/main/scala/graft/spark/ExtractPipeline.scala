@@ -48,9 +48,8 @@ object ExtractPipeline {
     * `(url string, warc_ts timestamp, html binary, text string, lang string)`.
     * Goes through the Catalyst expression surface with its hand-rolled
     * InternalRow conversion ([[graft.functions.DocRow]]) — ~10× cheaper than
-    * the typed path's product encoder (tools/ProfileJob); use [[extract]]
-    * only when downstream code genuinely needs `Dataset[ExtractedDoc]`
-    * objects. */
+    * the typed path's product encoder; use [[extract]] only when downstream
+    * code genuinely needs `Dataset[ExtractedDoc]` objects. */
   def extractDf(pagesDf: DataFrame,
                 templates: Map[String, Template] = Vendor.builtinTemplates): DataFrame = {
     import org.apache.spark.sql.functions.col

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.kernel.ExtractedDoc
 import graft.spark.ExtractPipeline
 
 /** Structured Streaming surface of the extraction engine: the same pure

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.spark.{ExtractJob, ExtractPipeline}
 
 /** Isolate where local-cluster mode loses throughput vs local[n]:
-  * scan+extract (narrow) / +repartition (shuffle) / full job (write). */
+  * scan+extract (narrow) / +repartition (shuffle) / full job (write).
+  * sbt -batch "runMain graft.tools.ClusterStageProbe <master> <corpus parquet>" */
 object ClusterStageProbe {
   def time[A](tag: String)(f: => A): A = {
     val t0 = System.nanoTime(); val r = f
@@ -13,8 +14,7 @@ object ClusterStageProbe {
   }
   def main(args: Array[String]): Unit = {
     val master = args(0)          // e.g. local[16] or local-cluster[8,2,4096]
-    val nDocs = args(1).toLong
-    val corpus = args(2)
+    val corpus = args(1)
     val spark = SparkSession.builder().master(master).appName("probe")
       .config("spark.sql.shuffle.partitions", 16)
       .config("spark.executor.memory", "4096m")

@@ -69,7 +69,7 @@ object ProfileAlloc {
           val rows = slicer.groupIntoRows(inBox, thr)
           aG += mx.getThreadAllocatedBytes(tid) - a
           a = mx.getThreadAllocatedBytes(tid)
-          val td = slicer.binIntoColumnsWithSplitting(rows, t.columns)
+          slicer.binIntoColumnsWithSplitting(rows, t.columns)
           aB += mx.getThreadAllocatedBytes(tid) - a
         }
       }

@@ -178,23 +178,34 @@ class PdfLiteSpec extends AnyFunSuite {
         .append(content).append("\nendstream endobj\n")
       off
     }
+    def info(producer: String) = s"<< /Producer ($producer) /CreationDate (D:20240101) >>"
+    def annot(uri: String) = s"<< /Type /Annot /Subtype /Link /A << /S /URI /URI ($uri) >> >>"
     sb.append("%PDF-1.4\n")
     val o1 = obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
     val o2 = obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    val o3 = obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 200 200] /Contents 4 0 R >>")
+    val o3 = obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 200 200] /Contents 4 0 R /Annots [6 0 R] >>")
     val o4 = streamObj(4, "BT /F1 10 Tf 1 0 0 1 10 180 Tm (OLD) Tj ET")
+    val o5 = obj(5, info("Old"))
+    val o6 = obj(6, annot("http://old.example/"))
     val x1 = sb.length
-    sb.append("xref\n0 5\n0000000000 65535 f \n")
-    for (o <- Seq(o1, o2, o3, o4)) sb.append(f"$o%010d 00000 n \n")
-    sb.append(s"trailer << /Size 5 /Root 1 0 R >>\nstartxref\n$x1\n%%EOF\n")
-    // incremental update section: object 4 redefined, new xref links back
+    sb.append("xref\n0 7\n0000000000 65535 f \n")
+    for (o <- Seq(o1, o2, o3, o4, o5, o6)) sb.append(f"$o%010d 00000 n \n")
+    sb.append(s"trailer << /Size 7 /Root 1 0 R /Info 5 0 R >>\nstartxref\n$x1\n%%EOF\n")
+    // incremental update section: objects 4, 5 and 6 redefined, new xref
+    // links back
     val o4b = streamObj(4, "BT /F1 10 Tf 1 0 0 1 10 180 Tm (NEW) Tj ET")
+    val o5b = obj(5, info("New"))
+    val o6b = obj(6, annot("http://new.example/"))
     val x2 = sb.length
-    sb.append(f"xref\n4 1\n$o4b%010d 00000 n \n")
-    sb.append(s"trailer << /Size 5 /Root 1 0 R /Prev $x1 >>\nstartxref\n$x2\n%%EOF\n")
-    val parsed = PdfLite.parse(sb.toString.getBytes(StandardCharsets.ISO_8859_1))
+    sb.append(f"xref\n4 3\n$o4b%010d 00000 n \n$o5b%010d 00000 n \n$o6b%010d 00000 n \n")
+    sb.append(s"trailer << /Size 7 /Root 1 0 R /Info 5 0 R /Prev $x1 >>\nstartxref\n$x2\n%%EOF\n")
+    val bytes = sb.toString.getBytes(StandardCharsets.ISO_8859_1)
+    val parsed = PdfLite.parse(bytes)
     // first-definition-wins (the no-xref fallback) would read OLD here
     assert(parsed.items.map(_.text) == Vector("NEW"), parsed.items)
+    // the document readers resolve the same numbers the same way
+    assert(PdfLite.docInfo(bytes).map(_.producer).contains("New"), PdfLite.docInfo(bytes))
+    assert(PdfLite.links(bytes) == Vector("http://new.example/"))
   }
 
   test("trailer /Root selects the real page tree over a decoy Pages node") {
