@@ -103,7 +103,9 @@ object Html {
         } else if (i + 1 < n && html.charAt(i + 1) == '/') {
           val end = html.indexOf('>', i)
           val name = lowerAscii(html.substring(i + 2, if (end < 0) n else end).trim)
-          if (stack.exists(e => e.name == name)) {
+          var k = 0 // `stack.exists`, without its view iterator
+          while (k < stack.size && stack(k).name != name) k += 1
+          if (k < stack.size) {
             while (stack.top.name != name && stack.size > 1) stack.pop()
             if (stack.size > 1) stack.pop()
           }
@@ -113,14 +115,11 @@ object Html {
           val end = html.indexOf('>', i)
           if (end < 0) { i = n }
           else {
-            val raw = html.substring(i + 1, end)
-            val selfClose = raw.endsWith("/")
-            val body = if (selfClose) raw.dropRight(1) else raw
-            val (name, attrs) = parseTag(body)
-            if (name.nonEmpty) {
-              // most nodes are leaves or near-leaves: a 16-slot default
-              // backing array per element was ~10 kB/doc of dead weight
-              val el = Elem(name, attrs, new mutable.ArrayBuffer(2))
+            val selfClose = end - 1 > i && html.charAt(end - 1) == '/'
+            val el = parseTag(html, i + 1, if (selfClose) end - 1 else end)
+            if (el == null) i = end + 1
+            else {
+              val name = el.name
               topChildren += el
               if (name == "script" || name == "style") {
                 // raw text element: skip to the matching close tag
@@ -142,8 +141,7 @@ object Html {
                 }
                 i = end + 1
               }
-            } else i = end + 1
-            if (name == "script" || name == "style") () // i already set
+            }
           }
         }
       } else {
@@ -181,46 +179,48 @@ object Html {
     -1
   }
 
-  private def parseTag(body: String): (String, Map[String, String]) = {
-    var i = 0
-    val n = body.length
-    while (i < n && body.charAt(i).isWhitespace) i += 1
+  /** The element of the open tag whose body (between `<` and `>`, less a
+    * self-closing `/`) is `html(from until to)`, or null when the tag has no
+    * name or the name does not start with a letter. Reads `html` in place:
+    * no substring per tag body. */
+  private def parseTag(html: String, from: Int, to: Int): Elem = {
+    var i = from
+    val n = to
+    while (i < n && html.charAt(i).isWhitespace) i += 1
     val nameStart = i
-    while (i < n && !body.charAt(i).isWhitespace) i += 1
-    val name = lowerAscii(body.substring(nameStart, i))
-    if (name.isEmpty || !name.head.isLetter) return ("", Map.empty)
-    // attr map built lazily: most tags in real markup carry no attributes,
-    // and the per-tag LinkedHashMap + toMap showed up in profiles
-    var attrs: mutable.LinkedHashMap[String, String] = null
-    def put(key: String, v: String): Unit = {
-      if (attrs == null) attrs = mutable.LinkedHashMap.empty
-      attrs(key) = v
-    }
+    while (i < n && !html.charAt(i).isWhitespace) i += 1
+    val name = lowerAscii(html.substring(nameStart, i))
+    if (name.isEmpty || !name.head.isLetter) return null
+    // most tags in real markup carry no attributes; the small immutable maps
+    // (Map1..Map4) keep insertion order like the LinkedHashMap they replace
+    var attrs = Map.empty[String, String]
     while (i < n) {
-      while (i < n && body.charAt(i).isWhitespace) i += 1
+      while (i < n && html.charAt(i).isWhitespace) i += 1
       if (i < n) {
         val kStart = i
-        while (i < n && body.charAt(i) != '=' && !body.charAt(i).isWhitespace) i += 1
-        val key = lowerAscii(body.substring(kStart, i))
-        while (i < n && body.charAt(i).isWhitespace) i += 1
-        if (i < n && body.charAt(i) == '=') {
+        while (i < n && html.charAt(i) != '=' && !html.charAt(i).isWhitespace) i += 1
+        val key = lowerAscii(html.substring(kStart, i))
+        while (i < n && html.charAt(i).isWhitespace) i += 1
+        if (i < n && html.charAt(i) == '=') {
           i += 1
-          while (i < n && body.charAt(i).isWhitespace) i += 1
-          if (i < n && (body.charAt(i) == '"' || body.charAt(i) == '\'')) {
-            val q = body.charAt(i)
-            val vEnd = body.indexOf(q, i + 1)
-            val v = body.substring(i + 1, if (vEnd < 0) n else vEnd)
-            if (key.nonEmpty) put(key, decodeEntities(v))
+          while (i < n && html.charAt(i).isWhitespace) i += 1
+          if (i < n && (html.charAt(i) == '"' || html.charAt(i) == '\'')) {
+            val q = html.charAt(i)
+            val vEnd = { val e = html.indexOf(q, i + 1); if (e >= n) -1 else e }
+            val v = html.substring(i + 1, if (vEnd < 0) n else vEnd)
+            if (key.nonEmpty) attrs = attrs.updated(key, decodeEntities(v))
             i = if (vEnd < 0) n else vEnd + 1
           } else {
             val vStart = i
-            while (i < n && !body.charAt(i).isWhitespace) i += 1
-            if (key.nonEmpty) put(key, decodeEntities(body.substring(vStart, i)))
+            while (i < n && !html.charAt(i).isWhitespace) i += 1
+            if (key.nonEmpty) attrs = attrs.updated(key, decodeEntities(html.substring(vStart, i)))
           }
-        } else if (key.nonEmpty) put(key, "")
+        } else if (key.nonEmpty) attrs = attrs.updated(key, "")
       }
     }
-    (name, if (attrs == null) Map.empty else attrs.toMap)
+    // most nodes are leaves or near-leaves: a 16-slot default backing array
+    // per element was ~10 kB/doc of dead weight
+    Elem(name, attrs, new mutable.ArrayBuffer(2))
   }
 
   // ---------- scoring ----------
@@ -256,21 +256,27 @@ object Html {
     * link text (how the recursive walk's `inLink` flag resolves bottom-up).
     * Per-candidate re-walks are O(n × nested-candidates) — on a real-web page
     * where every nested `div` is a candidate that is quadratic; this is the
-    * O(n) form. */
+    * O(n) form. The walks over `children` here and below index the buffer:
+    * its `foreach` allocates a view and an iterator per node. */
   private[kernel] def ownStatsAll(root: Elem): java.util.IdentityHashMap[Elem, BlockStats] = {
     val memo = new java.util.IdentityHashMap[Elem, BlockStats]()
     def compute(e: Elem): BlockStats = {
       var t = 0; var l = 0; var p = 0
-      for (c <- e.children) c match {
-        case Text(s) => t += normalizeWsLen(s)
-        case el: Elem =>
-          val s = compute(el) // memoize the whole tree: containers are
-          // skipped by PARENTS but still need their own stats as candidates
-          if (!(candidateElems.contains(el.name) || boilerplateElems.contains(el.name))) {
-            t += s.textLen
-            if (el.name == "a") l += s.textLen else l += s.linkTextLen
-            p += s.pCount + (if (el.name == "p") 1 else 0)
-          }
+      val cs = e.children
+      var i = 0
+      while (i < cs.length) {
+        cs(i) match {
+          case Text(s) => t += normalizeWsLen(s)
+          case el: Elem =>
+            val s = compute(el) // memoize the whole tree: containers are
+            // skipped by PARENTS but still need their own stats as candidates
+            if (!(candidateElems.contains(el.name) || boilerplateElems.contains(el.name))) {
+              t += s.textLen
+              if (el.name == "a") l += s.textLen else l += s.linkTextLen
+              p += s.pCount + (if (el.name == "p") 1 else 0)
+            }
+        }
+        i += 1
       }
       val st = BlockStats(t, l, p)
       memo.put(e, st)
@@ -285,7 +291,7 @@ object Html {
     * First-in-document-order wins ties (strict > comparison). */
   def selectMain(root: Elem): Option[Elem] = {
     val memo = ownStatsAll(root)
-    var best: Option[Elem] = None
+    var best: Elem = null
     var bestScore = -1.0
     def walk(e: Elem, inBoiler: Boolean): Unit = {
       val boiler = inBoiler || boilerplateElems.contains(e.name)
@@ -294,16 +300,21 @@ object Html {
         if (s.textLen > 0) {
           val linkDensity = s.linkTextLen.toDouble / s.textLen
           val score = s.textLen * (1.0 - linkDensity) * (1.0 + 0.1 * math.min(s.pCount, 10))
-          if (score > bestScore) { bestScore = score; best = Some(e) }
+          if (score > bestScore) { bestScore = score; best = e }
         }
       }
-      for (c <- e.children) c match {
-        case el: Elem => walk(el, boiler)
-        case _ =>
+      val cs = e.children
+      var i = 0
+      while (i < cs.length) {
+        cs(i) match {
+          case el: Elem => walk(el, boiler)
+          case _ =>
+        }
+        i += 1
       }
     }
     walk(root, inBoiler = false)
-    best
+    Option(best)
   }
 
   /** `normalizeWs(s).length` without building the string — the stats walks
@@ -328,30 +339,41 @@ object Html {
     count
   }
 
-  def normalizeWs(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var lastSpace = false
+  /** Whitespace runs collapsed to one space, leading and trailing ones
+    * dropped. Takes the line or cell buffer itself, so no copy is made of it;
+    * an all-space input allocates nothing. */
+  def normalizeWs(s: CharSequence): String = {
+    val n = s.length
     var i = 0
-    while (i < s.length) {
+    while (i < n && Py.isSpace(s.charAt(i))) i += 1
+    if (i == n) return ""
+    val sb = new java.lang.StringBuilder(n - i)
+    var lastSpace = false
+    while (i < n) {
       val c = s.charAt(i)
-      if (Py.isSpace(c)) { if (!lastSpace && sb.length() > 0) sb.append(' '); lastSpace = true }
+      if (Py.isSpace(c)) { if (!lastSpace) sb.append(' '); lastSpace = true }
       else { sb.append(c); lastSpace = false }
       i += 1
     }
-    var out = sb.toString
-    if (out.endsWith(" ")) out = out.dropRight(1)
-    out
+    if (lastSpace) sb.setLength(sb.length - 1)
+    sb.toString
   }
 
   /** Deterministic text serialization of a subtree: block boundaries become
     * newlines, inline text concatenates, each line whitespace-normalized,
     * empty lines dropped. Table rows serialize as tab-joined cells. */
-  def serialize(e: Elem): String = {
+  def serialize(e: Elem): String = render(e)._1
+
+  /** [[serialize]]'s text and the [[tableCells]] grid of the first table it
+    * meets (document order, tables nested in a table excluded; empty when
+    * there is none), from one walk. */
+  private def render(e: Elem): (String, Vector[Vector[String]]) = {
     val lines = mutable.ArrayBuffer.empty[String]
     val cur = new java.lang.StringBuilder
+    var firstTable: Vector[Vector[String]] = null
 
     def flush(): Unit = {
-      val t = normalizeWs(cur.toString)
+      val t = normalizeWs(cur)
       if (t.nonEmpty) lines += t
       cur.setLength(0)
     }
@@ -360,51 +382,69 @@ object Html {
       case Text(s) => cur.append(s)
       case el @ Elem("table", _, _) =>
         flush()
-        for (row <- tableCells(el)) lines += row.mkString("\t")
+        val grid = tableCells(el)
+        if (firstTable == null) firstTable = grid
+        for (row <- grid) lines += row.mkString("\t")
       case Elem(name, _, children) =>
         val isBlock = blockElems.contains(name)
         if (isBlock) flush()
         if (name == "br") flush()
-        children.foreach(walk)
+        var i = 0
+        while (i < children.length) { walk(children(i)); i += 1 }
         if (isBlock) flush()
     }
     walk(e)
     flush()
-    lines.mkString("\n")
+    (lines.mkString("\n"), if (firstTable == null) Vector.empty else firstTable)
   }
 
   /** Table → cell grid: `<tr>` rows, `<td>/<th>` cells (nested tables excluded
     * from the outer grid), ragged rows padded with "". */
   def tableCells(table: Elem): Vector[Vector[String]] = {
     val rows = mutable.ArrayBuffer.empty[Vector[String]]
-    def findRows(e: Elem): Unit =
-      for (c <- e.children) c match {
-        case tr @ Elem("tr", _, _) =>
-          val cells = tr.children.collect {
-            case cell @ Elem(n, _, _) if n == "td" || n == "th" =>
-              normalizeWs(cellText(cell))
-          }
-          rows += cells.toVector
-        case el @ Elem(n, _, _) if n == "thead" || n == "tbody" || n == "tfoot" =>
-          findRows(el)
-        case _ =>
+    def findRows(e: Elem): Unit = {
+      var i = 0
+      while (i < e.children.length) {
+        e.children(i) match {
+          case Elem("tr", _, ch) =>
+            val cells = Vector.newBuilder[String]
+            var j = 0
+            while (j < ch.length) {
+              ch(j) match {
+                case cell @ Elem(n, _, _) if n == "td" || n == "th" =>
+                  cells += normalizeWs(cellText(cell))
+                case _ =>
+              }
+              j += 1
+            }
+            rows += cells.result()
+          case el @ Elem(n, _, _) if n == "thead" || n == "tbody" || n == "tfoot" =>
+            findRows(el)
+          case _ =>
+        }
+        i += 1
       }
-    def cellText(e: Elem): String = {
+    }
+    def cellText(e: Elem): CharSequence = {
       val sb = new java.lang.StringBuilder
       def w(n: Node): Unit = n match {
         case Text(s) => sb.append(s)
         case Elem("table", _, _) => // nested table: not part of this cell's grid text
-        case Elem(_, _, ch) => ch.foreach { c => w(c); sb.append(' ') }
+        case Elem(_, _, ch) =>
+          var j = 0
+          while (j < ch.length) { w(ch(j)); sb.append(' '); j += 1 }
       }
-      e.children.foreach(w)
-      sb.toString
+      var i = 0
+      while (i < e.children.length) { w(e.children(i)); i += 1 }
+      sb
     }
     findRows(table)
     val out = rows.filter(_.nonEmpty).toVector
     if (out.isEmpty) Vector.empty
     else {
       val maxCols = out.map(_.length).max
-      out.map(r => r ++ Vector.fill(maxCols - r.length)(""))
+      if (out.forall(_.length == maxCols)) out
+      else out.map(r => r ++ Vector.fill(maxCols - r.length)(""))
     }
   }
 
@@ -422,34 +462,34 @@ object Html {
   def extract(html: String): HtmlResult = {
     val (root, depthCapped) = parseTracked(html)
     val main = selectMain(root).getOrElse(root)
-    val text = serialize(main)
+    val (text, cells) = render(main)
 
-    val tables = mutable.ArrayBuffer.empty[Elem]
-    def findTables(e: Elem): Unit = e.children.foreach {
-      case t @ Elem("table", _, _) => tables += t
-      case el: Elem => findTables(el)
-      case _ =>
+    val spans = Vector.newBuilder[CellSpan]
+    val items = Vector.newBuilder[TextItem]
+    var r = 0
+    while (r < cells.length) {
+      val row = cells(r)
+      var c = 0
+      while (c < row.length) {
+        if (row(c).nonEmpty) {
+          spans += CellSpan(r, c, c * 100, r * 20, 100, 20)
+          items += TextItem(row(c), 1, c * 100, r * 20, 100, 20, 100)
+        }
+        c += 1
+      }
+      r += 1
     }
-    findTables(main)
-
-    val cells = tables.headOption.map(tableCells).getOrElse(Vector.empty)
-    val spans = for {
-      (row, r) <- cells.zipWithIndex
-      (cell, c) <- row.zipWithIndex
-      if cell.nonEmpty
-    } yield CellSpan(r, c, c * 100, r * 20, 100, 20)
-
-    val items = cells.zipWithIndex.flatMap { case (row, r) =>
-      row.zipWithIndex.collect { case (cell, c) if cell.nonEmpty =>
-        TextItem(cell, 1, c * 100, r * 20, 100, 20, 100)
-      }
-    } ++ (if (cells.isEmpty) {
+    if (cells.isEmpty) {
       // positioned items from text lines for vendor detection / quality
-      Py.split(text).take(200).zipWithIndex.map { case (w, idx) =>
-        TextItem(w, 1, (idx % 10) * 100, (idx / 10) * 20, math.max(1, w.length * 8), 16, 100)
+      val words = Py.split(text, limit = 200)
+      var idx = 0
+      while (idx < words.length) {
+        val w = words(idx)
+        items += TextItem(w, 1, (idx % 10) * 100, (idx / 10) * 20, math.max(1, w.length * 8), 16, 100)
+        idx += 1
       }
-    } else Vector.empty)
+    }
 
-    HtmlResult(text, cells, spans.toVector, items, depthCapped)
+    HtmlResult(text, cells, spans.result(), items.result(), depthCapped)
   }
 }

@@ -36,17 +36,21 @@ object Py {
   }
 
   /** CPython `str.split()` with no args — split on runs of whitespace, drop
-    * empty tokens. Used at `slicer.py:229`, `quality.py:208,213`. */
-  def split(s: String): Vector[String] = {
+    * empty tokens. Used at `slicer.py:229`, `quality.py:208,213`. With
+    * `limit`, only the first `limit` tokens (`split(s).take(limit)`), and the
+    * rest of `s` is not scanned. */
+  def split(s: String, limit: Int = Int.MaxValue): Vector[String] = {
     val out = Vector.newBuilder[String]
     var i = 0
     val n = s.length
-    while (i < n) {
+    var taken = 0
+    while (i < n && taken < limit) {
       while (i < n && isSpace(s.charAt(i))) i += 1
       if (i < n) {
         val start = i
         while (i < n && !isSpace(s.charAt(i))) i += 1
         out += s.substring(start, i)
+        taken += 1
       }
     }
     out.result()

@@ -76,7 +76,12 @@ final class QualityChecker(
   /** A3 — mean confidence, quality.py:164-169. */
   def checkOcrConfidence(extracted: Seq[TextItem]): Double =
     if (extracted.isEmpty) 0.0
-    else extracted.iterator.map(_.confidence).sum.toDouble / extracted.length
+    else {
+      var sum = 0 // a loop: the mapped iterator's `sum` boxes every value
+      val it = extracted.iterator
+      while (it.hasNext) sum += it.next().confidence
+      sum.toDouble / extracted.length
+    }
 
   /** The serving layer's SIMPLIFIED quality score (`app.py:184-196` — the
     * only quality variant the HTTP path actually computes): score =
