@@ -71,8 +71,12 @@ object Jbig2 {
       } else { bp += 1; c += byteAt(bp).toLong << 8; ct = 8 }
     }
 
-    /** DECODE one bit under context state (i, mps); returns (bit, i', mps'). */
-    def decode(i: Int, mps: Int): (Int, Int, Int) = {
+    /** DECODE one bit under context `cx`, whose state (i, mps) is
+      * `(stI(cx), stMps(cx))`; stores the next state there and returns the
+      * bit. */
+    def decode(stI: Array[Byte], stMps: Array[Byte], cx: Int): Int = {
+      val i = stI(cx).toInt
+      val mps = stMps(cx).toInt
       val qe = QeTab(i).toLong
       a -= qe
       var d = 0
@@ -100,7 +104,9 @@ object Jbig2 {
           renorm()
         } else d = mps
       }
-      (d, ni, nmps)
+      stI(cx) = ni.toByte
+      stMps(cx) = nmps.toByte
+      d
     }
 
     private def renorm(): Unit = {
@@ -216,11 +222,7 @@ object Jbig2 {
     while (y < h) {
       var x = 0
       while (x < w) {
-        val ctx = context(raster, w, h, x, y)
-        val (bit, ni, nmps) = dec.decode(stI(ctx), stMps(ctx))
-        stI(ctx) = ni.toByte
-        stMps(ctx) = nmps.toByte
-        raster(y * w + x) = bit.toByte
+        raster(y * w + x) = dec.decode(stI, stMps, context(raster, w, h, x, y)).toByte
         x += 1
       }
       y += 1
