@@ -167,24 +167,17 @@ object Extractor {
     // the per-document result covers page 1; multi-page processing is the
     // explode operator's job (S12 → posexplode of pages)
     val page = extractPdfPage(url, parsed, route, 1, templates)
-    val spans = Vector.newBuilder[CellSpan]
-    for (t <- page.template) {
-      var r = 0
-      while (r < page.cells.length) {
-        val row = page.cells(r)
-        var c = 0
-        while (c < row.length && c + 1 < t.columns.length) {
-          if (row(c).nonEmpty)
-            spans += CellSpan(r, c, t.columns(c), r, t.columns(c + 1) - t.columns(c), 1)
-          c += 1
-        }
-        r += 1
-      }
+    val spans = page.template.toVector.flatMap { t =>
+      for {
+        (row, r) <- page.cells.zipWithIndex
+        (cell, c) <- row.zipWithIndex
+        if cell.nonEmpty && c + 1 < t.columns.length
+      } yield CellSpan(r, c, t.columns(c), r, t.columns(c + 1) - t.columns(c), 1)
     }
     val grid = if (page.template.isDefined) page.cells else lineGrid(page.text)
     val quality = checker.checkExtraction(grid, page.items)
     ExtractedDoc(url, route, routeConf, page.vendor.getOrElse(""), page.text,
-      page.cells, spans.result(), quality, page.items.length, parsed.nPages, nBytes, "")
+      page.cells, spans, quality, page.items.length, parsed.nPages, nBytes, "")
   }
 
   private def extractHtml(url: String, payload: Array[Byte],

@@ -325,34 +325,21 @@ final class Slicer(
       minColumns: Int = 4): mutable.ArrayBuffer[mutable.ArrayBuffer[String]] = {
     if (tableData.isEmpty) return tableData
     val cleaned = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[String]]
-    // the cells of `cleaned.last` that partial rows folded into, built up
-    // here and written back once (not one concatenated copy per fold)
-    var folds: Array[java.lang.StringBuilder] = null
-    def settle(): Unit = if (folds != null) {
-      val prev = cleaned.last
-      var j = 0
-      while (j < folds.length) { if (folds(j) != null) prev(j) = folds(j).toString; j += 1 }
-      folds = null
-    }
     for (row <- tableData) {
       val filled = row.count(c => Py.strip(c).nonEmpty)
       if (filled < minColumns && cleaned.nonEmpty) {
         val prev = cleaned.last
-        if (folds == null) folds = new Array(prev.length)
         var j = 0
         while (j < row.length) {
-          val cell = Py.strip(row(j))
-          if (cell.nonEmpty) {
-            val old = prev(j) // a row wider than `prev` fails here, as before
-            if (folds(j) != null) folds(j).append(' ').append(cell)
-            else if (old.nonEmpty) folds(j) = new java.lang.StringBuilder(old).append(' ').append(cell)
-            else folds(j) = new java.lang.StringBuilder(cell)
+          val cell = row(j)
+          if (Py.strip(cell).nonEmpty) {
+            if (prev(j).nonEmpty) prev(j) = prev(j) + " " + Py.strip(cell)
+            else prev(j) = Py.strip(cell)
           }
           j += 1
         }
-      } else { settle(); cleaned += row }
+      } else cleaned += row
     }
-    settle()
     cleaned
   }
 }
