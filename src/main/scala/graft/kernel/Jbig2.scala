@@ -71,12 +71,8 @@ object Jbig2 {
       } else { bp += 1; c += byteAt(bp).toLong << 8; ct = 8 }
     }
 
-    /** DECODE one bit under context `cx`, whose state (i, mps) is
-      * `(stI(cx), stMps(cx))`; stores the next state there and returns the
-      * bit. */
-    def decode(stI: Array[Byte], stMps: Array[Byte], cx: Int): Int = {
-      val i = stI(cx).toInt
-      val mps = stMps(cx).toInt
+    /** DECODE one bit under context state (i, mps); returns (bit, i', mps'). */
+    def decode(i: Int, mps: Int): (Int, Int, Int) = {
       val qe = QeTab(i).toLong
       a -= qe
       var d = 0
@@ -104,9 +100,7 @@ object Jbig2 {
           renorm()
         } else d = mps
       }
-      stI(cx) = ni.toByte
-      stMps(cx) = nmps.toByte
-      d
+      (d, ni, nmps)
     }
 
     private def renorm(): Unit = {
@@ -222,7 +216,11 @@ object Jbig2 {
     while (y < h) {
       var x = 0
       while (x < w) {
-        raster(y * w + x) = dec.decode(stI, stMps, context(raster, w, h, x, y)).toByte
+        val ctx = context(raster, w, h, x, y)
+        val (bit, ni, nmps) = dec.decode(stI(ctx), stMps(ctx))
+        stI(ctx) = ni.toByte
+        stMps(ctx) = nmps.toByte
+        raster(y * w + x) = bit.toByte
         x += 1
       }
       y += 1

@@ -215,37 +215,33 @@ private[kernel] object PdfCrypt {
              r5: Boolean = false): Array[Byte] = {
     var k = sha("SHA-256", pw, salt, udata)
     if (r5) return k
-    // one cipher, three digests and two buffers serve every round
-    val aes = javax.crypto.Cipher.getInstance("AES/CBC/NoPadding")
-    val digests = Array("SHA-256", "SHA-384", "SHA-512").map(java.security.MessageDigest.getInstance)
-    val k1 = new Array[Byte]((pw.length + 64 + udata.length) * 64)
-    val e = new Array[Byte](k1.length)
     var round = 0
     var done = false
     while (!done) {
       // K1 = (pw ‖ K ‖ udata) repeated 64 times, AES-128-CBC-encrypted
       // under (K[0:16], iv = K[16:32]); digest choice = sum(E[0:16]) mod 3
-      val one = pw.length + k.length + udata.length
-      System.arraycopy(pw, 0, k1, 0, pw.length)
-      System.arraycopy(k, 0, k1, pw.length, k.length)
-      System.arraycopy(udata, 0, k1, pw.length + k.length, udata.length)
-      var i = 1
+      val one = new Array[Byte](pw.length + k.length + udata.length)
+      System.arraycopy(pw, 0, one, 0, pw.length)
+      System.arraycopy(k, 0, one, pw.length, k.length)
+      System.arraycopy(udata, 0, one, pw.length + k.length, udata.length)
+      val k1 = new Array[Byte](one.length * 64)
+      var i = 0
       while (i < 64) {
-        System.arraycopy(k1, 0, k1, i * one, one); i += 1
+        System.arraycopy(one, 0, k1, i * one.length, one.length); i += 1
       }
-      val n = one * 64
-      aes.init(javax.crypto.Cipher.ENCRYPT_MODE,
-        new javax.crypto.spec.SecretKeySpec(k, 0, 16, "AES"),
-        new javax.crypto.spec.IvParameterSpec(k, 16, 16))
-      aes.doFinal(k1, 0, n, e, 0)
+      val e = aesCipher(javax.crypto.Cipher.ENCRYPT_MODE,
+        java.util.Arrays.copyOf(k, 16),
+        java.util.Arrays.copyOfRange(k, 16, 32)).doFinal(k1)
       var sum = 0
       i = 0
       while (i < 16) { sum += e(i) & 0xff; i += 1 }
-      val d = digests(sum % 3)
-      d.update(e, 0, n)
-      k = d.digest()
+      k = (sum % 3) match {
+        case 0 => sha("SHA-256", e)
+        case 1 => sha("SHA-384", e)
+        case _ => sha("SHA-512", e)
+      }
       round += 1
-      done = round >= 64 && (e(n - 1) & 0xff) <= round - 32
+      done = round >= 64 && (e(e.length - 1) & 0xff) <= round - 32
     }
     java.util.Arrays.copyOf(k, 32)
   }

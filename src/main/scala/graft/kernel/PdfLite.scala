@@ -1277,25 +1277,12 @@ object PdfLite {
     * codes or a missing EOD yield the bytes decoded so far. */
   private def lzwDecode(s: String, from: Int, until: Int): String = {
     val out = new java.lang.StringBuilder(math.min(InflateCap, math.max(16, (until - from) * 3)))
-    // the string table as prefix links, no String per code: entry c is
-    // entry prefix(c) followed by suffix(c), len(c) chars long (both < 4096)
-    val prefix = new Array[Short](4096)
-    val suffix = new Array[Char](4096)
-    val len = new Array[Short](4096)
+    val table = new Array[String](4096)
     var t = 0
-    while (t < 256) { suffix(t) = t.toChar; len(t) = 1; t += 1 }
-    val buf = new Array[Char](4096)
-    /** Appends entry `code` to `out`; returns its first char. */
-    def emit(code: Int): Char = {
-      var c = code
-      var j = len(code).toInt
-      while (j > 0) { j -= 1; buf(j) = suffix(c); c = prefix(c) }
-      out.append(buf, 0, len(code).toInt)
-      buf(0)
-    }
+    while (t < 256) { table(t) = t.toChar.toString; t += 1 }
     var nextCode = 258
     var width = 9
-    var prev = -1
+    var prev: String = null
     var bitBuf = 0L; var bits = 0
     var k = from
     var done = false
@@ -1304,27 +1291,23 @@ object PdfLite {
       while (bits >= width && !done) {
         val code = ((bitBuf >>> (bits - width)) & ((1L << width) - 1)).toInt
         bits -= width
-        if (code == 256) { nextCode = 258; width = 9; prev = -1 }
+        if (code == 256) { nextCode = 258; width = 9; prev = null }
         else if (code == 257) done = true
         else {
-          // codes 258 until nextCode were all defined since the last clear
-          val entryHead =
-            if (code < nextCode) emit(code)
-            else if (prev >= 0 && code == nextCode) { // KwKwK: prev + prev(0)
-              val h = emit(prev); out.append(h); h
-            } else { done = true; 0.toChar } // corrupt stream: keep what decoded
-          if (!done) {
-            if (prev >= 0 && nextCode < 4096) {
-              prefix(nextCode) = prev.toShort
-              suffix(nextCode) = entryHead
-              len(nextCode) = (len(prev) + 1).toShort
+          val entry =
+            if (code < nextCode && code < 4096 && table(code) != null) table(code)
+            else if (prev != null && code == nextCode) prev + prev.charAt(0) // KwKwK
+            else { done = true; null } // corrupt stream: keep what decoded
+          if (entry != null) {
+            out.append(entry)
+            if (prev != null && nextCode < 4096) {
+              table(nextCode) = prev + entry.charAt(0)
               nextCode += 1
               // EarlyChange=1: the width for the NEXT read grows one code
               // before the table boundary (pdf.js/TIFF convention)
               if (nextCode + 1 >= (1 << width) && width < 12) width += 1
             }
-            // a KwKwK code is the entry just added
-            prev = code
+            prev = entry
           }
         }
       }
@@ -1564,15 +1547,7 @@ object PdfLite {
                                     widths: Map[Int, Double] = Map.empty,
                                     dw: Double = 500.0,
                                     asc: Double = 0.8,
-                                    desc: Double = 0.2) {
-    /** [[diffs]] by byte code, -1 where it has no entry: the per-char lookup
-      * of [[diffText]] without boxing the code. */
-    lazy val diffTable: Array[Int] = {
-      val t = Array.fill(256)(-1)
-      for ((code, ch) <- diffs if code >= 0 && code < 256) t(code) = ch.toInt
-      t
-    }
-  }
+                                    desc: Double = 0.2)
   private val DefaultFont = FontInfo(winAnsi = false, cmap = Map.empty)
 
   /** `/Encoding` resolution beyond the bare `/WinAnsiEncoding` name: the
@@ -1815,16 +1790,15 @@ object PdfLite {
   /** Byte decode for a simple font carrying `/Differences`: the array's
     * mapping wins per code, anything else falls back to the base encoding
     * (cp1252 when `/BaseEncoding /WinAnsiEncoding`, else Latin-1). */
-  private def diffText(raw: String, diffs: Array[Int],
+  private def diffText(raw: String, diffs: Map[Int, Char],
                        winAnsiBase: Boolean): String = {
     val sb = new java.lang.StringBuilder(raw.length)
     var k = 0
     while (k < raw.length) {
       val code = raw.charAt(k) & 0xff
-      sb.append(
-        if (diffs(code) >= 0) diffs(code).toChar
-        else if (winAnsiBase && code >= 0x80 && code <= 0x9f) Cp1252Hi(code - 0x80)
-        else code.toChar)
+      sb.append(diffs.getOrElse(code,
+        if (winAnsiBase && code >= 0x80 && code <= 0x9f) Cp1252Hi(code - 0x80)
+        else code.toChar))
       k += 1
     }
     sb.toString
@@ -2395,16 +2369,6 @@ object PdfLite {
       * (`\\ \( \) \n \r \t \b \f`, 1–3-digit octal, `\`EOL continuation) and
       * balanced unescaped parens. */
     def literal(): String = {
-      // the common string, with no escape and no nested parenthesis before
-      // its closing one, is a plain slice of the content
-      var j = i
-      while (j < n && { val ch = content.charAt(j)
-                        ch != '\\' && ch != '(' && ch != ')' }) j += 1
-      if (j < n && content.charAt(j) == ')') {
-        val s = content.substring(i, j)
-        i = j + 1
-        return s
-      }
       val sb = new java.lang.StringBuilder
       var depth = 1
       while (i < n && depth > 0) {
@@ -2710,7 +2674,7 @@ object PdfLite {
     def emit(raw: String): Unit = {
       val decoded =
         if (font.cmap.nonEmpty) applyCMap(raw, font.cmap, font.twoByte)
-        else if (font.diffs.nonEmpty) diffText(raw, font.diffTable, font.winAnsi)
+        else if (font.diffs.nonEmpty) diffText(raw, font.diffs, font.winAnsi)
         else if (font.winAnsi) winAnsiText(raw)
         else raw
       val text = Py.strip(decoded)
