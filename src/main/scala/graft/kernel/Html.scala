@@ -466,28 +466,15 @@ object Html {
 
     val spans = Vector.newBuilder[CellSpan]
     val items = Vector.newBuilder[TextItem]
-    var r = 0
-    while (r < cells.length) {
-      val row = cells(r)
-      var c = 0
-      while (c < row.length) {
-        if (row(c).nonEmpty) {
-          spans += CellSpan(r, c, c * 100, r * 20, 100, 20)
-          items += TextItem(row(c), 1, c * 100, r * 20, 100, 20, 100)
-        }
-        c += 1
-      }
-      r += 1
+    for (r <- cells.indices; c <- cells(r).indices) if (cells(r)(c).nonEmpty) {
+      spans += CellSpan(r, c, c * 100, r * 20, 100, 20)
+      items += TextItem(cells(r)(c), 1, c * 100, r * 20, 100, 20, 100)
     }
     if (cells.isEmpty) {
       // positioned items from text lines for vendor detection / quality
       val words = Py.split(text, limit = 200)
-      var idx = 0
-      while (idx < words.length) {
-        val w = words(idx)
-        items += TextItem(w, 1, (idx % 10) * 100, (idx / 10) * 20, math.max(1, w.length * 8), 16, 100)
-        idx += 1
-      }
+      for (idx <- words.indices) items += TextItem(words(idx), 1, (idx % 10) * 100,
+        (idx / 10) * 20, math.max(1, words(idx).length * 8), 16, 100)
     }
 
     HtmlResult(text, cells, spans.result(), items.result(), depthCapped)
