@@ -192,7 +192,7 @@ object Html {
     val name = lowerAscii(html.substring(nameStart, i))
     if (name.isEmpty || !name.head.isLetter) return null
     // most tags in real markup carry no attributes; the small immutable maps
-    // (Map1..Map4) keep insertion order like the LinkedHashMap they replace
+    // (Map1..Map4) keep insertion order
     var attrs = Map.empty[String, String]
     while (i < n) {
       while (i < n && html.charAt(i).isWhitespace) i += 1
