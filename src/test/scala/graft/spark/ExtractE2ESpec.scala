@@ -43,11 +43,13 @@ class ExtractE2ESpec extends SparkTestBase {
   }
 
   test("cells, spans and quality survive the parquet round-trip") {
-    import spark.implicits._
-    import ExtractPipeline._
-    val pages = ExtractPipeline.pages(spark, 60)
-    val docs = ExtractPipeline.extract(pages, ExtractPipeline.broadcastTemplates(spark))
-      .collect()
+    import ExtractPipeline.docEnc
+    val out = Files.createTempDirectory("graft_roundtrip_spec").toString
+    ExtractJob.run(spark, ExtractPipeline.pages(spark, 60).toDF(), out, runId = "rt",
+      nBuckets = 4)
+    // the committed table read back through the case class's own encoder
+    val docs = spark.read.parquet(s"$out/docs").drop("bucket").as[ExtractedDoc].collect()
+    assert(docs.length == 60)
     docs.foreach { d =>
       val o = oracle.get(d.url)
       // oracle covers first N urls; all 60 are within N

@@ -45,6 +45,33 @@ class XlsxArtifactSpec extends SparkTestBase {
     }
   }
 
+  test("the artifact write reads the docs the table write computed: one kernel run per doc") {
+    import spark.implicits._
+    val calls = spark.sparkContext.longAccumulator("kernel_payloads")
+    val counted = udf { (b: Array[Byte]) => calls.add(1); b }
+    val docs = ExtractJob.withBucket(ExtractPipeline.pages(spark, NDocs).toDF(), NBuckets)
+      .select(graft.functions.ExtractDocExpr
+        .extractDoc($"url", counted($"html"), $"text", $"lang").as("doc"), $"bucket")
+      .select($"doc.*", $"bucket")
+    val dir = Files.createTempDirectory("graft_xlsx_once").toString
+    val io = new XlsxArtifactTableIO(new ParquetTableIO(s"$dir/t"), s"$dir/a")
+    io.writeDocs(docs)
+    assert(io.readDocs(spark).count() == NDocs && io.readArtifacts(spark).count() == NDocs)
+    assert(calls.sum == NDocs, s"the kernel ran ${calls.sum} times for $NDocs docs")
+  }
+
+  test("lineage equals the committed table through the artifact sink") {
+    import LineageChecks._
+    val dir = Files.createTempDirectory("graft_xlsx_lineage").toString
+    val io = new XlsxArtifactTableIO(new ParquetTableIO(s"$dir/t"), s"$dir/a")
+    val m = ExtractJob.run(spark, pagesWithEdgeRows(spark, 120), io, "xl", NBuckets, 8,
+      resume = false, Vendor.builtinTemplates)
+    val lineage = lineageCounts(io.readLineage(spark), "xl")
+    assert(lineage == tableCounts(io.readDocs(spark)))
+    assert(totals(m) == totals(lineage))
+    assert(m.docs == 123 && io.readArtifacts(spark).count() == 123, m)
+  }
+
   test("a grid past Excel's limits degrades that document (and only it) to csv") {
     import spark.implicits._
     val wide = Vector.fill(2)(Vector.fill(Xlsx.MaxCols + 1)("x"))
