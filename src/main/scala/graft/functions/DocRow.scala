@@ -1,9 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.kernel.ExtractedDoc
 
@@ -16,46 +17,15 @@ import graft.kernel.ExtractedDoc
   * values directly (UTF8String / GenericArrayData / GenericInternalRow) in
   * one allocation pass; perfbench's traced run reports its cost as
   * `functions.docrow.ms_mean`. Field order MUST match the
-  * case-class declaration order in [[graft.kernel.ExtractedDoc]] — the schema
-  * below is asserted against the encoder schema in ExtractE2ESpec.
+  * case-class declaration order in [[graft.kernel.ExtractedDoc]]:
+  * OperatorCatalogSpec checks `toRow`'s values against the typed encoder
+  * path's, row for row.
   */
 object DocRow {
 
-  val spanType: StructType = StructType(Seq(
-    StructField("row", IntegerType, nullable = false),
-    StructField("col", IntegerType, nullable = false),
-    StructField("x", IntegerType, nullable = false),
-    StructField("y", IntegerType, nullable = false),
-    StructField("w", IntegerType, nullable = false),
-    StructField("h", IntegerType, nullable = false)))
-
-  val qualityType: StructType = StructType(Seq(
-    StructField("emptyRatio", DoubleType, nullable = false),
-    StructField("confidenceAvg", DoubleType, nullable = false),
-    StructField("rowConsistency", BooleanType, nullable = false),
-    StructField("columnAlignment", BooleanType, nullable = false),
-    StructField("textCoverage", DoubleType, nullable = false),
-    StructField("overallScore", DoubleType, nullable = false),
-    StructField("nRows", IntegerType, nullable = false),
-    StructField("nCols", IntegerType, nullable = false),
-    StructField("totalTextItems", IntegerType, nullable = false),
-    StructField("columnTypes", ArrayType(StringType, containsNull = true)),
-    StructField("warnings", ArrayType(StringType, containsNull = true)),
-    StructField("errors", ArrayType(StringType, containsNull = true))))
-
-  val schema: StructType = StructType(Seq(
-    StructField("url", StringType),
-    StructField("route", StringType),
-    StructField("routeConfidence", DoubleType, nullable = false),
-    StructField("vendor", StringType),
-    StructField("extractedText", StringType),
-    StructField("cells", ArrayType(ArrayType(StringType, containsNull = true), containsNull = true)),
-    StructField("spans", ArrayType(spanType, containsNull = true)),
-    StructField("quality", qualityType),
-    StructField("nItems", IntegerType, nullable = false),
-    StructField("nPages", IntegerType, nullable = false),
-    StructField("nBytes", LongType, nullable = false),
-    StructField("failure", StringType)))
+  /** The docs struct's Catalyst type: the product encoder's schema of
+    * [[graft.kernel.ExtractedDoc]], nullability included. */
+  val schema: StructType = Encoders.product[ExtractedDoc].schema
 
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 

@@ -11,9 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.kernel.{Extractor, Template, Vendor}
 
 /** Catalyst expression `extract_doc(url, html, text, lang)` → ExtractedDoc
-  * struct — the column-API / SQL face of the kernel (the mapPartitions path in
-  * [[graft.spark.ExtractPipeline]] is the bulk path; this one composes with
-  * arbitrary projections, e.g. `SELECT extract_doc(...).quality.overallScore`).
+  * struct — the column-API / SQL face of the kernel and the production job's
+  * kernel map ([[graft.spark.ExtractJob]]); it composes with arbitrary
+  * projections, e.g. `SELECT extract_doc(...).quality.overallScore`. The
+  * template registry and password list ride in the expression itself.
   *
   * `CodegenFallback` is deliberate: the kernel is opaque Scala — generated
   * code would just call back into it, buying nothing (SURVEY.md §2.11). The
@@ -58,24 +59,14 @@ case class ExtractDocExpr(children: Seq[Expression],
 }
 
 object ExtractDocExpr {
-  /** Column-API helper: `df.select(extractDoc($"url", $"html", $"text", $"lang"))`. */
-  def extractDoc(url: Column, html: Column, text: Column, lang: Column): Column =
-    extractDoc(url, html, text, lang, Vendor.builtinTemplates)
-
-  /** As above with an explicit template registry (serialized into the
-    * expression — registries are KBs; for a huge registry broadcast it and
-    * use the mapPartitions path instead). */
+  /** Column-API helper: `df.select(extractDoc($"url", $"html", $"text", $"lang"))`.
+    * The template registry and the crawl-wide password try-list for
+    * REAL-password documents (tried user-then-owner per candidate, empty
+    * password always first — see [[graft.kernel.PdfLite.parse]]) are
+    * serialized into the expression: registries are KBs. */
   def extractDoc(url: Column, html: Column, text: Column, lang: Column,
-                 templates: Map[String, Template]): Column =
-    extractDoc(url, html, text, lang, templates, Nil)
-
-  /** As above with a crawl-wide password try-list for REAL-password
-    * documents (serialized into the expression like the registry; tried
-    * user-then-owner per candidate, empty password always first — see
-    * [[graft.kernel.PdfLite.parse]]). */
-  def extractDoc(url: Column, html: Column, text: Column, lang: Column,
-                 templates: Map[String, Template],
-                 passwords: Seq[String]): Column = {
+                 templates: Map[String, Template] = Vendor.builtinTemplates,
+                 passwords: Seq[String] = Nil): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(ExtractDocExpr(
       Seq(url, html, text, lang).map(GraftColumnBridge.expression), templates,
@@ -83,39 +74,23 @@ object ExtractDocExpr {
   }
 }
 
-/** `SparkSessionExtensions` hook registering `extract_doc` for SQL use:
-  * `spark.sql("SELECT extract_doc(url, html, text, lang).extractedText FROM pages")`.
+/** `SparkSessionExtensions` hook registering the kernel's functions for SQL
+  * use: `spark.sql("SELECT extract_doc(url, html, text, lang).extractedText FROM pages")`.
   * Enable via `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("extract_doc"),
-      new ExpressionInfo(classOf[ExtractDocExpr].getName, "extract_doc"),
-      (exprs: Seq[Expression]) => ExtractDocExpr(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("extract_pages"),
-      new ExpressionInfo(classOf[ExtractPagesExpr].getName, "extract_pages"),
-      (exprs: Seq[Expression]) => ExtractPagesExpr(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("pdf_links"),
-      new ExpressionInfo(classOf[PdfLinksExpr].getName, "pdf_links"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "pdf_links(html)")
-        PdfLinksExpr(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("pdf_meta"),
-      new ExpressionInfo(classOf[PdfMetaExpr].getName, "pdf_meta"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "pdf_meta(html)")
-        PdfMetaExpr(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sim_ratio"),
-      new ExpressionInfo(classOf[SimRatio].getName, "sim_ratio"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "sim_ratio(a, b)")
-        SimRatio(exprs.head, exprs(1))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    // (SQL name, expression class, arity, builder)
+    Seq[(String, Class[_], Int, Seq[Expression] => Expression)](
+      ("extract_doc", classOf[ExtractDocExpr], 4, ExtractDocExpr(_)),
+      ("extract_pages", classOf[ExtractPagesExpr], 4, ExtractPagesExpr(_)),
+      ("pdf_links", classOf[PdfLinksExpr], 1, e => PdfLinksExpr(e.head)),
+      ("pdf_meta", classOf[PdfMetaExpr], 1, e => PdfMetaExpr(e.head)),
+      ("sim_ratio", classOf[SimRatio], 2, e => SimRatio(e.head, e(1)))
+    ).foreach { case (name, cls, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (exprs: Seq[Expression]) => {
+          require(exprs.length == arity, s"$name takes $arity arguments, got ${exprs.length}")
+          build(exprs)
+        }))
+    }
 }

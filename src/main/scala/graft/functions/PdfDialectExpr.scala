@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,30 +13,21 @@ import graft.kernel.PdfLite
   * filters, encryption flavor, font mechanisms, image codecs. The crawl-ops
   * "what formats are actually in my corpus" scan that sizes which parser
   * tiers matter before committing a 100-TB extraction run. Total like every
-  * kernel expression: malformed payloads tag, they never throw. */
+  * kernel expression: malformed payloads tag, they never throw; a null
+  * payload tags `empty`. */
 case class PdfDialectExpr(child: Expression)
-    extends Expression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"pdf_dialect expects binary payload, got ${other.catalogString}")
-    }
-
+  override def prettyName: String = "pdf_dialect"
+  override def inputTypes = Seq(BinaryType)
   override def dataType: DataType = StringType
   override def nullable: Boolean = false
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    val bytes = if (v == null) null else v.asInstanceOf[Array[Byte]]
-    UTF8String.fromString(PdfLite.dialect(bytes))
-  }
+  override def eval(input: InternalRow): Any =
+    UTF8String.fromString(PdfLite.dialect(child.eval(input).asInstanceOf[Array[Byte]]))
 
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(child = newChildren.head)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 object PdfDialectExpr {

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -15,31 +14,23 @@ import graft.kernel.PdfLite
   * arrays, inline-dict and indirect-object layouts, `/A << /S /URI >>`
   * actions). The outlink surface a crawl frontier feeds on: explode it and
   * you have the PDF half of the link graph. Total — malformed payloads and
-  * non-PDF bytes yield an empty array, never a throw. */
+  * non-PDF bytes yield an empty array, never a throw; so does a null
+  * payload. */
 case class PdfLinksExpr(child: Expression)
-    extends Expression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"pdf_links expects binary payload, got ${other.catalogString}")
-    }
-
+  override def prettyName: String = "pdf_links"
+  override def inputTypes = Seq(BinaryType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = false
 
   override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    val bytes = if (v == null) null else v.asInstanceOf[Array[Byte]]
-    val ls = PdfLite.links(bytes)
+    val ls = PdfLite.links(child.eval(input).asInstanceOf[Array[Byte]])
     new GenericArrayData(ls.map(l => UTF8String.fromString(l): AnyRef).toArray)
   }
 
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(child = newChildren.head)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 object PdfLinksExpr {

@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.kernel.PdfLite
@@ -16,39 +14,23 @@ import graft.kernel.PdfLite
   * structural fallback for trailer-less files). Producer/creation-date are
   * the provenance signals a training-data pipeline keys dedup cohorts and
   * writer-bug quarantines on. Null struct when the payload is not a PDF or
-  * carries no info dict; never throws. */
+  * carries no info dict (or is null); never throws. */
 case class PdfMetaExpr(child: Expression)
-    extends Expression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"pdf_meta expects binary payload, got ${other.catalogString}")
-    }
-
+  override def prettyName: String = "pdf_meta"
+  override def inputTypes = Seq(BinaryType)
   override def dataType: DataType = PdfMetaExpr.schema
   override def nullable: Boolean = true
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    val bytes = if (v == null) null else v.asInstanceOf[Array[Byte]]
-    PdfLite.docInfo(bytes) match {
-      case None => null
-      case Some(di) =>
-        val row = new GenericInternalRow(4)
-        row.update(0, UTF8String.fromString(di.title))
-        row.update(1, UTF8String.fromString(di.author))
-        row.update(2, UTF8String.fromString(di.producer))
-        row.update(3, UTF8String.fromString(di.created))
-        row
-    }
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    PdfLite.docInfo(v.asInstanceOf[Array[Byte]]).map { di =>
+      InternalRow(UTF8String.fromString(di.title), UTF8String.fromString(di.author),
+        UTF8String.fromString(di.producer), UTF8String.fromString(di.created))
+    }.orNull
 
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(child = newChildren.head)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 object PdfMetaExpr {

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -19,30 +18,21 @@ import graft.kernel.RealPdf
   * ([[graft.kernel.RealPdf.funnel]]). One narrow expression per document —
   * the same per-row kernel-map shape as `extract_doc`, so a binaryFile scan
   * over 10^9 PDFs stays a single shuffle-free stage. Total: garbage bytes
-  * yield the slicer's sentinel grid, never a throw. */
+  * yield the slicer's sentinel grid, never a throw; a null payload yields
+  * null. */
 case class PdfTableGridExpr(child: Expression)
-    extends Expression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"pdf_table_grid expects binary payload, got ${other.catalogString}")
-    }
-
+  override def prettyName: String = "pdf_table_grid"
+  override def inputTypes = Seq(BinaryType)
   override def dataType: DataType = StructType(Seq(
     StructField("n_items", IntegerType, nullable = false),
     StructField("in_box", IntegerType, nullable = false),
     StructField("raw_rows", IntegerType, nullable = false),
     StructField("grid", ArrayType(ArrayType(StringType, containsNull = false),
       containsNull = false), nullable = false)))
-  override def nullable: Boolean = true
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val f = try RealPdf.funnel(v.asInstanceOf[Array[Byte]])
     catch { case _: Exception => RealPdf.Funnel(0, 0, 0, Vector.empty) }
     val grid = new GenericArrayData(f.grid.map(row =>
@@ -51,8 +41,8 @@ case class PdfTableGridExpr(child: Expression)
     InternalRow(f.nItems, f.inBox, f.rawRows, grid)
   }
 
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(child = newChildren.head)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 object PdfTableGridExpr {

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import graft.kernel.SeqMatcher
@@ -15,15 +14,11 @@ import graft.kernel.SeqMatcher
   * CodegenFallback is deliberate — the kernel is opaque Scala and generated
   * code would just call back into it. */
 case class SimRatio(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def prettyName: String = "sim_ratio"
+  override def inputTypes = Seq(StringType, StringType)
   override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sim_ratio expects (STRING, STRING), got (${left.dataType.sql}, ${right.dataType.sql})")
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     SeqMatcher.ratio(a.toString, b.toString)

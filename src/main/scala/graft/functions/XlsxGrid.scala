@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -19,23 +17,14 @@ import graft.kernel.Xlsx
   * [[CsvGrid.column]] via `coalesce`-style branching (see
   * `graft.spark.XlsxArtifactTableIO`). */
 case class XlsxGridExpr(child: Expression)
-    extends Expression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(ArrayType(StringType, _), _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"xlsx_grid expects array<array<string>>, got ${other.catalogString}")
-    }
-
+  override def prettyName: String = "xlsx_grid"
+  override def inputTypes = Seq(ArrayType(ArrayType(StringType)))
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val grid = v.asInstanceOf[ArrayData]
     val rows = (0 until grid.numElements()).map { r =>
       val row = grid.getArray(r)
@@ -48,8 +37,8 @@ case class XlsxGridExpr(child: Expression)
     catch { case _: IllegalArgumentException => null } // sheet limits → fallback
   }
 
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(child = newChildren.head)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 object XlsxGrid {

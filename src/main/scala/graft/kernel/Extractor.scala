@@ -159,9 +159,7 @@ object Extractor {
                          passwords: Seq[String]): ExtractedDoc = {
     // password try-list: crawl-wide credentials for real-password documents
     // (PyMuPDF `authenticate` analog); empty-password docs cost nothing extra
-    val parsed =
-      if (passwords.isEmpty) PdfLite.parse(payload)
-      else PdfLite.parse(payload, passwords)
+    val parsed = PdfLite.parse(payload, passwords)
     val (route, routeConf) = detectRoute(isPdf = true, text, parsed.hasImage)
     // page-1 truncation parity (extract.py:102-104, smart_extract.py:70):
     // the per-document result covers page 1; multi-page processing is the

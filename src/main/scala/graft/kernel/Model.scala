@@ -22,7 +22,8 @@ final case class TextItem(
 
 /** A vendor extraction template (`template.py:18-26`):
   * `tableBox = [x1,y1,x2,y2]`, `columns` = x-positions of separators (n+1 edges
-  * for n columns). Broadcast once per job — never shuffled with the data. */
+  * for n columns). Shipped inside the job's extraction expression — never
+  * shuffled with the data. */
 final case class Template(
     vendor: String,
     tableBox: Vector[Int],

@@ -1808,15 +1808,12 @@ object PdfLite {
     * (with 1-based page numbers). Tolerant: unknown operators are skipped; a
     * malformed stream yields the items recovered so far; no recognizable page
     * tree ⇒ every stream interpreted as page 1 (round-1 dialect and garbage
-    * both land here). */
-  def parse(bytes: Array[Byte]): Parsed = parseImpl(bytes, run = true)
-
-  /** [[parse]] with a password try-list for documents protected by a REAL
-    * (non-empty) password — each candidate is tried as user then owner
-    * password (see [[Crypt.open]]). The empty password is always
+    * both land here). `passwords` is a try-list for documents protected by
+    * a REAL (non-empty) password — each candidate is tried as user then
+    * owner password (see [[Crypt.open]]). The empty password is always
     * tried first, so `parse(bytes, pws)` on an unprotected or
     * empty-password document equals `parse(bytes)`. */
-  def parse(bytes: Array[Byte], passwords: Seq[String]): Parsed =
+  def parse(bytes: Array[Byte], passwords: Seq[String] = Nil): Parsed =
     parseImpl(bytes, run = true, passwords = passwords)
 
   /** Native-route extraction: the PyMuPDF-twin structured-text contract the
@@ -1826,12 +1823,9 @@ object PdfLite {
     * Validated byte-for-byte against the reference's own artifacts on its
     * 241 real PDFs (see the native-route section header below). [[parse]]
     * keeps the legacy approximate-geometry contract the synthetic-corpus
-    * goldens are pinned to; this is the parser to point at REAL files. */
-  def parseNative(bytes: Array[Byte]): Parsed =
-    parseImpl(bytes, run = true, native = true)
-
-  /** [[parseNative]] with a password try-list (see [[parse]] overload). */
-  def parseNative(bytes: Array[Byte], passwords: Seq[String]): Parsed =
+    * goldens are pinned to; this is the parser to point at REAL files.
+    * `passwords` is a try-list, as for [[parse]]. */
+  def parseNative(bytes: Array[Byte], passwords: Seq[String] = Nil): Parsed =
     parseImpl(bytes, run = true, native = true, passwords = passwords)
 
   /** Structure resolution only (objects, xref, page tree, stream decode) with

@@ -4,10 +4,11 @@ package graft.kernel
   * QualityChecker (`quality.py:64-271`). Pure per-document kernel; fleet-level
   * rollups (avg score, failure rates) are plain Spark aggregations downstream.
   */
-final class QualityChecker(
-    val emptyThreshold: Double = 0.3,       // quality.py:68
-    val confidenceThreshold: Double = 70.0, // quality.py:69
-    val coverageThreshold: Double = 0.5) {  // quality.py:70
+final class QualityChecker {
+
+  private val emptyThreshold = 0.3       // quality.py:68
+  private val confidenceThreshold = 70.0 // quality.py:69
+  private val coverageThreshold = 0.5    // quality.py:70
 
   /** A8 — all checks + overall score, `check_extraction` quality.py:75-154. */
   def checkExtraction(

@@ -23,6 +23,9 @@ final class Slicer(
     val defaultRowThreshold: Double = 30.0) { // slicer.py:21 (pipeline passes 20: table_slicer.py:57)
 
   private val bufferFactor = 1.2 // slicer.py:23
+  private val minGap = 5.0 // slicer.py:123, G1's smallest significant gap and threshold
+  private val maxThreshold = 50.0 // slicer.py:123, G1's largest threshold
+  private val minColumns = 4 // slicer.py:378, G7's filled cells for a full row
 
   // Protected (unsplittable) patterns — slicer.py:41-44. Java regex syntax is
   // compatible for these four; re.match ≙ anchored find.
@@ -82,10 +85,7 @@ final class Slicer(
   }
 
   /** G1 — adaptive row threshold from median y-gaps, slicer.py:123-150. */
-  def getAdaptiveRowThreshold(
-      textBoxes: Seq[TextItem],
-      minGap: Double = 5.0,
-      maxThreshold: Double = 50.0): Double = {
+  def getAdaptiveRowThreshold(textBoxes: Seq[TextItem]): Double = {
     if (textBoxes.isEmpty) return defaultRowThreshold
     val yCoords = textBoxes.map(_.y).distinct.sorted
     if (yCoords.length < 2) return defaultRowThreshold
@@ -320,9 +320,8 @@ final class Slicer(
 
   /** G7 — partial-row merge: rows with <minColumns filled cells fold cell-wise
     * into the previous kept row, slicer.py:378-400. Order-dependent. */
-  def mergePartialRows(
-      tableData: mutable.ArrayBuffer[mutable.ArrayBuffer[String]],
-      minColumns: Int = 4): mutable.ArrayBuffer[mutable.ArrayBuffer[String]] = {
+  def mergePartialRows(tableData: mutable.ArrayBuffer[mutable.ArrayBuffer[String]])
+      : mutable.ArrayBuffer[mutable.ArrayBuffer[String]] = {
     if (tableData.isEmpty) return tableData
     val cleaned = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[String]]
     for (row <- tableData) {

@@ -19,8 +19,8 @@ import scala.util.control.NonFatal
   *    (`template.py:155-162`).
   *
   * This is config-plane I/O: the registry is KBs, loaded ONCE on the driver
-  * and broadcast ([[graft.spark.ExtractPipeline.broadcastTemplates]]); it is
-  * never shuffled with data. Timestamps are caller-supplied (`nowIso`), never
+  * and serialized into the job's `extract_doc` expression
+  * ([[graft.functions.ExtractDocExpr]]); it is never shuffled with data. Timestamps are caller-supplied (`nowIso`), never
   * read from a clock here — determinism rule SURVEY §7.5.5.
   */
 object TemplateStore {

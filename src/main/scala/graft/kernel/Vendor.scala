@@ -94,8 +94,9 @@ object SeqMatcher {
 
 /** Vendor auto-detection + template registry — the reference's
   * TemplateManager semantics (`template.py:88-306`) with templates held in an
-  * immutable, broadcast-friendly map (loaded once per job, never shuffled —
-  * the J1 "template lookup join" is a broadcast-map lookup, SURVEY.md §2.5).
+  * immutable map (loaded once per job and shipped inside the extraction
+  * expression, never shuffled — the J1 "template lookup join" is a map
+  * lookup, SURVEY.md §2.5).
   */
 object Vendor {
 
@@ -129,8 +130,8 @@ object Vendor {
     * ([[pipelineKeywords]]) with first-wins argmax preserving registry
     * priority on ties. */
   def registryKeywords(templates: Map[String, Template]): Vector[(String, Vector[String])] = {
-    // identity memo: the registry is one immutable broadcast-stable map per
-    // job, but this is called per document (and per page in extractPages) —
+    // identity memo: the registry is one immutable map per task (it rides
+    // in the task's copy of the expression), but this is called per document (and per page in extractPages) —
     // rebuilding the sorted keyword table millions of times is pure waste
     val c = kwCache
     if (c != null && (c._1 eq templates)) c._2

@@ -161,11 +161,9 @@ object ExtractOps {
     s"""WITH g AS (${goldenDocsSql()})
        |SELECT url, text_md5, n_chars, route FROM g ORDER BY url LIMIT 200""".stripMargin
 
-  /** q27_extract_expr — same extraction through the Catalyst `Expression`
-    * surface (column API, SURVEY §2.11) instead of the typed mapPartitions:
-    * proves both integration points agree (over the sf-sized corpus' first
-    * nDocs pages — a different slice than q25, so both paths are oracle-
-    * checked independently). */
+  /** q27_extract_expr — extraction through the `extract_doc` column API
+    * (SURVEY §2.11) over the sf-sized corpus' first nDocs pages: a different
+    * slice than q25, so both slices are oracle-checked independently. */
   def q27ExtractExpr(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.ExtractDocExpr
     val pages = cachedPages(spark, nDocs(spark, dir))
@@ -569,24 +567,19 @@ object ExtractOps {
     * byte-identical to the pristine parse's. The slice is a fixed prefix
     * (identical at every sf — the corpus is a pure function of the index),
     * so the oracle is the committed expected counts as VALUES; the
-    * distributed shape is one narrow mapPartitions over the prefix with the
-    * template registry broadcast — the same shape as the production job. */
+    * distributed shape is one narrow map over the prefix, each
+    * extraction with the built-in template registry. */
   def q46DamagedRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tplBc = ExtractPipeline.broadcastTemplates(spark)
     ExtractPipeline.pages(spark, 200L)
-      .mapPartitions { it =>
-        it.flatMap { p =>
-          val vs = PdfDamage.variants(p.html)
-          if (vs.isEmpty) Iterator.empty
-          else {
-            val tpl = tplBc.value
-            val pristine =
-              Extractor.extract(p.url, p.html, p.text, p.lang, tpl).extractedText
-            vs.iterator.map { case (kind, dmg) =>
-              val rec = Extractor.extract(p.url, dmg, p.text, p.lang, tpl).extractedText
-              (kind, 1L, if (pristine.nonEmpty && rec == pristine) 1L else 0L)
-            }
+      .flatMap { p =>
+        val vs = PdfDamage.variants(p.html)
+        if (vs.isEmpty) Iterator.empty
+        else {
+          val pristine = Extractor.extract(p.url, p.html, p.text, p.lang).extractedText
+          vs.iterator.map { case (kind, dmg) =>
+            val rec = Extractor.extract(p.url, dmg, p.text, p.lang).extractedText
+            (kind, 1L, if (pristine.nonEmpty && rec == pristine) 1L else 0L)
           }
         }
       }
@@ -790,37 +783,32 @@ object ExtractOps {
     * 9-group aggregate. */
   def q54PasswordAuth(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tplBc = ExtractPipeline.broadcastTemplates(spark)
     val tryList = Seq("argon-7", "vault#22")
     spark.range(108).repartition(8)
-      .mapPartitions { it =>
-        val tpl = tplBc.value
-        it.map { i =>
-          val flavor = Seq("rc4_v2r3", "aes128_v4r4", "aes256_v5r6")((i % 3).toInt)
-          val cred = Seq("user_known", "owner_known", "none_known")(((i / 3) % 3).toInt)
-          val inList = tryList((i % 2).toInt)
-          val (userPw, ownerPw) = cred match {
-            case "user_known"  => (inList, s"adm-$i")
-            case "owner_known" => (s"secret-$i", inList)
-            case _             => (s"secret-$i", s"adm-$i")
-          }
-          val pageText = s"Manifest $i: " + ("units cleared for dock 7 " * 6)
-          val spec = Seq(PdfLite.PageSpec(1700, 1200,
-            Seq(PdfLite.Run(100, 100, 12, pageText))))
-          val plain = PdfLite.writeDoc(spec)
-          val locked = PdfLite.writeDoc(spec,
-            encrypt = flavor == "rc4_v2r3", aes = flavor == "aes128_v4r4",
-            aes256 = flavor == "aes256_v5r6",
-            userPw = userPw, ownerPw = ownerPw)
-          val url = s"pdf://locked/$i"
-          // pre-extracted text >100 chars keeps the route native
-          val pristine =
-            Extractor.extract(url, plain, pageText, "en", tpl).extractedText
-          val rec = Extractor.extract(url, locked, pageText, "en", tpl,
-            tryList).extractedText
-          (flavor, cred, 1L,
-            if (pristine.nonEmpty && rec == pristine) 1L else 0L)
+      .map { i =>
+        val flavor = Seq("rc4_v2r3", "aes128_v4r4", "aes256_v5r6")((i % 3).toInt)
+        val cred = Seq("user_known", "owner_known", "none_known")(((i / 3) % 3).toInt)
+        val inList = tryList((i % 2).toInt)
+        val (userPw, ownerPw) = cred match {
+          case "user_known"  => (inList, s"adm-$i")
+          case "owner_known" => (s"secret-$i", inList)
+          case _             => (s"secret-$i", s"adm-$i")
         }
+        val pageText = s"Manifest $i: " + ("units cleared for dock 7 " * 6)
+        val spec = Seq(PdfLite.PageSpec(1700, 1200,
+          Seq(PdfLite.Run(100, 100, 12, pageText))))
+        val plain = PdfLite.writeDoc(spec)
+        val locked = PdfLite.writeDoc(spec,
+          encrypt = flavor == "rc4_v2r3", aes = flavor == "aes128_v4r4",
+          aes256 = flavor == "aes256_v5r6",
+          userPw = userPw, ownerPw = ownerPw)
+        val url = s"pdf://locked/$i"
+        // pre-extracted text >100 chars keeps the route native
+        val pristine = Extractor.extract(url, plain, pageText, "en").extractedText
+        val rec = Extractor.extract(url, locked, pageText, "en",
+          passwords = tryList).extractedText
+        (flavor, cred, 1L,
+          if (pristine.nonEmpty && rec == pristine) 1L else 0L)
       }
       .toDF("flavor", "cred", "one", "ok")
       .groupBy(col("flavor"), col("cred"))
@@ -857,42 +845,38 @@ object ExtractOps {
     * census. The slice is a fixed prefix (identical at every sf — the
     * corpus is a pure function of the index), so the oracle is the
     * committed per-shape counts as VALUES; distributed shape: one narrow
-    * mapPartitions over the prefix, no shuffle before the 4-group rollup
+    * map over the prefix, no shuffle before the 4-group rollup
     * (the q46 pattern). */
   def q55JpxRouting(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tplBc = ExtractPipeline.broadcastTemplates(spark)
     ExtractPipeline.pages(spark, 200L)
-      .mapPartitions { it =>
-        val tpl = tplBc.value
-        it.map { p =>
-          val k = ((p.url.hashCode % 997) + 997) % 997
-          val w = 400 + (k % 7) * 32
-          val h = 600 + (k % 5) * 16
-          val nc = 1 + (k % 3)
-          val shape = k % 4 match {
-            case 0 => "raw_valid"
-            case 1 => "jp2_valid"
-            case 2 => "corrupt"
-            case _ => "geom_mismatch"
-          }
-          val payload = shape match {
-            case "raw_valid" => Jpx.Payload(Jpx.encode(w, h, nc), w, h)
-            case "jp2_valid" => Jpx.Payload(Jpx.encodeJp2(w, h, nc), w, h)
-            case "corrupt" =>
-              val b = Jpx.encode(w, h, nc)
-              java.util.Arrays.fill(b, 0, 8, 0.toByte)
-              Jpx.Payload(b, w, h)
-            case _ => Jpx.Payload(Jpx.encode(w, h, nc), w + 1, h)
-          }
-          val pdf = PdfLite.writeDoc(
-            Seq(PdfLite.PageSpec(1700, 1200, Seq.empty)),
-            scanned = true, jpxImage = Some(payload))
-          val doc = Extractor.extract(p.url, pdf, "", p.lang, tpl)
-          val promoted = doc.route == "scanned" && doc.routeConfidence >= 0.9
-          val tagged = PdfLite.dialect(pdf).split(",").contains("img:jpx")
-          (shape, 1L, if (promoted) 1L else 0L, if (tagged) 1L else 0L)
+      .map { p =>
+        val k = ((p.url.hashCode % 997) + 997) % 997
+        val w = 400 + (k % 7) * 32
+        val h = 600 + (k % 5) * 16
+        val nc = 1 + (k % 3)
+        val shape = k % 4 match {
+          case 0 => "raw_valid"
+          case 1 => "jp2_valid"
+          case 2 => "corrupt"
+          case _ => "geom_mismatch"
         }
+        val payload = shape match {
+          case "raw_valid" => Jpx.Payload(Jpx.encode(w, h, nc), w, h)
+          case "jp2_valid" => Jpx.Payload(Jpx.encodeJp2(w, h, nc), w, h)
+          case "corrupt" =>
+            val b = Jpx.encode(w, h, nc)
+            java.util.Arrays.fill(b, 0, 8, 0.toByte)
+            Jpx.Payload(b, w, h)
+          case _ => Jpx.Payload(Jpx.encode(w, h, nc), w + 1, h)
+        }
+        val pdf = PdfLite.writeDoc(
+          Seq(PdfLite.PageSpec(1700, 1200, Seq.empty)),
+          scanned = true, jpxImage = Some(payload))
+        val doc = Extractor.extract(p.url, pdf, "", p.lang)
+        val promoted = doc.route == "scanned" && doc.routeConfidence >= 0.9
+        val tagged = PdfLite.dialect(pdf).split(",").contains("img:jpx")
+        (shape, 1L, if (promoted) 1L else 0L, if (tagged) 1L else 0L)
       }
       .toDF("jpx_shape", "one", "hi", "tagged")
       .groupBy(col("jpx_shape"))

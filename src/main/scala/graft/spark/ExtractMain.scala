@@ -16,10 +16,11 @@ import org.apache.spark.sql.SparkSession
   * path to a parquet/Iceberg-shaped table with the input_hint schema
   * `(url, warc_ts, html, text, lang)`. `--templates` points at a JSON
   * registry (`vendor_templates.json` shape, S7) loaded + validated on the
-  * driver via [[graft.kernel.TemplateStore.load]] and broadcast; without it
-  * the builtin registry ships. Master/executor topology comes from
-  * spark-submit itself (`--master`, `--num-executors`, …), which is how the
-  * N vs 4N cluster-size comparison is driven on a real cluster.
+  * driver via [[graft.kernel.TemplateStore.load]] and serialized into the
+  * job's `extract_doc` expression; without it the builtin registry ships.
+  * Master/executor topology comes from spark-submit itself (`--master`,
+  * `--num-executors`, …), which is how the N vs 4N cluster-size comparison
+  * is driven on a real cluster.
   */
 object ExtractMain {
   def main(args: Array[String]): Unit = {

@@ -1,16 +1,14 @@
 package graft.spark
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import graft.kernel._
 
-/** Spark-facing extraction pipeline: schedules the pure kernel over a
-  * `Dataset[PageRow]`. The kernel is opaque row-at-a-time Scala, so the
-  * idiomatic surface is a typed `mapPartitions` (one deserialization per row,
-  * template map resolved once per partition from a broadcast) — Catalyst still
-  * owns everything around it: scan pruning, filter pushdown of pre-filters,
-  * AQE on downstream shuffles. A Catalyst `Expression` wrapper for the column
-  * API lives in [[graft.functions.ExtractDocExpr]].
+/** Spark-facing extraction pipeline: the deterministic corpus and two ways to
+  * run the pure kernel over it. [[extractDf]] goes through the Catalyst
+  * expression [[graft.functions.ExtractDocExpr]], as the production job
+  * ([[ExtractJob]]) does; [[extract]] is the typed `Dataset[ExtractedDoc]`
+  * path for code that needs the case-class objects. Both carry the template
+  * registry in the closure or expression itself: registries are KBs.
   */
 object ExtractPipeline {
 
@@ -27,22 +25,12 @@ object ExtractPipeline {
     spark.range(0, n, 1, parts).mapPartitions(_.map(i => Corpus.page(i, seed)))
   }
 
-  /** Broadcast the template registry once per job (the reference's
-    * loop-invariant hoisting, `ultimate_batch_processor.py:22-28`, graduated
-    * to a cluster broadcast — J1 as a broadcast-map lookup, no shuffle). */
-  def broadcastTemplates(spark: SparkSession,
-                         templates: Map[String, Template] = Vendor.builtinTemplates)
-      : Broadcast[Map[String, Template]] =
-    spark.sparkContext.broadcast(templates)
-
   /** The narrow map: Page → ExtractedDoc. No shuffle is introduced here —
     * partitioning decisions (salting, sizing) belong to [[ExtractJob]]. */
   def extract(pagesDs: Dataset[Corpus.PageRow],
-              templatesBc: Broadcast[Map[String, Template]]): Dataset[ExtractedDoc] =
-    pagesDs.mapPartitions { it =>
-      val templates = templatesBc.value // resolved once per partition
-      it.map(p => Extractor.extract(p.url, p.html, p.text, p.lang, templates))
-    }
+              templates: Map[String, Template] = Vendor.builtinTemplates)
+      : Dataset[ExtractedDoc] =
+    pagesDs.map(p => Extractor.extract(p.url, p.html, p.text, p.lang, templates))
 
   /** DataFrame adapter for tables matching the input_hint schema
     * `(url string, warc_ts timestamp, html binary, text string, lang string)`.

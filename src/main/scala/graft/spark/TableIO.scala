@@ -171,30 +171,36 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
   * carrying the workbook bytes ([[graft.functions.XlsxGrid]], the
   * deterministic kernel writer) or, exactly when the grid exceeds Excel's
   * sheet limits (the real to_excel failure mode), the CSV rendering with
-  * `format = 'csv'`. The whole pairing is ONE codegen-friendly projection —
-  * a per-row `coalesce` over two expressions, no driver loop, no UDF — so
-  * artifact emission rides the same narrow stage as the docs write. */
+  * `format = 'csv'`. The pairing is one codegen-friendly projection — a
+  * per-row `coalesce` over two expressions, no driver loop, no UDF. The two
+  * writes are two actions, so `docs` is persisted for them: the docs write
+  * computes it (running the kernel once per document) and the artifact
+  * write reads the cached rows. */
 final class XlsxArtifactTableIO(inner: TableIO, artifactDir: String) extends TableIO {
   import org.apache.spark.sql.functions._
+  import org.apache.spark.storage.StorageLevel
   import graft.functions.{CsvGrid, XlsxGrid}
 
   val artifactsPath = s"$artifactDir/artifacts"
 
   override def writeDocs(docs: DataFrame): Unit = {
-    inner.writeDocs(docs)
-    docs
-      .select(col("url"), col("vendor"), col("bucket"),
-        XlsxGrid.column(col("cells")).as("xlsx"),
-        CsvGrid.column(col("cells")).as("csv"))
-      .select(col("url"), col("vendor"),
-        when(col("xlsx").isNotNull, lit("xlsx")).otherwise(lit("csv")).as("format"),
-        coalesce(col("xlsx"), encode(col("csv"), "UTF-8")).as("artifact"),
-        col("bucket"))
-      .write.options(NioLocalFileSystem.WriteOptions)
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(artifactsPath)
+    docs.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      inner.writeDocs(docs)
+      docs
+        .select(col("url"), col("vendor"), col("bucket"),
+          XlsxGrid.column(col("cells")).as("xlsx"),
+          CsvGrid.column(col("cells")).as("csv"))
+        .select(col("url"), col("vendor"),
+          when(col("xlsx").isNotNull, lit("xlsx")).otherwise(lit("csv")).as("format"),
+          coalesce(col("xlsx"), encode(col("csv"), "UTF-8")).as("artifact"),
+          col("bucket"))
+        .write.options(NioLocalFileSystem.WriteOptions)
+        .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(artifactsPath)
+    } finally docs.unpersist()
   }
 
   def readArtifacts(spark: SparkSession): DataFrame =

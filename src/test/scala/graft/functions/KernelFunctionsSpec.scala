@@ -89,9 +89,10 @@ class KernelFunctionsSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val ints = Seq((1, 2)).toDF("i", "j")
+    // the message quotes the failing call by its SQL name, e.g. `"pdf_links(i)"`
     def fails(name: String)(q: => DataFrame): Unit = {
       val e = intercept[AnalysisException](q.collect())
-      assert(e.getMessage.contains(name), e.getMessage)
+      assert(e.getMessage.contains(s"\"$name("), e.getMessage)
     }
     fails("pdf_meta")(ints.select(PdfMetaExpr.pdfMeta(col("i"))))
     fails("pdf_links")(ints.select(PdfLinksExpr.pdfLinks(col("i"))))

@@ -157,7 +157,7 @@ class PdfEdgeSpec extends AnyFunSuite {
     val s = new String(r270, Latin1)
     assert(s.contains("/Rotate 270"))
     val rm90 = s.replace("/Rotate 270", "/Rotate -90").getBytes(Latin1)
-    for (parse <- Seq[Array[Byte] => PdfLite.Parsed](PdfLite.parse, PdfLite.parseNative)) {
+    for (parse <- Seq[Array[Byte] => PdfLite.Parsed](PdfLite.parse(_), PdfLite.parseNative(_))) {
       val want = parse(r270)
       val got = parse(rm90)
       assert(want.items.nonEmpty)

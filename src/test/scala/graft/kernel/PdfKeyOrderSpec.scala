@@ -29,8 +29,8 @@ class PdfKeyOrderSpec extends AnyFunSuite {
       for ((shuffled, k) <- shuffles.zipWithIndex) {
         def same[T](what: String, read: Array[Byte] => T): Unit =
           assert(read(shuffled) == read(pdf), s"page $i, shuffle $k: $what differs")
-        same("parse", PdfLite.parse)
-        same("parseNative", PdfLite.parseNative)
+        same("parse", PdfLite.parse(_))
+        same("parseNative", PdfLite.parseNative(_))
         same("docInfo", PdfLite.docInfo)
         same("links", PdfLite.links)
         same("dialect", PdfLite.dialect)

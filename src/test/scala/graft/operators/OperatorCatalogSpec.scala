@@ -63,23 +63,13 @@ class OperatorCatalogSpec extends SparkTestBase {
     assert(rows("amazn") == "")
   }
 
-  test("hand-rolled DocRow schema matches the product-encoder schema exactly") {
-    import org.apache.spark.sql.Encoders
-    val encSchema = Encoders.product[graft.kernel.ExtractedDoc].schema
-    // same names/types/order; nullability may differ (DocRow never emits
-    // nulls so its non-null markings are a safe subset)
-    def shape(s: org.apache.spark.sql.types.StructType): String =
-      s.fields.map(f => s"${f.name}:${f.dataType.sql}").mkString(",")
-    assert(shape(graft.functions.DocRow.schema) == shape(encSchema))
-  }
-
   test("expression path values equal typed-encoder path values") {
     import graft.spark.ExtractPipeline
     val pages = ExtractPipeline.pages(spark, 150).toDF()
     val viaExpr = ExtractPipeline.extractDf(pages)
       .orderBy("url").collect()
     val viaTyped = ExtractPipeline
-      .extract(ExtractPipeline.pages(spark, 150), ExtractPipeline.broadcastTemplates(spark))
+      .extract(ExtractPipeline.pages(spark, 150))
       .toDF().orderBy("url").collect()
     assert(viaExpr.length == 150)
     viaExpr.zip(viaTyped).foreach { case (a, b) =>

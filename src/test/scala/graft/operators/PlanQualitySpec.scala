@@ -90,8 +90,7 @@ class PlanQualitySpec extends SparkTestBase {
     val p = plan("q28_fuzzy_match")
     assert(!p.contains("ScalaUDF") && !p.contains("BatchEvalPython"),
       s"fuzzy match fell back to a UDF:\n$p")
-    assert(p.contains("simratio") || p.toLowerCase.contains("simratio"),
-      s"SimRatio expression missing from plan:\n$p")
+    assert(p.contains("sim_ratio("), s"SimRatio expression missing from plan:\n$p")
   }
 
   test("q38_extract_pages: generator explode over one narrow map, two-phase agg") {
