@@ -20,8 +20,9 @@ import scala.util.control.NonFatal
   *
   * This is config-plane I/O: the registry is KBs, loaded ONCE on the driver
   * and serialized into the job's `extract_doc` expression
-  * ([[graft.functions.ExtractDocExpr]]); it is never shuffled with data. Timestamps are caller-supplied (`nowIso`), never
-  * read from a clock here — determinism rule SURVEY §7.5.5.
+  * ([[graft.functions.ExtractDocExpr]]); it is never shuffled with data.
+  * Timestamps are caller-supplied (`nowIso`), never read from a clock here —
+  * determinism rule SURVEY §7.5.5.
   */
 object TemplateStore {
 

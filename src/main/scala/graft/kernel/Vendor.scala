@@ -131,8 +131,9 @@ object Vendor {
     * priority on ties. */
   def registryKeywords(templates: Map[String, Template]): Vector[(String, Vector[String])] = {
     // identity memo: the registry is one immutable map per task (it rides
-    // in the task's copy of the expression), but this is called per document (and per page in extractPages) —
-    // rebuilding the sorted keyword table millions of times is pure waste
+    // in the task's copy of the expression), but this is called per document
+    // (and per page in extractPages) — rebuilding the sorted keyword table
+    // millions of times is pure waste
     val c = kwCache
     if (c != null && (c._1 eq templates)) c._2
     else {

@@ -23,8 +23,7 @@ class KernelFunctionsSpec extends SparkTestBase {
 
   /** Rows `(id, payload)`: the PDF, garbage bytes and a null payload. */
   private def payloads: DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     Seq[(Int, Option[Array[Byte]])]((0, Some(pdf)), (1, Some(garbage)), (2, None))
       .toDF("id", "b")
   }
@@ -62,8 +61,7 @@ class KernelFunctionsSpec extends SparkTestBase {
   }
 
   test("xlsx_grid equals the kernel writer, null past Excel's limits or for null cells") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val fits = Vector(Vector("a", "b"), Vector("c", ""))
     val wide = Vector(Vector.fill(Xlsx.MaxCols + 1)("x"))
     val got = Seq[(Int, Option[Vector[Vector[String]]])](
@@ -76,8 +74,7 @@ class KernelFunctionsSpec extends SparkTestBase {
   }
 
   test("sim_ratio equals difflib's ratio and is null on a null side") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val rows = Seq[(String, String)](("newark", "newrak"), ("sysco", "syscoo"), (null, "x"))
       .toDF("a", "b").select(SimRatio.column(col("a"), col("b"))).collect().map(_.get(0))
     assert(rows(0) == SeqMatcher.ratio("newark", "newrak"))
@@ -86,8 +83,7 @@ class KernelFunctionsSpec extends SparkTestBase {
   }
 
   test("a wrong input type fails analysis, naming the SQL function") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val ints = Seq((1, 2)).toDF("i", "j")
     // the message quotes the failing call by its SQL name, e.g. `"pdf_links(i)"`
     def fails(name: String)(q: => DataFrame): Unit = {
