@@ -17,8 +17,9 @@ object Html {
 
   // ---------- DOM ----------
   sealed trait Node
-  final case class Elem(name: String, attrs: Map[String, String],
-                        children: mutable.ArrayBuffer[Node]) extends Node
+  /** An element keeps its tag name and children only: no heuristic below
+    * reads an attribute. */
+  final case class Elem(name: String, children: mutable.ArrayBuffer[Node]) extends Node
   final case class Text(s: String) extends Node
 
   private val voidElems = Set("br", "hr", "img", "input", "meta", "link",
@@ -79,7 +80,7 @@ object Html {
     * as a quality warning instead of diverging silently on legitimately deep
     * pages. */
   def parseTracked(html: String): (Elem, Boolean) = {
-    val root = Elem("#root", Map.empty, mutable.ArrayBuffer.empty)
+    val root = Elem("#root", mutable.ArrayBuffer.empty)
     val stack = mutable.Stack(root)
     var depthCapped = false
     var i = 0
@@ -133,7 +134,7 @@ object Html {
                 // depth cap: a crawled page can nest tags thousands deep
                 // (adversarially or by broken markup); past MaxDepth the tag's
                 // children attach to the current node instead of recursing —
-                // keeps every recursive walk (ownStats/serialize/tableCells)
+                // keeps every recursive walk (selectMain/serialize/tableCells)
                 // stack-safe without losing the text content
                 if (!selfClose && !voidElems.contains(name)) {
                   if (stack.size < MaxDepth) stack.push(el)
@@ -155,8 +156,8 @@ object Html {
     (root, depthCapped)
   }
 
-  /** `s.toLowerCase` with an allocation-free fast path: tag and attribute
-    * names in real markup are overwhelmingly already-lowercase ASCII, and
+  /** `s.toLowerCase` with an allocation-free fast path: tag names in real
+    * markup are overwhelmingly already-lowercase ASCII, and
     * `String.toLowerCase` both allocates and consults the default locale.
     * Identical output: any uppercase-ASCII or non-ASCII char falls back. */
   private def lowerAscii(s: String): String = {
@@ -181,66 +182,45 @@ object Html {
 
   /** The element of the open tag whose body (between `<` and `>`, less a
     * self-closing `/`) is `html(from until to)`, or null when the tag has no
-    * name or the name does not start with a letter. Reads `html` in place:
-    * no substring per tag body. */
+    * name or the name does not start with a letter. Only the name is read:
+    * the attributes after it are skipped. */
   private def parseTag(html: String, from: Int, to: Int): Elem = {
     var i = from
-    val n = to
-    while (i < n && html.charAt(i).isWhitespace) i += 1
+    while (i < to && html.charAt(i).isWhitespace) i += 1
     val nameStart = i
-    while (i < n && !html.charAt(i).isWhitespace) i += 1
+    while (i < to && !html.charAt(i).isWhitespace) i += 1
     val name = lowerAscii(html.substring(nameStart, i))
     if (name.isEmpty || !name.head.isLetter) return null
-    // most tags in real markup carry no attributes; the small immutable maps
-    // (Map1..Map4) keep insertion order
-    var attrs = Map.empty[String, String]
-    while (i < n) {
-      while (i < n && html.charAt(i).isWhitespace) i += 1
-      if (i < n) {
-        val kStart = i
-        while (i < n && html.charAt(i) != '=' && !html.charAt(i).isWhitespace) i += 1
-        val key = lowerAscii(html.substring(kStart, i))
-        while (i < n && html.charAt(i).isWhitespace) i += 1
-        if (i < n && html.charAt(i) == '=') {
-          i += 1
-          while (i < n && html.charAt(i).isWhitespace) i += 1
-          if (i < n && (html.charAt(i) == '"' || html.charAt(i) == '\'')) {
-            val q = html.charAt(i)
-            val vEnd = { val e = html.indexOf(q, i + 1); if (e >= n) -1 else e }
-            val v = html.substring(i + 1, if (vEnd < 0) n else vEnd)
-            if (key.nonEmpty) attrs = attrs.updated(key, decodeEntities(v))
-            i = if (vEnd < 0) n else vEnd + 1
-          } else {
-            val vStart = i
-            while (i < n && !html.charAt(i).isWhitespace) i += 1
-            if (key.nonEmpty) attrs = attrs.updated(key, decodeEntities(html.substring(vStart, i)))
-          }
-        } else if (key.nonEmpty) attrs = attrs.updated(key, "")
-      }
-    }
     // most nodes are leaves or near-leaves: a 16-slot default backing array
     // per element was ~10 kB/doc of dead weight
-    Elem(name, attrs, new mutable.ArrayBuffer(2))
+    Elem(name, new mutable.ArrayBuffer(2))
   }
 
   // ---------- scoring ----------
-  final case class BlockStats(textLen: Int, linkTextLen: Int, pCount: Int)
+  final case class BlockStats(textLen: Int, linkTextLen: Int, pCount: Int) {
+    /** `textLen × (1 − linkDensity) × (1 + 0.1·pCount_capped)`; NaN when
+      * `textLen` is 0. */
+    def score: Double =
+      textLen * (1.0 - linkTextLen.toDouble / textLen) * (1.0 + 0.1 * math.min(pCount, 10))
+  }
 
   /** "Own" statistics of a candidate: subtree text EXCLUDING nested candidate
     * containers and boilerplate chrome. This is what prevents the outermost
     * container (body) from always winning — body's own text is whatever is
     * not claimed by a nested article/div/section, so the deepest container
     * that directly holds the content scores highest (Readability-style
-    * paragraph-parent scoring, re-expressed structurally). */
+    * paragraph-parent scoring, re-expressed structurally). This recursive
+    * walk is the definition; [[selectMain]] computes the same stats for
+    * every element in one pass, and the tests compare the two. */
   def ownStats(e: Elem): BlockStats = {
     var t = 0; var l = 0; var p = 0
     def walk(node: Node, inLink: Boolean): Unit = node match {
       case Text(s) =>
         val len = normalizeWsLen(s)
         t += len; if (inLink) l += len
-      case Elem(name, _, _) if candidateElems.contains(name) || boilerplateElems.contains(name) =>
+      case Elem(name, _) if candidateElems.contains(name) || boilerplateElems.contains(name) =>
         () // nested container: its text belongs to it, not to us
-      case Elem(name, _, children) =>
+      case Elem(name, children) =>
         if (name == "p") p += 1
         val link = inLink || name == "a"
         children.foreach(walk(_, link))
@@ -249,76 +229,58 @@ object Html {
     BlockStats(t, l, p)
   }
 
-  /** Own-stats for EVERY element in ONE post-order pass (semantics identical
-    * to per-node [[ownStats]]): a child's memoized stats fold into its parent
-    * unless the child is a container/chrome node (contributes 0 to the
-    * parent's OWN text), and an `<a>` child's entire own-text re-counts as
-    * link text (how the recursive walk's `inLink` flag resolves bottom-up).
-    * Per-candidate re-walks are O(n × nested-candidates) — on a real-web page
-    * where every nested `div` is a candidate that is quadratic; this is the
-    * O(n) form. The walks over `children` here and below index the buffer:
-    * its `foreach` allocates a view and an iterator per node. */
-  private[kernel] def ownStatsAll(root: Elem): java.util.IdentityHashMap[Elem, BlockStats] = {
-    val memo = new java.util.IdentityHashMap[Elem, BlockStats]()
-    def compute(e: Elem): BlockStats = {
+  /** Main-content selection: among candidate blocks not inside boilerplate
+    * chrome, the one of highest [[BlockStats.score]] over its [[ownStats]];
+    * the first in document order wins ties.
+    *
+    * One post-order pass: each element's own stats fold from its children's,
+    * where a container or chrome child adds nothing and an `<a>` child's
+    * whole own text counts as link text (how [[ownStats]]'s `inLink` flag
+    * resolves bottom-up). A chrome subtree is not walked at all: it holds no
+    * scored candidate and adds nothing to its parent. A candidate is scored
+    * when its subtree completes, after its descendants, so ties go to the
+    * smaller start-tag position. The walk indexes `children`: the buffer's
+    * `foreach` allocates a view and an iterator per node. */
+  def selectMain(root: Elem): Option[Elem] = {
+    var best: Elem = null
+    var bestScore = -1.0
+    var bestPos = 0
+    var pos = 0
+    def walk(e: Elem): BlockStats = {
+      val at = pos
+      pos += 1
       var t = 0; var l = 0; var p = 0
       val cs = e.children
       var i = 0
       while (i < cs.length) {
         cs(i) match {
           case Text(s) => t += normalizeWsLen(s)
-          case el: Elem =>
-            val s = compute(el) // memoize the whole tree: containers are
-            // skipped by PARENTS but still need their own stats as candidates
-            if (!(candidateElems.contains(el.name) || boilerplateElems.contains(el.name))) {
+          case el: Elem if !boilerplateElems.contains(el.name) =>
+            val s = walk(el)
+            if (!candidateElems.contains(el.name)) {
               t += s.textLen
-              if (el.name == "a") l += s.textLen else l += s.linkTextLen
+              l += (if (el.name == "a") s.textLen else s.linkTextLen)
               p += s.pCount + (if (el.name == "p") 1 else 0)
             }
-        }
-        i += 1
-      }
-      val st = BlockStats(t, l, p)
-      memo.put(e, st)
-      st
-    }
-    compute(root)
-    memo
-  }
-
-  /** Main-content selection: among candidate blocks not inside boilerplate
-    * chrome, maximize `ownTextLen × (1 − linkDensity) × (1 + 0.1·pCount_capped)`.
-    * First-in-document-order wins ties (strict > comparison). */
-  def selectMain(root: Elem): Option[Elem] = {
-    val memo = ownStatsAll(root)
-    var best: Elem = null
-    var bestScore = -1.0
-    def walk(e: Elem, inBoiler: Boolean): Unit = {
-      val boiler = inBoiler || boilerplateElems.contains(e.name)
-      if (!boiler && candidateElems.contains(e.name)) {
-        val s = memo.get(e)
-        if (s.textLen > 0) {
-          val linkDensity = s.linkTextLen.toDouble / s.textLen
-          val score = s.textLen * (1.0 - linkDensity) * (1.0 + 0.1 * math.min(s.pCount, 10))
-          if (score > bestScore) { bestScore = score; best = e }
-        }
-      }
-      val cs = e.children
-      var i = 0
-      while (i < cs.length) {
-        cs(i) match {
-          case el: Elem => walk(el, boiler)
           case _ =>
         }
         i += 1
       }
+      val st = BlockStats(t, l, p)
+      if (t > 0 && candidateElems.contains(e.name)) {
+        val score = st.score
+        if (score > bestScore || (score == bestScore && at < bestPos)) {
+          bestScore = score; best = e; bestPos = at
+        }
+      }
+      st
     }
-    walk(root, inBoiler = false)
+    if (!boilerplateElems.contains(root.name)) walk(root)
     Option(best)
   }
 
   /** `normalizeWs(s).length` without building the string — the stats walks
-    * (`stats`/`ownStats`/`ownStatsAll`) only ever need the normalized LENGTH,
+    * ([[ownStats]], [[selectMain]]) only ever need the normalized LENGTH,
     * and they visit every text node on every page, so the per-node
     * StringBuilder+String of [[normalizeWs]] was pure allocation churn.
     * Equivalence: count = non-space chars + internal space runs (a run
@@ -380,12 +342,12 @@ object Html {
 
     def walk(node: Node): Unit = node match {
       case Text(s) => cur.append(s)
-      case el @ Elem("table", _, _) =>
+      case el @ Elem("table", _) =>
         flush()
         val grid = tableCells(el)
         if (firstTable == null) firstTable = grid
         for (row <- grid) lines += row.mkString("\t")
-      case Elem(name, _, children) =>
+      case Elem(name, children) =>
         val isBlock = blockElems.contains(name)
         if (isBlock) flush()
         if (name == "br") flush()
@@ -406,19 +368,19 @@ object Html {
       var i = 0
       while (i < e.children.length) {
         e.children(i) match {
-          case Elem("tr", _, ch) =>
+          case Elem("tr", ch) =>
             val cells = Vector.newBuilder[String]
             var j = 0
             while (j < ch.length) {
               ch(j) match {
-                case cell @ Elem(n, _, _) if n == "td" || n == "th" =>
+                case cell @ Elem(n, _) if n == "td" || n == "th" =>
                   cells += normalizeWs(cellText(cell))
                 case _ =>
               }
               j += 1
             }
             rows += cells.result()
-          case el @ Elem(n, _, _) if n == "thead" || n == "tbody" || n == "tfoot" =>
+          case el @ Elem(n, _) if n == "thead" || n == "tbody" || n == "tfoot" =>
             findRows(el)
           case _ =>
         }
@@ -429,8 +391,8 @@ object Html {
       val sb = new java.lang.StringBuilder
       def w(n: Node): Unit = n match {
         case Text(s) => sb.append(s)
-        case Elem("table", _, _) => // nested table: not part of this cell's grid text
-        case Elem(_, _, ch) =>
+        case Elem("table", _) => // nested table: not part of this cell's grid text
+        case Elem(_, ch) =>
           var j = 0
           while (j < ch.length) { w(ch(j)); sb.append(' '); j += 1 }
       }

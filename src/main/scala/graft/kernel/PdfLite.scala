@@ -1536,8 +1536,8 @@ object PdfLite {
 
   /** What the interpreter needs to know about one font resource: declared
     * simple encoding and the `/ToUnicode` CMap (byte code → Unicode string),
-    * which — as in PyMuPDF — takes precedence for text extraction. */
-  /** `widths`/`dw` (per-code advance, /1000 units), `asc`/`desc` (per-em,
+    * which — as in PyMuPDF — takes precedence for text extraction.
+    * `widths`/`dw` (per-code advance, /1000 units), `asc`/`desc` (per-em,
     * positive) feed ONLY the native-route extractor ([[parseNative]]): the
     * legacy geometry model in [[interpret]] never reads them, so adding them
     * cannot move any byte of the synthetic-corpus goldens. */

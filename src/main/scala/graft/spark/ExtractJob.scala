@@ -19,9 +19,12 @@ import graft.kernel._
   *    pages). AQE balances shuffle sizes, not map CPU, so the job explicitly
   *    repartitions on a composite key `(bucket, salt)` where
   *    `salt = xxhash64(url) % saltsPerBucket`: docs spread uniformly across
-  *    `numPartitions ≈ 4×cores` small tasks (bounding the giant-doc tail via
-  *    scheduler-level LPT), while co-grouping each output bucket into few
-  *    tasks (bounding small-file count: ≤ saltsPerBucket files per bucket).
+  *    `numPartitions ≈ 4×cores` small tasks, while co-grouping each output
+  *    bucket into few tasks (bounding small-file count: ≤ saltsPerBucket
+  *    files per bucket). Spark hands tasks out in partition order, not
+  *    largest first, so the giant-doc tail is bounded only by the tasks being
+  *    many, small and evenly salted: a giant holds up one small task, and
+  *    the other cores drain the rest meanwhile.
   *
   *  - '''Exactly-once resumability''': output parquet is partitioned by
   *    `bucket = xxhash64(url) pmod nBuckets` (deterministic, input-only).

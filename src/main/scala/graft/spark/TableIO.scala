@@ -1,6 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Storage abstraction for the extraction job's two tables (docs + lineage).
   *
@@ -33,6 +34,26 @@ trait TableIO {
   def readLineage(spark: SparkSession): DataFrame
 }
 
+/** What the sinks below share: one bucket-partitioned writer and the CSV
+  * sink's flat projection. */
+private object BucketTables {
+  /** Idempotent per-bucket replacement (dynamic partition overwrite) through
+    * [[NioLocalFileSystem]]. */
+  def overwriteBuckets(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(NioLocalFileSystem.WriteOptions)
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket")
+
+  /** The scalar columns, the cell grid as CSV text (`grid_csv`) and the
+    * bucket: the degraded shape of [[CsvFallbackTableIO]]. */
+  def flat(docs: DataFrame): DataFrame =
+    docs.select(col("url"), col("route"), col("vendor"), col("failure"),
+      col("nItems"), col("nPages"), col("nBytes"),
+      graft.functions.CsvGrid.column(col("cells")).as("grid_csv"),
+      col("bucket"))
+}
+
 /** Parquet-backed TableIO (the sandbox backend). Its writes resolve `file:`
   * paths to [[NioLocalFileSystem]], which sets file modes without a `chmod`
   * child process. */
@@ -41,12 +62,7 @@ final class ParquetTableIO(outDir: String) extends TableIO {
   val lineagePath = s"$outDir/lineage"
 
   override def writeDocs(docs: DataFrame): Unit =
-    docs.write
-      .options(NioLocalFileSystem.WriteOptions)
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(docsPath)
+    BucketTables.overwriteBuckets(docs).parquet(docsPath)
 
   override def appendLineage(lineage: DataFrame): Unit =
     lineage.write.options(NioLocalFileSystem.WriteOptions)
@@ -108,13 +124,7 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"primary table write failed (${e.getClass.getSimpleName}: " +
             s"${e.getMessage}); falling back to CSV at $csvPath")
-        docs.select(col("url"), col("route"), col("vendor"), col("failure"),
-            col("nItems"), col("nPages"), col("nBytes"),
-            graft.functions.CsvGrid.column(col("cells")).as("grid_csv"),
-            col("bucket"))
-          .write.options(NioLocalFileSystem.WriteOptions)
-          .mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
+        BucketTables.overwriteBuckets(BucketTables.flat(docs))
           // RFC-4180 doubling (the pandas convention) for the sink's own
           // quoting, so grid_csv's embedded quotes/newlines round-trip;
           // the writer trims field whitespace by default, which would eat
@@ -122,7 +132,6 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
           .option("escape", "\"")
           .option("ignoreLeadingWhiteSpace", "false")
           .option("ignoreTrailingWhiteSpace", "false")
-          .partitionBy("bucket")
           .csv(csvPath)
         val p = new org.apache.hadoop.fs.Path(s"$csvPath/$marker")
         p.getFileSystem(NioLocalFileSystem.conf(docs.sparkSession.sparkContext.hadoopConfiguration))
@@ -145,15 +154,18 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
       // A bucket present in BOTH tables (primary commit in one run, then a
       // non-resume rerun degraded the same bucket to CSV) must be served
       // once: the CSV copy is the later write, so it shadows the primary's.
+      // Only a primary table with no data files reads as "nothing committed
+      // there": absent, or left empty by a write that failed before its
+      // commit. Any other failure (an unreadable part file, say) surfaces,
+      // or the buckets the primary committed would silently vanish.
       val fromPrimary =
-        try Some(primary.readDocs(spark).select(
-          col("url"), col("route"), col("vendor"), col("failure"),
-          col("nItems"), col("nPages"), col("nBytes"),
-          graft.functions.CsvGrid.column(col("cells")).as("grid_csv"),
-          col("bucket"))
+        try Some(BucketTables.flat(primary.readDocs(spark))
           .join(broadcast(csv.select("bucket").distinct()),
             Seq("bucket"), "left_anti"))
-        catch { case scala.util.control.NonFatal(_) => None } // no primary table
+        catch {
+          case e: AnalysisException
+              if e.getCondition == "PATH_NOT_FOUND" || e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+        }
       fromPrimary.map(_.unionByName(csv)).getOrElse(csv)
     }
 
@@ -187,18 +199,14 @@ final class XlsxArtifactTableIO(inner: TableIO, artifactDir: String) extends Tab
     docs.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       inner.writeDocs(docs)
-      docs
+      BucketTables.overwriteBuckets(docs
         .select(col("url"), col("vendor"), col("bucket"),
           XlsxGrid.column(col("cells")).as("xlsx"),
           CsvGrid.column(col("cells")).as("csv"))
         .select(col("url"), col("vendor"),
           when(col("xlsx").isNotNull, lit("xlsx")).otherwise(lit("csv")).as("format"),
           coalesce(col("xlsx"), encode(col("csv"), "UTF-8")).as("artifact"),
-          col("bucket"))
-        .write.options(NioLocalFileSystem.WriteOptions)
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
+          col("bucket")))
         .parquet(artifactsPath)
     } finally docs.unpersist()
   }

@@ -176,30 +176,77 @@ class ParserFuzzSpec extends AnyFunSuite {
     }
   }
 
-  test("one-pass own-stats equals the recursive definition on every node") {
-    // the O(n) bottom-up memo (Html.ownStatsAll) must agree with the
-    // per-node recursive ownStats on corpus pages AND on adversarial soup
-    def checkTree(root: Html.Elem): Unit = {
-      val memo = Html.ownStatsAll(root)
-      def walk(e: Html.Elem): Unit = {
-        assert(memo.get(e) == Html.ownStats(e), s"own-stats diverge at <${e.name}>")
-        e.children.foreach { case el: Html.Elem => walk(el); case _ => }
+  test("one-pass selectMain picks the recursive reference's main block") {
+    // reference: a pre-order scan that scores every candidate outside chrome
+    // by the recursive Html.ownStats and keeps the first strict maximum
+    def reference(root: Html.Elem): Option[Html.Elem] = {
+      var best: Html.Elem = null
+      var bestScore = -1.0
+      def walk(e: Html.Elem, inChrome: Boolean): Unit = {
+        val chrome = inChrome || Set("nav", "header", "footer", "aside")(e.name)
+        if (!chrome && Set("article", "main", "div", "section", "body")(e.name)) {
+          val s = Html.ownStats(e)
+          if (s.textLen > 0 && s.score > bestScore) { bestScore = s.score; best = e }
+        }
+        e.children.foreach { case el: Html.Elem => walk(el, chrome); case _ => }
       }
-      walk(root)
+      walk(root, inChrome = false)
+      Option(best)
+    }
+    def check(html: String): Unit = {
+      val root = Html.parse(html)
+      val (got, want) = (Html.selectMain(root), reference(root))
+      assert(got.size == want.size && got.zip(want).forall { case (a, b) => a eq b },
+        s"main block differs: <${got.map(_.name)}> vs <${want.map(_.name)}>")
     }
     for (i <- 0L until 60L) {
       val p = Corpus.page(i)
-      if (!PdfLite.isPdf(p.html))
-        checkTree(Html.parse(new String(p.html, "UTF-8")))
+      if (!PdfLite.isPdf(p.html)) check(new String(p.html, "UTF-8"))
     }
     val rng = new java.util.Random(0xBEEFL)
     val frags = Array("<div>", "</div>", "<p>", "</p>", "text ", "<a href=x>",
-      "</a>", "<main>", "</main>", "<nav>", "</nav>", "<section>", "link ")
+      "</a>", "<main>", "</main>", "<nav>", "</nav>", "<section>", "link ",
+      "<main class=\"a>b\">", "<A HREF='x&amp;y'>", "</A>", "<div\tid=z\n>",
+      "<SECTION data-x=\"1\" hidden>", "<p class=lead/>")
     for (_ <- 0 until 100) {
       val sb = new StringBuilder
       for (_ <- 0 until rng.nextInt(120)) sb.append(frags(rng.nextInt(frags.length)))
-      checkTree(Html.parse(sb.toString))
+      check(sb.toString)
     }
+  }
+
+  test("html output does not depend on attributes") {
+    // every open tag rewritten to its bare name, a self-closing `/` kept; the
+    // tag ends at its first `>`, as in Html.parse
+    def bare(html: String): String = {
+      val sb = new StringBuilder
+      var i = 0
+      while (i < html.length) {
+        val end =
+          if (html.charAt(i) == '<' && i + 1 < html.length && html.charAt(i + 1).isLetter)
+            html.indexOf('>', i)
+          else -1
+        if (end > 0) {
+          val selfClose = html.charAt(end - 1) == '/'
+          val body = html.substring(i + 1, if (selfClose) end - 1 else end)
+          sb.append('<').append(body.takeWhile(!_.isWhitespace))
+            .append(if (selfClose) "/>" else ">")
+          i = end + 1
+        } else { sb.append(html.charAt(i)); i += 1 }
+      }
+      sb.toString
+    }
+    var rewritten = 0
+    for (i <- 0L until 2000L) {
+      val p = Corpus.page(i)
+      if (!PdfLite.isPdf(p.html)) {
+        val html = new String(p.html, "UTF-8")
+        val stripped = bare(html)
+        if (stripped != html) rewritten += 1
+        assert(Html.extract(stripped) == Html.extract(html), s"idx $i url ${p.url}")
+      }
+    }
+    assert(rewritten > 500, s"only $rewritten pages carried attributes")
   }
 
   test("multimodal decode is total on random bytes") {

@@ -98,7 +98,12 @@ class CsvFallbackSpec extends SparkTestBase {
       if (u == victim) throw new RuntimeException("synthetic task failure") else u)
     val midTask = new ScriptedPrimary(s"$dir/t")((primary, docs) =>
       primary.writeDocs(docs.withColumn("url", boom(col("url")))))
-    assertNoDoubleCount(dir, new CsvFallbackTableIO(midTask, s"$dir/csv"), "mid")
+    val io = new CsvFallbackTableIO(midTask, s"$dir/csv")
+    assertNoDoubleCount(dir, io, "mid")
+    // the aborted write left an empty primary directory: nothing committed
+    // there, so reads serve the CSV side alone
+    assert(new java.io.File(s"$dir/t/docs").list().isEmpty)
+    assert(io.readDocs(spark).count() == NDocs + 3)
   }
 
   test("grid_csv read back from the CSV table matches the kernel renderer") {
@@ -160,6 +165,34 @@ class CsvFallbackSpec extends SparkTestBase {
       val d = Extractor.extract(p.url, p.html, p.text, p.lang)
       assert(gotCsv(p.url) == Csv.render(d.cells), s"idx $i")
     }
+  }
+
+  test("unreadable primary buckets fail the read instead of vanishing from it") {
+    val dir = tmp()
+    var failNow = false
+    val toggling = new ScriptedPrimary(s"$dir/t")((primary, docs) =>
+      if (failNow) throw new RuntimeException("synthetic failure after resume")
+      else primary.writeDocs(docs))
+    val io = new CsvFallbackTableIO(toggling, s"$dir/csv")
+    val docs = ExtractJob.withBucket(ExtractPipeline.pages(spark, 40L).toDF(), 16)
+      .select(graft.functions.ExtractDocExpr
+        .extractDoc(col("url"), col("html"), col("text"), col("lang")).as("doc"),
+        col("bucket"))
+      .select(col("doc.*"), col("bucket"))
+    io.writeDocs(docs)
+    failNow = true
+    io.writeDocs(docs.filter(col("bucket") === docs.select("bucket").head().getLong(0)))
+    assert(io.readDocs(spark).count() > 2L)
+    // every committed primary part file becomes unreadable (its checksum
+    // sidecar goes with it, so the read meets the bytes themselves)
+    val parts = Files.walk(java.nio.file.Paths.get(s"$dir/t/docs")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toVector
+    assert(parts.nonEmpty)
+    parts.foreach { f =>
+      Files.write(f, "garbage".getBytes("UTF-8"))
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    }
+    intercept[Exception](io.readDocs(spark).collect())
   }
 
   test("healthy primary: no CSV table is written, reads serve the primary") {
