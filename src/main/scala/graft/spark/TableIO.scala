@@ -1,7 +1,6 @@
 package graft.spark
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Storage abstraction for the extraction job's two tables (docs + lineage).
   *
@@ -34,24 +33,15 @@ trait TableIO {
   def readLineage(spark: SparkSession): DataFrame
 }
 
-/** What the sinks below share: one bucket-partitioned writer and the CSV
-  * sink's flat projection. */
+/** The bucket-partitioned writer every sink below uses: idempotent
+  * per-bucket replacement (dynamic partition overwrite) through
+  * [[NioLocalFileSystem]]. */
 private object BucketTables {
-  /** Idempotent per-bucket replacement (dynamic partition overwrite) through
-    * [[NioLocalFileSystem]]. */
   def overwriteBuckets(df: DataFrame): DataFrameWriter[Row] =
     df.write.options(NioLocalFileSystem.WriteOptions)
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
-
-  /** The scalar columns, the cell grid as CSV text (`grid_csv`) and the
-    * bucket: the degraded shape of [[CsvFallbackTableIO]]. */
-  def flat(docs: DataFrame): DataFrame =
-    docs.select(col("url"), col("route"), col("vendor"), col("failure"),
-      col("nItems"), col("nPages"), col("nBytes"),
-      graft.functions.CsvGrid.column(col("cells")).as("grid_csv"),
-      col("bucket"))
 }
 
 /** Parquet-backed TableIO (the sandbox backend). Its writes resolve `file:`
@@ -108,6 +98,14 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
     StructField("nItems", IntegerType), StructField("nPages", IntegerType),
     StructField("nBytes", LongType), StructField("grid_csv", StringType)))
 
+  /** The degraded shape: the scalar columns, the cell grid as CSV text and
+    * the bucket. */
+  private def flat(docs: DataFrame): DataFrame =
+    docs.select(col("url"), col("route"), col("vendor"), col("failure"),
+      col("nItems"), col("nPages"), col("nBytes"),
+      graft.functions.CsvGrid.column(col("cells")).as("grid_csv"),
+      col("bucket"))
+
   // dynamic-partition-overwrite commits don't emit _SUCCESS; the sink writes
   // its own marker AFTER the csv job commits, so readers never see a torn table
   private val marker = "_GRAFT_CSV_COMMIT"
@@ -124,7 +122,7 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"primary table write failed (${e.getClass.getSimpleName}: " +
             s"${e.getMessage}); falling back to CSV at $csvPath")
-        BucketTables.overwriteBuckets(BucketTables.flat(docs))
+        BucketTables.overwriteBuckets(flat(docs))
           // RFC-4180 doubling (the pandas convention) for the sink's own
           // quoting, so grid_csv's embedded quotes/newlines round-trip;
           // the writer trims field whitespace by default, which would eat
@@ -159,7 +157,7 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
       // commit. Any other failure (an unreadable part file, say) surfaces,
       // or the buckets the primary committed would silently vanish.
       val fromPrimary =
-        try Some(BucketTables.flat(primary.readDocs(spark))
+        try Some(flat(primary.readDocs(spark))
           .join(broadcast(csv.select("bucket").distinct()),
             Seq("bucket"), "left_anti"))
         catch {

@@ -37,6 +37,15 @@ class CsvFallbackSpec extends SparkTestBase {
 
   private def tmp(): String = Files.createTempDirectory("graft_csvfb").toString
 
+  /** The docs shape ExtractJob writes (extract_doc + bucket), for driving a
+    * sink's writeDocs directly. */
+  private def extractedDocs(n: Long, nBuckets: Int): DataFrame =
+    ExtractJob.withBucket(ExtractPipeline.pages(spark, n).toDF(), nBuckets)
+      .select(graft.functions.ExtractDocExpr
+        .extractDoc(col("url"), col("html"), col("text"), col("lang")).as("doc"),
+        col("bucket"))
+      .select(col("doc.*"), col("bucket"))
+
   test("primary failure degrades to CSV; metrics equal the healthy run") {
     val cleanDir = tmp(); val fbDir = tmp()
     val pages = ExtractPipeline.pages(spark, NDocs).toDF()
@@ -138,12 +147,7 @@ class CsvFallbackSpec extends SparkTestBase {
     // the unit under test is the TableIO read path when different RUNS of a
     // job committed to different backends — drive writeDocs directly with
     // the same docs shape ExtractJob produces (extract_doc + bucket)
-    val pages = ExtractJob.withBucket(ExtractPipeline.pages(spark, NDocs).toDF(), NBuckets)
-    val docs = pages
-      .select(graft.functions.ExtractDocExpr
-        .extractDoc(col("url"), col("html"), col("text"), col("lang")).as("doc"),
-        col("bucket"))
-      .select(col("doc.*"), col("bucket"))
+    val docs = extractedDocs(NDocs, NBuckets)
     // run 1: healthy primary commits the even buckets, then "crashes"
     io.writeDocs(docs.filter(col("bucket") % 2 === 0))
     val primaryCount = inner.readDocs(spark).count()
@@ -174,11 +178,7 @@ class CsvFallbackSpec extends SparkTestBase {
       if (failNow) throw new RuntimeException("synthetic failure after resume")
       else primary.writeDocs(docs))
     val io = new CsvFallbackTableIO(toggling, s"$dir/csv")
-    val docs = ExtractJob.withBucket(ExtractPipeline.pages(spark, 40L).toDF(), 16)
-      .select(graft.functions.ExtractDocExpr
-        .extractDoc(col("url"), col("html"), col("text"), col("lang")).as("doc"),
-        col("bucket"))
-      .select(col("doc.*"), col("bucket"))
+    val docs = extractedDocs(40L, 16)
     io.writeDocs(docs)
     failNow = true
     io.writeDocs(docs.filter(col("bucket") === docs.select("bucket").head().getLong(0)))
