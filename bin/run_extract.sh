@@ -20,7 +20,5 @@ JAR=target/scala-2.13/pdf_extractorspark_2.13-0.1.0.jar
 exec /opt/spark/bin/spark-submit \
   --master "$MASTER" \
   --class graft.spark.ExtractMain \
-  --conf spark.sql.shuffle.partitions="${SHUFFLE_PARTITIONS:-32}" \
-  --conf spark.sql.session.timeZone=UTC \
   "$JAR" \
   --input "$INPUT" --out "$OUT" "$@"

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.spark.{ExtractJob, ExtractPipeline}
+import graft.spark.{Engine, ExtractJob, ExtractPipeline}
 
 /** Benchmark main — prints ONE JSON line with:
   *
@@ -161,24 +161,13 @@ object Bench {
         s"local-cluster[$n,$coresPerExec,$memMb]", n * coresPerExec, memMb)
   }
 
-  private def sessionFor(level: Level): SparkSession = {
-    val b = SparkSession.builder()
-      .master(level.master)
-      .appName(s"graft-bench-${level.totalCores}")
-      .config("spark.sql.shuffle.partitions", level.totalCores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-    val withExec =
-      if (level.master.startsWith("local-cluster")) b
-        .config("spark.executor.memory", s"${level.execMemMb}m")
+  private def sessionFor(level: Level): SparkSession =
+    Engine.session(Some(level.master),
+      (if (level.master.startsWith("local-cluster")) Seq(
+        "spark.executor.memory" -> s"${level.execMemMb}m",
         // executors are fresh JVMs with no sbt classpath — hand them ours
-        .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-      else b
-    val s = withExec.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+        "spark.executor.extraClassPath" -> System.getProperty("java.class.path"))
+      else Nil): _*)
 
   /** One timed extraction run at one parallelism level (fresh session, an
     * untimed warmup, then the timed job over the materialized table). The

@@ -133,6 +133,7 @@ object ExtractJob {
           numPartitions: Int,
           resume: Boolean,
           templates: Map[String, Template]): Metrics = {
+    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     import spark.implicits._
 
     val t0 = System.nanoTime()

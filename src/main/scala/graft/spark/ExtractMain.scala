@@ -1,7 +1,5 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
-
 /** spark-submit entry point for the extraction job (the north rule's
   * deployment surface):
   *
@@ -20,7 +18,11 @@ import org.apache.spark.sql.SparkSession
   * job's `extract_doc` expression; without it the builtin registry ships.
   * Master/executor topology comes from spark-submit itself (`--master`,
   * `--num-executors`, …), which is how the N vs 4N cluster-size comparison
-  * is driven on a real cluster.
+  * is driven on a real cluster. The session is [[Engine.session]]'s: UTC
+  * session time zone, the kernel's SQL functions ([[graft.functions.GraftExtensions]]),
+  * no UI and one shuffle partition per core of the master, each unless the
+  * deployment sets it (`--conf spark.ui.enabled=true` brings the UI back).
+  * Any flag other than the six above and `--resume` is an error.
   */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
@@ -32,8 +34,7 @@ object ExtractMain {
     val partitions = opts.getOrElse("partitions", "0").toInt
     val resume = opts.contains("resume")
 
-    val spark = SparkSession.builder().appName("graft-extract").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(None)
 
     val pages =
       if (input.startsWith("synth:"))
@@ -59,12 +60,15 @@ object ExtractMain {
     spark.stop()
   }
 
+  private val Flags = Set("input", "out", "run-id", "buckets", "partitions", "templates")
+
   @annotation.tailrec
-  private def parse(args: List[String], acc: Map[String, String]): Map[String, String] =
+  private[spark] def parse(args: List[String], acc: Map[String, String]): Map[String, String] =
     args match {
       case Nil => acc
       case "--resume" :: rest => parse(rest, acc + ("resume" -> "true"))
-      case k :: v :: rest if k.startsWith("--") => parse(rest, acc + (k.drop(2) -> v))
+      case k :: v :: rest if k.startsWith("--") && Flags(k.drop(2)) =>
+        parse(rest, acc + (k.drop(2) -> v))
       case other :: _ => sys.error(s"unrecognized argument: $other")
     }
 }

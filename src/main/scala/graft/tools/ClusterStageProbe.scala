@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.spark.{ExtractJob, ExtractPipeline}
+import graft.spark.{Engine, ExtractJob, ExtractPipeline}
 
 /** Isolate where local-cluster mode loses throughput vs local[n]:
   * scan+extract (narrow) / +repartition (shuffle) / full job (write).
@@ -15,15 +14,10 @@ object ClusterStageProbe {
   def main(args: Array[String]): Unit = {
     val master = args(0)          // e.g. local[16] or local-cluster[8,2,4096]
     val corpus = args(1)
-    val spark = SparkSession.builder().master(master).appName("probe")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.executor.memory", "4096m")
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions",
-        sys.env.getOrElse("PROBE_EXEC_OPTS", ""))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(Some(master),
+      "spark.executor.memory" -> "4096m",
+      "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
+      "spark.executor.extraJavaOptions" -> sys.env.getOrElse("PROBE_EXEC_OPTS", ""))
     // warmup every core
     ExtractPipeline.extractDf(ExtractPipeline.pages(spark, 16000, numPartitions = 64).toDF()).foreach(_ => ())
     println("[stage] executors=" + spark.sparkContext.getExecutorMemoryStatus.size)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.spark.Engine
 
 /** Scratch profiler: time individual catalog queries (cold + warm) and dump
   * the formatted plan of the slowest. Usage:
@@ -9,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object DebugTiming {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(Some("local[32]"))
     val names = if (args.nonEmpty) args.toSeq else graft.Bench.headline
     for (name <- names; fn <- graft.SparkEntry.queries.get(name)) {
       val t0 = System.nanoTime(); fn(spark, sfDir).count()

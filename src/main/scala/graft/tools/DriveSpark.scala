@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import graft.spark.{BucketRollup, ExtractJob, ExtractPipeline}
+import graft.spark.{BucketRollup, Engine, ExtractJob, ExtractPipeline}
 
 /** Spark e2e smoke: corpus → ExtractJob → resume probe → sample output.
   * `sbt "runMain graft.tools.DriveSpark [nDocs]"`. Exits 1 unless the resume
@@ -12,15 +11,7 @@ object DriveSpark {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000L
     val out = java.nio.file.Files.createTempDirectory("graft_e2e").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-drive")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(Some("local[8]"))
     import spark.implicits._
 
     val pages = ExtractPipeline.pages(spark, n).toDF()

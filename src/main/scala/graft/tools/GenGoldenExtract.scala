@@ -1,8 +1,9 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import graft.kernel.{Corpus, Csv, Extractor, Multimodal, PdfLite}
+import graft.spark.Engine
 
 /** Regenerates the committed golden-extraction parquets under `data/` that
   * back the DuckDB oracles of the extraction-family catalog queries
@@ -48,13 +49,7 @@ object GenGoldenExtract {
     val outDir = if (args.length > 1) args(1) else "data"
     Files.createDirectories(Paths.get(outDir))
 
-    val spark = SparkSession.builder()
-      .master("local[*]")
-      .appName("graft-gen-golden")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(Some("local[*]"))
     import spark.implicits._
 
     def commitSingleFile(dfWriter: org.apache.spark.sql.DataFrame, name: String): Unit = {

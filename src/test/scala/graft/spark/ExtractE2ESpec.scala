@@ -110,6 +110,17 @@ class ExtractE2ESpec extends SparkTestBase {
     assert(m.docs == 303 && m.failedDocs >= 1 && m.emptyDocs >= 1, m)
   }
 
+  test("a bucket count below 1 is rejected before anything is written") {
+    val out = Files.createTempDirectory("graft_nbuckets_spec").toString
+    val pages = ExtractPipeline.pages(spark, 20).toDF()
+    for (n <- Seq(0, -4)) {
+      val e = intercept[IllegalArgumentException](
+        ExtractJob.run(spark, pages, out, runId = s"b$n", nBuckets = n))
+      assert(e.getMessage.contains(s"got $n"), e.getMessage)
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(out, "docs")))
+  }
+
   test("a fresh run and a resume run each add one lineage file") {
     import LineageChecks._
     import org.apache.spark.sql.functions.col

@@ -11,16 +11,5 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Engine.session(Some("local[4]"))
 }
