@@ -25,7 +25,7 @@ object Engine {
   /** Total cores of a master string: `local` → 1, `local[n]` and
     * `local[n,f]` → n, `local[*]` → the available processors,
     * `local-cluster[n,c,m]` → n·c; `None` for any other master. */
-  def masterCores(master: String): Option[Int] = master.replace(" ", "") match {
+  private[spark] def masterCores(master: String): Option[Int] = master.replace(" ", "") match {
     case "local" => Some(1)
     case LocalN("*") => Some(Runtime.getRuntime.availableProcessors())
     case LocalN(n) => Some(n.toInt)
