@@ -2,8 +2,9 @@ package graft.tools
 
 import graft.spark.Engine
 
-/** Scratch profiler: time individual catalog queries (cold + warm) and dump
-  * the formatted plan of the slowest. Usage:
+/** Scratch profiler: time individual catalog queries (cold + warm, with
+  * Bench's query timer) and, with GRAFT_EXPLAIN set, dump each formatted
+  * plan. Usage:
   *   sbt -batch "runMain graft.tools.DebugTiming q3_join_broadcast q4_semi_join"
   */
 object DebugTiming {
@@ -12,10 +13,7 @@ object DebugTiming {
     val spark = Engine.session(Some("local[32]"))
     val names = if (args.nonEmpty) args.toSeq else graft.Bench.headline
     for (name <- names; fn <- graft.SparkEntry.queries.get(name)) {
-      val t0 = System.nanoTime(); fn(spark, sfDir).count()
-      val cold = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime(); fn(spark, sfDir).count()
-      val warm = (System.nanoTime() - t1) / 1e9
+      val Seq(cold, warm) = graft.Bench.timeQuery(spark, sfDir, fn, 2)
       println(f"[timing] $name%-22s cold=$cold%7.2fs warm=$warm%7.2fs")
       if (sys.env.contains("GRAFT_EXPLAIN")) fn(spark, sfDir).explain("formatted")
     }
