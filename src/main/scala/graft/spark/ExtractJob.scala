@@ -150,8 +150,6 @@ object ExtractJob {
         "output already has committed lineage; pass resume=true to continue " +
         "into it, or point the job at a fresh output location")
 
-    val bucketed = withBucket(pages, nBuckets)
-
     // resume: drop buckets already committed (bucket-id set is ≤ nBuckets —
     // safe to collect at any data scale). The pending set is derived from the
     // tiny lineage table ONLY — never from a scan of the input (at 10^12 docs
@@ -162,10 +160,13 @@ object ExtractJob {
           .filter($"status" === "ok")
           .select("bucket").distinct().as[Long].collect().toSet
       else Set.empty
+    // nothing pending: no input pass, no shuffle and no docs or lineage commit
+    if ((0L until nBuckets.toLong).forall(done))
+      return Metrics(0, 0, 0, 0, 0, (System.nanoTime() - t0) / 1e9, 0.0, 0.0)
+    val bucketed = withBucket(pages, nBuckets)
     val pending =
       if (done.isEmpty) bucketed
       else bucketed.filter(!$"bucket".isin(done.toSeq: _*))
-    val pendingBuckets = (0L until nBuckets.toLong).toSet.diff(done)
 
     val prepared = saltedRepartition(pending, parts, nBuckets)
 
@@ -192,8 +193,7 @@ object ExtractJob {
     val rollup =
       try {
         io.writeDocs(extracted.observe(observedAs, BucketRollup.column.as("rollup")))
-        if (pendingBuckets.isEmpty) Map.empty[Long, BucketRollup.Counts]
-        else BucketRollup.decode(observer.get(spark))
+        BucketRollup.decode(observer.get(spark))
       } finally spark.listenerManager.unregister(observer)
 
     // lineage of the rows that committed, appended only after the docs commit
@@ -204,8 +204,7 @@ object ExtractJob {
       Row(runId, bucket.toInt, c.docs,
         if (c.bytesSeen > 0) c.bytes else null, c.failures, c.emptyDocs, "ok")
     }
-    if (pendingBuckets.nonEmpty)
-      io.appendLineage(spark.createDataFrame(lineage.asJava, LineageSchema).coalesce(1))
+    io.appendLineage(spark.createDataFrame(lineage.asJava, LineageSchema).coalesce(1))
 
     val counts = rollup.values
     val (d, b, f, e) = (counts.map(_.docs).sum, counts.map(_.bytes).sum,

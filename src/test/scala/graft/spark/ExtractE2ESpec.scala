@@ -139,6 +139,28 @@ class ExtractE2ESpec extends SparkTestBase {
     assert(lineage == tableCounts(spark.read.parquet(s"$out/docs")))
   }
 
+  test("a resume over a complete table commits nothing and leaves the docs untouched") {
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("graft_noop_resume_spec")
+    val pages = ExtractPipeline.pages(spark, 300, numPartitions = 5).toDF()
+    ExtractJob.run(spark, pages, out.toString, runId = "full", nBuckets = 8)
+    def parquetParts(table: String): Map[String, java.nio.file.attribute.FileTime] =
+      Files.walk(out.resolve(table)).iterator.asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => out.relativize(p).toString -> Files.getLastModifiedTime(p)).toMap
+    val docsBefore = parquetParts("docs")
+    val lineageBefore = parquetParts("lineage")
+    val docsDirBefore = Files.getLastModifiedTime(out.resolve("docs"))
+
+    val m = ExtractJob.run(spark, pages, out.toString, runId = "again", nBuckets = 8,
+      resume = true)
+    assert(m.docs == 0, m)
+    assert(parquetParts("lineage") == lineageBefore, "the resume added a lineage file")
+    assert(parquetParts("docs") == docsBefore, "the resume rewrote docs part files")
+    // no write job ran: its staging directory would have touched the table's
+    assert(Files.getLastModifiedTime(out.resolve("docs")) == docsDirBefore)
+  }
+
   test("table writes leave Hadoop's default modes, a .crc per part file and the session conf") {
     import scala.jdk.CollectionConverters._
     import org.apache.hadoop.fs.FileSystem
