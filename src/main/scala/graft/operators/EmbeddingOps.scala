@@ -187,8 +187,11 @@ object EmbeddingOps {
     s"list_sum(list_transform(list_zip($a, $b), x -> (x[1]-x[2])*(x[1]-x[2])))"
 
   /** One Lloyd assignment: nearest centroid per vector (ties → smaller
-    * centroid id). Centroids ride a broadcast — the corpus is never
-    * shuffled for training. */
+    * centroid id). The centroids ride a broadcast into the cross join, but
+    * the `row_number` window that keeps each vector's nearest one hashes
+    * all corpus × [[IvfSeeds]] candidate rows by `vec_id`: a corpus-wide
+    * shuffle in every round. ROADMAP direction 7 replaces it with a narrow
+    * argmin projection. */
   private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
     e.crossJoin(broadcast(cents))
       .withColumn("dist", l2sq(col("v"), col("sv")))
@@ -201,9 +204,9 @@ object EmbeddingOps {
     * DECIMAL ([[OpsCommon.decSum]]) so the result is identical under ANY
     * partitioning on either engine (double addition is order-sensitive; the
     * q25 lesson applied to k-means). Cells that lose every member keep
-    * their previous centroid. Each round: one broadcast-join assignment +
-    * one (cell, dim) partial agg — no corpus shuffle, so the training loop
-    * itself survives 100×. */
+    * their previous centroid. Each round: one broadcast-join assignment,
+    * whose window shuffles corpus × [[IvfSeeds]] rows (see
+    * [[assignCells]]), + one (cell, dim) partial agg. */
   private def lloydCentroids(e: DataFrame): DataFrame = {
     var cents = e.filter(col("vec_id") < IvfSeeds)
       .select(col("vec_id").as("seed_id"), col("v").as("sv"))
