@@ -12,10 +12,19 @@ import graft.functions.GraftExtensions
   * deployment (spark-submit `--conf`, `spark-defaults.conf`, `-Dspark.*`)
   * sets nothing, so an explicit setting always wins — `--conf
   * spark.ui.enabled=true` turns the UI back on. The defaults are the app
-  * name `graft`, the UTC session time zone, no UI, and as many shuffle
-  * partitions as the master has cores (Spark's default where the master
-  * does not say). The kernel's SQL functions ([[GraftExtensions]]) are added
-  * to any extensions the deployment lists, and the log level is WARN.
+  * name `graft`, the UTC session time zone, no UI, 8 KiB stream buffers
+  * (`spark.buffer.size`), and as many shuffle partitions as the master has
+  * cores (Spark's default where the master does not say). The kernel's SQL
+  * functions ([[GraftExtensions]]) are added to any extensions the
+  * deployment lists, and the log level is WARN.
+  *
+  * The buffer size is an engine setting because of the docs write. Spark
+  * copies `spark.buffer.size` into the Hadoop conf's `io.file.buffer.size`
+  * (64 KiB by default), and parquet's Snappy codec allocates a new output
+  * buffer of that size for every page it compresses: at 64 KiB that was about
+  * 15% of a `pdf_only` pass's allocation. Parquet caches each codec JVM-wide
+  * with the `Configuration` it was first built from, so a per-write option
+  * cannot size the buffer; only the session's own setting can.
   */
 object Engine {
 
@@ -38,7 +47,7 @@ object Engine {
     val partitions = conf.getOption("spark.master").flatMap(masterCores)
       .map("spark.sql.shuffle.partitions" -> _.toString)
     (Seq("spark.app.name" -> "graft", "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false") ++ partitions)
+      "spark.ui.enabled" -> "false", "spark.buffer.size" -> "8192") ++ partitions)
       .foreach { case (k, v) => conf.setIfMissing(k, v) }
     conf
   }

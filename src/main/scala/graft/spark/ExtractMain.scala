@@ -20,8 +20,10 @@ package graft.spark
   * `--num-executors`, …), which is how the N vs 4N cluster-size comparison
   * is driven on a real cluster. The session is [[Engine.session]]'s: UTC
   * session time zone, the kernel's SQL functions ([[graft.functions.GraftExtensions]]),
-  * no UI and one shuffle partition per core of the master, each unless the
-  * deployment sets it (`--conf spark.ui.enabled=true` brings the UI back).
+  * no UI, 8 KiB stream buffers (`spark.buffer.size`, which sizes the docs
+  * write's per-page compressor buffer) and one shuffle partition per core of
+  * the master, each unless the deployment sets it (`--conf
+  * spark.ui.enabled=true` brings the UI back).
   * Any flag other than the six above and `--resume` is an error.
   */
 object ExtractMain {

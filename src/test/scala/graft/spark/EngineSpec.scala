@@ -12,6 +12,8 @@ class EngineSpec extends SparkTestBase {
     assert(spark.conf.get("spark.sql.shuffle.partitions").toInt ==
       spark.sparkContext.defaultParallelism)
     assert(spark.sparkContext.defaultParallelism == 4)
+    // Spark copies spark.buffer.size into the Hadoop conf the parquet codec reads
+    assert(spark.sparkContext.hadoopConfiguration.get("io.file.buffer.size") == "8192")
   }
 
   test("each master form gives its total core count") {
@@ -29,10 +31,13 @@ class EngineSpec extends SparkTestBase {
     assert(filled.get("spark.sql.session.timeZone") == "UTC")
     assert(filled.get("spark.ui.enabled") == "false")
     assert(filled.get("spark.sql.shuffle.partitions") == "2")
+    assert(filled.get("spark.buffer.size") == "8192")
     val preset = Engine.withDefaults(new SparkConf(false).setMaster("local[2]")
-      .set("spark.ui.enabled", "true").set("spark.sql.shuffle.partitions", "7"))
+      .set("spark.ui.enabled", "true").set("spark.sql.shuffle.partitions", "7")
+      .set("spark.buffer.size", "65536"))
     assert(preset.get("spark.ui.enabled") == "true")
     assert(preset.get("spark.sql.shuffle.partitions") == "7")
+    assert(preset.get("spark.buffer.size") == "65536")
     assert(!Engine.withDefaults(new SparkConf(false).setMaster("yarn"))
       .contains("spark.sql.shuffle.partitions"))
   }

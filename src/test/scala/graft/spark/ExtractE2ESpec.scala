@@ -161,6 +161,28 @@ class ExtractE2ESpec extends SparkTestBase {
     assert(Files.getLastModifiedTime(out.resolve("docs")) == docsDirBefore)
   }
 
+  test("a value of more than 128 compressor buffers survives the docs write byte for byte") {
+    import spark.implicits._
+    // ~1.2 MiB of incompressible-ish words in one paragraph: the docs write
+    // compresses it through the engine's 8 KiB buffer in over 128 chunks
+    val rnd = new scala.util.Random(7)
+    val words = Iterator.continually(rnd.alphanumeric.take(3 + rnd.nextInt(9)).mkString)
+    val paragraph = words.take(160000).mkString(" ")
+    val giant = Corpus.PageRow("https://giant.example/p", new java.sql.Timestamp(Corpus.BaseEpochMs),
+      s"<html><body><p>$paragraph</p></body></html>".getBytes("UTF-8"), "", "en")
+    val rows = giant +: Corpus.rows(60).toVector
+    val expected = rows.map(p => p.url -> Extractor.extract(p.url, p.html, p.text, p.lang)
+      .extractedText).toMap
+    assert(expected(giant.url).length > (1 << 20), "the giant's text is under 1 MiB")
+
+    val out = Files.createTempDirectory("graft_giant_value_spec").toString
+    ExtractJob.run(spark, rows.toDF(), out, runId = "g", nBuckets = 4)
+    val docs = spark.read.parquet(s"$out/docs").select("url", "extractedText")
+      .as[(String, String)].collect()
+    assert(docs.length == rows.length)
+    docs.foreach { case (url, text) => assert(text == expected(url), s"extractedText mismatch for $url") }
+  }
+
   test("table writes leave Hadoop's default modes, a .crc per part file and the session conf") {
     import scala.jdk.CollectionConverters._
     import org.apache.hadoop.fs.FileSystem
