@@ -186,44 +186,40 @@ object EmbeddingOps {
   private def l2sqSql(a: String, b: String): String =
     s"list_sum(list_transform(list_zip($a, $b), x -> (x[1]-x[2])*(x[1]-x[2])))"
 
-  /** One Lloyd assignment: nearest centroid per vector (ties → smaller
-    * centroid id). The centroids ride a broadcast into the cross join, but
-    * the `row_number` window that keeps each vector's nearest one hashes
-    * all corpus × [[IvfSeeds]] candidate rows by `vec_id`: a corpus-wide
-    * shuffle in every round. ROADMAP direction 7 replaces it with a narrow
-    * argmin projection. */
-  private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("dist", l2sq(col("v"), col("sv")))
-      .withColumn("rk", row_number().over(Window.partitionBy(col("vec_id"))
-        .orderBy(col("dist").asc, col("seed_id").asc)))
-      .filter(col("rk") === 1)
+  /** Every vector of `e` with `ranked`, the centroids as (dist, seed_id)
+    * structs nearest first (ties → smaller centroid id), and `seed_id`, its
+    * nearest one. A narrow projection over the centroids collected into one
+    * broadcast `cs` array: the corpus is never shuffled. */
+  private def rankCells(e: DataFrame, cents: DataFrame): DataFrame =
+    e.crossJoin(broadcast(cents.agg(collect_list(struct(col("seed_id"), col("sv"))).as("cs"))))
+      .withColumn("ranked", array_sort(transform(col("cs"), c =>
+        struct(l2sq(col("v"), c.getField("sv")).as("dist"),
+          c.getField("seed_id").as("seed_id")))))
+      .withColumn("seed_id", col("ranked")(0).getField("seed_id"))
 
   /** [[IvfLloydRounds]] Lloyd iterations from the first-[[IvfSeeds]] seeds.
     * Centroid update = per-dim mean of the assigned vectors, summed through
     * DECIMAL ([[OpsCommon.decSum]]) so the result is identical under ANY
     * partitioning on either engine (double addition is order-sensitive; the
     * q25 lesson applied to k-means). Cells that lose every member keep
-    * their previous centroid. Each round: one broadcast-join assignment,
-    * whose window shuffles corpus × [[IvfSeeds]] rows (see
-    * [[assignCells]]), + one (cell, dim) partial agg. */
+    * their previous centroid. Each round: one narrow assignment
+    * ([[rankCells]]) + one (cell, dim) partial agg, and the round's
+    * centroids are `localCheckpoint`ed, so the next round plans from that
+    * leaf instead of re-embedding every earlier round. */
   private def lloydCentroids(e: DataFrame): DataFrame = {
-    var cents = e.filter(col("vec_id") < IvfSeeds)
+    val seeds = e.filter(col("vec_id") < IvfSeeds)
       .select(col("vec_id").as("seed_id"), col("v").as("sv"))
-    for (_ <- 1 to IvfLloydRounds) {
-      val assigned = assignCells(e, cents)
-        .select(col("vec_id"), col("v"), col("seed_id"))
-      val means = assigned
+    (1 to IvfLloydRounds).foldLeft(seeds) { (cents, _) =>
+      val means = rankCells(e, cents)
         .select(col("seed_id"), posexplode(col("v")).as(Seq("dim", "val")))
         .groupBy(col("seed_id"), col("dim"))
         .agg((OpsCommon.decSum(col("val"), 9) / count(lit(1))).as("c"))
         .groupBy(col("seed_id"))
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
           x => x.getField("c")).as("sv"))
-      cents = means.union(
-        cents.join(means.select(col("seed_id")), Seq("seed_id"), "left_anti"))
+      means.union(cents.join(means.select(col("seed_id")), Seq("seed_id"), "left_anti"))
+        .localCheckpoint()
     }
-    cents
   }
 
   /** DuckDB mirror of [[lloydCentroids]]: [[IvfLloydRounds]] CTE rounds of
@@ -259,23 +255,19 @@ object EmbeddingOps {
     * [[IvfLloydRounds]] fixed Lloyd iterations from the first-[[IvfSeeds]]
     * seeds (deterministic, so the DuckDB oracle reproduces the index
     * bit-for-bit); every vector is assigned to its nearest centroid (ties →
-    * smaller centroid id), the query probes its [[IvfProbes]] nearest cells,
-    * and candidates in those cells are ranked by true cosine. At corpus
-    * scale the centroid table stays broadcast (k-means output, KBs) and the
-    * only shuffle is the cell-id join — the same dataflow as a production
-    * IVF index. */
+    * smaller centroid id), the query probes the first [[IvfProbes]] cells of
+    * its own ranking, and candidates in those cells are ranked by true
+    * cosine. At corpus scale the centroid array stays broadcast (k-means
+    * output, KBs) and the corpus is never shuffled: the probe cells are
+    * broadcast into the cell-id join — the same dataflow as a production
+    * IVF index. Building the frame runs the Lloyd rounds' jobs. */
   def q37AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = embDocs(spark, dir)
-    val seeds = lloydCentroids(e)
-    val assigned = assignCells(e, seeds)
-      .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("seed_id").as("cell"))
+    val assigned = rankCells(e, lloydCentroids(e))
+      .select(col("vec_id"), col("v"), col("nrm"), col("ranked"), col("seed_id").as("cell"))
     val qCells = assigned.filter(col("vec_id") === 0)
-      .crossJoin(broadcast(seeds))
-      .withColumn("dist", l2sq(col("v"), col("sv")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("dist").asc, col("seed_id").asc)))
-      .filter(col("rk") <= IvfProbes)
-      .select(col("seed_id").as("probe_cell"), col("v").as("qv"), col("nrm").as("qn"))
+      .select(explode(slice(col("ranked"), 1, IvfProbes).getField("seed_id")).as("probe_cell"),
+        col("v").as("qv"), col("nrm").as("qn"))
     assigned.filter(col("vec_id") =!= 0)
       .join(broadcast(qCells), col("cell") === col("probe_cell"))
       .withColumn("sim", cosPre(col("v"), col("qv"), col("nrm"), col("qn")))

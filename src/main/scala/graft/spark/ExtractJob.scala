@@ -31,9 +31,11 @@ import graft.kernel._
   *    Lineage rows (runId, bucket, docs, bytes, failures, emptyDocs, status)
   *    are appended ONLY after the data write commits;
   *    `partitionOverwriteMode=dynamic` means a re-run replaces exactly the
-  *    buckets it recomputes. Restart = anti-join
+  *    buckets it recomputes. Every bucket a run computes gets a lineage row,
+  *    a zero-count one where the input has no docs. Restart = anti-join
   *    input buckets against committed lineage — no dup, no loss, verified by
-  *    the kill/rerun spec.
+  *    the kill/rerun spec. A resume takes the input of the run it continues:
+  *    a bucket committed empty stays empty.
   *
   *  - '''Metrics''': the per-bucket lineage counts (docs, bytes, failures,
   *    empty docs) are rolled up DURING the docs write, by `Dataset.observe`
@@ -199,8 +201,12 @@ object ExtractJob {
     // lineage of the rows that committed, appended only after the docs commit
     // as one small driver-side frame (≤ nBuckets rows) in one partition, so a
     // run adds one lineage file; the metrics are the sums of the same counts
-    // (a null `bytes` adds 0)
-    val lineage: Seq[Row] = rollup.toSeq.sortBy(_._1).map { case (bucket, c) =>
+    // (a null `bytes` adds 0). A pending bucket the input has no docs for
+    // commits as a zero-count row, so a resume over the same input finds
+    // nothing pending.
+    val noDocs = BucketRollup.Counts(0, 0, 0, 0, 0)
+    val lineage: Seq[Row] = (0L until nBuckets.toLong).filterNot(done).map { bucket =>
+      val c = rollup.getOrElse(bucket, noDocs)
       Row(runId, bucket.toInt, c.docs,
         if (c.bytesSeen > 0) c.bytes else null, c.failures, c.emptyDocs, "ok")
     }

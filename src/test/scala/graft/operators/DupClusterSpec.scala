@@ -47,4 +47,27 @@ class DupClusterSpec extends SparkTestBase {
     assert(clusters.length > clusters.map(_._2).distinct.length,
       "every node its own cluster — closure never merged anything")
   }
+
+  /** [[DedupOps.componentLabels]] over hand-built pairs, as doc_id → lbl. */
+  private def labelsOf(pairs: (Long, Long)*): Map[Long, Long] = {
+    import spark.implicits._
+    DedupOps.componentLabels(pairs.toDF("id_a", "id_b")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  test("propagation over a 6-node path reaches the far end (5 rounds)") {
+    // label 1 moves one hop per round: node 6 gets it in round 5
+    val path = (1L to 5L).map(i => (i, i + 1))
+    assert(labelsOf(path: _*) == (1L to 6L).map(_ -> 1L).toMap)
+  }
+
+  test("propagation labels each of two components by its minimum id") {
+    val got = labelsOf((12L, 10L), (11L, 12L), (13L, 11L), (25L, 21L), (21L, 22L))
+    assert(got == Map(10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
+      21L -> 21L, 22L -> 21L, 25L -> 21L))
+  }
+
+  test("propagation labels an isolated edge by its smaller end") {
+    assert(labelsOf((7L, 3L)) == Map(3L -> 3L, 7L -> 3L))
+  }
 }

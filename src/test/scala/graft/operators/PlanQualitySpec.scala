@@ -77,6 +77,28 @@ class PlanQualitySpec extends SparkTestBase {
     assert(p.contains("salt"), s"q19 pair join lost its hot-key salting:\n$p")
   }
 
+  test("q37_ann_ivf: cells ranked by one array expression, corpus never shuffled") {
+    val p = plan("q37_ann_ivf")
+    assert(!p.contains("Window"), s"cell assignment plans a window:\n$p")
+    assert(!p.contains("hashpartitioning(vec_id"), s"corpus shuffled by vec_id:\n$p")
+    // the Lloyd rounds start from checkpointed centroids, so besides the
+    // broadcasts only the centroid collect (or a (cell, dim) mean) may shuffle
+    val shuffles = p.linesIterator.filter(_.contains("Exchange"))
+      .filterNot(_.contains("BroadcastExchange")).toSeq
+    assert(shuffles.forall(l => l.contains("Exchange SinglePartition") ||
+      l.contains("hashpartitioning(seed_id")), s"unexpected shuffle:\n$p")
+    // one round's plan: earlier rounds are not re-embedded
+    assert(p.linesIterator.size < 100, s"plan grows with the rounds:\n$p")
+  }
+
+  test("q52_dup_clusters: the result plans from the last round's labels only") {
+    val p = plan("q52_dup_clusters")
+    // projection + output sort over the checkpointed labels: no earlier
+    // round, and no q20 pair stage, nested under it
+    assert(p.linesIterator.size < 20, s"plan embeds earlier rounds:\n${p.take(4000)}")
+    assert("Exchange".r.findAllIn(p).length == 1, s"expected the sort's exchange only:\n$p")
+  }
+
   test("q53_ann_batch: query batch broadcast, per-query window (no global sort)") {
     val p = plan("q53_ann_batch")
     assert(p.contains("BroadcastExchange") || p.contains("BroadcastHashJoin"),

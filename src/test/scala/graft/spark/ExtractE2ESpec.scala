@@ -123,11 +123,23 @@ class ExtractE2ESpec extends SparkTestBase {
 
   test("a fresh run and a resume run each add one lineage file") {
     import LineageChecks._
+    import org.apache.spark.sql.{DataFrame, SparkSession}
     import org.apache.spark.sql.functions.col
     val out = Files.createTempDirectory("graft_lineage_files_spec").toString
     val pages = pagesWithEdgeRows(spark, 300)
-    val half = ExtractJob.withBucket(pages, 8).filter(col("bucket") < 4).drop("bucket")
-    ExtractJob.run(spark, half, out, runId = "half", nBuckets = 8)
+    // a first run that commits every bucket's docs but the lineage of
+    // buckets 0-3 only, so the resume finds buckets 4-7 pending
+    val parquet = new ParquetTableIO(out)
+    val halfLineage = new TableIO {
+      override def writeDocs(docs: DataFrame): Unit = parquet.writeDocs(docs)
+      override def appendLineage(l: DataFrame): Unit =
+        parquet.appendLineage(l.filter(col("bucket") < 4))
+      override def readDocs(s: SparkSession): DataFrame = parquet.readDocs(s)
+      override def lineageExists(s: SparkSession): Boolean = parquet.lineageExists(s)
+      override def readLineage(s: SparkSession): DataFrame = parquet.readLineage(s)
+    }
+    ExtractJob.run(spark, pages, halfLineage, "half", nBuckets = 8, numPartitions = 0,
+      resume = false, Vendor.builtinTemplates)
     val m = ExtractJob.run(spark, pages, out, runId = "rest", nBuckets = 8, resume = true)
     assert(m.docs > 0 && m.docs < 303, m)
     val parts = new java.io.File(s"$out/lineage").list()
@@ -139,11 +151,10 @@ class ExtractE2ESpec extends SparkTestBase {
     assert(lineage == tableCounts(spark.read.parquet(s"$out/docs")))
   }
 
-  test("a resume over a complete table commits nothing and leaves the docs untouched") {
+  /** Runs `resume` and checks that it found nothing pending: no docs, no
+    * lineage or docs part file added or rewritten, no docs write job. */
+  private def assertCommitsNothing(out: java.nio.file.Path)(resume: => ExtractJob.Metrics): Unit = {
     import scala.jdk.CollectionConverters._
-    val out = Files.createTempDirectory("graft_noop_resume_spec")
-    val pages = ExtractPipeline.pages(spark, 300, numPartitions = 5).toDF()
-    ExtractJob.run(spark, pages, out.toString, runId = "full", nBuckets = 8)
     def parquetParts(table: String): Map[String, java.nio.file.attribute.FileTime] =
       Files.walk(out.resolve(table)).iterator.asScala
         .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -152,13 +163,41 @@ class ExtractE2ESpec extends SparkTestBase {
     val lineageBefore = parquetParts("lineage")
     val docsDirBefore = Files.getLastModifiedTime(out.resolve("docs"))
 
-    val m = ExtractJob.run(spark, pages, out.toString, runId = "again", nBuckets = 8,
-      resume = true)
+    val m = resume
     assert(m.docs == 0, m)
     assert(parquetParts("lineage") == lineageBefore, "the resume added a lineage file")
     assert(parquetParts("docs") == docsBefore, "the resume rewrote docs part files")
     // no write job ran: its staging directory would have touched the table's
     assert(Files.getLastModifiedTime(out.resolve("docs")) == docsDirBefore)
+  }
+
+  test("a resume over a complete table commits nothing and leaves the docs untouched") {
+    val out = Files.createTempDirectory("graft_noop_resume_spec")
+    val pages = ExtractPipeline.pages(spark, 300, numPartitions = 5).toDF()
+    ExtractJob.run(spark, pages, out.toString, runId = "full", nBuckets = 8)
+    assertCommitsNothing(out) {
+      ExtractJob.run(spark, pages, out.toString, runId = "again", nBuckets = 8, resume = true)
+    }
+  }
+
+  test("empty buckets commit zero-count lineage rows, so a resume over sparse input commits nothing") {
+    import LineageChecks._
+    val out = Files.createTempDirectory("graft_sparse_resume_spec")
+    val pages = ExtractPipeline.pages(spark, 20).toDF()
+    ExtractJob.run(spark, pages, out.toString, runId = "sparse", nBuckets = 64)
+    // every bucket has a lineage row; the rows with docs equal the table,
+    // and the zero rows are exactly the buckets the table has no docs in
+    val lineage = lineageCounts(spark.read.parquet(s"$out/lineage"), "sparse")
+    val table = tableCounts(spark.read.parquet(s"$out/docs"))
+    assert(lineage.map(_.head) == (0L until 64L))
+    assert(lineage.filter(_(1) != 0L) == table)
+    val filled = table.map(_.head).toSet
+    assert(lineage.filter(_(1) == 0L) ==
+      (0L until 64L).filterNot(filled).map(b => Seq(b, 0L, null, 0L, 0L)))
+    assert(filled.size < 64)
+    assertCommitsNothing(out) {
+      ExtractJob.run(spark, pages, out.toString, runId = "again", nBuckets = 64, resume = true)
+    }
   }
 
   test("a value of more than 128 compressor buffers survives the docs write byte for byte") {
