@@ -129,11 +129,11 @@ object EmbeddingOps {
     val e = embDocs(spark, dir)
       .withColumn("b0", lshBucketAt(col("v"), 0))
       .withColumn("b1", lshBucketAt(col("v"), LshDims))
-      .cache()
     val buckets = e.select(col("vec_id"), col("label"),
       explode(map(lit(0), col("b0"), lit(1), col("b1"))).as(Seq("band", "bkt")))
+    val hot = buckets.groupBy("label", "band", "bkt").count().filter(col("count") > NeardupHotCap)
     val cand = saltedSelfPairs(buckets, Seq("label", "band", "bkt"), "vec_id",
-        hotCap = NeardupHotCap, nSalts = NeardupSalts)
+        hot, NeardupSalts)
       .select(col("label"), col("id_a"), col("id_b"))
       .distinct()
     cand

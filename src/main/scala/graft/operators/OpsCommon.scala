@@ -92,26 +92,24 @@ object OpsCommon {
     * single pathological band bucket of m rows otherwise produces one m²-pair
     * straggler task.
     *
-    * Dataflow: (1) census `groupBy(keys).count` — one partial-agg shuffle of
-    * the (small) bucket frame; (2) buckets holding more than `hotCap` rows
-    * are broadcast as the hot set; (3) the left side gets a deterministic
+    * Dataflow: (1) the caller counts its buckets and passes `hot`, one row
+    * per key whose bucket is over its cap (the key columns; any others are
+    * ignored) — q19 reads them off the census it already runs for its stop
+    * shingles; (2) `hot` is broadcast; (3) the left side gets a deterministic
     * per-row salt in [0, nSalts) for hot rows (salt 0 otherwise), the right
     * side REPLICATES hot rows to every salt — so each qualifying pair matches
     * exactly once, but a hot bucket's pairs spread across nSalts tasks
     * (m²/nSalts per task instead of m²). Cold buckets join exactly as before
     * (both sides salt 0, no replication).
     *
-    * The pair SET is identical to the unsalted join — DuckDB oracles are
-    * unaffected. Output: `keys ++ (id_a, id_b, salt)` with id_a < id_b, NOT
-    * deduplicated across buckets (callers `.distinct()` after dropping salt,
-    * exactly as with the plain join). */
+    * The pair SET is identical to the unsalted join whichever keys are
+    * marked hot — DuckDB oracles are unaffected. Output: `keys ++ (id_a,
+    * id_b, salt)` with id_a < id_b, NOT deduplicated across buckets (callers
+    * `.distinct()` after dropping salt, exactly as with the plain join). */
   def saltedSelfPairs(buckets: DataFrame, keys: Seq[String], id: String,
-                      hotCap: Int, nSalts: Int): DataFrame = {
-    val keyCols = keys.map(col)
-    val hot = buckets.groupBy(keyCols: _*).agg(count(lit(1)).as("bkt_n"))
-      .filter(col("bkt_n") > hotCap)
-      .select(keyCols :+ lit(true).as("is_hot"): _*)
-    val tagged = buckets.join(broadcast(hot), keys, "left")
+                      hot: DataFrame, nSalts: Int): DataFrame = {
+    val tagged = buckets.join(broadcast(hot.select(keys.map(col) :+ lit(true).as("is_hot"): _*)),
+        keys, "left")
       .withColumn("is_hot", coalesce(col("is_hot"), lit(false)))
     // deterministic salt (Murmur3 of the id): reproducible runs, and the salt
     // never reaches the oracle-compared output

@@ -17,14 +17,20 @@ import graft.kernel._
   *  - '''Partitioning/skew''': documents vary ~100× in size (one giant per
   *    ~1000 docs in the corpus, mirroring the 2.8MB DRISCOLL pdf amid 110KB
   *    pages). AQE balances shuffle sizes, not map CPU, so the job explicitly
-  *    repartitions on a composite key `(bucket, salt)` where
-  *    `salt = xxhash64(url) % saltsPerBucket`: docs spread uniformly across
-  *    `numPartitions ≈ 4×cores` small tasks, while co-grouping each output
-  *    bucket into few tasks (bounding small-file count: ≤ saltsPerBucket
-  *    files per bucket). Spark hands tasks out in partition order, not
-  *    largest first, so the giant-doc tail is bounded only by the tasks being
-  *    many, small and evenly salted: a giant holds up one small task, and
-  *    the other cores drain the rest meanwhile.
+  *    repartitions into `numPartitions` (default 4×cores) tasks on a
+  *    composite key `(bucket, salt)` where
+  *    `salt = xxhash64(url) % saltsPerBucket` and
+  *    `saltsPerBucket = max(1, numPartitions / nBuckets)`: each output bucket
+  *    spreads over at most saltsPerBucket tasks (bounding small-file count:
+  *    ≤ saltsPerBucket files per bucket). The salt splits a bucket only when
+  *    numPartitions ≥ 2×nBuckets — at the default 64 buckets, 32 cores or
+  *    more. Below that the salt is always 0: each bucket goes whole to one
+  *    task, and a task's load is the sum of the buckets that hash to it
+  *    (perfbench's `local[4]` runs, 16 partitions over 64 buckets, are this
+  *    case). Spark hands tasks out in partition order, not largest first, so
+  *    the giant-doc tail is bounded only by the tasks being many and small:
+  *    a giant holds up one task, and the other cores drain the rest
+  *    meanwhile.
   *
   *  - '''Exactly-once resumability''': output parquet is partitioned by
   *    `bucket = xxhash64(url) pmod nBuckets` (deterministic, input-only).

@@ -28,17 +28,32 @@ class LshSaltingSpec extends SparkTestBase {
         col("a.doc_id") < col("b.doc_id"))
     .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
 
-  private def saltedPairs = OpsCommon.saltedSelfPairs(
-    buckets, Seq("band", "bval"), "doc_id", hotCap = HotCap, nSalts = Salts)
+  // the caller counts its buckets, as q20 and q24 do
+  private def hotKeys = buckets.groupBy("band", "bval").count().filter(col("count") > HotCap)
 
-  test("salted pair set is identical to the plain self-join") {
+  private def saltedPairs = OpsCommon.saltedSelfPairs(
+    buckets, Seq("band", "bval"), "doc_id", hotKeys, Salts)
+
+  private def assertSamePairs(salted: org.apache.spark.sql.DataFrame): Unit = {
     val plain = plainPairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val salted = saltedPairs.select(col("id_a"), col("id_b"))
+    val got = salted.select(col("id_a"), col("id_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(salted == plain)
+    assert(got == plain)
     // and no pair is emitted twice per bucket (each pair matches exactly one
     // b-side salt replica)
-    assert(saltedPairs.count() == plain.size)
+    assert(salted.count() == plain.size)
+  }
+
+  test("salted pair set is identical to the plain self-join") {
+    assertSamePairs(saltedPairs)
+  }
+
+  test("marking every key hot keeps the pair set, each pair once") {
+    // q19 passes census rows over the cap, stop shingles among them: a key
+    // marked hot must never change the pairs, only spread them
+    val allHot = buckets.select(col("band"), col("bval")).distinct()
+    assertSamePairs(OpsCommon.saltedSelfPairs(
+      buckets, Seq("band", "bval"), "doc_id", allHot, Salts))
   }
 
   test("hot-bucket pairs are spread across salts with bounded group sizes") {

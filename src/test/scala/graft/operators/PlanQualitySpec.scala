@@ -1,5 +1,13 @@
 package graft.operators
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkEntry
 import graft.spark.SparkTestBase
 
@@ -16,6 +24,42 @@ class PlanQualitySpec extends SparkTestBase {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+
+  /** Every node of an executed plan as it was planned, through cached
+    * relations' plans, command wrappers and subqueries. An adaptive plan is
+    * read from its input plan: at runtime AQE drops a join whose side came
+    * out empty, and with it the stages that computed that side. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cacheBuilder.cachedPlan)
+      case _ => p.children ++ p.innerChildren.collect { case c: SparkPlan => c } ++ p.subqueries
+    }
+    p +: kids.flatMap(nodes)
+  }
+
+  /** The executed plan of every action `body` runs (checkpoint jobs
+    * included), recorded until a sentinel query's event shows the
+    * (asynchronous) listener bus has delivered all earlier ones. */
+  private def plansDuring(body: => Unit): Seq[SparkPlan] = {
+    val seen = new ConcurrentLinkedQueue[SparkPlan]()
+    val tag = s"plan_gate_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val done = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit =
+        if (qe.analyzed.output.exists(_.name == tag)) done.countDown()
+        else seen.add(qe.executedPlan)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(tag).collect()
+      assert(done.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
 
   test("q2_filter: predicates reach the parquet scan, schema pruned") {
     val p = plan("q2_filter")
@@ -75,6 +119,39 @@ class PlanQualitySpec extends SparkTestBase {
     // (the guard that spreads a DF≈999 posting list across LshSalts tasks)
     val p = plan("q19_dedup_ngram")
     assert(p.contains("salt"), s"q19 pair join lost its hot-key salting:\n$p")
+  }
+
+  test("shingles: the text is split once, before the explode") {
+    // the shingle lambda is evaluated interpreted, without CSE: a split
+    // inside the generator would run again for every shingle of the doc
+    val gens = nodes(DedupOps.shingles(spark, sfDir).queryExecution.executedPlan)
+      .collect { case g: GenerateExec => g.generator.toString }
+    assert(gens.size == 1, s"expected one explode: $gens")
+    assert(!gens.head.contains("split("), s"the explode splits the text per shingle: $gens")
+  }
+
+  test("q19: one shingle census across every job a call runs") {
+    // a partial aggregate keyed by the shingle `g` over the shingle explode,
+    // counted once per plan node across the checkpoint jobs the build runs
+    // and the final action (cached relations' plans included). A stop
+    // census by g beside a hot-key census by (g, source) under each side of
+    // the salted join would count three.
+    def shingleCensus(p: SparkPlan): Boolean = p match {
+      case a: BaseAggregateExec =>
+        a.groupingExpressions.exists(_.name == "g") &&
+          a.aggregateExpressions.exists(_.mode == Partial) &&
+          nodes(a).exists {
+            case g: GenerateExec => g.generatorOutput.exists(_.name == "g")
+            case _ => false
+          }
+      case _ => false
+    }
+    spark.catalog.clearCache()
+    val censuses = plansDuring {
+      SparkEntry.queries("q19_dedup_ngram")(spark, sfDir).collect()
+    }.flatMap(nodes).filter(shingleCensus)
+      .map(a => System.identityHashCode(a) -> a).toMap.values
+    assert(censuses.size == 1, s"expected one census, got:\n${censuses.mkString("\n")}")
   }
 
   test("q37_ann_ivf: cells ranked by one array expression, corpus never shuffled") {
@@ -215,17 +292,12 @@ class PlanQualitySpec extends SparkTestBase {
   }
 
   test("extraction job never re-reads its own output (one lineage scan on resume)") {
-    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
-    import org.apache.spark.sql.util.QueryExecutionListener
 
-    // root paths of every file scan in an executed plan, through AQE stages,
-    // command wrappers and subqueries
-    def scans(p: SparkPlan): Seq[String] = {
-      val here = p match {
+    // root paths of every file scan the plans of `body` execute
+    def scansDuring(body: => Unit): Seq[String] =
+      plansDuring(body).flatMap(nodes).flatMap {
         case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toUri.getPath)
         case b: BatchScanExec => b.scan match {
           case f: FileScan => f.fileIndex.rootPaths.map(_.toUri.getPath)
@@ -233,35 +305,6 @@ class PlanQualitySpec extends SparkTestBase {
         }
         case _ => Nil
       }
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _ => p.children ++ p.innerChildren.collect { case c: SparkPlan => c } ++ p.subqueries
-      }
-      here ++ kids.flatMap(scans)
-    }
-
-    // every plan the job executes, recorded until a sentinel query's event
-    // shows the (asynchronous) listener bus has delivered all earlier ones
-    def scansDuring(body: => Unit): Seq[String] = {
-      val seen = new ConcurrentLinkedQueue[String]()
-      val tag = s"plan_gate_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val done = new CountDownLatch(1)
-      val listener = new QueryExecutionListener {
-        private def record(qe: QueryExecution): Unit =
-          if (qe.analyzed.output.exists(_.name == tag)) done.countDown()
-          else seen.addAll(scans(qe.executedPlan).asJava)
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
-        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
-      }
-      spark.listenerManager.register(listener)
-      try {
-        body
-        spark.range(1).toDF(tag).collect()
-        assert(done.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      } finally spark.listenerManager.unregister(listener)
-      seen.asScala.toSeq
-    }
 
     val out = java.nio.file.Files.createTempDirectory("graft_plan_gate").toString
     val pages = graft.spark.ExtractPipeline.pages(spark, 100).toDF()
